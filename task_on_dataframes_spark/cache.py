@@ -77,14 +77,7 @@ class ResultCache:
             # a live future outranks the filesystem: parquet overwrite
             # clears the directory (markers included) mid-write
             return "in_progress"
-        d = self._dir(key)
-        if os.path.exists(os.path.join(d, "_SUCCESS")):
-            return "done"
-        if os.path.exists(os.path.join(self.root, f"{key}._ERROR")):
-            return "error"
-        if os.path.exists(os.path.join(d, "_IN_PROGRESS")):
-            return "in_progress"
-        return "missing"
+        return self.status_fs_unlocked(key)
 
     def error(self, key: str) -> Optional[str]:
         """Traceback text of a failed background materialization."""
@@ -114,6 +107,8 @@ class ResultCache:
         return "in_progress"
 
     def status_fs_unlocked(self, key: str) -> str:
+        """The filesystem markers alone, ignoring in-flight futures —
+        safe to call with ``self._lock`` held."""
         d = self._dir(key)
         if os.path.exists(os.path.join(d, "_SUCCESS")):
             return "done"
@@ -138,7 +133,6 @@ class ResultCache:
 
     def store(self, df: DataFrame, key: str) -> DataFrame:
         d = self._dir(key)
-        marker = os.path.join(self.root, f"{key}._IN_PROGRESS")
         os.makedirs(d, exist_ok=True)
         open(os.path.join(d, "_IN_PROGRESS"), "w").close()
         df.write.mode("overwrite").parquet(d)
@@ -147,7 +141,6 @@ class ResultCache:
         p = os.path.join(d, "_IN_PROGRESS")
         if os.path.exists(p):
             os.remove(p)
-        _ = marker
         return df
 
     def get_or_compute(

@@ -26,7 +26,7 @@ from .dedup import (
     connected_components,
     cosine,
 )
-from .similarity import cosine_topk, cosine_topk_blas, ivf_ann_topk, lsh_ann_topk
+from .similarity import cosine_topk, ivf_ann_topk, lsh_ann_topk
 from .skew import distinct_count_2phase, salted_agg, salted_join
 from .textstats import token_stats, quality_score, lang_id, doc_fingerprint
 from .multimodal import (

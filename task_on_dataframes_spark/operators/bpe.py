@@ -189,113 +189,6 @@ def bpe_train(
     return out
 
 
-def bpe_train_delta(
-    docs: DataFrame,
-    text_col: str = "text",
-    merges: int = 6,
-) -> DataFrame:
-    """:func:`bpe_train` with DELTA pair-count maintenance — the shape
-    that survives a real 32k-merge vocabulary.
-
-    The full-recount loop re-explodes every word's pairs each merge
-    (~40 exchanges/merge in the round-4 PLANAUDIT — 246 for 6 merges);
-    a production trainer instead keeps the pair-count table hot and
-    touches only the words CONTAINING the winning pair. Per merge:
-
-    * the 1-row argmax of the persisted pair table collects to the
-      driver (bounded by construction — one row per step, the merge
-      table is driver-resident in every real tokenizer);
-    * affected words (``contains(repr, '(a)(b)')`` — a scan-stage
-      filter of the vocabulary) have their old pairs subtracted and
-      their post-replace pairs added: two vocabulary-subset
-      aggregations + one keyed merge into the pair table;
-    * unaffected words and unaffected pair rows are NEVER re-exploded.
-
-    Execution discipline (each point measured, not guessed):
-
-    * **one Spark job per merge** — the only action is the argmax
-      collect; both state tables are LAZY ``localCheckpoint(False)``
-      frames, so the collect that reads the pair table transitively
-      materializes (and lineage-cuts) the previous iteration's word
-      table in the same job instead of paying three eager jobs.
-    * **fixed partition width** — the word-table update is
-      filter+union (no shuffle), so without intervention its
-      partition count DOUBLES per merge (measured: 512 tasks by step
-      10 at 8 shuffle partitions); both tables are ``coalesce``-d
-      back to the session's shuffle width before each checkpoint.
-    * **bounded generation ledger** — references to generations older
-      than 2 are dropped; newer frames only ever read the immediately
-      previous generation, which the ledger keeps referenced. (The
-      blocks themselves are localCheckpoint storage, freed by the
-      ContextCleaner once the dropped reference is GC'd —
-      Dataset.unpersist() is a no-op for checkpoint blocks, so the
-      reference drop IS the cleanup mechanism.)
-
-    Shuffles per merge: ~3 (two vocabulary-subset pair aggregations
-    and the pair-table merge groupBy) versus ~40 for the recount loop
-    (246 exchanges for 6 merges in the round-4 PLANAUDIT). Results
-    are bit-identical to :func:`bpe_train`: subtract-old/add-new over
-    exactly the affected words is an exact maintenance of the full
-    recount, replayed merge-for-merge by the chained-CTE DuckDB
-    oracle."""
-    spark = docs.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    words = _word_table(docs, text_col).localCheckpoint()
-    pc = _pair_counts(words).localCheckpoint()
-    live: list[tuple[DataFrame, DataFrame]] = []
-    out_rows = []
-    for step in range(1, merges + 1):
-        top = pc.orderBy(F.desc("pc"), "lhs", "rhs").limit(1).collect()
-        # this collect materialized the current generation; anything
-        # older than the previous generation is now dead weight
-        while len(live) > 2:
-            for f in live.pop(0):
-                f.unpersist()
-        if not top:
-            break
-        lhs, rhs, count = top[0]["lhs"], top[0]["rhs"], top[0]["pc"]
-        merged = lhs + rhs
-        out_rows.append((step, lhs, rhs, merged, int(count)))
-        if step == merges:
-            break
-        pattern = f"({lhs})({rhs})"
-        hit = words.filter(F.col("repr").contains(pattern))
-        new_hit = hit.select(
-            F.replace(
-                F.col("repr"), F.lit(pattern), F.lit(f"({merged})")
-            ).alias("repr"),
-            "cnt",
-        )
-        minus = _pair_counts(hit).select(
-            "lhs", "rhs", (-F.col("pc")).alias("pc")
-        )
-        new_words = (
-            words.filter(~F.col("repr").contains(pattern))
-            .unionAll(new_hit)
-            .coalesce(width)
-            .localCheckpoint(eager=False)
-        )
-        new_pc = (
-            pc.unionAll(_pair_counts(new_hit))
-            .unionAll(minus)
-            .groupBy("lhs", "rhs")
-            .agg(F.sum("pc").alias("pc"))
-            .filter(F.col("pc") > 0)
-            .coalesce(width)
-            .localCheckpoint(eager=False)
-        )
-        live.append((words, pc))
-        words, pc = new_words, new_pc
-    for gen in live + [(words, pc)]:
-        for f in gen:
-            f.unpersist()
-    return local_frame(
-        spark,
-        out_rows,
-        "step int, lhs string, rhs string, merged string, pair_count long",
-    )
-
-
 def _accept_batch(
     top: list[tuple[str, str, int]],
     capped: bool,
@@ -360,8 +253,11 @@ def bpe_train_batched(
     stats: dict | None = None,
     level: str = "char",
 ) -> DataFrame:
-    """:func:`bpe_train_delta` with MULTI-MERGE BATCHES — the shape
-    that makes a real 32k-merge vocabulary tractable: instead of one
+    """:func:`bpe_train` with DELTA pair-count maintenance and
+    MULTI-MERGE BATCHES — the shape that makes a real 32k-merge
+    vocabulary tractable: the pair-count table stays hot and only the
+    words containing an accepted pair are re-exploded (subtract their
+    old pairs, add their post-replace pairs), and instead of one
     Spark job per merge (32k sequential jobs), each job collects the
     top ``top_m`` pair counts and the driver accepts the longest
     PREFIX of that ranking that is provably equivalent to sequential
@@ -397,6 +293,16 @@ def bpe_train_batched(
     measured ~5x fewer jobs than merge-at-a-time at 512 merges on the
     testdata corpus (batch sizes start at 1-2 while single letters
     dominate the ranking and widen as the symbol alphabet grows).
+
+    Execution discipline: both state tables are LAZY
+    ``localCheckpoint(eager=False)`` frames, so the batch's one
+    collect materializes (and lineage-cuts) the previous generation in
+    the same job; both are ``coalesce``-d back to the shuffle width,
+    because the filter+union word update otherwise doubles its
+    partition count per batch; and references older than two
+    generations are dropped — ``unpersist`` is a no-op for checkpoint
+    blocks, so dropping the reference is what lets the ContextCleaner
+    free them.
     Pass ``stats={}`` to receive ``{"batches": N, "merges": M}``.
     """
     spark = docs.sparkSession
@@ -561,7 +467,7 @@ def bpe_train_scalable(
     merge BATCH) above it, so no input size ever collects an
     unbounded table.
 
-    Bit-identical to :func:`bpe_train` / :func:`bpe_train_delta` /
+    Bit-identical to :func:`bpe_train` / :func:`bpe_train_batched` /
     the chained-CTE DuckDB oracle (same weighting, same (pc DESC,
     lhs, rhs) tie-break, same left-to-right merge application).
     Pass ``stats={}`` to receive ``{"path": "local"|"batched",

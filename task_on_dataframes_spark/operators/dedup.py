@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .hashing import MERSENNE_P, hash32, perm_coeffs
+from .index import append_tables, build_tables, compact_tables
 
 #: default 1-in-m modulo sampling of the character-shingle universe
 #: (see :func:`_char_ngrams`) — shared with the DuckDB oracle renderers
@@ -728,52 +729,6 @@ def _bounded_persist(df: DataFrame) -> DataFrame:
     return out
 
 
-def _parallel_writes(fn, jobs) -> None:
-    """Run independent table writes as concurrent driver-submitted
-    jobs (guide §2.6: actions are only sequential because driver code
-    calls them sequentially — two jobs writing disjoint tables can
-    back-fill each other's straggler tails). Two in flight is plenty;
-    exceptions propagate to the caller.
-
-    Each job runs under ``inheritable_thread_target`` (ADVICE r12):
-    a plain pool thread starts with EMPTY JVM-thread-local properties
-    under PySpark pinned-thread mode, so the caller's job group /
-    description / scheduler pool would silently not apply to these
-    writes (cancelJobGroup would miss them, the UI would mislabel
-    them). The wrapper captures the submitting thread's properties at
-    wrap time and installs them in the worker thread.
-
-    Failure contract: if one write raises, the sibling still runs to
-    completion before the exception propagates (pool.map drains), so
-    the caller can observe AT MOST ONE table updated — the same
-    partial state a sequential loop leaves when its first write lands
-    and its second raises. Callers owning appends (append_lsh_index /
-    append_ivf_index) treat any exception as index-poisoning and must
-    rebuild or compact under a fresh tag before further probes; the
-    build/compact paths write fresh-tag tables, so a failed half is
-    simply never returned to the caller."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-    from pyspark.sql import SparkSession
-
-    jobs = list(jobs)
-    if len(jobs) <= 1:
-        for j in jobs:
-            fn(j)
-        return
-    # the session form inherits TAGS as well as local properties (the
-    # bare-callable form copies properties only, and warns)
-    sess = SparkSession.getActiveSession()
-    wrapped = (
-        inheritable_thread_target(sess)(fn)
-        if sess is not None
-        else inheritable_thread_target(fn)
-    )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(wrapped, jobs))
-
-
 def build_lsh_index(
     spark,
     corpus: DataFrame,
@@ -816,67 +771,39 @@ def build_lsh_index(
     persisted index is the ⊕ production shape for incremental corpus
     dedup at 100 TB.
     """
-    import tempfile
-
     keys_t = f"tada_lshidx_keys_{name_tag}"
     sets_t = f"tada_lshidx_sets_{name_tag}"
-    if spark.catalog.tableExists(keys_t) and spark.catalog.tableExists(
-        sets_t
-    ):
+    if all(spark.catalog.tableExists(t) for t in (keys_t, sets_t)):
         return keys_t, sets_t
     cid = corpus.select(
         F.col(id_col).alias("did"), F.col(text_col).alias("text")
     )
-    # fused signature+pack aggregation (r12): one shuffle, one shingle
-    # pass; the persisted frame is one row per corpus doc, not the
-    # exploded shingle rows the pre-r12 build cached
+    # fused signature+pack aggregation: one shuffle, one shingle pass;
+    # the persisted frame is one row per corpus doc
     prof = _lsh_doc_profile(
         _shingles(cid, "did", "text", shingle_n), num_perm
     ).persist()
+    # materialize the shared profile once, before the two concurrent
+    # table writes read it
+    prof.count()
+    build_tables(
+        _lsh_specs(prof, keys_t, sets_t, num_perm, bands),
+        n_buckets,
+        base_path,
+    )
+    prof.unpersist()
+    return keys_t, sets_t
+
+
+def _lsh_specs(prof, keys_t, sets_t, num_perm, bands) -> list:
+    """The two index-table specs derived from a fused doc profile:
+    band keys bucketed by the single-column join key ``bk``, packed
+    shingle sets bucketed by ``did``."""
     keys = lsh_band_keys(prof, num_perm, bands).withColumn(
         "bk", F.concat_ws(":", F.col("band").cast("string"), F.col("key"))
     )
     packed = prof.select("did", "hks", "sz")
-    base = base_path or tempfile.mkdtemp(prefix="tada_lshidx_")
-
-    def _write(args):
-        name, df, key = args
-        # external table at a fresh temp path (see _s13_bucketed_join:
-        # in-memory catalogs forget tables but warehouse dirs linger)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            # repartition to the bucket layout BEFORE the bucketed
-            # write (r12, guide §6 small files): without it every
-            # upstream partition writes one file per bucket it
-            # touches — measured 256 files for the 8-bucket keys
-            # table at sf0.1 (32 partitions x 8 buckets), each a
-            # listing + open + sort-run cost for every later probe.
-            # repartition(n, col) and bucketBy(n, col) share
-            # murmur3-pmod placement (the compact_lsh_index
-            # invariant), so each task holds exactly one bucket and
-            # writes exactly one sorted file; the shuffle it costs
-            # is index-row-sized, paid once per build.
-            df.repartition(n_buckets, F.col(key))
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .option("path", f"{base}/{name}")
-            .format("parquet")
-            .saveAsTable(name)
-        )
-
-    # materialize the shared profile once, then run the two
-    # independent table writes as concurrent driver-submitted jobs
-    # (guide §2.6 — the keys write's straggler tail no longer
-    # serializes ahead of the sets write; job descriptions and the
-    # catalog ops are per-thread-safe, and the writes touch disjoint
-    # tables/paths)
-    prof.count()
-    _parallel_writes(
-        _write, ((keys_t, keys, "bk"), (sets_t, packed, "did"))
-    )
-    prof.unpersist()
-    return keys_t, sets_t
+    return [(keys_t, keys, "bk"), (sets_t, packed, "did")]
 
 
 def probe_lsh_index(
@@ -1021,8 +948,7 @@ def append_lsh_index(
     Scale shape: only the BATCH is shingled, signed, and packed (the
     same batch-sized plan as the probe); the new rows are written as
     additional bucketed+sorted files into the SAME tables
-    (by-name ``saveAsTable`` append with a matching bucket spec —
-    Spark validates the spec against the catalog). The existing index
+    (:func:`.index.append_tables`). The existing index
     files are never read, rewritten, or shuffled: append cost is
     O(batch), independent of corpus size.
 
@@ -1072,32 +998,12 @@ def append_lsh_index(
     owned = prof is None
     if owned:
         prof = cand.persist()
-    keys = lsh_band_keys(prof, num_perm, bands).withColumn(
-        "bk", F.concat_ws(":", F.col("band").cast("string"), F.col("key"))
-    )
-    packed = prof.select("did", "hks", "sz")
-    def _write(args):
-        name, df, key = args
-        (
-            # repartition to the bucket layout first (r12, guide §6):
-            # an append otherwise adds up to partitions x buckets
-            # files per wave; with it each wave adds at most
-            # n_buckets files (one sorted run per occupied bucket),
-            # so probe-side listing and the SMJ's multi-run local
-            # sort grow per WAVE, not per wave x partition
-            df.repartition(n_buckets, F.col(key))
-            .write.mode("append")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .format("parquet")
-            .saveAsTable(name)
-        )
-
-    # materialize the (owned or probe-cached) profile, then overlap
-    # the two independent table appends (guide §2.6 — see build)
+    # materialize the (owned or probe-cached) profile, then overlap the
+    # two independent table appends
     prof.count()
-    _parallel_writes(
-        _write, ((keys_table, keys, "bk"), (sets_table, packed, "did"))
+    append_tables(
+        _lsh_specs(prof, keys_table, sets_table, num_perm, bands),
+        n_buckets,
     )
     if owned:
         prof.unpersist()
@@ -1123,62 +1029,23 @@ def compact_lsh_index(
     the no-Exchange probe contract is unchanged either way
     (plan-pinned for the compacted index in tests/test_plan_shapes).
 
-    Each table is repartitioned on its bucket column into exactly
-    ``n_buckets`` partitions — ``repartition(n, col)`` and
-    ``bucketBy(n, col)`` share the same murmur3-pmod placement, so
-    every task holds exactly one bucket and the bucketed write emits
-    ONE sorted file per bucket. Cost: one full shuffle of the INDEX
-    (not the corpus text — band keys and packed digests only), paid
-    once per compaction window; probes in between stay O(batch).
+    Both tables go through :func:`.index.compact_tables` (by-path
+    re-read, then the one-file-per-bucket write). Cost: one full
+    shuffle of the INDEX (not the corpus text — band keys and packed
+    digests only), paid once per compaction window; probes in between
+    stay O(batch).
 
     Returns the new ``(keys_table, sets_table)`` names under
     ``name_tag``; the old tables are left for the caller to drop once
     readers drain (snapshot-style swap, never in-place).
-
-    The source is re-read by PATH, not through the catalog: the
-    catalog table's bucket spec already advertises
-    ``HashPartitioning(key, n)``, so Catalyst eliminates the
-    ``repartition`` as redundant — and then scans the files in
-    arbitrary non-bucketed splits, scattering each bucket across
-    tasks (observed: 11 files for 8 buckets). A path read has unknown
-    partitioning, the shuffle survives, and task id == bucket id
-    (repartition and bucketBy share murmur3-pmod placement), so each
-    task emits exactly one sorted file.
     """
-    import os
-    import tempfile
-
     new_keys = f"tada_lshidx_keys_{name_tag}"
     new_sets = f"tada_lshidx_sets_{name_tag}"
-    base = base_path or tempfile.mkdtemp(prefix="tada_lshidx_")
-
-    def _rewrite(args):
-        src, name, key = args
-        cat = spark.table(src)
-        files = cat.inputFiles()
-        if files:
-            src_dir = os.path.dirname(files[0])
-            raw = spark.read.schema(cat.schema).parquet(src_dir)
-        else:
-            # zero-file table (built empty, or fully vacuumed): compact
-            # to an empty index rather than IndexError (advisor, r11)
-            raw = spark.createDataFrame([], cat.schema)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            raw.repartition(n_buckets, F.col(key))
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .option("path", f"{base}/{name}")
-            .format("parquet")
-            .saveAsTable(name)
-        )
-
-    # the two rewrites read and write disjoint tables — overlap them
-    # (guide §2.6), same as the build/append writes
-    _parallel_writes(
-        _rewrite,
-        ((keys_table, new_keys, "bk"), (sets_table, new_sets, "did")),
+    compact_tables(
+        spark,
+        [(keys_table, new_keys, "bk"), (sets_table, new_sets, "did")],
+        n_buckets,
+        base_path,
     )
     return new_keys, new_sets
 

@@ -17,8 +17,9 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _parallel_writes, cosine, dot, norm
+from .dedup import cosine, dot, norm
 from .hashing import hash32, perm_coeffs, MERSENNE_P
+from .index import append_tables, build_tables, compact_tables
 
 
 #: the one live centroid cache — each _ivf_centroids call unpersists
@@ -176,82 +177,6 @@ def cosine_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def cosine_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_queries: Optional[int] = 10_000,
-) -> DataFrame:
-    """Brute-force top-k via numpy GEMM inside ``mapInPandas`` — the
-    vectorized-UDF fast path for exact search: each Arrow batch of
-    corpus vectors is one matrix multiply against the broadcast query
-    matrix (BLAS), ~10-100x the per-pair expression fold. Results can
-    differ from :func:`cosine_topk` in the last float ulp (BLAS sums
-    pairwise, the expression folds sequentially), so this variant is
-    for throughput, not oracle-exact replay.
-
-    Scale shape: queries broadcast once per executor via a plain
-    closure; corpus streams through in batches; per-query global top-k
-    is a tiny keyed aggregation over per-batch top-k candidates. The
-    query matrix is collected to the driver — correct ONLY for small
-    query sets, hence the ``max_queries`` guard (10k queries x 1 KiB
-    vector ≈ 10 MiB closure; beyond that use :func:`cosine_topk`,
-    whose broadcast join never driver-collects).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if max_queries is not None:
-        nq = queries.limit(max_queries + 1).count()
-        if nq > max_queries:
-            raise ValueError(
-                f"cosine_topk_blas collects the query set to the driver and "
-                f"got {nq}+ queries (max_queries={max_queries}); use "
-                "cosine_topk for large query sets or raise max_queries"
-            )
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("vq"),
-    ).collect()
-    q_ids = np.array([r["query_id"] for r in q_rows])
-    q_mat = np.array([r["vq"] for r in q_rows])  # (Q, D)
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    schema = "query_id long, vec_id long, cos double"
-
-    def batches(it):
-        for pdf in it:
-            ids = pdf["vec_id"].to_numpy()
-            mat = np.stack(pdf["vc"].to_numpy())  # (N, D)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ q_mat.T  # (N, Q) — one GEMM per Arrow batch
-            out = {"query_id": [], "vec_id": [], "cos": []}
-            for qi in range(len(q_ids)):
-                col = sims[:, qi]
-                keep = min(k + 1, len(col))  # +1 to survive self-match drop
-                top = np.argpartition(-col, keep - 1)[:keep]
-                out["query_id"].extend([q_ids[qi]] * len(top))
-                out["vec_id"].extend(ids[top])
-                out["cos"].extend(np.round(col[top], 5))
-            yield pd.DataFrame(out)
-
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("vc"),
-    )
-    candidates = c.mapInPandas(batches, schema).filter(
-        F.col("query_id") != F.col("vec_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
@@ -514,13 +439,9 @@ def build_ivf_index(
 
     Returns ``(cents_table, lists_table)``. Idempotent per
     ``name_tag`` — an existing layout is reused, not rewritten."""
-    import tempfile
-
     cents_t = f"tada_ivfidx_cents_{name_tag}"
     lists_t = f"tada_ivfidx_lists_{name_tag}"
-    if spark.catalog.tableExists(cents_t) and spark.catalog.tableExists(
-        lists_t
-    ):
+    if all(spark.catalog.tableExists(t) for t in (cents_t, lists_t)):
         return cents_t, lists_t
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
@@ -528,44 +449,15 @@ def build_ivf_index(
     )
     cents = _ivf_centroids(c, n_centroids)
     member = _ivf_member(c, cents).withColumn("nc", norm("vc"))
-    base = base_path or tempfile.mkdtemp(prefix="tada_ivfidx_")
-
-    def _write_cents(_):
-        spark.sql(f"DROP TABLE IF EXISTS {cents_t}")
-        (
-            cents.write.mode("overwrite")
-            .option("path", f"{base}/{cents_t}")
-            .format("parquet")
-            .saveAsTable(cents_t)
-        )
-
-    def _write_lists(_):
-        spark.sql(f"DROP TABLE IF EXISTS {lists_t}")
-        (
-            # repartition to the bucket layout before the bucketed
-            # write (r12, guide §6 small files): without it each
-            # upstream partition writes one file per cid bucket it
-            # touches; with it the build emits exactly one sorted
-            # file per bucket (the same murmur3-pmod placement
-            # argument as compact_ivf_index), at the cost of one
-            # index-row-sized shuffle paid once
-            member.select("cid", "vec_id", "vc", "nc")
-            .repartition(n_buckets, F.col("cid"))
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "cid")
-            .sortBy("cid")
-            .option("path", f"{base}/{lists_t}")
-            .format("parquet")
-            .saveAsTable(lists_t)
-        )
-
-    # materialize the shared persisted centroid frame BEFORE the pool
-    # (ADVICE r12, mirroring build_lsh_index's prof.count()): a lazy
-    # persist lets both writes race to compute it — benign duplicate
-    # work, but "computed once" only holds if it is computed here —
-    # then overlap the two disjoint-table writes (guide §2.6)
+    # materialize the shared persisted centroid frame BEFORE the
+    # concurrent writes: a lazy persist lets both race to compute it
     cents.count()
-    _parallel_writes(lambda f: f(None), (_write_cents, _write_lists))
+    lists = member.select("cid", "vec_id", "vc", "nc")
+    build_tables(
+        [(cents_t, cents, None), (lists_t, lists, "cid")],
+        n_buckets,
+        base_path,
+    )
     return cents_t, lists_t
 
 
@@ -602,18 +494,8 @@ def append_ivf_index(
     member = _ivf_member(b, spark.table(cents_table)).withColumn(
         "nc", norm("vc")
     )
-    (
-        # repartition to the bucket layout first (r12, guide §6): one
-        # sorted file per occupied bucket per wave instead of up to
-        # partitions x buckets — see build_ivf_index
-        member.select("cid", "vec_id", "vc", "nc")
-        .repartition(n_buckets, F.col("cid"))
-        .write.mode("append")
-        .bucketBy(n_buckets, "cid")
-        .sortBy("cid")
-        .format("parquet")
-        .saveAsTable(lists_table)
-    )
+    lists = member.select("cid", "vec_id", "vc", "nc")
+    append_tables([(lists_table, lists, "cid")], n_buckets)
 
 
 def probe_ivf_index(
@@ -690,15 +572,8 @@ def compact_ivf_index(
     INDEX (vectors + norms, not query traffic), once per maintenance
     window; probes in between stay O(batch x n_centroids).
 
-    The list table is re-read by PATH, not through the catalog — the
-    catalog scan advertises ``HashPartitioning(cid, n)``, so Catalyst
-    drops the ``repartition`` as redundant and then splits the files
-    in arbitrary non-bucketed chunks (the compact_lsh_index gotcha,
-    SCALE.md §27, applies identically). A path read has unknown
-    partitioning, the shuffle survives, and since ``repartition(n,
-    col)`` and ``bucketBy(n, col)`` share murmur3-pmod placement,
-    each task holds exactly one bucket and writes exactly one sorted
-    file.
+    Both tables go through :func:`.index.compact_tables` (by-path
+    re-read, then the one-file-per-bucket write).
 
     The centroid table (n_centroids rows) is copied under the new tag
     so the returned pair is a self-contained snapshot — callers swap
@@ -706,47 +581,14 @@ def compact_ivf_index(
     drain; the frozen-quantizer contract (append_ivf_index) means the
     copy is value-identical, never re-trained. Returns the new
     ``(cents_table, lists_table)`` names."""
-    import os
-    import tempfile
-
     new_cents = f"tada_ivfidx_cents_{name_tag}"
     new_lists = f"tada_ivfidx_lists_{name_tag}"
-    base = base_path or tempfile.mkdtemp(prefix="tada_ivfidx_")
-
-    def _copy_cents(_):
-        cents = spark.table(cents_table)
-        spark.sql(f"DROP TABLE IF EXISTS {new_cents}")
-        (
-            cents.write.mode("overwrite")
-            .option("path", f"{base}/{new_cents}")
-            .format("parquet")
-            .saveAsTable(new_cents)
-        )
-
-    def _rewrite_lists(_):
-        cat = spark.table(lists_table)
-        files = cat.inputFiles()
-        if files:
-            src_dir = os.path.dirname(files[0])
-            raw = spark.read.schema(cat.schema).parquet(src_dir)
-        else:
-            # zero-file list table: compact to an empty index rather
-            # than IndexError (same guard as compact_lsh_index)
-            raw = spark.createDataFrame([], cat.schema)
-        spark.sql(f"DROP TABLE IF EXISTS {new_lists}")
-        (
-            raw.repartition(n_buckets, F.col("cid"))
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "cid")
-            .sortBy("cid")
-            .option("path", f"{base}/{new_lists}")
-            .format("parquet")
-            .saveAsTable(new_lists)
-        )
-
-    # the snapshot copy and the list rewrite touch disjoint tables —
-    # overlap them (guide §2.6)
-    _parallel_writes(lambda f: f(None), (_copy_cents, _rewrite_lists))
+    compact_tables(
+        spark,
+        [(cents_table, new_cents, None), (lists_table, new_lists, "cid")],
+        n_buckets,
+        base_path,
+    )
     return new_cents, new_lists
 
 

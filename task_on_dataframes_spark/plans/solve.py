@@ -46,25 +46,13 @@ from typing import (
 from .task import BadTask, CallReqsMap, RetArg, TaskRegistry, default_registry
 from .unify import Binding, TaskCaller, callmap_view
 
-#: cap on uses of any single generic (regex-requiring) task per plan.
-#: Matches the reference's default (frame_tasks/solve.py:11) — and like
-#: the reference it silently makes goals needing N>cap uses of one
-#: generic task unsatisfiable. Lift per call via the
-#: ``max_generic_repeat`` parameter (None = unlimited) on
-#: :func:`actions_given_state` / :class:`TaskProblem` /
-#: :func:`find_path` / :func:`Executor` / :func:`solve_goal`, or
-#: globally by setting this module attribute (the reference's way).
+#: cap on uses of any single generic (regex-requiring) task per plan
+#: (None = unlimited). Matches the reference's default
+#: (frame_tasks/solve.py:11) — and like the reference it silently makes
+#: goals needing N>cap uses of one generic task unsatisfiable. Read at
+#: call time, so setting this module attribute (the reference's way)
+#: changes every later search.
 MAX_REPEAT_GENERIC_TASK: Optional[int] = 1
-
-#: sentinel: "use the module-level MAX_REPEAT_GENERIC_TASK at call time"
-#: (keeps reference-style monkeypatching of the global working)
-_USE_MODULE_DEFAULT = object()
-
-
-def _resolve_cap(max_generic_repeat) -> Optional[int]:
-    if max_generic_repeat is _USE_MODULE_DEFAULT:
-        return MAX_REPEAT_GENERIC_TASK
-    return max_generic_repeat
 
 #: hard bound on plan length; BFS explores breadth-first so this only
 #: matters for unsatisfiable goals
@@ -109,13 +97,12 @@ def _returns_groups(returns: Sequence[RetArg]) -> List[FrozenSet[str]]:
 def actions_given_state(
     state: State,
     registry: Optional[TaskRegistry] = None,
-    max_generic_repeat=_USE_MODULE_DEFAULT,
 ) -> List[Action]:
     registry = default_registry if registry is None else registry
     state_vars = set(state.Vars)
     have = _have_vars(state)
 
-    cap = _resolve_cap(max_generic_repeat)
+    cap = MAX_REPEAT_GENERIC_TASK
     exhausted = set()
     if cap is not None:
         counts = Counter(t for t in state.Tasks if registry[t].is_generic())
@@ -169,19 +156,15 @@ class TaskProblem:
         goal: List[List[str]],
         initial_vars: List[List[str]],
         registry: Optional[TaskRegistry] = None,
-        max_generic_repeat=_USE_MODULE_DEFAULT,
     ):
         self.goal = [list(g) for g in goal]
         self.registry = default_registry if registry is None else registry
-        self.max_generic_repeat = _resolve_cap(max_generic_repeat)
         self.initial_state = State(
             Vars=tuple(frozenset(v) for v in initial_vars), Tasks=()
         )
 
     def actions(self, state: State) -> List[Action]:
-        return actions_given_state(
-            state, self.registry, max_generic_repeat=self.max_generic_repeat
-        )
+        return actions_given_state(state, self.registry)
 
     def result(self, state: State, action: Action) -> State:
         return apply_action(state, action)
@@ -234,7 +217,6 @@ def find_path(
     dest: List[List[str]],
     registry: Optional[TaskRegistry] = None,
     max_depth: int = MAX_PLAN_DEPTH,
-    max_generic_repeat=_USE_MODULE_DEFAULT,
 ) -> TaskExec:
     """Reference-shaped result: ``[(None, s0), (a1, s1), ...]`` — an
     empty list signals "no plan"."""
@@ -242,7 +224,6 @@ def find_path(
         goal=dest,
         initial_vars=source,
         registry=registry,
-        max_generic_repeat=max_generic_repeat,
     )
     actions = problem.solve(max_depth=max_depth)
     if actions is None:
@@ -282,16 +263,12 @@ def Executor(
     build: List[List[str]],
     registry: Optional[TaskRegistry] = None,
     show_progress: bool = False,  # kept for reference API compatibility
-    max_generic_repeat=_USE_MODULE_DEFAULT,
 ) -> List:
     """Plan and execute: derive source schemas (free on lazy Spark
     DataFrames), BFS-plan to the goal column sets, run the plan, return
     every live frame (sources + all outputs, oldest first)."""
     source_cols = [[c for c in df.columns if isinstance(c, str)] for df in sources]
-    path = find_path(
-        source_cols, build, registry=registry,
-        max_generic_repeat=max_generic_repeat,
-    )
+    path = find_path(source_cols, build, registry=registry)
     if not path:
         raise RuntimeError("Path not found")
     actions = [a for a, _ in path if a is not None]
@@ -304,14 +281,10 @@ def solve_goal(
     sources: List,
     goal: List[str],
     registry: Optional[TaskRegistry] = None,
-    max_generic_repeat=_USE_MODULE_DEFAULT,
 ):
     """Convenience: run :func:`Executor` for a single goal column set and
     return the newest frame containing every goal column."""
-    frames = Executor(
-        sources, [list(goal)], registry=registry,
-        max_generic_repeat=max_generic_repeat,
-    )
+    frames = Executor(sources, [list(goal)], registry=registry)
     for frame in reversed(frames):
         if all(c in frame.columns for c in goal):
             return frame

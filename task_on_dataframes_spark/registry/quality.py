@@ -126,7 +126,8 @@ def _s13_bucketed_join(spark, sf_dir):
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     import hashlib
-    import tempfile
+
+    from task_on_dataframes_spark.operators.index import build_tables
 
     # the bucket layout is written ONCE per session and reused by every
     # later invocation (bench reruns, correctness sweeps) — that is the
@@ -139,24 +140,10 @@ def _s13_bucketed_join(spark, sf_dir):
     if not all(
         spark.catalog.tableExists(t) for t in (t_orders, t_lineitem)
     ):
-        base = tempfile.mkdtemp(prefix="tada_bkt_")
-        for name, df, key in (
-            (t_orders, orders, "o_orderkey"),
-            (t_lineitem, li, "l_orderkey"),
-        ):
-            # external table at a fresh temp path: the in-memory catalog
-            # of a new session forgets old tables but their warehouse
-            # dirs linger, so managed-table overwrite would hit
-            # LOCATION_ALREADY_EXISTS
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            (
-                df.write.mode("overwrite")
-                .bucketBy(8, key)
-                .sortBy(key)
-                .option("path", f"{base}/{name}")
-                .format("parquet")
-                .saveAsTable(name)
-            )
+        build_tables(
+            [(t_orders, orders, "o_orderkey"), (t_lineitem, li, "l_orderkey")],
+            8,
+        )
     o = spark.table(t_orders)
     l = spark.table(t_lineitem)
     # hint the merge join: at test SF the orders side is broadcast-small,

@@ -746,23 +746,16 @@ def _text_bpe_train(spark, sf_dir):
 
 
 def _text_bpe_train16(spark, sf_dir):
-    """16-merge BPE training through the DELTA pair-count maintenance
-    path (operators/bpe.py:bpe_train_delta): per merge, only the words
-    containing the winning pair are re-exploded (subtract-old/add-new
-    into the persisted pair table, ~4 exchanges/merge vs ~40 for the
-    full-recount loop), with localCheckpoint lineage cuts keeping plan
-    depth constant — the shape a real 32k-merge vocabulary needs. The
-    oracle replays all 16 merges as a chained-CTE DuckDB program with
-    identical greedy-replace and tie-break semantics. (Was 64 merges
-    through round 6: that equivalence-proof twin of the production
-    trainer cost ~10%% of the whole scale sweep's wall-clock; the
-    64-merge bit-identity guarantee lives on as
-    test_bpe_train_delta_matches_recount / _batched_and_scalable
-    pytests, and the sweep entry keeps a reduced-merge delta-path
-    exercise.)"""
-    from task_on_dataframes_spark.operators.bpe import bpe_train_delta
+    """16-merge BPE training through the SCALABLE path
+    (operators/bpe.py:bpe_train_scalable): one distributed word-count
+    collect, then the merge loop runs driver-local in exact greedy
+    order. The oracle replays all 16 merges as a chained-CTE DuckDB
+    program with identical greedy-replace and tie-break semantics,
+    pinning the scalable trainer against the same reference
+    :func:`_text_bpe_train` checks the full-recount loop with."""
+    from task_on_dataframes_spark.operators.bpe import bpe_train_scalable
 
-    return bpe_train_delta(_docs(spark, sf_dir), "text", merges=16)
+    return bpe_train_scalable(_docs(spark, sf_dir), "text", merges=16)
 
 
 def _text_bpe_train256(spark, sf_dir):

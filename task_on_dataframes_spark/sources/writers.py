@@ -101,19 +101,40 @@ def bucketed_table_sink(
     path: str | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Write a bucketed (+sorted) managed table: repeated joins /
+    """Write a bucketed (+sorted) catalog table: repeated joins /
     aggregations on ``bucket_cols`` then read co-located partitions and
-    skip the shuffle entirely — the persistent-layout lever for a fact
-    table that is joined on the same key by every query. (Requires a
-    metastore-backed table, hence ``saveAsTable``.)"""
-    w = (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-    )
+    skip the shuffle entirely — the persistent-layout lever for a table
+    joined on the same key by every query. (Bucketing requires a
+    metastore-backed table.) The one writer of every persisted index
+    table (``operators/index.py``).
+
+    Layout rule: rows are first placed with ``repartition(n_buckets,
+    *bucket_cols)``, which shares ``bucketBy``'s murmur3-pmod
+    placement, so each task holds exactly one bucket and writes ONE
+    sorted file — without it every upstream partition writes one file
+    per bucket it touches (partitions x buckets small files, each a
+    listing + open + sort-run cost for every later scan). An empty
+    ``bucket_cols`` writes a plain table through the same steps (the
+    IVF centroid table: a few rows that every consumer broadcasts).
+
+    ``overwrite`` DROPs any existing table of that name first, so the
+    new table lands at ``path`` — callers pass a fresh directory,
+    because an in-memory catalog forgets tables across sessions while
+    their warehouse directories linger, and a managed overwrite would
+    hit LOCATION_ALREADY_EXISTS. ``append`` adds files to the existing
+    table (Spark validates the bucket spec against the catalog)."""
+    if mode == "overwrite":
+        df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    w = df.write
+    if bucket_cols:
+        w = (
+            df.repartition(n_buckets, *bucket_cols)
+            .write.bucketBy(n_buckets, *bucket_cols)
+            .sortBy(*bucket_cols)
+        )
     if path is not None:
         w = w.option("path", path)
-    w.saveAsTable(table)
+    w.mode(mode).format("parquet").saveAsTable(table)
 
 
 def manifest_snapshot(path: str) -> list:

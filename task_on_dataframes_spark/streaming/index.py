@@ -1,12 +1,17 @@
 """Streaming maintenance of the persisted LSH and IVF indexes.
 
 Each document micro-batch is probed against the CURRENT index inside
-``foreachBatch``, its verified near-dup matches appended to a results
-sink, and then its own band keys + packed shingle sets appended into
-the index — so micro-batch N+1's probe sees micro-batch N. This is
-the continuous-ingest form of the build → probe → append lifecycle
-(``operators/dedup.py``): the batch path runs it wave-by-wave from a
-driver loop; this module runs it from a Structured Streaming drain.
+``foreachBatch``, its matches appended to a results sink, and then the
+batch itself appended into the index — so micro-batch N+1's probe sees
+micro-batch N. This is the continuous-ingest form of the build → probe
+→ append lifecycle: the index tables are written only through the
+shared persisted-index core (``operators/index.py``, reached via
+``append_lsh_index`` / ``append_ivf_index``); the batch path runs the
+lifecycle wave-by-wave from a driver loop, this module runs it from a
+Structured Streaming drain. :func:`_drain` is the one drain body;
+:func:`index_maintain_stream` and :func:`ann_maintain_stream` supply
+their probe and append.
+
 Micro-batches execute sequentially, but ``foreachBatch`` is
 AT-LEAST-ONCE: a micro-batch that fails (or whose driver dies) after
 side effects but before its offset commits is re-run with the same
@@ -37,6 +42,72 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+def _drain(
+    spark: SparkSession,
+    src_dir: str,
+    results_dir: str,
+    checkpoint: str,
+    max_files_per_trigger: int,
+    probe,
+    append,
+    empty_schema: str,
+) -> DataFrame:
+    """Drain ``src_dir`` (one parquet file per ingest wave; the file
+    source orders files oldest-mtime-first) with ``availableNow``. Per
+    micro-batch, in order: ``probe(sess, batch_df)`` overwrites
+    ``results_dir/b{batch_id}``, then ``append(sess, batch_df)`` runs,
+    gated by the ledger marker ``{results_dir}_ledger/appended_{batch_id}``.
+    Returns the drained results frame, or an empty ``empty_schema``
+    frame when no batch ran.
+
+    The probe result must be materialized BEFORE the append (the
+    write action does this naturally) — a lazy probe evaluated after
+    the append would see the batch's own rows and self-match. On a
+    retried batch whose append already landed, the probe would run
+    against an index that already CONTAINS the batch and the
+    overwrite would record self-matches — so a ledgered batch skips
+    the probe rewrite too (its previous overwrite already committed
+    the pre-append probe result; parquet directory writes finish with
+    the _SUCCESS marker the ledger write follows)."""
+    import os
+
+    schema = spark.read.parquet(src_dir).schema
+    ledger = results_dir.rstrip("/") + "_ledger"
+    os.makedirs(ledger, exist_ok=True)
+
+    def _probe_then_append(batch_df: DataFrame, batch_id: int) -> None:
+        marker = os.path.join(ledger, f"appended_{batch_id}")
+        if os.path.exists(marker):
+            # at-least-once replay of a fully-applied batch: both the
+            # per-batch results overwrite and the index append landed
+            return
+        sess = batch_df.sparkSession
+        probe(sess, batch_df).write.mode("overwrite").parquet(
+            os.path.join(results_dir, f"b{batch_id}")
+        )
+        append(sess, batch_df)
+        with open(marker, "w") as fh:
+            fh.write("committed\n")
+
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(_probe_then_append)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    if not os.path.exists(results_dir):  # empty stream: no batch ran
+        return spark.createDataFrame([], schema=empty_schema)
+    # per-batch subdirectories: recursive lookup, no partition inference
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(results_dir)
+    )
+
+
 def index_maintain_stream(
     spark: SparkSession,
     src_dir: str,
@@ -52,48 +123,17 @@ def index_maintain_stream(
     shingle_n: int = 2,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Drain ``src_dir`` (one parquet file per ingest wave; the file
-    source orders files oldest-mtime-first) through probe-then-append
-    maintenance of the persisted LSH index, with ``availableNow``.
-
-    Per micro-batch, in order: (1) probe the batch against the index
-    AS OF the previous batch — matches go to
-    ``results_dir/b{batch_id}`` with ``overwrite``, so an
-    at-least-once re-run of the same batch REPLACES its own output
-    instead of duplicating match rows; (2) append the batch's band
-    keys + packed sets into the index, gated by a ledger marker
-    (``{results_dir}_ledger/appended_{batch_id}``) so a re-run never
-    double-appends index keys. Returns the drained results frame
-    ``(id_col, n_matches, max_jaccard)``.
-
-    The probe result must be materialized BEFORE the append (the
-    write action does this naturally) — a lazy probe evaluated after
-    the append would see the batch's own signatures and self-match.
-    On a retried batch whose append already landed, the probe result
-    is rebuilt against an index that already CONTAINS the batch; the
-    overwrite would then record self-matches — so a ledgered batch
-    skips the probe rewrite too (its previous overwrite already
-    committed the pre-append probe result; parquet directory writes
-    finish with the _SUCCESS marker the ledger write follows).
-    """
-    import os
-
+    """Drain ``src_dir`` through probe-then-append maintenance of the
+    persisted LSH index (:func:`_drain`): each micro-batch is probed
+    against the index AS OF the previous batch, then its band keys +
+    packed sets are appended into the index. Returns the drained
+    results frame ``(id_col, n_matches, max_jaccard)``."""
     from task_on_dataframes_spark.operators.dedup import (
         append_lsh_index,
         probe_lsh_index,
     )
 
-    schema = spark.read.parquet(src_dir).schema
-    ledger = results_dir.rstrip("/") + "_ledger"
-    os.makedirs(ledger, exist_ok=True)
-
-    def _probe_then_append(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"appended_{batch_id}")
-        if os.path.exists(marker):
-            # at-least-once replay of a fully-applied batch: both the
-            # per-batch results overwrite and the index append landed
-            return
-        sess = batch_df.sparkSession
+    def probe(sess, batch_df):
         # shape="merge": the streaming drain is the one probe call
         # site where the broadcast-batch shape measured SLOWER, both
         # locally and at scale (sf0.1: 5.9 vs 7.4 s; sf3: 14.5 vs
@@ -101,39 +141,22 @@ def index_maintain_stream(
         # micro-batch pays two driver-side broadcast builds whose
         # fixed latency cannot amortize over a drain of small batches,
         # while the SMJ probe is one pipelined multi-stage job.
-        matches = probe_lsh_index(
+        return probe_lsh_index(
             sess, batch_df, id_col, text_col, keys_table, sets_table,
             num_perm=num_perm, bands=bands, threshold=threshold,
             shingle_n=shingle_n, shape="merge",
         )
-        matches.write.mode("overwrite").parquet(
-            os.path.join(results_dir, f"b{batch_id}")
-        )
+
+    def append(sess, batch_df):
         append_lsh_index(
             sess, batch_df, id_col, text_col, keys_table, sets_table,
             num_perm=num_perm, bands=bands, shingle_n=shingle_n,
         )
-        with open(marker, "w") as fh:
-            fh.write("committed\n")
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(_probe_then_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.exists(results_dir):  # empty stream: no batch ran
-        return spark.createDataFrame(
-            [], schema=f"{id_col} bigint, n_matches int, max_jaccard double"
-        )
-    # per-batch subdirectories: recursive lookup, no partition inference
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(results_dir)
+    return _drain(
+        spark, src_dir, results_dir, checkpoint, max_files_per_trigger,
+        probe, append,
+        f"{id_col} bigint, n_matches int, max_jaccard double",
     )
 
 
@@ -152,85 +175,48 @@ def ann_maintain_stream(
 ) -> DataFrame:
     """Drain ``src_dir`` (one parquet file of ``(id_col, vec_col)``
     rows per ingest wave) through probe-then-append maintenance of the
-    persisted IVF index — the vector twin of
+    persisted IVF index (:func:`_drain`) — the vector twin of
     :func:`index_maintain_stream`, completing the lifecycle matrix
     {LSH, IVF} x {batch driver loop, Structured Streaming drain}.
 
-    Per micro-batch, in order: (1) each arriving vector is probed as a
-    query against the index AS OF the previous batch (top-``k`` by
-    exact cosine within ``n_probe`` coarse lists — the "link new
-    embeddings to their nearest indexed neighbors" step of a rolling
-    ingest pipeline); results land in ``results_dir/b{batch_id}`` with
-    ``overwrite``; (2) the batch is appended into the list table under
+    Per micro-batch: each arriving vector is probed as a query against
+    the index AS OF the previous batch (top-``k`` by exact cosine
+    within ``n_probe`` coarse lists — the "link new embeddings to
+    their nearest indexed neighbors" step of a rolling ingest
+    pipeline), then the batch is appended into the list table under
     the FROZEN stored quantizer (O(batch x n_centroids), existing
     files untouched). Wave N+1's neighbors can therefore include
-    wave-N vectors, which a build-once index can never return.
-
-    The same at-least-once idempotency contract as the LSH drain: a
-    per-batch ledger marker gates the append, the per-batch overwrite
-    replaces rather than duplicates on replay, and a fully-applied
-    batch is skipped wholesale (re-probing it would see its own
-    appended vectors and self-match). Scale shape: every stage inside
-    ``foreachBatch`` is micro-batch-sized; the index is read
-    bucket-pruned (``cid IN (...)``) and never shuffled.
+    wave-N vectors, which a build-once index can never return. The
+    index is read bucket-pruned (``cid IN (...)``) and never shuffled.
 
     Returns the drained results frame
     ``(query_id, vec_id, cos, rank)`` where ``query_id`` is the
     arriving vector's id.
     """
-    import os
-
     from task_on_dataframes_spark.operators.similarity import (
         append_ivf_index,
         probe_ivf_index,
     )
 
-    schema = spark.read.parquet(src_dir).schema
-    ledger = results_dir.rstrip("/") + "_ledger"
-    os.makedirs(ledger, exist_ok=True)
-
-    def _probe_then_append(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"appended_{batch_id}")
-        if os.path.exists(marker):
-            return
-        sess = batch_df.sparkSession
+    def probe(sess, batch_df):
         queries = batch_df.select(
             F.col(id_col).alias("query_id"), F.col(vec_col)
         )
-        matches = probe_ivf_index(
+        return probe_ivf_index(
             sess, queries, cents_table, lists_table,
             k=k, n_probe=n_probe, vec_col=vec_col,
         )
-        matches.write.mode("overwrite").parquet(
-            os.path.join(results_dir, f"b{batch_id}")
-        )
+
+    def append(sess, batch_df):
         append_ivf_index(
             sess, batch_df, cents_table, lists_table,
             id_col=id_col, vec_col=vec_col,
         )
-        with open(marker, "w") as fh:
-            fh.write("committed\n")
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(_probe_then_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.exists(results_dir):  # empty stream: no batch ran
-        return spark.createDataFrame(
-            [],
-            schema=(
-                "query_id bigint, vec_id bigint, cos double, rank int"
-            ),
-        )
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(results_dir)
+    return _drain(
+        spark, src_dir, results_dir, checkpoint, max_files_per_trigger,
+        probe, append,
+        "query_id bigint, vec_id bigint, cos double, rank int",
     )
 
 

@@ -286,54 +286,36 @@ def test_bpe_apply_vocab_shape_matches_chain(spark, sf_dir):
         B.BPE_APPLY_CHAIN_SEG = old
 
 
-def test_bpe_train_delta_matches_recount(spark):
-    from task_on_dataframes_spark.operators.bpe import (
-        bpe_train,
-        bpe_train_delta,
-    )
-
-    # mixed corpus with repeats so several merge steps have real
-    # deltas (words containing the winning pair) AND untouched words
-    docs = spark.createDataFrame(
-        [
-            (1, "banana bandana banana"),
-            (2, "cabana banana band"),
-            (3, "an ban nab banana"),
-        ],
-        ["doc_id", "text"],
-    )
-    ref = [tuple(r) for r in bpe_train(docs, "text", merges=6).collect()]
-    delta = [
-        tuple(r) for r in bpe_train_delta(docs, "text", merges=6).collect()
-    ]
-    # subtract-old/add-new over exactly the affected words is an exact
-    # maintenance of the full recount: tables must be identical,
-    # including tie-breaks and counts
-    assert delta == ref
-
-
-def test_bpe_train_delta_exhausts_pairs(spark):
-    from task_on_dataframes_spark.operators.bpe import bpe_train_delta
+def test_bpe_train_scalable_exhausts_pairs(spark):
+    from task_on_dataframes_spark.operators.bpe import bpe_train_scalable
 
     # 'ab' has exactly one mergeable pair; asking for more merges than
-    # exist must stop early, not loop or error
+    # exist must stop early, not loop or error — on the driver-local
+    # path and on the batched fallback (cap 0 forces it)
     docs = spark.createDataFrame([(1, "ab ab")], ["doc_id", "text"])
-    rows = bpe_train_delta(docs, "text", merges=5).collect()
-    assert len(rows) == 1
-    assert (rows[0]["lhs"], rows[0]["rhs"], rows[0]["merged"]) == (
-        "a",
-        "b",
-        "ab",
-    )
+    for cap in (2_000_000, 0):
+        rows = bpe_train_scalable(
+            docs, "text", merges=5, driver_vocab_cap=cap
+        ).collect()
+        assert len(rows) == 1, cap
+        assert (rows[0]["lhs"], rows[0]["rhs"], rows[0]["merged"]) == (
+            "a",
+            "b",
+            "ab",
+        )
 
 
-def test_bpe_train_batched_and_scalable_match_delta(spark):
+def test_bpe_train_batched_and_scalable_match_recount(spark):
     """The batched-prefix trainer and the driver-local scalable trainer
-    must both replay merge-at-a-time greedy bit-identically, including
-    tie-breaks and counts, while costing far fewer jobs."""
+    must replay the merge-at-a-time full-recount loop
+    (:func:`bpe_train`) bit-identically, including tie-breaks and
+    counts, while costing far fewer jobs. Greedy merge tables are
+    prefix-stable, so the recount reference checks the first 8 merges
+    (its lazy per-merge plan grows too fast for more) and the two
+    trainers must agree on all 20."""
     from task_on_dataframes_spark.operators.bpe import (
+        bpe_train,
         bpe_train_batched,
-        bpe_train_delta,
         bpe_train_scalable,
     )
 
@@ -346,26 +328,26 @@ def test_bpe_train_batched_and_scalable_match_delta(spark):
         ],
         ["doc_id", "text"],
     )
-    ref = [tuple(r) for r in bpe_train_delta(docs, "text", merges=20).collect()]
+    ref = [tuple(r) for r in bpe_train(docs, "text", merges=8).collect()]
     stats_b: dict = {}
     batched = [
         tuple(r)
         for r in bpe_train_batched(docs, "text", merges=20, stats=stats_b).collect()
     ]
-    assert batched == ref
+    assert len(batched) == 20 and batched[:8] == ref
     assert stats_b["batches"] < stats_b["merges"], stats_b
     stats_s: dict = {}
     local = [
         tuple(r)
         for r in bpe_train_scalable(docs, "text", merges=20, stats=stats_s).collect()
     ]
-    assert local == ref
+    assert local == batched
     assert stats_s["path"] == "local" and stats_s["jobs"] == 1
 
 
 def test_bpe_train_scalable_falls_back_above_cap(spark):
     from task_on_dataframes_spark.operators.bpe import (
-        bpe_train_delta,
+        bpe_train,
         bpe_train_scalable,
     )
 
@@ -382,7 +364,7 @@ def test_bpe_train_scalable_falls_back_above_cap(spark):
     ]
     assert stats["path"] == "batched"
     assert out == [
-        tuple(r) for r in bpe_train_delta(docs, "text", merges=8).collect()
+        tuple(r) for r in bpe_train(docs, "text", merges=8).collect()
     ]
 
 

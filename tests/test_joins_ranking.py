@@ -111,28 +111,6 @@ def test_ivf_recall_against_brute_force(spark, sf_dir):
     assert recall >= 0.5, recall
 
 
-def test_blas_topk_agrees_with_expression_topk(spark, sf_dir):
-    from task_on_dataframes_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_blas,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {
-        (r["query_id"], r["vec_id"]) for r in cosine_topk(emb, q, k=10).collect()
-    }
-    blas = {
-        (r["query_id"], r["vec_id"])
-        for r in cosine_topk_blas(emb, q, k=10).collect()
-    }
-    # identical result sets except possible last-ulp rank swaps
-    assert len(blas) == len(exact) == 50
-    assert len(exact & blas) >= 48
-
-
 def test_pack_sequences_is_partitioning_invariant(spark):
     """The distributed prefix sum must yield identical pack assignments
     at any partition count (offsets telescope across boundaries)."""

@@ -223,6 +223,50 @@ def test_index_writes_one_file_per_bucket(spark, sf_dir):
     assert len(spark.table(lists_t).inputFiles()) <= 2 * IVF_INDEX_BUCKETS
 
 
+def test_lsh_build_half_failure_propagates_and_retry_rebuilds(
+    spark, sf_dir, monkeypatch
+):
+    """Fault injection on the shared two-table write: when the sets
+    write of an LSH build raises, the exception reaches the caller
+    only after the concurrent keys write has finished, and a retried
+    build under the same tag rebuilds both tables to exactly what a
+    clean build writes."""
+    import pytest
+
+    from task_on_dataframes_spark.operators import index
+    from task_on_dataframes_spark.operators.dedup import build_lsh_index
+
+    corpus = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0)
+    real_sink = index.bucketed_table_sink
+    finished = []
+
+    def flaky_sink(df, table, *args, **kwargs):
+        if table.startswith("tada_lshidx_sets_"):
+            raise RuntimeError("injected sets-write failure")
+        real_sink(df, table, *args, **kwargs)
+        finished.append(table)
+
+    monkeypatch.setattr(index, "bucketed_table_sink", flaky_sink)
+    with pytest.raises(RuntimeError, match="injected sets-write failure"):
+        build_lsh_index(spark, corpus, "doc_id", "text", name_tag="t_fault")
+    # the sibling write ran to completion before the error propagated
+    assert finished == ["tada_lshidx_keys_t_fault"]
+    assert spark.catalog.tableExists("tada_lshidx_keys_t_fault")
+    assert not spark.catalog.tableExists("tada_lshidx_sets_t_fault")
+
+    monkeypatch.setattr(index, "bucketed_table_sink", real_sink)
+    retried = build_lsh_index(
+        spark, corpus, "doc_id", "text", name_tag="t_fault"
+    )
+    clean = build_lsh_index(
+        spark, corpus, "doc_id", "text", name_tag="t_fault_clean"
+    )
+    for got_t, want_t in zip(retried, clean):
+        got = sorted(map(tuple, spark.table(got_t).collect()))
+        want = sorted(map(tuple, spark.table(want_t).collect()))
+        assert got == want and want, (got_t, want_t)
+
+
 def test_lsh_index_append_then_compact_roundtrip(spark, sf_dir):
     """The r11 index lifecycle: appending a wave into the persisted
     index makes its documents probe-visible (equal to a one-shot over

@@ -233,8 +233,7 @@ def test_reindex_missing_column_warns_and_fills_null():
 
 def test_generic_repeat_cap_default_blocks_double_use():
     """Reference parity (frame_tasks/solve.py:11): the default cap of 1
-    makes a goal needing TWO uses of one generic task unsatisfiable —
-    and the per-call override lifts it without touching the global."""
+    makes a goal needing TWO uses of one generic task unsatisfiable."""
     from task_on_dataframes_spark.plans.solve import find_path
 
     with tada.temporary_tasks() as reg:
@@ -249,22 +248,10 @@ def test_generic_repeat_cap_default_blocks_double_use():
         # d.v -> d.v.v -> d.v.v.v needs doubler twice
         assert find_path([["d.v"]], [["d.v.v.v"]], registry=reg) == []
 
-        path = find_path(
-            [["d.v"]], [["d.v.v.v"]], registry=reg, max_generic_repeat=2
-        )
-        assert [a.Task for a, _ in path if a is not None] == [
-            "doubler",
-            "doubler",
-        ]
-
-        # None = unlimited, reference's module-global escape hatch shape
-        path = find_path(
-            [["d.v"]], [["d.v.v.v"]], registry=reg, max_generic_repeat=None
-        )
-        assert len([a for a, _ in path if a is not None]) == 2
-
 
 def test_generic_repeat_module_global_still_honored(monkeypatch):
+    """The module global is read at call time: a cap of 2 or None
+    (unlimited, the reference's escape hatch) lifts the default."""
     from task_on_dataframes_spark.plans import solve as solve_mod
 
     with tada.temporary_tasks() as reg:
@@ -276,6 +263,12 @@ def test_generic_repeat_module_global_still_honored(monkeypatch):
         def doubler(x):
             return x
 
-        monkeypatch.setattr(solve_mod, "MAX_REPEAT_GENERIC_TASK", None)
-        path = solve_mod.find_path([["d.v"]], [["d.v.v.v"]], registry=reg)
-        assert len([a for a, _ in path if a is not None]) == 2
+        for cap in (2, None):
+            monkeypatch.setattr(solve_mod, "MAX_REPEAT_GENERIC_TASK", cap)
+            path = solve_mod.find_path(
+                [["d.v"]], [["d.v.v.v"]], registry=reg
+            )
+            assert [a.Task for a, _ in path if a is not None] == [
+                "doubler",
+                "doubler",
+            ], cap

@@ -163,7 +163,6 @@ def test_brute_force_guards_refuse_oversized_inputs(spark):
     import pytest
 
     from task_on_dataframes_spark.operators.dedup import embedding_cosine_pairs
-    from task_on_dataframes_spark.operators.similarity import cosine_topk_blas
     from task_on_dataframes_spark.operators.text import running_sum
 
     emb = spark.range(0, 50).select(
@@ -172,8 +171,6 @@ def test_brute_force_guards_refuse_oversized_inputs(spark):
     )
     with pytest.raises(ValueError, match="O\\(n\\^2\\)"):
         embedding_cosine_pairs(emb, max_rows=10).count()
-    with pytest.raises(ValueError, match="collects the query set"):
-        cosine_topk_blas(emb, emb.select(F.col("vec_id").alias("query_id"), "embedding"), max_queries=10).count()
     counts = spark.range(0, 100).select(F.col("id").alias("k"), F.lit(1).alias("c"))
     with pytest.raises(ValueError, match="unpartitioned window"):
         running_sum(counts, "c", "cum", [F.col("k")], max_rows=10).count()

@@ -101,8 +101,8 @@ def main() -> int:
             # executed EAGERLY while building (iterative driver loop
             # with localCheckpoint lineage cuts), so the static plan
             # under-reports its work. The shuffle budget is documented
-            # and tested at the operator (e.g. bpe_train_delta: ~3
-            # shuffles/merge, one job/merge).
+            # and tested at the operator (e.g. bpe_train_batched: ~3
+            # shuffles and one job per merge batch).
             notes.append("eager driver-loop; plan post-lineage-cut")
         if bad:
             violations.append(name)
