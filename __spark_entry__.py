@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship planner-driven text pipeline at
-sf0.001. ``queries()`` exposes one callable per implemented operator
-from SURVEY.md §2 (plus the LLM-data-pipeline extensions);
+sf0.001. ``queries()`` exposes every query registered with ``@query``
+in ``task_on_dataframes_spark/registry``, check window first;
 ``oracle_sql()`` carries the DuckDB-equivalent ANSI SQL for each.
 
 Column-name discipline: every computed column is aliased identically in
@@ -15,278 +15,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 SF0001 = "/root/testdata/sf0.001"
 
-from task_on_dataframes_spark.registry.common import (
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-from task_on_dataframes_spark.registry.core import (
-    _a1_value_counts,
-    _a2_scalar_sum,
-    _f1_explode_carry,
-    _f2_word_boundary_split,
-    _j3_left_join,
-    _j4_semi_join,
-    _j5_anti_join,
-    _o2_pagination,
-    _o3_topk_counts,
-    _p1_projection_reindex,
-    _p3_filter_startswith,
-    _p5_null_safe_flag_filter,
-    _p6_distinct_subset,
-    _planner_llm_chunks,
-    _planner_pack,
-    _planner_top90,
-    _s1_glob_source,
-    _s2_whole_file_read,
-    _w1_running_sum,
-    _w2_top90_tokens,
-)
-from task_on_dataframes_spark.registry.quality import (
-    _a11_histogram,
-    _dq_rules,
-    _quality_gopher_gate,
-    _quality_ks_drift,
-    _quality_psi_drift,
-    _quality_domain_calibrate,
-    _quality_linear_probe,
-    _quality_probe_apply,
-    _quality_probe_by_lang,
-    _s18_bloom_join_prune,
-    _sketch_cms,
-    _s16_zorder_stats,
-    _s17_incremental_read,
-    _s19_dynamic_partition_overwrite,
-    _snapshot_diff,
-    _s15_schema_merge,
-    _ev_windowed_topk,
-    _s13_bucketed_join,
-    _f_map_funcs,
-    _s14_compaction,
-    _sketch_heavy_hitters,
-    _sketch_hll_bound,
-    _sketch_quantile_bound,
-    _text_entropy,
-)
-from task_on_dataframes_spark.registry.dedup import (
-    _decontaminate,
-    _decontaminate_bloom,
-    _dedup_semantic,
-    _dedup_components,
-    _dedup_cross_corpus,
-    _dedup_daily_first,
-    _dedup_incremental_lsh,
-    _dedup_index_build,
-    _dedup_index_compact,
-    _dedup_index_maintain,
-    _dedup_index_probe,
-    _dedup_embedding_cosine,
-    _dedup_embedding_lsh,
-    _dedup_exact,
-    _dedup_keep_canonical,
-    _dedup_levenshtein,
-    _dedup_minhash_char,
-    _dedup_minhash_lsh,
-    _dedup_ngram_jaccard,
-    _dedup_simhash,
-    _dedup_recall_eval,
-    _dedup_star_recall_eval,
-    _dedup_spans,
-    _dedup_substring,
-    _dedup_substring_rewrite,
-    _dedup_winnow,
-    _text_containment,
-)
-from task_on_dataframes_spark.registry.embeddings import (
-    _ann_cosine_topk,
-    _emb_dim_stats,
-    _ann_filtered_topk,
-    _ann_recall_clustered,
-    _ann_recall_eval,
-    _emb_pca_top2,
-    _ann_ivf_topk,
-    _ann_ivfpq_topk,
-    _ann_ivfsq_topk,
-    _ann_ivf_incremental,
-    _ann_index_build,
-    _ann_index_compact,
-    _ann_index_maintain,
-    _ann_index_probe,
-    _ann_pq_topk,
-    _ann_lsh_multi_topk,
-    _ann_sq_rerank,
-    _ann_lsh_topk,
-    _emb_gram,
-    _emb_kmeans,
-    _emb_label_centroids,
-    _emb_matryoshka_eval,
-    _emb_pca_project,
-    _emb_pca_top,
-    _emb_quantize,
-    _graph_pagerank,
-)
-from task_on_dataframes_spark.registry.events import (
-    _ev_anomaly_mad,
-    _ev_cdc_apply,
-    _ev_markov,
-    _ev_session_window_builtin,
-    _ev_funnel,
-    _ev_gap_fill,
-    _ev_hourly_agg,
-    _ev_ohlc_bars,
-    _ev_json_props,
-    _ev_retention,
-    _ev_sessionize,
-    _ev_sliding_agg,
-    _ev_zscore_anomalies,
-)
-from task_on_dataframes_spark.registry.multimodal import (
-    _mm_audio_features,
-    _mm_audio_resample,
-    _mm_decode_meta,
-    _mm_png_decode,
-    _mm_frame_sample,
-    _mm_raw_decode,
-    _mm_raw_pipeline,
-    _mm_wav_decode,
-)
-from task_on_dataframes_spark.registry.relational import (
-    RECURSIVE_REACH_SQL,
-    _s12_sorted_stats_prune,
-    _sql_recursive_reach,
-    _sql_pipe_syntax,
-    _j10_interval_overlap_join,
-    _a10_pivot,
-    _a3_distinct_agg,
-    _a4_rollup,
-    _a5_percentiles,
-    _a6_stats,
-    _a7_grouping_sets,
-    _a8_cube,
-    _a9_quantiles,
-    _f_array_funcs,
-    _f_date_funcs,
-    _f_json_extract,
-    _f_variant_json,
-    _f_posexplode,
-    _f_string_funcs,
-    _j6_asof_join,
-    _j7_range_join,
-    _j8_upsert,
-    _j9_full_outer,
-    _p7_pivot,
-    _p8_unpivot,
-    _profile_table,
-    _s10_jsonl_roundtrip,
-    _s11_partition_prune,
-    _s9_orc_roundtrip,
-    _scd2_history,
-    _set_ops,
-    _sql_exists_subquery,
-    _w3_ranking,
-    _w4_moving_avg,
-    _w5_lag_delta,
-    _w6_ntile_bins,
-    _w7_percent_rank,
-    _w8_first_last,
-)
-from task_on_dataframes_spark.registry.sampling import (
-    _export_training_shards,
-    _mix_domains,
-    _mix_temperature,
-    _mix_token_budget,
-    _sample_interleave,
-    _sample_kcenter,
-    _sample_negatives,
-    _sample_bottomk,
-    _sample_split,
-    _sample_stratified,
-    _sample_topk_per_stratum,
-    _sample_weighted,
-    _shard_assign,
-    _skew_distinct_2phase,
-    _skew_salted_agg,
-    _skew_salted_join,
-)
-from task_on_dataframes_spark.registry.streaming import (
-    _stream_cms,
-    _stream_mv_upsert,
-    _stream_windowed_topk,
-    _stream_dedup,
-    _stream_ann_maintain,
-    _stream_index_maintain,
-    _stream_enrich,
-    _stream_hourly_agg,
-    _stream_sessionize,
-    _stream_stream_join,
-)
-from task_on_dataframes_spark.registry.text import (
-    _ann_hybrid_rrf,
-    _text_bigram_lm,
-    _text_chunk_overlap,
-    _text_langid_confusion,
-    _text_langid_script,
-    _text_bpe_apply,
-    _text_bpe_train,
-    _text_bpe_train16,
-    _text_bpe_train256,
-    _text_bpe_bytes,
-    _curriculum_quality_bins,
-    _pipeline_c4_curation,
-    _pipeline_multilingual_curation,
-    _pipeline_multilingual_tokens,
-    _text_bm25,
-    _text_chunk,
-    _text_fim_transform,
-    _text_classifier,
-    _text_fingerprint,
-    _text_langid,
-    _text_ngram_counts,
-    _text_pack,
-    _text_pii_redact,
-    _text_quality,
-    _text_repetition,
-    _text_sentences,
-    _text_tfidf,
-    _text_token_count,
-    _text_token_stats,
-    _text_vocab_oov,
-    _text_winnow,
-)
-from task_on_dataframes_spark.registry.tpch import (
-    _q10_returned_items,
-    _q11_value_concentration,
-    _q12_priority_lines,
-    _q13_order_distribution,
-    _q14_promo_share,
-    _q15_top_supplier,
-    _q16_supplier_counts,
-    _q17_small_quantity_revenue,
-    _q18_large_orders,
-    _q19_disjunctive_filter,
-    _q1_pricing_summary,
-    _q20_excess_volume,
-    _q21_waiting_supplier,
-    _q22_idle_customers,
-    _q2_min_cost_supplier,
-    _q3_shipping_priority,
-    _q4_order_priority,
-    _q5_region_volume,
-    _q6_forecast_revenue,
-    _q7_nation_volume,
-    _q8_market_share,
-    _q9_product_profit,
-)
-
+from task_on_dataframes_spark.registry import QUERIES
+from task_on_dataframes_spark.registry.common import _CLS_WEIGHTS_FP
+from task_on_dataframes_spark.registry.relational import RECURSIVE_REACH_SQL
 
 
 def _oracle_sf_dir() -> str:
@@ -300,7 +35,7 @@ def _oracle_sf_dir() -> str:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _planner_top90(spark, SF0001)
+    return QUERIES["planner_top90_tokens"](spark, SF0001)
 
 
 def _pq_training_ctes(m: int, k: int, iters: int, dims: int) -> list:
@@ -719,30 +454,16 @@ def _bloom_decontaminate_oracle_sql(k: int = 3, m: int = 1 << 16) -> str:
 # registry
 # ---------------------------------------------------------------------------
 
-#: driver window, rotated per round (policy: everything this round
-#: TOUCHED first — `ann_index_compact` (new this round, never
-#: driver-checked), the IVF compaction's file riders
-#: (`ann_index_maintain`), every consumer of the fused
-#: signature+pack probe rewrite in `probe_lsh_index`
-#: (`dedup_index_probe/maintain/compact`, `dedup_incremental_lsh`),
-#: and `stream_index_maintain` after the at-least-once idempotency
-#: rewrite — then the 43 least-recently-driver-checked queries
-#: (stalest per the CORRECTNESS_r1..r11 union, ties broken by name:
-#: all 11 last checked in r6 plus the first 32 of the 41 last
-#: checked in r7; the remaining 9 head the r13 rotation). Overlap
-#: with the r11 window: 6/50, all six touched by round-12 changes.
+#: the correctness check runs these queries first, in this order;
+#: ``queries()`` lists them ahead of the rest of the registry
 _R12_WINDOW = [
-    # never driver-checked (new this round)
     "ann_index_compact",
-    # round-12 code riders (IVF compaction / fused LSH probe /
-    # idempotent streaming drain)
     "ann_index_maintain",
     "dedup_index_probe",
     "dedup_index_maintain",
     "dedup_index_compact",
     "dedup_incremental_lsh",
     "stream_index_maintain",
-    # stalest: last driver-checked in r6
     "j4_semi_join",
     "j5_anti_join",
     "j8_upsert",
@@ -754,7 +475,6 @@ _R12_WINDOW = [
     "text_token_stats",
     "w3_ranking",
     "w6_ntile_bins",
-    # stalest: last driver-checked in r7 (first 32 by name)
     "ann_ivf_incremental",
     "ann_ivf_topk",
     "ann_ivfpq_topk",
@@ -791,256 +511,8 @@ _R12_WINDOW = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q = _all_queries()
-    head = {k: q[k] for k in _R12_WINDOW if k in q}
-    return head | {k: v for k, v in q.items() if k not in head}
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # --- r4 ordering below; the driver window is imposed by
-        # _R12_WINDOW in queries() ---
-        "j10_interval_overlap_join": _j10_interval_overlap_join,
-        "quality_ks_drift": _quality_ks_drift,
-        "quality_psi_drift": _quality_psi_drift,
-        "quality_gopher_gate": _quality_gopher_gate,
-        "sql_pipe_syntax": _sql_pipe_syntax,
-        "f_variant_json": _f_variant_json,
-        "mix_token_budget": _mix_token_budget,
-        "ann_hybrid_rrf": _ann_hybrid_rrf,
-        "text_chunk_overlap": _text_chunk_overlap,
-        "text_langid_confusion": _text_langid_confusion,
-        "emb_dim_stats": _emb_dim_stats,
-        # --- newest this round (no driver row yet, waves 5-11)
-        "dedup_incremental_lsh": _dedup_incremental_lsh,
-        "dedup_index_build": _dedup_index_build,
-        "dedup_index_compact": _dedup_index_compact,
-        "dedup_index_maintain": _dedup_index_maintain,
-        "dedup_index_probe": _dedup_index_probe,
-        "quality_linear_probe": _quality_linear_probe,
-        "quality_probe_by_lang": _quality_probe_by_lang,
-        "sketch_cms": _sketch_cms,
-        "dedup_substring": _dedup_substring,
-        "stream_cms": _stream_cms,
-        "s18_bloom_join_prune": _s18_bloom_join_prune,
-        "text_containment": _text_containment,
-        "quality_domain_calibrate": _quality_domain_calibrate,
-        "ev_cdc_apply": _ev_cdc_apply,
-        "dedup_substring_rewrite": _dedup_substring_rewrite,
-        "dedup_recall_eval": _dedup_recall_eval,
-        "dedup_star_recall_eval": _dedup_star_recall_eval,
-        "ann_filtered_topk": _ann_filtered_topk,
-        "planner_pack": _planner_pack,
-        "sql_recursive_reach": _sql_recursive_reach,
-        "s19_dynamic_partition_overwrite": _s19_dynamic_partition_overwrite,
-        "a11_histogram": _a11_histogram,
-        "emb_matryoshka_eval": _emb_matryoshka_eval,
-        "quality_probe_apply": _quality_probe_apply,
-        "ev_anomaly_mad": _ev_anomaly_mad,
-        "export_training_shards": _export_training_shards,
-        "stream_mv_upsert": _stream_mv_upsert,
-        "sample_kcenter": _sample_kcenter,
-        "ev_markov": _ev_markov,
-        "s16_zorder_stats": _s16_zorder_stats,
-        "s17_incremental_read": _s17_incremental_read,
-        "emb_pca_top2": _emb_pca_top2,
-        "text_bpe_train": _text_bpe_train,
-        "text_bpe_train16": _text_bpe_train16,
-        "text_bpe_train256": _text_bpe_train256,
-        "text_bpe_bytes": _text_bpe_bytes,
-        "text_bpe_apply": _text_bpe_apply,
-        "dedup_semantic": _dedup_semantic,
-        "decontaminate_bloom": _decontaminate_bloom,
-        "mix_domains": _mix_domains,
-        "mix_temperature": _mix_temperature,
-        "sample_interleave": _sample_interleave,
-        "snapshot_diff": _snapshot_diff,
-        "ann_recall_eval": _ann_recall_eval,
-        "ann_recall_clustered": _ann_recall_clustered,
-        # --- changed this round (gap semantics; re-validate)
-        "ev_sessionize": _ev_sessionize,
-        "stream_sessionize": _stream_sessionize,
-        # --- new this round (no driver row yet)
-        "s13_bucketed_join": _s13_bucketed_join,
-        "dq_rules": _dq_rules,
-        "ev_windowed_topk": _ev_windowed_topk,
-        "text_entropy": _text_entropy,
-        "sketch_hll_bound": _sketch_hll_bound,
-        "sketch_quantile_bound": _sketch_quantile_bound,
-        "sketch_heavy_hitters": _sketch_heavy_hitters,
-        "s14_compaction": _s14_compaction,
-        "f_map_funcs": _f_map_funcs,
-        "ann_pq_topk": _ann_pq_topk,
-        "ann_ivfpq_topk": _ann_ivfpq_topk,
-        "stream_windowed_topk": _stream_windowed_topk,
-        "s15_schema_merge": _s15_schema_merge,
-        "ev_session_window_builtin": _ev_session_window_builtin,
-        "stream_dedup": _stream_dedup,
-        "stream_index_maintain": _stream_index_maintain,
-        "stream_ann_maintain": _stream_ann_maintain,
-        "stream_enrich": _stream_enrich,
-        "stream_stream_join": _stream_stream_join,
-        "emb_label_centroids": _emb_label_centroids,
-        "emb_gram": _emb_gram,
-        "emb_pca_top": _emb_pca_top,
-        "shard_assign": _shard_assign,
-        "s9_orc_roundtrip": _s9_orc_roundtrip,
-        "s10_jsonl_roundtrip": _s10_jsonl_roundtrip,
-        "pipeline_c4_curation": _pipeline_c4_curation,
-        "pipeline_multilingual_curation": _pipeline_multilingual_curation,
-        "pipeline_multilingual_tokens": _pipeline_multilingual_tokens,
-        "j9_full_outer": _j9_full_outer,
-        "w8_first_last": _w8_first_last,
-        "profile_table": _profile_table,
-        "scd2_history": _scd2_history,
-        "graph_pagerank": _graph_pagerank,
-        "s11_partition_prune": _s11_partition_prune,
-        "sample_bottomk": _sample_bottomk,
-        "dedup_daily_first": _dedup_daily_first,
-        "emb_pca_project": _emb_pca_project,
-        "text_sentences": _text_sentences,
-        "curriculum_quality_bins": _curriculum_quality_bins,
-        "dedup_cross_corpus": _dedup_cross_corpus,
-        "mm_decode_meta": _mm_decode_meta,
-        "mm_png_decode": _mm_png_decode,
-        "mm_frame_sample": _mm_frame_sample,
-        "mm_raw_decode": _mm_raw_decode,
-        "mm_raw_pipeline": _mm_raw_pipeline,
-        "mm_wav_decode": _mm_wav_decode,
-        "mm_audio_features": _mm_audio_features,
-        "mm_audio_resample": _mm_audio_resample,
-        "text_bigram_lm": _text_bigram_lm,
-        "sample_negatives": _sample_negatives,
-        "s12_sorted_stats_prune": _s12_sorted_stats_prune,
-        "set_ops": _set_ops,
-        "f_posexplode": _f_posexplode,
-        "w3_ranking": _w3_ranking,
-        "w6_ntile_bins": _w6_ntile_bins,
-        "j8_upsert": _j8_upsert,
-        "a9_quantiles": _a9_quantiles,
-        "text_winnow": _text_winnow,
-        "emb_quantize": _emb_quantize,
-        "sample_split": _sample_split,
-        # --- stalest green driver rows
-        "dedup_simhash": _dedup_simhash,
-        "dedup_components": _dedup_components,
-        "dedup_embedding_cosine": _dedup_embedding_cosine,
-        "dedup_embedding_lsh": _dedup_embedding_lsh,
-        "ann_cosine_topk": _ann_cosine_topk,
-        "ann_lsh_topk": _ann_lsh_topk,
-        "text_token_stats": _text_token_stats,
-        "text_quality": _text_quality,
-        "text_langid": _text_langid,
-        "text_langid_script": _text_langid_script,
-        "text_token_count": _text_token_count,
-        "text_fingerprint": _text_fingerprint,
-        "planner_top90_tokens": _planner_top90,
-        "a1_value_counts": _a1_value_counts,
-        "a2_scalar_sum": _a2_scalar_sum,
-        "w1_running_sum": _w1_running_sum,
-        # --- tail: outside the 50-entry driver window (all
-        # driver-green r2/r3; re-rotate forward as needed)
-        "f_json_extract": _f_json_extract,
-        "ev_hourly_agg": _ev_hourly_agg,
-        "ev_ohlc_bars": _ev_ohlc_bars,
-        "ev_sliding_agg": _ev_sliding_agg,
-        "text_repetition": _text_repetition,
-        "j6_asof_join": _j6_asof_join,
-        "j7_range_join": _j7_range_join,
-        "w4_moving_avg": _w4_moving_avg,
-        "a3_distinct_agg": _a3_distinct_agg,
-        "a4_rollup": _a4_rollup,
-        "a5_percentiles": _a5_percentiles,
-        "a6_stats": _a6_stats,
-        "a7_grouping_sets": _a7_grouping_sets,
-        "p7_pivot": _p7_pivot,
-        "text_tfidf": _text_tfidf,
-        "text_chunk": _text_chunk,
-        "text_fim_transform": _text_fim_transform,
-        "text_pack": _text_pack,
-        "decontaminate": _decontaminate,
-        "sql_exists_subquery": _sql_exists_subquery,
-        "ann_ivf_topk": _ann_ivf_topk,
-        "emb_kmeans": _emb_kmeans,
-        "dedup_keep_canonical": _dedup_keep_canonical,
-        "dedup_spans": _dedup_spans,
-        "text_classifier": _text_classifier,
-        "text_pii_redact": _text_pii_redact,
-        "text_ngram_counts": _text_ngram_counts,
-        "sample_stratified": _sample_stratified,
-        "sample_weighted": _sample_weighted,
-        "q20_excess_volume": _q20_excess_volume,
-        "ev_json_props": _ev_json_props,
-        "dedup_levenshtein": _dedup_levenshtein,
-        "a10_pivot": _a10_pivot,
-        "w7_percent_rank": _w7_percent_rank,
-        "stream_hourly_agg": _stream_hourly_agg,
-        "ann_lsh_multi_topk": _ann_lsh_multi_topk,
-        "ann_sq_rerank": _ann_sq_rerank,
-        "ann_ivfsq_topk": _ann_ivfsq_topk,
-        "ann_ivf_incremental": _ann_ivf_incremental,
-        "ann_index_build": _ann_index_build,
-        "ann_index_compact": _ann_index_compact,
-        "ann_index_maintain": _ann_index_maintain,
-        "ann_index_probe": _ann_index_probe,
-        "sample_topk_per_stratum": _sample_topk_per_stratum,
-        "dedup_winnow": _dedup_winnow,
-        "w5_lag_delta": _w5_lag_delta,
-        "ev_gap_fill": _ev_gap_fill,
-        "ev_funnel": _ev_funnel,
-        "ev_zscore_anomalies": _ev_zscore_anomalies,
-        "ev_retention": _ev_retention,
-        "a8_cube": _a8_cube,
-        "text_bm25": _text_bm25,
-        "text_vocab_oov": _text_vocab_oov,
-        "skew_distinct_2phase": _skew_distinct_2phase,
-        "skew_salted_agg": _skew_salted_agg,
-        "skew_salted_join": _skew_salted_join,
-        "planner_llm_chunks": _planner_llm_chunks,
-        "w2_top90_tokens": _w2_top90_tokens,
-        "o2_pagination": _o2_pagination,
-        "o3_topk_counts": _o3_topk_counts,
-        "p1_projection_reindex": _p1_projection_reindex,
-        "p3_filter_startswith": _p3_filter_startswith,
-        "p5_null_safe_flag_filter": _p5_null_safe_flag_filter,
-        "p6_distinct_subset": _p6_distinct_subset,
-        "j3_left_join": _j3_left_join,
-        "j4_semi_join": _j4_semi_join,
-        "j5_anti_join": _j5_anti_join,
-        "q1_pricing_summary": _q1_pricing_summary,
-        "q3_shipping_priority": _q3_shipping_priority,
-        "q5_region_volume": _q5_region_volume,
-        "s1_glob_source": _s1_glob_source,
-        "s2_whole_file_read": _s2_whole_file_read,
-        "q6_forecast_revenue": _q6_forecast_revenue,
-        "q7_nation_volume": _q7_nation_volume,
-        "q8_market_share": _q8_market_share,
-        "q10_returned_items": _q10_returned_items,
-        "q12_priority_lines": _q12_priority_lines,
-        "q14_promo_share": _q14_promo_share,
-        "q2_min_cost_supplier": _q2_min_cost_supplier,
-        "q4_order_priority": _q4_order_priority,
-        "q9_product_profit": _q9_product_profit,
-        "q11_value_concentration": _q11_value_concentration,
-        "q13_order_distribution": _q13_order_distribution,
-        "q15_top_supplier": _q15_top_supplier,
-        "q16_supplier_counts": _q16_supplier_counts,
-        "q17_small_quantity_revenue": _q17_small_quantity_revenue,
-        "q19_disjunctive_filter": _q19_disjunctive_filter,
-        "q21_waiting_supplier": _q21_waiting_supplier,
-        "q22_idle_customers": _q22_idle_customers,
-        "q18_large_orders": _q18_large_orders,
-        "f1_explode_carry": _f1_explode_carry,
-        "p8_unpivot": _p8_unpivot,
-        "f_date_funcs": _f_date_funcs,
-        "f_array_funcs": _f_array_funcs,
-        "f2_word_boundary_split": _f2_word_boundary_split,
-        "f_string_funcs": _f_string_funcs,
-        "dedup_exact": _dedup_exact,
-        "dedup_minhash_lsh": _dedup_minhash_lsh,
-        "dedup_minhash_char": _dedup_minhash_char,
-        "dedup_ngram_jaccard": _dedup_ngram_jaccard,
-    }
+    head = {k: QUERIES[k] for k in _R12_WINDOW}
+    return head | {k: v for k, v in QUERIES.items() if k not in head}
 
 
 _TOKEN_CTE = """

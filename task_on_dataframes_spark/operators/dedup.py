@@ -676,16 +676,9 @@ _probe_persisted: list = []
 #: batch-side Exchange+Sort disappears and the index scan streams
 #: through two BroadcastHashJoins with zero corpus movement either
 #: way). Both shapes are value-identical (equi-joins + the same
-#: verify tail). Overridable per run via $TADA_PROBE_SHAPE for the
-#: scale-fit A/B; the default is the sf0.1/sf1/sf3-adjudicated winner
+#: verify tail); the default is the sf0.1/sf1/sf3-adjudicated winner
 #: (SCALE.md r13).
 PROBE_LSH_SHAPE = "broadcast"
-
-
-def _probe_shape() -> str:
-    import os
-
-    return os.environ.get("TADA_PROBE_SHAPE", PROBE_LSH_SHAPE)
 
 
 def _lookup_probe_profile(cand: DataFrame) -> Optional[DataFrame]:
@@ -817,7 +810,7 @@ def probe_lsh_index(
     bands: int = 4,
     threshold: float = 0.5,
     shingle_n: int = 2,
-    shape: Optional[str] = None,
+    shape: str = PROBE_LSH_SHAPE,
 ) -> DataFrame:
     """Near-dup matches of a new ingest ``batch`` against the
     PERSISTED corpus index written by :func:`build_lsh_index` — the
@@ -847,7 +840,7 @@ def probe_lsh_index(
     ``num_perm``/``bands``/``shingle_n`` must match the build call —
     they parameterize the signature the stored keys were computed
     with. ``shape`` (``"broadcast"``/``"merge"``, default
-    :func:`_probe_shape`) picks the batch-to-index join strategy —
+    :data:`PROBE_LSH_SHAPE`) picks the batch-to-index join strategy —
     value-identical either way; see :data:`PROBE_LSH_SHAPE` for the
     adjudication.
     """
@@ -890,7 +883,6 @@ def probe_lsh_index(
     #   Exchanges and every Sort disappear; the index scan streams
     #   through the hash joins. Adjudicated at sf0.1/sf1/sf3
     #   (SCALE.md r13).
-    shape = shape or _probe_shape()
     ikeys = spark.table(keys_table).select(
         F.col("did").alias("b"), "bk"
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from typing import Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -42,16 +43,16 @@ def _ivf_centroids(c: DataFrame, n_centroids: int) -> DataFrame:
     persisted because two broadcasts consume it (assignment + probe
     ranking) and Catalyst will not reuse the aliased subplan.
 
-    Cache staleness contract: ``_last_centroids`` is a module-global
-    keyed by PLAN equality (``sameSemantics``), not by data version —
-    if the parquet under the same path is REWRITTEN within one session,
-    a later call with the same plan returns the previously persisted
-    centroids (standard Spark cache semantics; ``spark.catalog.
-    clearCache()`` or :func:`invalidate_centroid_cache` resets it).
-    The cache is also not guarded against concurrent mutation — the
+    Cache staleness contract: a fresh frame whose plan matches a
+    cached plan reports that cache's storage level and is returned as
+    is, so the cache is keyed by PLAN, not by data version — if the
+    parquet under the same path is REWRITTEN within one session, a
+    later call returns the previously persisted centroids (standard
+    Spark cache semantics; ``spark.catalog.clearCache()`` resets it).
+    The single slot is not guarded against concurrent mutation — the
     query registry drives it from a single planning thread; callers
-    embedding this in a multi-threaded driver should invalidate or
-    serialize IVF planning."""
+    embedding this in a multi-threaded program should serialize IVF
+    planning."""
     global _last_centroids
     h = hash32(F.concat(F.lit("ivf:"), F.col("vec_id").cast("string")))
     cents = (
@@ -61,34 +62,15 @@ def _ivf_centroids(c: DataFrame, n_centroids: int) -> DataFrame:
         .agg(F.min(F.struct("h", "vec_id", "vc")).alias("m"))
         .select(F.col("m.vec_id").alias("cid"), F.col("m.vc").alias("cv"))
     )
-    # the cached frame may belong to a STOPPED SparkSession (the cache
-    # is module-global; test harnesses and long-lived drivers restart
-    # sessions) — any JVM call on it raises, so treat a dead cache
-    # entry as a miss instead of poisoning every IVF query
+    if cents.storageLevel != StorageLevel.NONE:
+        return cents
     try:
-        if _last_centroids is not None and cents.sameSemantics(
-            _last_centroids
-        ):
-            return _last_centroids
         if _last_centroids is not None:
             _last_centroids.unpersist(blocking=False)
     except Exception:
-        pass
+        pass  # the slot belongs to a stopped session: nothing to free
     _last_centroids = cents.persist()
     return _last_centroids
-
-
-def invalidate_centroid_cache() -> None:
-    """Drop the module-global centroid cache — call after rewriting
-    the parquet a cached IVF plan reads (see the staleness contract in
-    :func:`_ivf_centroids`)."""
-    global _last_centroids
-    try:
-        if _last_centroids is not None:
-            _last_centroids.unpersist(blocking=False)
-    except Exception:
-        pass
-    _last_centroids = None
 
 
 def _ivf_member(

@@ -1,11 +1,27 @@
-"""Shared helpers for the split query registry."""
+"""Shared helpers for the split query registry, and the registry
+itself: :func:`query` records each query where it is defined."""
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: every registered query by name, in registration order
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+
+
+def query(fn: Callable[[SparkSession, str], DataFrame]):
+    """Register ``fn`` under its name without the leading underscore
+    (``_q1_pricing_summary`` is the query ``q1_pricing_summary``).
+    Names are unique: registering one twice raises."""
+    name = fn.__name__.removeprefix("_")
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+    QUERIES[name] = fn
+    return fn
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

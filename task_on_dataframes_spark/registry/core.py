@@ -1,7 +1,7 @@
-"""Core reference-parity ops (projection/filter/join/agg/planner) — query registry split out of ``__spark_entry__.py``.
+"""Core reference-parity ops (projection/filter/join/agg/planner) queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,24 +9,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _t, query
 
 
 # ---------------------------------------------------------------------------
 # flagship: planner-driven top-90%-of-mass token pipeline (SURVEY §2.11 + W2)
 # ---------------------------------------------------------------------------
 
-def _planner_top90(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def _planner_top90_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from task_on_dataframes_spark.basic_tasks import register_document_tasks
     from task_on_dataframes_spark.plans.solve import Executor
 
@@ -42,6 +33,7 @@ def _planner_top90(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.4/§2.5/§2.6 aggregations, windows, ordering
 # ---------------------------------------------------------------------------
 
+@query
 def _a1_value_counts(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return (
@@ -50,6 +42,7 @@ def _a1_value_counts(spark, sf_dir):
         .orderBy(F.desc("cnt"), "l_returnflag")
     )
 
+@query
 def _a2_scalar_sum(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return li.agg(
@@ -58,6 +51,7 @@ def _a2_scalar_sum(spark, sf_dir):
         .alias("qty_sum")
     )
 
+@query
 def _w1_running_sum(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("cnt"))
@@ -66,6 +60,7 @@ def _w1_running_sum(spark, sf_dir):
     )
     return counts.withColumn("running_cnt", F.sum("cnt").over(w))
 
+@query
 def _w2_top90_tokens(spark, sf_dir):
     from task_on_dataframes_spark.operators.text import (
         clean_tokens,
@@ -79,6 +74,7 @@ def _w2_top90_tokens(spark, sf_dir):
     top = top_mass_filter(clean, "token", 0.9)
     return top.select(F.col("token").alias("top90_token"))
 
+@query
 def _o2_pagination(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders")
     return (
@@ -88,6 +84,7 @@ def _o2_pagination(spark, sf_dir):
         .limit(50)
     )
 
+@query
 def _o3_topk_counts(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return (
@@ -101,6 +98,7 @@ def _o3_topk_counts(spark, sf_dir):
 # §2.2 projections / filters / predicates
 # ---------------------------------------------------------------------------
 
+@query
 def _p1_projection_reindex(spark, sf_dir):
     from task_on_dataframes_spark.runtime import reindex_frame
     import warnings
@@ -111,12 +109,14 @@ def _p1_projection_reindex(spark, sf_dir):
         out = reindex_frame(li, ["l_orderkey", "l_quantity", "ghost_col"])
     return out.withColumn("ghost_col", F.col("ghost_col").cast("string"))
 
+@query
 def _p3_filter_startswith(spark, sf_dir):
     part = _t(spark, sf_dir, "part")
     return part.filter(F.col("p_name").startswith("small")).select(
         "p_partkey", "p_name", "p_brand"
     )
 
+@query
 def _p5_null_safe_flag_filter(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders")
     flags = (
@@ -133,6 +133,7 @@ def _p5_null_safe_flag_filter(spark, sf_dir):
         .select("o_orderkey", "o_orderpriority")
     )
 
+@query
 def _p6_distinct_subset(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return li.select("l_orderkey", "l_returnflag").distinct()
@@ -141,6 +142,7 @@ def _p6_distinct_subset(spark, sf_dir):
 # §2.3 joins
 # ---------------------------------------------------------------------------
 
+@query
 def _j3_left_join(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
@@ -150,6 +152,7 @@ def _j3_left_join(spark, sf_dir):
         "left",
     ).select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
 
+@query
 def _j4_semi_join(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer")
     urgent = _t(spark, sf_dir, "orders").filter(
@@ -159,6 +162,7 @@ def _j4_semi_join(spark, sf_dir):
         urgent, cust.c_custkey == urgent.o_custkey, "left_semi"
     ).select("c_custkey", "c_name")
 
+@query
 def _j5_anti_join(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer")
     urgent = _t(spark, sf_dir, "orders").filter(
@@ -168,6 +172,7 @@ def _j5_anti_join(spark, sf_dir):
         urgent, cust.c_custkey == urgent.o_custkey, "left_anti"
     ).select("c_custkey", "c_name")
 
+@query
 def _s1_glob_source(spark, sf_dir):
     """S1: one row per file matching a glob (reference get_paths) —
     distributed listing via the binaryFile source, content column
@@ -179,6 +184,7 @@ def _s1_glob_source(spark, sf_dir):
         F.regexp_replace("path", "^file:(//)?", "").alias("path")
     )
 
+@query
 def _s2_whole_file_read(spark, sf_dir):
     """S2: whole-file contents beside the path (reference get_text);
     here the byte length stands in for content equality with the
@@ -189,6 +195,7 @@ def _s2_whole_file_read(spark, sf_dir):
         F.length("content").alias("n_bytes"),
     )
 
+@query
 def _f1_explode_carry(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
@@ -196,6 +203,7 @@ def _f1_explode_carry(spark, sf_dir):
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
     )
 
+@query
 def _f2_word_boundary_split(spark, sf_dir):
     """F2: split at regex word boundaries (reference tokenize,
     basic_tasks.py:60 — str.split(r'\\b')), keeping word pieces."""
@@ -205,6 +213,7 @@ def _f2_word_boundary_split(spark, sf_dir):
         F.explode(F.split(F.lower(F.col("text")), r"\b")).alias("piece"),
     ).filter(F.col("piece").rlike(r"^\w"))
 
+@query
 def _planner_llm_chunks(spark, sf_dir):
     """Planner-composed LLM pipeline: the goal column
     ``docs.text.kept.chunks`` makes BFS assemble
@@ -221,6 +230,7 @@ def _planner_llm_chunks(spark, sf_dir):
     )
 
 
+@query
 def _planner_pack(spark, sf_dir):
     """Planner-composed five-task pipeline: the goal pair
     (docs.text.kept.chunks, docs.text.kept.chunks.packs) makes BFS

@@ -1,7 +1,7 @@
-"""Deduplication family (exact/minhash/simhash/ngram/embedding/decontaminate) — query registry split out of ``__spark_entry__.py``.
+"""Deduplication family (exact/minhash/simhash/ngram/embedding/decontaminate) queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,19 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _embs,
-    _docs,
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _docs, _embs, _events, _t, query
 
 
 # ---------------------------------------------------------------------------
@@ -29,12 +17,14 @@ __all__: list = []  # underscore names are imported explicitly by the entry file
 # multimodal (north-star operators; SURVEY §7.2 step 5)
 # ---------------------------------------------------------------------------
 
+@query
 def _dedup_exact(spark, sf_dir):
     from task_on_dataframes_spark.operators.dedup import exact_dedup
 
     docs = _docs(spark, sf_dir)
     return exact_dedup(docs, "doc_id", "text")
 
+@query
 def _dedup_minhash_lsh(spark, sf_dir):
     from task_on_dataframes_spark.operators.dedup import minhash_lsh_pairs
 
@@ -43,6 +33,7 @@ def _dedup_minhash_lsh(spark, sf_dir):
         docs, "doc_id", "text", num_perm=16, bands=4, threshold=0.5, shingle_n=2
     )
 
+@query
 def _dedup_minhash_char(spark, sf_dir):
     """Minhash-LSH near-dup pairs over CHARACTER 5-gram shingles —
     the variant that sees non-whitespace-delimited scripts (a CJK
@@ -74,6 +65,7 @@ def _dedup_minhash_char(spark, sf_dir):
         star=True,
     )
 
+@query
 def _dedup_ngram_jaccard(spark, sf_dir):
     from task_on_dataframes_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -82,6 +74,7 @@ def _dedup_ngram_jaccard(spark, sf_dir):
         docs, "doc_id", "text", n=3, threshold=0.5, max_df=50
     )
 
+@query
 def _dedup_simhash(spark, sf_dir):
     from task_on_dataframes_spark.operators.dedup import (
         simhash_fingerprints,
@@ -92,6 +85,7 @@ def _dedup_simhash(spark, sf_dir):
     fps = simhash_fingerprints(docs, "doc_id", "text")
     return simhash_pairs(fps, max_hamming=3)
 
+@query
 def _dedup_components(spark, sf_dir):
     """Near-dup clusters: simhash pair graph -> connected components ->
     (member, representative=min doc_id). The Spark side is
@@ -122,6 +116,7 @@ def _dedup_components(spark, sf_dir):
     )
     return connected_components(pairs, src="a", dst="b")
 
+@query
 def _dedup_embedding_cosine(spark, sf_dir):
     """Exact all-pairs cosine — the O(n^2) correctness baseline for the
     LSH variants, confined to a deterministic ``vec_id < 2000`` eval
@@ -135,6 +130,7 @@ def _dedup_embedding_cosine(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 2000)
     return embedding_cosine_pairs(emb, threshold=0.4)
 
+@query
 def _dedup_embedding_lsh(spark, sf_dir):
     """planes=6 (64 buckets): candidate pairs scale ~ n^2/2^planes,
     so the plane count tracks corpus density (the round-4 sf1 sweep
@@ -145,6 +141,7 @@ def _dedup_embedding_lsh(spark, sf_dir):
     emb = _embs(spark, sf_dir)
     return embedding_lsh_pairs(emb, threshold=0.4, dims=64, planes=6)
 
+@query
 def _decontaminate(spark, sf_dir):
     """Train/test contamination check (GPT-3-style n-gram overlap):
     a train document is contaminated when it shares any word 5-gram
@@ -182,6 +179,7 @@ def _decontaminate(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
+@query
 def _dedup_keep_canonical(spark, sf_dir):
     """End-to-end keep-one dedup: simhash pair graph -> pointer-doubling
     connected components -> drop non-representatives (broadcast
@@ -207,6 +205,7 @@ def _dedup_keep_canonical(spark, sf_dir):
         docs.select("doc_id", "lang"), "doc_id", pairs
     )
 
+@query
 def _dedup_spans(spark, sf_dir):
     """C4/RefinedWeb-style span-level corpus dedup: 10-token
     non-overlapping spans, keep the globally first occurrence of each
@@ -217,6 +216,7 @@ def _dedup_spans(spark, sf_dir):
 
     return span_dedup(_docs(spark, sf_dir), "doc_id", "text")
 
+@query
 def _dedup_cross_corpus(spark, sf_dir):
     """Incremental-ingest dedup: drop new documents whose normalized
     text digest already exists in the reference corpus (simulated as
@@ -253,6 +253,7 @@ def _ensure_lsh_index(spark, sf_dir):
         num_perm=16, bands=4, shingle_n=2,
     )
 
+@query
 def _dedup_index_build(spark, sf_dir):
     """The write-once LSH corpus index as a first-class query: persist
     band keys (bucketed by the join key) and packed xxhash64 shingle
@@ -271,6 +272,7 @@ def _dedup_index_build(spark, sf_dir):
         F.col("did").alias("doc_id"), "band", "key", "sz"
     )
 
+@query
 def _dedup_index_probe(spark, sf_dir):
     """Two ingest waves probed against the SAME persisted index —
     the reuse contract that makes incremental dedup incremental:
@@ -296,6 +298,7 @@ def _dedup_index_probe(spark, sf_dir):
         "wave", "doc_id", "n_matches", "max_jaccard"
     )
 
+@query
 def _dedup_index_maintain(spark, sf_dir):
     """The full index lifecycle in one query (r11): build the
     persisted LSH index on the corpus slice (doc_id % 7 == 0), probe
@@ -346,6 +349,7 @@ def _dedup_index_maintain(spark, sf_dir):
         "phase", "doc_id", "n_matches", "max_jaccard"
     )
 
+@query
 def _dedup_index_compact(spark, sf_dir):
     """Compaction as a first-class query (r11): build the corpus
     index, append wave 1 (doc_id % 7 == 1) — leaving multi-file
@@ -387,6 +391,7 @@ def _dedup_index_compact(spark, sf_dir):
         num_perm=16, bands=4, threshold=0.5, shingle_n=2,
     )
 
+@query
 def _dedup_incremental_lsh(spark, sf_dir):
     """Near-dup version of :func:`_dedup_cross_corpus`: the new batch
     (doc_id % 7 != 0) is LSH-probed against the existing corpus slice
@@ -411,6 +416,7 @@ def _dedup_incremental_lsh(spark, sf_dir):
         num_perm=16, bands=4, threshold=0.5, shingle_n=2,
     )
 
+@query
 def _dedup_daily_first(spark, sf_dir):
     """Keep the first event per (user, day): one window shuffle keyed
     by (user_id, date) — the retention-counting / sessionless-dedup
@@ -432,6 +438,7 @@ def _dedup_daily_first(spark, sf_dir):
         )
     )
 
+@query
 def _dedup_winnow(spark, sf_dir):
     from task_on_dataframes_spark.operators.dedup import winnow_pairs
 
@@ -440,6 +447,7 @@ def _dedup_winnow(spark, sf_dir):
         shingle=8, window=4, threshold=0.5, max_df=50,
     )
 
+@query
 def _dedup_levenshtein(spark, sf_dir):
     """Edit-distance near-dup verification over minhash-LSH candidates
     (never all pairs) — `levenshtein` evaluates JVM-side in the join
@@ -450,6 +458,7 @@ def _dedup_levenshtein(spark, sf_dir):
     return levenshtein_pairs(_docs(spark, sf_dir), "doc_id", "text")
 
 
+@query
 def _dedup_semantic(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): k-means the embedding space, then
     prune within clusters only — the quadratic compare is confined to
@@ -466,6 +475,7 @@ def _dedup_semantic(spark, sf_dir):
     )
 
 
+@query
 def _decontaminate_bloom(spark, sf_dir):
     """Bloom-filter decontamination: the bounded-state variant of the
     exact-join `decontaminate` query. Benchmark (test-split) 5-grams
@@ -508,6 +518,7 @@ def _decontaminate_bloom(spark, sf_dir):
     )
 
 
+@query
 def _dedup_substring(spark, sf_dir):
     """Cross-document repeated 5-gram spans (Lee et al. substring-level
     dedup at word granularity): per-doc maximal duplicated spans and
@@ -529,6 +540,7 @@ def _dedup_substring(spark, sf_dir):
     return repeated_gram_spans(docs, "doc_id", "text", k=5, detect_hot=big)
 
 
+@query
 def _text_containment(spark, sf_dir):
     """Asymmetric containment |A∩B|/|A| over the shared minhash-LSH
     candidate front end: the near-SUPERSET detector Jaccard misses
@@ -547,6 +559,7 @@ def _text_containment(spark, sf_dir):
     return containment_verify(candidates, toks, threshold=0.6)
 
 
+@query
 def _dedup_substring_rewrite(spark, sf_dir):
     """The rewrite step of substring-level dedup: duplicated 5-gram
     spans removed everywhere except the globally-first occurrence
@@ -599,6 +612,7 @@ STAR_RECALL_TAIL = (60, 120)
 STAR_RECALL_SLICE = 600
 
 
+@query
 def _dedup_star_recall_eval(spark, sf_dir):
     """Measured recall contract of the star-capped char-shingle LSH
     front end (the one recall-trading scale guard that had no eval —
@@ -820,6 +834,7 @@ def _star_recall_banding_rows(stratum, sigs, exact, num_perm, bands):
     )
 
 
+@query
 def _dedup_recall_eval(spark, sf_dir):
     """Candidate recall of the minhash-LSH front end vs the exact
     Jaccard>=0.5 pair set, measured on a DETERMINISTIC 1-in-3 eval slice

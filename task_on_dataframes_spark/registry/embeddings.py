@@ -1,7 +1,7 @@
-"""Embedding, ANN, and graph analytics — query registry split out of ``__spark_entry__.py``.
+"""Embedding, ANN, and graph analytics queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,20 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _embs,
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _embs, _t, query
 
 
+@query
 def _ann_cosine_topk(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import cosine_topk
 
@@ -32,6 +22,7 @@ def _ann_cosine_topk(spark, sf_dir):
     )
     return cosine_topk(emb, queries_df, k=10)
 
+@query
 def _ann_lsh_topk(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import lsh_ann_topk
 
@@ -41,6 +32,7 @@ def _ann_lsh_topk(spark, sf_dir):
     )
     return lsh_ann_topk(emb, queries_df, k=10, dims=64, planes=8)
 
+@query
 def _ann_ivf_topk(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import ivf_ann_topk
 
@@ -50,6 +42,7 @@ def _ann_ivf_topk(spark, sf_dir):
     )
     return ivf_ann_topk(emb, queries_df, k=10, n_centroids=16, n_probe=4)
 
+@query
 def _emb_kmeans(spark, sf_dir):
     """Spherical k-means over the embeddings table: 8 clusters, 3
     fixed Lloyd iterations (deterministic — the DuckDB oracle replays
@@ -60,11 +53,13 @@ def _emb_kmeans(spark, sf_dir):
 
     return kmeans_assignments(_embs(spark, sf_dir), k=8, iters=3)
 
+@query
 def _emb_quantize(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import quantize_int8
 
     return quantize_int8(_embs(spark, sf_dir))
 
+@query
 def _ann_sq_rerank(spark, sf_dir):
     """Two-stage scalar-quantized retrieval: int8 approximate scan
     (4x less bandwidth than float32 at corpus scale) shortlists 50
@@ -79,6 +74,7 @@ def _ann_sq_rerank(spark, sf_dir):
     )
     return sq_ann_rerank(emb, queries_df, k=10, shortlist=50)
 
+@query
 def _ann_lsh_multi_topk(spark, sf_dir):
     """Multi-table LSH ANN (2 tables x 4 planes): candidate union
     across independent plane sets — the recall lever of LSH search."""
@@ -92,6 +88,7 @@ def _ann_lsh_multi_topk(spark, sf_dir):
         emb, queries_df, k=10, dims=64, planes=4, n_tables=2
     )
 
+@query
 def _emb_dim_stats(spark, sf_dir):
     """Per-dimension embedding profile (mean / population variance /
     min / max) — the normalization-stats pass before whitening or
@@ -115,6 +112,7 @@ def _emb_dim_stats(spark, sf_dir):
         )
     )
 
+@query
 def _emb_label_centroids(spark, sf_dir):
     """Per-label mean embedding: ONE keyed shuffle of n x d exploded
     rows with map-side partial DECIMAL sums (partition-order-proof,
@@ -123,6 +121,7 @@ def _emb_label_centroids(spark, sf_dir):
 
     return label_centroids(_embs(spark, sf_dir))
 
+@query
 def _emb_gram(spark, sf_dir):
     """Distributed Gram matrix: per-partition NumPy X^T X partials via
     mapInPandas, one d(d+1)/2-key shuffle of partials — the corpus is
@@ -134,6 +133,7 @@ def _emb_gram(spark, sf_dir):
     # pre-shuffling the corpus costs more than the parallelism it buys.
     return gram_matrix(_embs(spark, sf_dir, floor=False))
 
+@query
 def _emb_pca_top(spark, sf_dir):
     """Top principal direction: distributed Gram reduction, then a
     deterministic driver-side power iteration on the d x d result
@@ -148,6 +148,7 @@ def _emb_pca_top(spark, sf_dir):
     gram = gram_matrix(_embs(spark, sf_dir, floor=False))
     return pca_power_top(spark, gram)
 
+@query
 def _emb_pca_project(spark, sf_dir):
     """Apply the learned transform: project every embedding onto the
     top principal direction. The direction (64 floats) comes from the
@@ -187,6 +188,7 @@ def _emb_pca_project(spark, sf_dir):
     )
     return emb.select("vec_id", proj.alias("proj"))
 
+@query
 def _graph_pagerank(spark, sf_dir):
     """PageRank over the customer-nation -> supplier-nation trade
     graph (edge weight = lineitem count). Edge list stays distributed;
@@ -214,6 +216,7 @@ def _graph_pagerank(spark, sf_dir):
     return pagerank(edges, nodes, iters=5, damping=0.85)
 
 
+@query
 def _ann_pq_topk(spark, sf_dir):
     """Product-quantization ADC top-10 (m=8 subspaces x k=32 codes =
     40 bits/vector, 2 Lloyd iterations per sub-quantizer,
@@ -232,6 +235,7 @@ def _ann_pq_topk(spark, sf_dir):
     return pq_ann_topk(emb, queries_df, k_top=10, m=8, k=32, iters=2)
 
 
+@query
 def _ann_ivfpq_topk(spark, sf_dir):
     """IVF+PQ hybrid ADC top-10: coarse cosine inverted index
     (16 cells, 4 probes — identical machinery to ann_ivf_topk)
@@ -250,6 +254,7 @@ def _ann_ivfpq_topk(spark, sf_dir):
     )
 
 
+@query
 def _ann_ivfsq_topk(spark, sf_dir):
     """IVF + int8 scalar-quantized list scan + exact rerank (FAISS
     ``IVF16,SQ8`` shape): the coarse index prunes WHICH vectors are
@@ -274,6 +279,7 @@ def _ann_ivfsq_topk(spark, sf_dir):
     )
 
 
+@query
 def _ann_ivf_incremental(spark, sf_dir):
     """IVF index maintenance: centroids frozen on the 90% base corpus
     (vec_id % 10 != 0), the 10% "new arrivals" batch assigned to those
@@ -316,6 +322,7 @@ def _ensure_ivf_index(spark, sf_dir):
     )
 
 
+@query
 def _ann_index_build(spark, sf_dir):
     """The write-once IVF corpus index as a first-class query (r10
     verdict item 6 — the vector twin of dedup_index_build): persist
@@ -332,6 +339,7 @@ def _ann_index_build(spark, sf_dir):
     )
 
 
+@query
 def _ann_index_probe(spark, sf_dir):
     """Two query waves probed against the SAME persisted IVF index —
     the reuse contract that makes vector search incremental: wave 1
@@ -361,6 +369,7 @@ def _ann_index_probe(spark, sf_dir):
     )
 
 
+@query
 def _ann_index_maintain(spark, sf_dir):
     """The full vector-index lifecycle in one query (r11, the twin of
     dedup_index_maintain): build the persisted IVF index on the base
@@ -408,6 +417,7 @@ def _ann_index_maintain(spark, sf_dir):
     )
 
 
+@query
 def _ann_index_compact(spark, sf_dir):
     """Vector-index compaction as a first-class query (r12, the twin
     of dedup_index_compact): build the persisted IVF index on the
@@ -488,6 +498,7 @@ def clustered_embeddings(
     return base.select("vec_id", cvec.alias("embedding"))
 
 
+@query
 def _ann_recall_clustered(spark, sf_dir):
     """IVF recall sweep on CLUSTERED vectors — uniform-random
     embeddings are IVF-pessimal (recall ~= list coverage, SCALE.md
@@ -611,6 +622,7 @@ def _ann_recall_clustered(spark, sf_dir):
     return out
 
 
+@query
 def _ann_recall_eval(spark, sf_dir):
     """ANN quality evaluation: recall@10 of the multi-table LSH index
     against the exact cosine top-10, per query — the measurement loop
@@ -647,6 +659,7 @@ def _ann_recall_eval(spark, sf_dir):
     )
 
 
+@query
 def _emb_pca_top2(spark, sf_dir):
     """Top-2 PCA via power iteration + Hotelling deflation: v1 from
     the distributed Gram, Rayleigh lam1, deflated G2 = G - lam1*v1*v1'
@@ -663,6 +676,7 @@ def _emb_pca_top2(spark, sf_dir):
     return pca_power_top2(spark, gram)
 
 
+@query
 def _ann_filtered_topk(spark, sf_dir):
     """Filtered vector search — top-k cosine neighbors WITHIN a
     metadata predicate (label % 4 == 0), the retrieval shape every
@@ -685,6 +699,7 @@ def _ann_filtered_topk(spark, sf_dir):
     return ivf_ann_topk(emb, queries_df, k=10, n_centroids=16, n_probe=4)
 
 
+@query
 def _emb_matryoshka_eval(spark, sf_dir):
     """Matryoshka / truncated-dimension retrieval evaluation: how much
     recall@10 survives searching on only the FIRST 16 of 64 dimensions?

@@ -1,7 +1,7 @@
-"""Event-stream batch analytics (sessionize/funnel/retention/gap-fill) — query registry split out of ``__spark_entry__.py``.
+"""Event-stream batch analytics (sessionize/funnel/retention/gap-fill) queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,23 +9,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _events, query
 
 
 # ---------------------------------------------------------------------------
 # events: batch time-window aggregation (§2.9 ⊕)
 # ---------------------------------------------------------------------------
 
+@query
 def _ev_hourly_agg(spark, sf_dir):
     ev = _events(spark, sf_dir)
     return (
@@ -41,6 +32,7 @@ def _ev_hourly_agg(spark, sf_dir):
         )
     )
 
+@query
 def _ev_ohlc_bars(spark, sf_dir):
     """Hourly OHLC bars per event_type — the classic time-series
     downsample (hypertable continuous-aggregate shape): open/close are
@@ -70,6 +62,7 @@ def _ev_ohlc_bars(spark, sf_dir):
         )
     )
 
+@query
 def _ev_sliding_agg(spark, sf_dir):
     """1-hour windows sliding every 15 minutes: each event lands in 4
     windows. Spark's F.window replicates rows window-count times before
@@ -94,6 +87,7 @@ def _ev_sliding_agg(spark, sf_dir):
         )
     )
 
+@query
 def _ev_sessionize(spark, sf_dir):
     """Gaps-and-islands sessionization: a new session starts after a
     >30min silence per user. Pure window functions — no UDF."""
@@ -120,6 +114,7 @@ def _ev_sessionize(spark, sf_dir):
         )
     )
 
+@query
 def _ev_zscore_anomalies(spark, sf_dir):
     """Group-wise standardization: per event_type mean/std of value
     from DECIMAL-exact moment sums (sum, sum of squares) so the
@@ -161,6 +156,7 @@ def _ev_zscore_anomalies(spark, sf_dir):
         )
     )
 
+@query
 def _ev_funnel(spark, sf_dir):
     """Conversion funnel: per user, the first view -> first click after
     it -> first purchase after that, each within 24h of the previous
@@ -205,6 +201,7 @@ def _ev_funnel(spark, sf_dir):
         )
     )
 
+@query
 def _ev_gap_fill(spark, sf_dir):
     """Zero-filled hourly time series (date-spine gap filling): the
     spine is sequence(min_hour, max_hour) x distinct event types —
@@ -237,6 +234,7 @@ def _ev_gap_fill(spark, sf_dir):
         )
     )
 
+@query
 def _ev_json_props(spark, sf_dir):
     """Semi-structured extraction: parse the events `props` JSON
     column, bucket the numeric field, aggregate per bucket. The JSON
@@ -258,6 +256,7 @@ def _ev_json_props(spark, sf_dir):
         .orderBy("k_bucket")
     )
 
+@query
 def _ev_retention(spark, sf_dir):
     """Cohort retention: users cohorted by first-event date, then
     distinct-user counts per (cohort_day, weeks-since-first). Two keyed
@@ -281,6 +280,7 @@ def _ev_retention(spark, sf_dir):
     )
 
 
+@query
 def _ev_session_window_builtin(spark, sf_dir):
     """Spark's built-in ``session_window`` aggregation (the canonical
     dynamic-gap session primitive — state-store-backed in streaming,
@@ -312,6 +312,7 @@ def _ev_session_window_builtin(spark, sf_dir):
     )
 
 
+@query
 def _ev_markov(spark, sf_dir):
     """First-order Markov transition matrix over per-user event
     sequences: lead() within (user, ts, event_id) order gives the next
@@ -339,6 +340,7 @@ def _ev_markov(spark, sf_dir):
     )
 
 
+@query
 def _ev_cdc_apply(spark, sf_dir):
     """Ordered changelog fold: treat the event stream as a CDC log
     (signup/view/click/purchase upsert a user's value, error is a
@@ -371,6 +373,7 @@ def _ev_cdc_apply(spark, sf_dir):
     )
 
 
+@query
 def _ev_anomaly_mad(spark, sf_dir):
     """Robust anomaly counts: median/MAD instead of mean/stddev (the
     z-score twin ev_zscore_anomalies is itself skewed by the outliers

@@ -1,7 +1,7 @@
-"""Multimodal (binary media) queries — query registry split out of ``__spark_entry__.py``.
+"""Multimodal (binary media) queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,20 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _docs,
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _docs, query
 
 
+@query
 def _mm_decode_meta(spark, sf_dir):
     from task_on_dataframes_spark.operators.multimodal import (
         decode_media_meta,
@@ -32,6 +22,7 @@ def _mm_decode_meta(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return decode_media_meta(make_media_table(docs))
 
+@query
 def _mm_frame_sample(spark, sf_dir):
     from task_on_dataframes_spark.operators.multimodal import (
         decode_media_meta,
@@ -42,6 +33,7 @@ def _mm_frame_sample(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return sample_frames(decode_media_meta(make_media_table(docs)))
 
+@query
 def _mm_raw_decode(spark, sf_dir):
     """REAL pixel decode: synthesize deterministic ``image/raw`` solid-
     color images from doc_id, then extract (width, height, n_frames)
@@ -55,6 +47,7 @@ def _mm_raw_decode(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return decode_media_meta(make_raw_media_table(docs))
 
+@query
 def _mm_png_decode(spark, sf_dir):
     """REAL compressed-codec decode in any container: synthesize RGB
     gradient PNGs from doc_id (pure-stdlib encoder, scanline filter
@@ -71,6 +64,7 @@ def _mm_png_decode(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return png_pixel_stats(make_png_media_table(docs))
 
+@query
 def _mm_wav_decode(spark, sf_dir):
     """REAL audio-container decode in any container: synthesize 16-bit
     PCM WAV clips from doc_id (pure-stdlib RIFF writer), then re-parse
@@ -86,6 +80,7 @@ def _mm_wav_decode(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return wav_amplitude_stats(make_wav_media_table(docs))
 
+@query
 def _mm_audio_features(spark, sf_dir):
     """Frame-level audio featurization (16-sample frames, channel 0):
     integer frame energy + strict zero-crossing counts over REALLY
@@ -99,6 +94,7 @@ def _mm_audio_features(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return wav_frame_features(make_wav_media_table(docs), frame_len=16)
 
+@query
 def _mm_audio_resample(spark, sf_dir):
     """Integer-exact 16 kHz resample of really-decoded channel-0 PCM
     (linear interpolation on the 2048-offset unsigned signal with
@@ -113,6 +109,7 @@ def _mm_audio_resample(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return wav_resample(make_wav_media_table(docs), dst_rate=16000)
 
+@query
 def _mm_raw_pipeline(spark, sf_dir):
     """Full real-kernel media pipeline: raw images -> REAL bilinear
     resize (16x12) -> REAL pixel-histogram features (8 luminance

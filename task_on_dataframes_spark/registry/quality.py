@@ -1,8 +1,8 @@
 """Data-quality audit, bucketed-join, windowed top-k, and token-entropy
-queries — round-4 additions to the split registry.
+queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -10,11 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import _docs, _events, _t
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _docs, _events, _t, query
 
 
+@query
 def _quality_ks_drift(spark, sf_dir):
     """Two-sample Kolmogorov-Smirnov drift statistic between two
     corpus slices (even vs odd doc_id — the stand-in for crawl
@@ -51,6 +50,7 @@ def _quality_ks_drift(spark, sf_dir):
     ).select("ks_stat", "n_a", "n_b")
 
 
+@query
 def _quality_psi_drift(spark, sf_dir):
     """Population Stability Index between two corpus slices (even vs
     odd doc_id — crawl snapshot A vs B), the standard companion gate to
@@ -96,6 +96,7 @@ def _quality_psi_drift(spark, sf_dir):
     ).select("psi", "n_a", "n_b")
 
 
+@query
 def _quality_gopher_gate(spark, sf_dir):
     """Gopher-style document-quality gate over the documents table:
     word-count / mean-word-length / alpha-fraction / required-stopword
@@ -110,6 +111,7 @@ def _quality_gopher_gate(spark, sf_dir):
     return gopher_quality_gate(_docs(spark, sf_dir), "doc_id", "text")
 
 
+@query
 def _s13_bucketed_join(spark, sf_dir):
     """Bucketed co-located join: write orders and lineitem as tables
     bucketed by the join key (8 buckets), then join WITHOUT a shuffle —
@@ -171,6 +173,7 @@ def _s13_bucketed_join(spark, sf_dir):
     )
 
 
+@query
 def _dq_rules(spark, sf_dir):
     """Data-quality rule audit: one conditional-aggregation pass per
     table (every per-row rule is a ``sum(case ...)`` inside a single
@@ -241,6 +244,7 @@ def _dq_rules(spark, sf_dir):
     )
 
 
+@query
 def _ev_windowed_topk(spark, sf_dir):
     """Top-3 event types per hour by event count: keyed agg on
     (hour, type) then a rank window partitioned BY HOUR — the window
@@ -261,6 +265,7 @@ def _ev_windowed_topk(spark, sf_dir):
     )
 
 
+@query
 def _text_entropy(spark, sf_dir):
     """Per-document unigram entropy + type-token ratio — an
     information-theoretic quality score for corpus curation (low
@@ -303,6 +308,7 @@ def _text_entropy(spark, sf_dir):
     )
 
 
+@query
 def _sketch_hll_bound(spark, sf_dir):
     """HLL++ distinct-count sketch with its accuracy contract made
     oracle-checkable: per event type, the approx_count_distinct(rsd=5%)
@@ -327,6 +333,7 @@ def _sketch_hll_bound(spark, sf_dir):
     )
 
 
+@query
 def _sketch_quantile_bound(spark, sf_dir):
     """Greenwald-Khanna quantile sketch with its rank-error contract
     made oracle-checkable: the percentile_approx(0.5, accuracy=1000)
@@ -362,6 +369,7 @@ def _sketch_quantile_bound(spark, sf_dir):
     )
 
 
+@query
 def _sketch_heavy_hitters(spark, sf_dir):
     """Misra-Gries heavy-hitters sketch with its no-false-negative
     contract made oracle-checkable: every token whose exact frequency
@@ -394,6 +402,7 @@ def _sketch_heavy_hitters(spark, sf_dir):
     )
 
 
+@query
 def _s14_compaction(spark, sf_dir):
     """Small-files compaction as a registry query: scatter a lineitem
     projection into 48 tiny files, compact to ~2 files with
@@ -421,6 +430,7 @@ def _s14_compaction(spark, sf_dir):
     )
 
 
+@query
 def _f_map_funcs(spark, sf_dir):
     """Map construction + lookup + transform functions (⊕ §2.8
     breadth): per-order map of lineitem return flags to their line
@@ -445,6 +455,7 @@ def _f_map_funcs(spark, sf_dir):
     )
 
 
+@query
 def _s15_schema_merge(spark, sf_dir):
     """Parquet schema evolution: two generations of a dataset (the
     second adds a ``lang`` column) read back as one table with
@@ -473,6 +484,7 @@ def _s15_schema_merge(spark, sf_dir):
     )
 
 
+@query
 def _snapshot_diff(spark, sf_dir):
     """Snapshot-to-snapshot corpus diff: classify every doc_id as
     added/removed/changed/unchanged between two derived snapshots
@@ -496,6 +508,7 @@ def _snapshot_diff(spark, sf_dir):
     )
 
 
+@query
 def _s16_zorder_stats(spark, sf_dir):
     """Z-order layout: write lineitem keys Morton-clustered (range
     partition + in-partition sort on the interleaved code), read back,
@@ -532,6 +545,7 @@ def _s16_zorder_stats(spark, sf_dir):
     )
 
 
+@query
 def _s17_incremental_read(spark, sf_dir):
     """Incremental ingestion without table-format metadata: write
     batch 1, snapshot the file manifest, append batch 2, then read
@@ -565,6 +579,7 @@ def _s17_incremental_read(spark, sf_dir):
     )
 
 
+@query
 def _quality_linear_probe(spark, sf_dir):
     """Supervised training loop as a first-class operator: least-squares
     linear probe (stopword fraction ~ length/digit features) fit by 4
@@ -581,6 +596,7 @@ def _quality_linear_probe(spark, sf_dir):
     return linear_probe_weights(docs, "text", iters=4)
 
 
+@query
 def _sketch_cms(spark, sf_dir):
     """Count-min sketch with an EXACT-replay oracle: 3x1024 counters
     over the document token stream (portable md5 hash family), point
@@ -612,6 +628,7 @@ def _sketch_cms(spark, sf_dir):
     )
 
 
+@query
 def _quality_probe_by_lang(spark, sf_dir):
     """Per-language linear probes trained simultaneously: the grouped
     variant of quality_linear_probe — one GROUP BY gradient aggregation
@@ -626,6 +643,7 @@ def _quality_probe_by_lang(spark, sf_dir):
     return grouped_probe_weights(docs, "lang", "text", iters=4)
 
 
+@query
 def _s18_bloom_join_prune(spark, sf_dir):
     """Runtime Bloom-filter join pruning: the selective dim predicate
     (customers of one nation) compresses to a <=65536-bit Bloom set,
@@ -666,6 +684,7 @@ def _s18_bloom_join_prune(spark, sf_dir):
     )
 
 
+@query
 def _quality_domain_calibrate(spark, sf_dir):
     """Per-domain score calibration WITHOUT a per-domain global sort:
     a raw quality score (stopword fraction, integer fixed-point) is
@@ -727,6 +746,7 @@ def _quality_domain_calibrate(spark, sf_dir):
     )
 
 
+@query
 def _s19_dynamic_partition_overwrite(spark, sf_dir):
     """Partition-level incremental overwrite — the daily-backfill move:
     events land hive-partitioned by day; one day is then corrected
@@ -768,6 +788,7 @@ def _s19_dynamic_partition_overwrite(spark, sf_dir):
     )
 
 
+@query
 def _a11_histogram(spark, sf_dir):
     """Grouped equi-width histogram — the profiling op between min/max
     (profile_table) and exact percentiles (a9): 10 equal-width bins of
@@ -800,6 +821,7 @@ def _a11_histogram(spark, sf_dir):
     )
 
 
+@query
 def _quality_probe_apply(spark, sf_dir):
     """Train-then-apply in one lazy plan: the 4-iteration GD probe's
     weights (a d-sized plan prefix) broadcast onto every document to

@@ -1,7 +1,7 @@
-"""Wider relational surface (rollup/cube/windows/upserts/IO round-trips) — query registry split out of ``__spark_entry__.py``.
+"""Wider relational surface (rollup/cube/windows/upserts/IO round-trips) queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,20 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _embs,
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _embs, _events, _t, query
 
 
+@query
 def _a5_percentiles(spark, sf_dir):
     """Exact linear-interpolation percentiles per group (Spark
     ``percentile`` == DuckDB ``quantile_cont``)."""
@@ -33,6 +23,7 @@ def _a5_percentiles(spark, sf_dir):
         F.round(F.percentile("l_extendedprice", 0.75), 4).alias("p75"),
     )
 
+@query
 def _a6_stats(spark, sf_dir):
     """Statistical aggregates: correlation, sample covariance/stddev."""
     li = _t(spark, sf_dir, "lineitem")
@@ -42,6 +33,7 @@ def _a6_stats(spark, sf_dir):
         F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
     )
 
+@query
 def _p7_pivot(spark, sf_dir):
     """Pivot: linestatus columns per returnflag row (explicit value
     list so the plan is one pass, no distinct-values pre-query)."""
@@ -57,6 +49,7 @@ def _p7_pivot(spark, sf_dir):
         )
     )
 
+@query
 def _p8_unpivot(spark, sf_dir):
     """Unpivot/melt: wide part attributes to long (attr, value) rows."""
     part = _t(spark, sf_dir, "part")
@@ -71,6 +64,7 @@ def _p8_unpivot(spark, sf_dir):
         valueColumnName="value",
     )
 
+@query
 def _f_date_funcs(spark, sf_dir):
     """Date/time scalar functions (absent in the reference ⊕): ship
     delay in days, truncations, offsets, month boundaries."""
@@ -88,6 +82,7 @@ def _f_date_funcs(spark, sf_dir):
         F.last_day("o_orderdate").cast("timestamp").alias("month_end"),
     )
 
+@query
 def _f_array_funcs(spark, sf_dir):
     """Array functions over array<float> (absent in the reference ⊕):
     size, element access, slicing aggregates, higher-order transform."""
@@ -110,6 +105,7 @@ def _f_array_funcs(spark, sf_dir):
         ).alias("sq_norm"),
     )
 
+@query
 def _f_string_funcs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
@@ -121,6 +117,7 @@ def _f_string_funcs(spark, sf_dir):
         F.regexp_replace(F.col("text"), r"\d", "").alias("no_digits"),
     )
 
+@query
 def _f_json_extract(spark, sf_dir):
     ev = _events(spark, sf_dir)
     return ev.select(
@@ -128,6 +125,7 @@ def _f_json_extract(spark, sf_dir):
         F.get_json_object(F.col("props"), "$.k").cast("bigint").alias("k"),
     )
 
+@query
 def _f_variant_json(spark, sf_dir):
     """Semi-structured extraction through Spark 4's VARIANT type:
     ``parse_json`` decodes the props JSON ONCE into the binary variant
@@ -151,6 +149,7 @@ def _f_variant_json(spark, sf_dir):
         )
     )
 
+@query
 def _w4_moving_avg(spark, sf_dir):
     """RANGE-frame window: per event type, trailing-hour value sum and
     window population (event-time range, not row count). Decimal-exact
@@ -175,6 +174,7 @@ def _w4_moving_avg(spark, sf_dir):
 # §2.4 ⊕ distinct-agg / rollup; tf-idf
 # ---------------------------------------------------------------------------
 
+@query
 def _j6_asof_join(spark, sf_dir):
     """For each click event, the most recent prior purchase by the same
     user — merge as-of via union-tag + running last() (one shuffle)."""
@@ -202,6 +202,7 @@ def _j6_asof_join(spark, sf_dir):
         F.round("asof_value", 4).alias("prev_purchase_value"),
     )
 
+@query
 def _j7_range_join(spark, sf_dir):
     """Bucket lineitem quantities into literal ranges: broadcast range
     join, then aggregate per bucket — the big side never shuffles for
@@ -225,6 +226,7 @@ def _j7_range_join(spark, sf_dir):
         )
     )
 
+@query
 def _w3_ranking(spark, sf_dir):
     """row_number / rank / dense_rank / lag over a per-customer window —
     partitioned by key, so fully parallel."""
@@ -245,6 +247,7 @@ def _w3_ranking(spark, sf_dir):
         .filter(F.col("rn") <= 3)
     )
 
+@query
 def _set_ops(spark, sf_dir):
     """UNION / INTERSECT / EXCEPT (distinct semantics) over customer key
     sets, tagged — §2.7 is absent in the reference; free in Spark."""
@@ -265,6 +268,7 @@ def _set_ops(spark, sf_dir):
         .unionByName(high.subtract(urgent).withColumn("tag", F.lit("high_only")))
     )
 
+@query
 def _a3_distinct_agg(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
@@ -273,6 +277,7 @@ def _a3_distinct_agg(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
     )
 
+@query
 def _a4_rollup(spark, sf_dir):
     """ROLLUP over (returnflag, linestatus): subtotal rows materialize
     NULL group keys, coalesced to 'ALL' so both engines agree."""
@@ -293,6 +298,7 @@ def _a4_rollup(spark, sf_dir):
         )
     )
 
+@query
 def _a7_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (beyond rollup's prefix chain): totals by
     (flag, status), by status alone, and grand total — one shuffle."""
@@ -310,6 +316,7 @@ def _a7_grouping_sets(spark, sf_dir):
         """
     ).withColumn("sum_qty", F.col("sum_qty").cast("double"))
 
+@query
 def _f_posexplode(spark, sf_dir):
     """Explode with ordinality: token position within each document."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
@@ -318,6 +325,7 @@ def _f_posexplode(spark, sf_dir):
         F.posexplode(F.split(F.lower("text"), r"\s+")).alias("pos", "token"),
     ).select("doc_id", (F.col("pos") + 1).alias("ord"), "token")
 
+@query
 def _sql_exists_subquery(spark, sf_dir):
     """The SQL entry point: EXISTS decorrelates to a left-semi join
     (same plan the DataFrame API produces)."""
@@ -335,6 +343,7 @@ def _sql_exists_subquery(spark, sf_dir):
         """
     )
 
+@query
 def _s9_orc_roundtrip(spark, sf_dir):
     """ORC sink + source: write a pruned, filtered projection to ORC,
     read it back, aggregate. Proves the ORC connector end-to-end (the
@@ -361,6 +370,7 @@ def _s9_orc_roundtrip(spark, sf_dir):
         .alias("sum_price"),
     )
 
+@query
 def _s10_jsonl_roundtrip(spark, sf_dir):
     """JSON-lines sink + source round-trip with the same aggregate
     check as the ORC twin (Spark writes shortest-round-trip doubles,
@@ -385,6 +395,7 @@ def _s10_jsonl_roundtrip(spark, sf_dir):
         .alias("sum_price"),
     )
 
+@query
 def _j9_full_outer(spark, sf_dir):
     """Full outer join with both-side-only rows (disjoint key filters
     guarantee unmatched rows in each direction). Shuffle-keyed on the
@@ -407,6 +418,7 @@ def _j9_full_outer(spark, sf_dir):
         F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
     )
 
+@query
 def _w8_first_last(spark, sf_dir):
     """first_value / last_value / nth_value over the full-partition
     frame (ROWS UNBOUNDED PRECEDING..UNBOUNDED FOLLOWING) — the frame
@@ -425,6 +437,7 @@ def _w8_first_last(spark, sf_dir):
         F.nth_value("l_quantity", 2).over(w).alias("second_qty"),
     )
 
+@query
 def _profile_table(spark, sf_dir):
     """Data-quality profile of the orders table: per column null count,
     exact distinct count, numeric min/max and string min/max. ONE
@@ -472,6 +485,7 @@ def _profile_table(spark, sf_dir):
     )
     return one.select(F.expr(stack))
 
+@query
 def _scd2_history(spark, sf_dir):
     """SCD-2 interval build from a change stream: per user, each
     event_type change opens a validity interval [valid_from, valid_to)
@@ -500,6 +514,7 @@ def _scd2_history(spark, sf_dir):
         "n_events",
     )
 
+@query
 def _s11_partition_prune(spark, sf_dir):
     """Hive-style partitioned layout: write events partitioned by
     event date, read back filtered to the earliest date — the scan
@@ -518,6 +533,7 @@ def _s11_partition_prune(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
+@query
 def _w5_lag_delta(spark, sf_dir):
     """lead/lag window coverage: per-user inter-event time delta and
     value change, keyed window (no global sort)."""
@@ -539,6 +555,7 @@ def _w5_lag_delta(spark, sf_dir):
         .alias("value_delta"),
     )
 
+@query
 def _w6_ntile_bins(spark, sf_dir):
     """Quartile binning by document length (curriculum/difficulty
     bucketing): counts and length ranges per quartile. Boundaries come
@@ -575,6 +592,7 @@ def _w6_ntile_bins(spark, sf_dir):
         )
     )
 
+@query
 def _j8_upsert(spark, sf_dir):
     """SCD-1 merge: a deterministic CDC batch (every 10th customer with
     bumped balance, plus 5 brand-new keys) upserted into customer —
@@ -618,6 +636,7 @@ def _j8_upsert(spark, sf_dir):
         F.sum((F.col("c_custkey") >= 1_000_000).cast("int")).alias("n_new"),
     )
 
+@query
 def _a9_quantiles(spark, sf_dir):
     """Exact per-group quantiles (sort-based `percentile`, identical
     interpolation formula to DuckDB's quantile_cont)."""
@@ -634,6 +653,7 @@ def _a9_quantiles(spark, sf_dir):
         .orderBy("l_returnflag")
     )
 
+@query
 def _a10_pivot(spark, sf_dir):
     """Pivot: per-day event counts spread into one column per event
     type (explicit value list keeps the schema static — at scale an
@@ -648,6 +668,7 @@ def _a10_pivot(spark, sf_dir):
         .orderBy("day")
     )
 
+@query
 def _w7_percent_rank(spark, sf_dir):
     """percent_rank + cume_dist windows per return flag over one ship
     week — (rank-1)/(n-1) on identical operands is engine-exact."""
@@ -665,6 +686,7 @@ def _w7_percent_rank(spark, sf_dir):
         F.round(F.cume_dist().over(w), 6).alias("cume"),
     )
 
+@query
 def _a8_cube(spark, sf_dir):
     """CUBE over (returnflag, linestatus): all 2^2 grouping combinations
     in one shuffle (Expand feeds a single hash aggregate — no union of
@@ -689,6 +711,7 @@ def _a8_cube(spark, sf_dir):
     )
 
 
+@query
 def _s12_sorted_stats_prune(spark, sf_dir):
     """Sort-on-write data skipping: events range-partitioned and
     sorted by user_id on write, so every parquet row group carries a
@@ -744,6 +767,7 @@ SELECT node, min(hop) AS hops FROM reach GROUP BY node
 """
 
 
+@query
 def _j10_interval_overlap_join(spark, sf_dir):
     """Interval x interval overlap join with BOTH sides large — the
     shape j7's broadcast point-in-range join can't cover. Per-(user,
@@ -807,6 +831,7 @@ FROM lineitem
 """
 
 
+@query
 def _sql_pipe_syntax(spark, sf_dir):
     """SQL pipe syntax (|>, new in Spark 4): the q1-style pricing
     aggregate written as a linear FROM -> WHERE -> AGGREGATE -> WHERE
@@ -818,6 +843,7 @@ def _sql_pipe_syntax(spark, sf_dir):
     return spark.sql(PIPE_SQL)
 
 
+@query
 def _sql_recursive_reach(spark, sf_dir):
     """Recursive-CTE BFS reachability (WITH RECURSIVE, new in Spark 4)
     over the strong-trade nation graph: shortest hop count from nation

@@ -1,7 +1,7 @@
-"""Sampling, sharding, and skew-mitigation queries — query registry split out of ``__spark_entry__.py``.
+"""Sampling, sharding, and skew-mitigation queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,21 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _embs,
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _docs,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _docs, _embs, _t, query
 
 
+@query
 def _sample_split(spark, sf_dir):
     """Deterministic train/val/test split counts: hash-bucket labeling
     so the split is reproducible across runs, engines, partitionings."""
@@ -36,6 +25,7 @@ def _sample_split(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
+@query
 def _sample_stratified(spark, sf_dir):
     """Language-rebalancing sample: keep 20% of English, all of the
     rest — summarized as kept-count per language (a deterministic
@@ -48,6 +38,7 @@ def _sample_stratified(spark, sf_dir):
     )
     return kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_kept"))
 
+@query
 def _sample_weighted(spark, sf_dir):
     """Quality-weighted importance resampling (the corpus-mixing move
     in DCLM/FineWeb-style pipelines): weight_pm = min(1000, 5 *
@@ -66,6 +57,7 @@ def _sample_weighted(spark, sf_dir):
     kept = weighted_sample(weighted, "doc_id", F.col("weight_pm"))
     return kept.select("doc_id", "lang", "weight_pm")
 
+@query
 def _shard_assign(spark, sf_dir):
     """Deterministic balanced shard assignment for training-data
     export: shard = portable_hash(doc_id) % 16. Zero shuffle on the
@@ -88,6 +80,7 @@ def _shard_assign(spark, sf_dir):
         )
     )
 
+@query
 def _mix_token_budget(spark, sf_dir):
     """Per-source token-budget curation (the domain-cap move when a
     corpus over-represents one crawl/source): rank documents longest-
@@ -129,6 +122,7 @@ def _mix_token_budget(spark, sf_dir):
         )
     )
 
+@query
 def _sample_bottomk(spark, sf_dir):
     """Exact-size uniform sample without a global sort: bottom-k by
     the portable stable hash (TakeOrderedAndProject — per-partition
@@ -146,6 +140,7 @@ def _sample_bottomk(spark, sf_dir):
         .select("doc_id", "lang")
     )
 
+@query
 def _sample_topk_per_stratum(spark, sf_dir):
     """Corpus curation: keep the top-3 documents per language by the
     length-quality score (desc, doc_id tiebreak) — per-group top-k via
@@ -168,6 +163,7 @@ def _sample_topk_per_stratum(spark, sf_dir):
         .filter(F.col("rn") <= 3)
     )
 
+@query
 def _skew_distinct_2phase(spark, sf_dir):
     """Hot-key-safe COUNT(DISTINCT): phase 1 groups on (key, value) so
     the value spreads the hot key across reducers; phase 2 counts pairs
@@ -179,6 +175,7 @@ def _skew_distinct_2phase(spark, sf_dir):
         li, ["l_returnflag"], "l_partkey", out="n_distinct"
     )
 
+@query
 def _skew_salted_agg(spark, sf_dir):
     """Salted two-phase aggregation over a 3-value (maximally skewed)
     key — content-derived salts, decimal-exact sums, answer identical
@@ -200,6 +197,7 @@ def _skew_salted_agg(spark, sf_dir):
         n_salt=8,
     )
 
+@query
 def _skew_salted_join(spark, sf_dir):
     """Salted skew join (the stream-static / AQE-unavailable shape):
     orders salted on content hash, customer replicated per salt; the
@@ -214,6 +212,7 @@ def _skew_salted_join(spark, sf_dir):
     return joined.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n"))
 
 
+@query
 def _sample_negatives(spark, sf_dir):
     """Deterministic contrastive negative sampling: for every anchor
     document, k=3 pseudo-random negatives drawn by portable md5 hash
@@ -256,6 +255,7 @@ def _sample_negatives(spark, sf_dir):
     )
 
 
+@query
 def _mix_domains(spark, sf_dir):
     """Token-budget domain mixing audit: uniform per-source share of a
     50% corpus-size budget, integer per-mille rates, stable-hash keep
@@ -267,6 +267,7 @@ def _mix_domains(spark, sf_dir):
     )
 
 
+@query
 def _mix_temperature(spark, sf_dir):
     """Temperature-scaled domain sampling weights (the multilingual
     mixing rule of Arivazhagan et al. 2019 / used for pretraining
@@ -304,6 +305,7 @@ def _mix_temperature(spark, sf_dir):
     )
 
 
+@query
 def _sample_interleave(spark, sf_dir):
     """Deterministic round-robin epoch order over sources: per-domain
     hash ranking + interleave, pruned per-domain before the final
@@ -315,6 +317,7 @@ def _sample_interleave(spark, sf_dir):
     )
 
 
+@query
 def _sample_kcenter(spark, sf_dir):
     """Greedy k-center diversity selection (k=8): farthest-point
     coreset over the embedding table — k scan-stage passes, one
@@ -326,6 +329,7 @@ def _sample_kcenter(spark, sf_dir):
     return kcenter_select(_embs(spark, sf_dir), k=8)
 
 
+@query
 def _export_training_shards(spark, sf_dir):
     """End-to-end training-data export capstone: quality-gate (>= 20
     tokens) -> exact-dedup keep-lowest-id -> deterministic hash shards

@@ -1,7 +1,7 @@
-"""Structured Streaming queries drained to completion — query registry split out of ``__spark_entry__.py``.
+"""Structured Streaming queries drained to completion.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,19 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _events, _t, query
 
 
+@query
 def _stream_hourly_agg(spark, sf_dir):
     """Structured Streaming twin of ev_hourly_agg, driven to completion
     with an availableNow trigger into a memory sink and returned as a
@@ -49,6 +40,7 @@ def _stream_hourly_agg(spark, sf_dir):
     )
     return spark.table(name)
 
+@query
 def _stream_sessionize(spark, sf_dir):
     """Custom stateful streaming sessionization (applyInPandasWithState,
     30-min gap, event-time timeout), drained to COMPLETION: two
@@ -78,6 +70,7 @@ def _stream_sessionize(spark, sf_dir):
         "session_value",
     )
 
+@query
 def _stream_dedup(spark, sf_dir):
     """Streaming exact dedup via ``dropDuplicatesWithinWatermark`` on
     (user_id, event_type), drained with availableNow. In a single-drain
@@ -110,6 +103,7 @@ def _stream_dedup(spark, sf_dir):
     )
     return spark.table(name)
 
+@query
 def _stream_enrich(spark, sf_dir):
     """Stream-static enrichment: the event stream joins a small static
     dimension (user -> segment) broadcast into every micro-batch — the
@@ -153,6 +147,7 @@ def _stream_enrich(spark, sf_dir):
         )
     )
 
+@query
 def _stream_stream_join(spark, sf_dir):
     """Watermarked stream-stream inner join: purchases within 1 hour
     AFTER a view by the same user. Both sides carry watermarks and the
@@ -192,6 +187,7 @@ def _stream_stream_join(spark, sf_dir):
     )
 
 
+@query
 def _stream_windowed_topk(spark, sf_dir):
     """Streaming-fed windowed top-k: the hourly counts come from a REAL
     Structured Streaming execution (watermark + tumbling window +
@@ -232,6 +228,7 @@ def _stream_windowed_topk(spark, sf_dir):
     )
 
 
+@query
 def _stream_mv_upsert(spark, sf_dir):
     """Incrementally maintained materialized aggregate: the events file
     is re-staged as THREE parquet files and drained one file per
@@ -266,6 +263,7 @@ def _stream_mv_upsert(spark, sf_dir):
     )
 
 
+@query
 def _stream_cms(spark, sf_dir):
     """Continuously maintained count-min sketch: events re-staged as
     three files, drained one per micro-batch, each batch's partial
@@ -292,6 +290,7 @@ def _stream_cms(spark, sf_dir):
     )
     return state.select("r", "bk", "c")
 
+@query
 def _stream_index_maintain(spark, sf_dir):
     """Continuous-ingest index maintenance through a REAL Structured
     Streaming drain (r11): the corpus slice (doc_id % 7 == 0) is
@@ -337,6 +336,7 @@ def _stream_index_maintain(spark, sf_dir):
         "doc_id", "n_matches", "max_jaccard",
     )
 
+@query
 def _stream_ann_maintain(spark, sf_dir):
     """Continuous-ingest VECTOR index maintenance through a real
     Structured Streaming drain (r12) — the IVF twin of

@@ -1,7 +1,7 @@
-"""TPC-H-shaped analytical queries — query registry split out of ``__spark_entry__.py``.
+"""TPC-H-shaped analytical queries.
 
-Each function takes ``(spark, sf_dir)`` and returns a lazy DataFrame;
-the matching DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
+its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
@@ -9,23 +9,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import (
-    _BM25_TERMS,
-    _CLS_WEIGHTS_FP,
-    _dec_disc,
-    _dec_ep,
-    _dec_qty,
-    _events,
-    _t,
-)
-
-__all__: list = []  # underscore names are imported explicitly by the entry file
+from .common import _dec_disc, _dec_ep, _dec_qty, _t, query
 
 
 # ---------------------------------------------------------------------------
 # TPC-H-shaped pipelines (multi-operator coverage)
 # ---------------------------------------------------------------------------
 
+@query
 def _q1_pricing_summary(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     # the money columns are exact 2-decimal values: decimal arithmetic
@@ -64,6 +55,7 @@ def _q1_pricing_summary(spark, sf_dir):
         .orderBy("l_returnflag", "l_linestatus")
     )
 
+@query
 def _q3_shipping_priority(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -91,6 +83,7 @@ def _q3_shipping_priority(spark, sf_dir):
         .limit(10)
     )
 
+@query
 def _q5_region_volume(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
@@ -121,6 +114,7 @@ def _q5_region_volume(spark, sf_dir):
         .orderBy(F.desc("revenue"), "n_name")
     )
 
+@query
 def _q6_forecast_revenue(spark, sf_dir):
     """TPC-H Q6 shape: pure scan+filter+agg — the pushdown showcase
     (all three predicates reach the parquet scan)."""
@@ -146,6 +140,7 @@ def _q6_forecast_revenue(spark, sf_dir):
         )
     )
 
+@query
 def _q7_nation_volume(spark, sf_dir):
     """TPC-H Q7 shape: bilateral trade volume by year — self-aliased
     nation dim joined twice (both broadcast), disjunctive nation-pair
@@ -181,6 +176,7 @@ def _q7_nation_volume(spark, sf_dir):
         .agg(F.round(F.sum(vol), 2).cast("double").alias("revenue"))
     )
 
+@query
 def _q8_market_share(spark, sf_dir):
     """TPC-H Q8 shape: national market share = conditional revenue
     ratio per year over a 7-table join (dims broadcast; exact decimal
@@ -222,6 +218,7 @@ def _q8_market_share(spark, sf_dir):
         )
     )
 
+@query
 def _q10_returned_items(spark, sf_dir):
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
@@ -251,6 +248,7 @@ def _q10_returned_items(spark, sf_dir):
         .limit(20)
     )
 
+@query
 def _q12_priority_lines(spark, sf_dir):
     """TPC-H Q12 shape: conditional counts (case-when inside sum) per
     line status."""
@@ -269,6 +267,7 @@ def _q12_priority_lines(spark, sf_dir):
         )
     )
 
+@query
 def _q14_promo_share(spark, sf_dir):
     """TPC-H Q14 shape: ratio of conditional aggregates after a
     fact-dim join (part broadcasts)."""
@@ -298,6 +297,7 @@ def _q14_promo_share(spark, sf_dir):
         )
     )
 
+@query
 def _q18_large_orders(spark, sf_dir):
     """TPC-H Q18 shape: having-filtered aggregate re-joined to its fact
     — the small post-agg side broadcasts, so the orders/customer tables
@@ -327,6 +327,7 @@ def _q18_large_orders(spark, sf_dir):
         )
     )
 
+@query
 def _q2_min_cost_supplier(spark, sf_dir):
     """TPC-H Q2 shape: groupwise-min + join-back — per qualifying part,
     the supplier offering the minimum price (scalar-subquery-per-group
@@ -352,6 +353,7 @@ def _q2_min_cost_supplier(spark, sf_dir):
         .orderBy("p_partkey")
     )
 
+@query
 def _q4_order_priority(spark, sf_dir):
     """TPC-H Q4 shape: correlated EXISTS — count orders per priority
     having at least one line shipped after the order date. The EXISTS
@@ -373,6 +375,7 @@ def _q4_order_priority(spark, sf_dir):
         .orderBy("o_orderpriority")
     )
 
+@query
 def _q9_product_profit(spark, sf_dir):
     """TPC-H Q9 shape: multi-join profit rollup by supplier nation and
     order year (retail price stands in for supply cost — no partsupp in
@@ -398,6 +401,7 @@ def _q9_product_profit(spark, sf_dir):
         .orderBy("nation", F.desc("o_year"))
     )
 
+@query
 def _q13_order_distribution(spark, sf_dir):
     """TPC-H Q13: distribution of orders-per-customer (left join keeps
     zero-order customers; two keyed aggregations, both map-side
@@ -415,6 +419,7 @@ def _q13_order_distribution(spark, sf_dir):
         .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
+@query
 def _q15_top_supplier(spark, sf_dir):
     """TPC-H Q15 shape: revenue view + MAX scalar subquery — the max
     travels as a broadcast 1-row frame joined back to the view."""
@@ -439,6 +444,7 @@ def _q15_top_supplier(spark, sf_dir):
         .orderBy("s_suppkey")
     )
 
+@query
 def _q16_supplier_counts(spark, sf_dir):
     """TPC-H Q16 shape: COUNT(DISTINCT supplier) per part descriptor
     with negated predicates (lineitem is the part-supplier bridge)."""
@@ -455,6 +461,7 @@ def _q16_supplier_counts(spark, sf_dir):
         .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
+@query
 def _q17_small_quantity_revenue(spark, sf_dir):
     """TPC-H Q17 shape: correlated scalar AVG subquery — weekly revenue
     from small-quantity orders of one brand. The per-part threshold is
@@ -483,6 +490,7 @@ def _q17_small_quantity_revenue(spark, sf_dir):
         )
     )
 
+@query
 def _q19_disjunctive_filter(spark, sf_dir):
     """TPC-H Q19 shape: OR-of-ANDs across join sides — Catalyst still
     pushes the common join key and per-side implied filters down."""
@@ -512,6 +520,7 @@ def _q19_disjunctive_filter(spark, sf_dir):
         .alias("revenue")
     )
 
+@query
 def _q21_waiting_supplier(spark, sf_dir):
     """TPC-H Q21 shape: the EXISTS/NOT-EXISTS pair ("another supplier in
     the order, but no OTHER supplier late") expressed as window
@@ -560,6 +569,7 @@ def _q21_waiting_supplier(spark, sf_dir):
         .limit(20)
     )
 
+@query
 def _q20_excess_volume(spark, sf_dir):
     """q20-shape (adapted: the synthetic schema has no partsupp):
     suppliers that shipped more than 300 units of 'small'-named parts
@@ -594,6 +604,7 @@ def _q20_excess_volume(spark, sf_dir):
         .select("s_name", "n_name", "qty")
     )
 
+@query
 def _q11_value_concentration(spark, sf_dir):
     """TPC-H Q11 shape: scalar-subquery HAVING — keep parts whose
     revenue exceeds 1.5x the average part revenue. The share test is
@@ -617,6 +628,7 @@ def _q11_value_concentration(spark, sf_dir):
         .orderBy(F.desc("value"), "l_partkey")
     )
 
+@query
 def _q22_idle_customers(spark, sf_dir):
     """TPC-H Q22 shape: wealthy low-activity customers — balance above
     the global positive average (division-free `bal * n > sum` over

@@ -66,12 +66,17 @@ def test_driver_artifacts_are_tracked():
 
 
 def test_every_query_has_oracle_and_window_is_registered():
-    """queries() and oracle_sql() must stay key-for-key aligned, and
-    every driver-window name must be a real query."""
+    """queries() and oracle_sql() must stay key-for-key aligned, every
+    window name must be a real query listed first in window order, and
+    each query must be registered under its function name."""
+    import pytest
+
     import __spark_entry__ as entrymod
+    from task_on_dataframes_spark.registry.common import QUERIES, query
 
     q = entrymod.queries()
     o = entrymod.oracle_sql()
+    assert len(q) == 234
     assert set(q) == set(o)
     window = [w for w in dir(entrymod) if re.fullmatch(r"_R\d+_WINDOW", w)]
     assert len(window) == 1, window  # exactly one live rotation list
@@ -79,3 +84,13 @@ def test_every_query_has_oracle_and_window_is_registered():
     assert len(names) == len(set(names))
     missing = [w for w in names if w not in q]
     assert missing == [], missing
+    assert list(q)[: len(names)] == names
+    misnamed = [n for n, fn in q.items() if fn.__name__ != "_" + n]
+    assert misnamed == [], misnamed
+
+    def _q1_pricing_summary(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        query(_q1_pricing_summary)
+    assert QUERIES["q1_pricing_summary"] is q["q1_pricing_summary"]

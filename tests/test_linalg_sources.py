@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 import __spark_entry__ as entrymod
+from task_on_dataframes_spark.registry.common import _events
 
 
 def _physical(df) -> str:
@@ -95,7 +96,7 @@ def test_orc_and_jsonl_roundtrips_agree_with_parquet(spark, sf_dir):
 def test_stream_dedup_equals_batch_distinct(spark, sf_dir):
     got = entrymod.queries()["stream_dedup"](spark, sf_dir)
     expect = (
-        entrymod._events(spark, sf_dir)
+        _events(spark, sf_dir)
         .select("user_id", "event_type")
         .distinct()
     )

@@ -176,6 +176,37 @@ def test_probe_persist_registry_evicts_cleared_entries(spark, sf_dir):
     assert spark.table(sets_t).count() == 2 * bid.count()
 
 
+def test_single_slot_caches_repersist_after_clear_cache(spark, sf_dir):
+    """``spark.catalog.clearCache()`` (bench.py and the A/B and
+    scale-fit tools call it between query blocks) drops the IVF
+    centroid and distributed-PageRank edge caches without telling
+    their single slots. The next call with the same plan must persist
+    again rather than hand back the cleared slot, whose consumers
+    would then each recompute it."""
+    from pyspark import StorageLevel
+
+    from task_on_dataframes_spark.operators.graph import pagerank
+    from task_on_dataframes_spark.operators.similarity import _ivf_centroids
+
+    c = _emb(spark, sf_dir).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vc")
+    )
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1), (3, 1, 2)], "src long, dst long, w long"
+    )
+    nodes = spark.createDataFrame([(1,), (2,), (3,)], "node long")
+
+    def reads_cache(df):
+        plan = df._jdf.queryExecution().withCachedData().toString()
+        return "InMemoryRelation" in plan
+
+    _ivf_centroids(c, 4)
+    pagerank(edges, nodes, local_edge_cap=0)
+    spark.catalog.clearCache()
+    assert _ivf_centroids(c, 4).storageLevel != StorageLevel.NONE
+    assert reads_cache(pagerank(edges, nodes, local_edge_cap=0))
+
+
 def test_index_writes_one_file_per_bucket(spark, sf_dir):
     """r12 layout optimization: build/append repartition to the bucket
     column before every bucketed write, so a build emits at most one

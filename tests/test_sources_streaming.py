@@ -105,7 +105,7 @@ def test_streaming_hourly_counts_matches_batch(spark, tmp_path):
 
     import __spark_entry__ as entrymod
 
-    want = entrymod._ev_hourly_agg(spark, src).collect()
+    want = entrymod.queries()["ev_hourly_agg"](spark, src).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
@@ -125,7 +125,7 @@ def test_streaming_sliding_counts_matches_batch(spark, tmp_path):
 
     import __spark_entry__ as entrymod
 
-    want = entrymod._ev_sliding_agg(spark, src).collect()
+    want = entrymod.queries()["ev_sliding_agg"](spark, src).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
@@ -151,7 +151,7 @@ def test_streaming_sessionize_runs_stateful(spark, tmp_path):
     n_closed = got.count()
     import __spark_entry__ as entrymod
 
-    batch = entrymod._ev_sessionize(spark, src)
+    batch = entrymod.queries()["ev_sessionize"](spark, src)
     n_batch = batch.count()
     assert 0 < n_closed <= n_batch
     # prefix parity: every CLOSED stream session matches a batch twin
@@ -197,10 +197,10 @@ def test_stream_static_enrichment_matches_batch_join(spark, tmp_path):
     q.awaitTermination()
     got = spark.sql("SELECT * FROM enriched_mem").collect()
 
-    import __spark_entry__ as entrymod
+    from task_on_dataframes_spark.registry.common import _events
 
     batch = (
-        entrymod._events(spark, src)
+        _events(spark, src)
         .join(F.broadcast(dim), on="user_id", how="left")
         .select("event_id", "user_id", "cohort")
         .collect()
@@ -229,10 +229,10 @@ def test_stream_dedup_bounded_state(spark, tmp_path):
     distinct_keys = got.distinct().count()
     assert n == distinct_keys  # no duplicate (user, type) pairs emitted
 
-    import __spark_entry__ as entrymod
+    from task_on_dataframes_spark.registry.common import _events
 
     n_batch = (
-        entrymod._events(spark, src)
+        _events(spark, src)
         .select("user_id", "event_type")
         .distinct()
         .count()
@@ -304,9 +304,9 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM ss_join_mem").collect()
     }
 
-    import __spark_entry__ as entrymod
+    from task_on_dataframes_spark.registry.common import _events
 
-    bev = entrymod._events(spark, src)
+    bev = _events(spark, src)
     bc = bev.filter("event_type = 'click'").selectExpr(
         "user_id AS l_key", "event_id AS l_event_id", "ts AS l_ts"
     )

@@ -17,8 +17,9 @@ def test_planner_pipeline_matches_direct_operators(spark, sf_dir):
     pipeline must be the same query."""
     import __spark_entry__ as entrymod
 
-    a = entrymod._planner_top90(spark, sf_dir)
-    b = entrymod._w2_top90_tokens(spark, sf_dir)
+    qs = entrymod.queries()
+    a = qs["planner_top90_tokens"](spark, sf_dir)
+    b = qs["w2_top90_tokens"](spark, sf_dir)
     assert a.count() == b.count()
     assert a.exceptAll(b).isEmpty()
 
