@@ -27,11 +27,13 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .hashing import MERSENNE_P, hash32, perm_coeffs
 from .index import append_tables, build_tables, compact_tables
+from .persist import hold
 
 #: default 1-in-m modulo sampling of the character-shingle universe
 #: (see :func:`_char_ngrams`) — shared with the DuckDB oracle renderers
@@ -655,19 +657,6 @@ def _lsh_doc_profile(toks: DataFrame, num_perm: int) -> DataFrame:
     return rows.groupBy("did").agg(*aggs)
 
 
-#: bounded registry of persisted probe-side profiles. The r10 advisor
-#: flagged the probe's never-unpersisted cache as a leak; r11 removed
-#: the persist and BENCH_r11 measured the recompute at 1.8x probe
-#: latency. probe_lsh_index returns a LAZY frame, so there is no
-#: in-function materialization point to hang an unpersist on — the
-#: resolution is an explicit cap: the newest ``_PROBE_PERSIST_CAP``
-#: probe profiles stay cached (recompute-free for every live probe in
-#: a lifecycle query), older ones are unpersisted (their result frames
-#: stay CORRECT — persist keeps lineage — they just recompute if
-#: re-collected). Leak bound: cap x one-row-per-batch-doc frames.
-_PROBE_PERSIST_CAP = 4
-_probe_persisted: list = []
-
 #: probe join shape for :func:`probe_lsh_index`: ``"merge"`` pins
 #: SMJ-over-buckets (the batch side shuffles+sorts to the index's
 #: bucketing; the index reads its pre-bucketed, pre-sorted layout in
@@ -679,47 +668,6 @@ _probe_persisted: list = []
 #: verify tail); the default is the sf0.1/sf1/sf3-adjudicated winner
 #: (SCALE.md r13).
 PROBE_LSH_SHAPE = "broadcast"
-
-
-def _lookup_probe_profile(cand: DataFrame) -> Optional[DataFrame]:
-    """Plan-equality (``sameSemantics``) lookup in the bounded probe
-    registry, newest entry first. Entries whose cache was dropped OUT
-    OF BAND — ``spark.catalog.clearCache()`` (bench.py calls it
-    between query blocks) or an explicit unpersist — are EVICTED at
-    lookup rather than matched (r12 verdict item 4): a cleared entry
-    reports ``storageLevel == NONE``, and "reusing" it makes the
-    caller skip its own persist, silently recomputing the profile
-    once per consumer instead of materializing it once. Returns the
-    live cached frame, or None (caller persists and owns)."""
-    from pyspark import StorageLevel
-
-    for cached in list(reversed(_probe_persisted)):
-        try:
-            if cached.storageLevel == StorageLevel.NONE:
-                # identity filter, NOT list.remove: remove() would call
-                # DataFrame.__eq__ (a Column) on earlier entries and
-                # raise before reaching the identical object
-                _probe_persisted[:] = [
-                    e for e in _probe_persisted if e is not cached
-                ]
-                continue
-            if cand.sameSemantics(cached):
-                return cached
-        except Exception:
-            continue  # dead-session cache entry — skip, never poison
-    return None
-
-
-def _bounded_persist(df: DataFrame) -> DataFrame:
-    out = df.persist()  # MEMORY_AND_DISK: spill, don't recompute
-    _probe_persisted.append(out)
-    while len(_probe_persisted) > _PROBE_PERSIST_CAP:
-        old = _probe_persisted.pop(0)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — nothing to free
-    return out
 
 
 def build_lsh_index(
@@ -825,8 +773,8 @@ def probe_lsh_index(
     1. shingle the BATCH only, then ONE fused aggregation
        (:func:`_lsh_doc_profile`) produces both the minhash signature
        and the packed shingle set per batch doc — a single batch-sized
-       shuffle, persisted under the bounded probe cache so neither
-       branch recomputes it;
+       shuffle, held (:func:`.persist.hold`) so neither branch
+       recomputes it;
     2. candidates = batch band keys joined to the bucketed index keys
        on the single ``bk`` column — the index side reads its buckets
        in place (no Exchange above the scan, asserted in
@@ -847,18 +795,15 @@ def probe_lsh_index(
     bid = batch.select(
         F.col(id_col).alias("did"), F.col(text_col).alias("text")
     )
-    # fused signature+pack profile, persisted under a bounded cap
-    # (r12, closing the r11 verdict's #1): the r10 advisor's leak
-    # (per-probe cache entries never unpersisted) and r11's fix-by-
-    # recompute (1.8x probe latency — every probe re-shingled the
-    # batch once per branch, BENCH_r11) are both resolved by (a) ONE
-    # aggregation producing signatures AND packed sets — one shingle
-    # pass, one shuffle — and (b) caching that one-row-per-batch-doc
-    # result in the _PROBE_PERSIST_CAP-bounded registry.
-    prof = _bounded_persist(
+    # fused signature+pack profile: both branches below read it, and
+    # the returned frame is lazy, so the newest four probe profiles of
+    # the session stay held instead of being released here
+    prof = hold(
         _lsh_doc_profile(
             _shingles(bid, "did", "text", shingle_n), num_perm
-        )
+        ),
+        "lsh_probe",
+        keep=4,
     )
     bkeys = (
         lsh_band_keys(prof, num_perm, bands)
@@ -960,36 +905,16 @@ def append_lsh_index(
     bid = batch.select(
         F.col(id_col).alias("did"), F.col(text_col).alias("text")
     )
-    # fused profile, persisted for exactly the two writes below — the
-    # append HAS an in-function materialization point, so the persist
-    # is explicitly scoped (no registry needed, no recompute per write).
-    # Probe-cache reuse (r12, guide §1.2): the maintain lifecycle —
-    # batch and streaming alike — probes a wave and then appends the
-    # SAME wave, and both start from the identical fused profile; the
-    # probe's copy sits in the bounded persist registry, already
-    # materialized by the probe's own action. A plan-equality lookup
-    # (sameSemantics) reuses it instead of re-shingling and
-    # re-aggregating the batch — one full batch pass saved per
-    # maintained wave. A miss (append without a preceding probe, or a
-    # cache entry already rotated out) falls back to computing and
-    # owning a scoped persist; a rotated-but-matched entry is still
-    # CORRECT (persist keeps lineage), it just recomputes. Cleared-but-
-    # still-registered entries (catalog.clearCache between probe and
-    # append) are evicted at lookup so the fallback persist fires
-    # (r12 verdict item 4). Staleness contract (ADVICE r12, mirroring
-    # _ivf_centroids): the lookup keys on PLAN equality, so if the
-    # batch's underlying source files are REWRITTEN between the probe
-    # and this append within one session, the append writes the
-    # probe-time snapshot — standard Spark cache semantics; callers
-    # whose batch source mutates mid-lifecycle must clearCache (which
-    # now also evicts here) before appending.
-    cand = _lsh_doc_profile(
+    # the maintain lifecycle probes a wave and then appends the same
+    # wave: a plan-equal profile the probe still holds reports its
+    # cache and is used as is; otherwise the append persists the
+    # profile for exactly the two writes below and releases it
+    prof = _lsh_doc_profile(
         _shingles(bid, "did", "text", shingle_n), num_perm
     )
-    prof = _lookup_probe_profile(cand)
-    owned = prof is None
+    owned = prof.storageLevel == StorageLevel.NONE
     if owned:
-        prof = cand.persist()
+        prof.persist()
     # materialize the (owned or probe-cached) profile, then overlap the
     # two independent table appends
     prof.count()

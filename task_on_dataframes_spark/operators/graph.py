@@ -15,16 +15,10 @@ chain in SQL).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Previous invocation's persisted edge frame.  Each pagerank() call
-# releases its predecessor's cache so repeated calls in one session
-# (bench loops, plan audits, correctness sweeps) hold at most ONE live
-# cached copy instead of accumulating them; the result stays fully lazy
-# so `.explain()` keeps showing the real iteration plan.
-_last_persisted: DataFrame | None = None
+from .persist import hold
 
 
 def _round_half_up(x: float, nd: int) -> float:
@@ -155,18 +149,14 @@ def pagerank(
     # aggregate self-join (that plan sort-merge-joins the edge list
     # against its own groupBy); one Exchange on src instead
     outw = F.sum("w").over(Window.partitionBy("src"))
-    global _last_persisted
-    e = edges.select("src", "dst", (F.col("w") / outw).alias("frac"))
-    # a plan already cached (e.g. bench min-of-3 reruns) reports its
-    # storage level: use the warm cache instead of re-persisting
-    if e.storageLevel == StorageLevel.NONE:
-        try:
-            if _last_persisted is not None:
-                _last_persisted.unpersist(blocking=False)
-        except Exception:
-            pass  # the slot belongs to a stopped session: nothing to free
-        e = e.persist()
-        _last_persisted = e
+    # every iteration reads the edge fractions; the result stays lazy
+    # (so `.explain()` shows the real iteration plan), and one edge
+    # frame per session stays held
+    e = hold(
+        edges.select("src", "dst", (F.col("w") / outw).alias("frac")),
+        "pagerank_edges",
+        keep=1,
+    )
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(iters):
         contrib = (

@@ -14,21 +14,13 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import cosine, dot, norm
 from .hashing import hash32, perm_coeffs, MERSENNE_P
 from .index import append_tables, build_tables, compact_tables
-
-
-#: the one live centroid cache — each _ivf_centroids call unpersists
-#: the previous frame (same discipline as graph.py's _last_persisted),
-#: so bench min-of-3 reruns across the four IVF variants reuse the
-#: cache on identical plans instead of leaking one persisted frame per
-#: invocation
-_last_centroids: Optional[DataFrame] = None
+from .persist import hold
 
 
 def _ivf_centroids(c: DataFrame, n_centroids: int) -> DataFrame:
@@ -41,19 +33,8 @@ def _ivf_centroids(c: DataFrame, n_centroids: int) -> DataFrame:
     oracles. One map-side-partial min(struct) shuffle of
     n_partitions x n_centroids rows; the result (n_centroids rows) is
     persisted because two broadcasts consume it (assignment + probe
-    ranking) and Catalyst will not reuse the aliased subplan.
-
-    Cache staleness contract: a fresh frame whose plan matches a
-    cached plan reports that cache's storage level and is returned as
-    is, so the cache is keyed by PLAN, not by data version — if the
-    parquet under the same path is REWRITTEN within one session, a
-    later call returns the previously persisted centroids (standard
-    Spark cache semantics; ``spark.catalog.clearCache()`` resets it).
-    The single slot is not guarded against concurrent mutation — the
-    query registry drives it from a single planning thread; callers
-    embedding this in a multi-threaded program should serialize IVF
-    planning."""
-    global _last_centroids
+    ranking) and Catalyst will not reuse the aliased subplan; one
+    centroid frame per session stays held (:func:`.persist.hold`)."""
     h = hash32(F.concat(F.lit("ivf:"), F.col("vec_id").cast("string")))
     cents = (
         c.withColumn("h", h)
@@ -62,15 +43,7 @@ def _ivf_centroids(c: DataFrame, n_centroids: int) -> DataFrame:
         .agg(F.min(F.struct("h", "vec_id", "vc")).alias("m"))
         .select(F.col("m.vec_id").alias("cid"), F.col("m.vc").alias("cv"))
     )
-    if cents.storageLevel != StorageLevel.NONE:
-        return cents
-    try:
-        if _last_centroids is not None:
-            _last_centroids.unpersist(blocking=False)
-    except Exception:
-        pass  # the slot belongs to a stopped session: nothing to free
-    _last_centroids = cents.persist()
-    return _last_centroids
+    return hold(cents, "ivf_centroids", keep=1)
 
 
 def _ivf_member(

@@ -170,10 +170,3 @@ class TaskCaller:
 def callmap_view(bindings: Sequence[Binding]) -> CallReqsMap:
     """Reference-shaped view: {(frame, column): (arg, Variable)}."""
     return {(b.frame, b.column): (b.arg, b.var) for b in bindings}
-
-
-def satisfying_calls(
-    have: HaveVars, task: Task
-) -> Iterator[Tuple[Tuple[Binding, ...], List[RetArg]]]:
-    """Convenience wrapper over :class:`TaskCaller`."""
-    return TaskCaller(have, task).satisfy()

@@ -28,8 +28,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-#: effective scan-split estimates, keyed by (path, maxPartitionBytes)
-#: — testdata is immutable, so one footer read per key per process
+#: effective scan-split estimates, keyed by (path, maxPartitionBytes,
+#: parallelism) — testdata is immutable, so one footer read per key per
+#: process
 _SCAN_PARTS_CACHE: dict[tuple, int] = {}
 
 
@@ -42,7 +43,9 @@ def _size_bytes(v: str) -> int:
     return int(v)
 
 
-def _scan_parts(path: str, max_partition_bytes: int | None = None) -> int | None:
+def _scan_parts(
+    path: str, max_partition_bytes: int | None, parallelism: int
+) -> int | None:
     """Effective parquet scan parallelism: the row-group count CAPPED
     by the byte-based split count (``ceil(bytes / maxPartitionBytes)``)
     — Spark packs row groups into maxPartitionBytes-sized splits, so a
@@ -60,7 +63,7 @@ def _scan_parts(path: str, max_partition_bytes: int | None = None) -> int | None
     non-local paths — a real cluster corpus has thousands of
     full-size row groups, so skipping the floor there is the correct
     no-op."""
-    key = (path, max_partition_bytes)
+    key = (path, max_partition_bytes, parallelism)
     if key in _SCAN_PARTS_CACHE:
         return _SCAN_PARTS_CACHE[key]
     try:
@@ -85,9 +88,9 @@ def _scan_parts(path: str, max_partition_bytes: int | None = None) -> int | None
             # splits counted per file because a split never spans files
             total = sum(os.path.getsize(f) for f in files)
             open_cost = 4 << 20  # spark.sql.files.openCostInBytes default
-            par = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
             max_split = min(
-                max_partition_bytes, max(open_cost, total // max(par, 1))
+                max_partition_bytes,
+                max(open_cost, total // max(parallelism, 1)),
             )
             byte_splits = sum(
                 -(-os.path.getsize(f) // max_split) for f in files
@@ -145,6 +148,17 @@ def _corpus_bytes(path: str) -> int:
         return unknown
 
 
+def _floored_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan of table ``name``, repartitioned to the session's
+    parallelism when the scan splits fewer than half that many ways."""
+    df = _t(spark, sf_dir, name)
+    target = spark.sparkContext.defaultParallelism
+    n = _scan_parts(f"{sf_dir}/{name}.parquet", _mpb(spark), target)
+    if n is not None and n < max(2, target // 2):
+        df = df.repartition(target)
+    return df
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents scan with a parallelism floor.
 
@@ -157,12 +171,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     CPU-bound text work. At real scale a 100 TB corpus has thousands of
     row groups and this is a no-op (no repartition in the plan).
     """
-    df = _t(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    n = _scan_parts(f"{sf_dir}/documents.parquet", _mpb(spark))
-    if n is not None and n < max(2, target // 2):
-        df = df.repartition(target)
-    return df
+    return _floored_scan(spark, sf_dir, "documents")
 
 
 def _embs(
@@ -185,14 +194,9 @@ def _embs(
     numbers, so shuffling the corpus first costs more than the
     parallelism it buys — emb_gram regressed 0.32 -> 0.52 s at sf0.1
     under the floor while its 10x-data ratio was fine without it."""
-    df = _t(spark, sf_dir, "embeddings")
     if not floor:
-        return df
-    target = spark.sparkContext.defaultParallelism
-    n = _scan_parts(f"{sf_dir}/embeddings.parquet", _mpb(spark))
-    if n is not None and n < max(2, target // 2):
-        df = df.repartition(target)
-    return df
+        return _t(spark, sf_dir, "embeddings")
+    return _floored_scan(spark, sf_dir, "embeddings")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

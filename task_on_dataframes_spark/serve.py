@@ -25,6 +25,7 @@ write).
 
 from __future__ import annotations
 
+import re
 from typing import Callable, List, Optional
 from urllib.parse import quote
 
@@ -91,7 +92,22 @@ def create_app(
     load = source_loader or (lambda f: spark.read.parquet(f))
 
     def _bs(q: str) -> BrowseState:
-        return BrowseState.from_url_q(q, registry=registry)
+        """The decoded state; 400 for an undecodable query string or a
+        task the registry does not hold."""
+        try:
+            bs = BrowseState.from_url_q(q, registry=registry)
+        except (ValueError, IndexError, re.error) as e:
+            abort(400, description=f"bad state encoding: {e}")
+        unknown = [a.Task for a in bs.actions if a.Task not in bs.registry]
+        if unknown:
+            abort(400, description=f"unknown tasks: {unknown}")
+        return bs
+
+    def _check_frame(bs: BrowseState, index: int) -> None:
+        """404 unless the plan produces frame ``index`` — counted from
+        the encoded plan alone (sources plus each action's returns)."""
+        if index >= len(bs.abstract_state([[] for _ in bs.files]).Vars):
+            abort(404)
 
     def _sources(bs: BrowseState) -> List:
         return [load(f) for f in bs.files]
@@ -104,11 +120,14 @@ def create_app(
             return_latest_first=False,
         )
 
-    def _cached_frame(bs: BrowseState, q: str, index: int):
+    def _cached_frame(bs: BrowseState, index: int):
         key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
-        return cache.get_or_compute(
-            spark, key, lambda: _frames(bs)[index]
-        )
+
+        def compute():
+            _check_frame(bs, index)
+            return _frames(bs)[index]
+
+        return cache.get_or_compute(spark, key, compute)
 
     def _frame_or_wait(bs: BrowseState, index: int):
         """Background mode: (df, None) when ready, (None, response)
@@ -125,6 +144,7 @@ def create_app(
                 status=500,
                 mimetype="text/html",
             )
+        _check_frame(bs, index)
         cache.submit(key, lambda: _frames(bs)[index])
         return None, Response(_WAIT_TPL, status=202, mimetype="text/html")
 
@@ -175,7 +195,7 @@ def create_app(
             if wait is not None:
                 return wait
         else:
-            df = _cached_frame(bs, q, index)
+            df = _cached_frame(bs, index)
         if df is None:
             abort(404)
         total = df.count()
@@ -203,7 +223,7 @@ def create_app(
             if wait is not None:
                 return wait
         else:
-            df = _cached_frame(bs, q, index)
+            df = _cached_frame(bs, index)
         if df is None:
             abort(404)
         body = to_csv(page(df, 0, page_size))

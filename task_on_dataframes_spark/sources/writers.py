@@ -46,13 +46,6 @@ def partitioned_parquet_sink(
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
-def to_local_csv(df: DataFrame, max_rows: int = 1_000_000) -> str:
-    """Small-result path: collect and render as one CSV string (the
-    reference's download endpoint shape). Guarded by ``max_rows``."""
-    pdf = df.limit(max_rows).toPandas()
-    return pdf.to_csv(index=False)
-
-
 def compact_parquet(
     spark,
     path: str,

@@ -134,57 +134,64 @@ def test_probe_lsh_shapes_identical_and_planned(spark, sf_dir):
     assert "SortMergeJoin" not in plans["broadcast"]
 
 
-def test_probe_persist_registry_evicts_cleared_entries(spark, sf_dir):
-    """r12 verdict item 4: ``spark.catalog.clearCache()`` (bench.py
-    calls it between query blocks) unpersists cached probe profiles
-    WITHOUT removing them from the bounded registry. The registry
-    lookup must treat a cleared entry as a miss AND evict it, so
-    ``append_lsh_index``'s fallback persist fires — a stale "hit"
-    makes the caller skip its own persist and silently recompute the
-    batch profile once per index-table write instead of materializing
-    it once."""
-    from pyspark import StorageLevel
-
+def _probe_profile(batch):
+    """The fused profile ``probe_lsh_index`` and ``append_lsh_index``
+    build for ``batch``: a fresh frame, so its storage level is
+    Spark's cache lookup for that plan."""
     from task_on_dataframes_spark.operators import dedup as D
 
-    bid = (
-        _docs(spark, sf_dir)
-        .limit(40)
-        .select(F.col("doc_id").alias("did"), F.col("text").alias("text"))
+    bid = batch.select(
+        F.col("doc_id").alias("did"), F.col("text").alias("text")
+    )
+    return D._lsh_doc_profile(D._shingles(bid, "did", "text", 2), 16)
+
+
+def _probe_index(spark, sf_dir, tag):
+    from task_on_dataframes_spark.operators.dedup import build_lsh_index
+
+    corpus = _docs(spark, sf_dir).filter(F.col("doc_id") % 7 == 0)
+    return build_lsh_index(spark, corpus, "doc_id", "text", name_tag=tag)
+
+
+def test_probe_persist_registry_evicts_cleared_entries(spark, sf_dir):
+    """A probe holds its batch profile, so the append of the same wave
+    finds the plan cached and reuses it. After
+    ``spark.catalog.clearCache()`` (bench.py calls it between query
+    blocks) the plan is a miss: the append persists its own copy for
+    its two writes and releases it."""
+    from pyspark import StorageLevel
+
+    from task_on_dataframes_spark.operators.dedup import (
+        append_lsh_index,
+        build_lsh_index,
+        probe_lsh_index,
     )
 
-    def profile():
-        return D._lsh_doc_profile(D._shingles(bid, "did", "text", 2), 16)
-
-    prof = D._bounded_persist(profile())
-    prof.count()  # materialize, like the probe's own action does
-    # live entry: plan-equality hit returns the cached frame itself
-    assert D._lookup_probe_profile(profile()) is prof
-    spark.catalog.clearCache()
-    assert prof.storageLevel == StorageLevel.NONE
-    # cleared entry: miss (caller will persist and own), and evicted
-    assert D._lookup_probe_profile(profile()) is None
-    assert not any(e is prof for e in D._probe_persisted)
-    # end-to-end: the append fallback persists exactly once on a miss
-    # (owned path) — exercised via the real maintain flow below
-    keys_t, sets_t = D.build_lsh_index(
-        spark, bid, "did", "text", name_tag="t_evict"
+    batch = _docs(spark, sf_dir).limit(40)
+    keys_t, sets_t = build_lsh_index(
+        spark, batch, "doc_id", "text", name_tag="t_evict"
     )
+    probe_lsh_index(spark, batch, "doc_id", "text", keys_t, sets_t).count()
+    # live hit: the profile the append would build reads the probe's cache
+    assert _probe_profile(batch).storageLevel != StorageLevel.NONE
     spark.catalog.clearCache()  # simulate bench block boundary
-    D.append_lsh_index(spark, bid, "did", "text", keys_t, sets_t)
-    # the appended rows landed (append worked on the owned path)
-    assert spark.table(sets_t).count() == 2 * bid.count()
+    assert _probe_profile(batch).storageLevel == StorageLevel.NONE
+    append_lsh_index(spark, batch, "doc_id", "text", keys_t, sets_t)
+    # the appended rows landed, and the owned copy was released
+    assert spark.table(sets_t).count() == 2 * batch.count()
+    assert _probe_profile(batch).storageLevel == StorageLevel.NONE
 
 
 def test_single_slot_caches_repersist_after_clear_cache(spark, sf_dir):
     """``spark.catalog.clearCache()`` (bench.py and the A/B and
     scale-fit tools call it between query blocks) drops the IVF
-    centroid and distributed-PageRank edge caches without telling
-    their single slots. The next call with the same plan must persist
-    again rather than hand back the cleared slot, whose consumers
-    would then each recompute it."""
+    centroid, distributed-PageRank edge and LSH probe-profile caches.
+    The next call with the same plan must persist again rather than
+    trust a cleared frame, whose consumers would then each recompute
+    it."""
     from pyspark import StorageLevel
 
+    from task_on_dataframes_spark.operators.dedup import probe_lsh_index
     from task_on_dataframes_spark.operators.graph import pagerank
     from task_on_dataframes_spark.operators.similarity import _ivf_centroids
 
@@ -195,16 +202,96 @@ def test_single_slot_caches_repersist_after_clear_cache(spark, sf_dir):
         [(1, 2, 1), (2, 3, 1), (3, 1, 2)], "src long, dst long, w long"
     )
     nodes = spark.createDataFrame([(1,), (2,), (3,)], "node long")
+    keys_t, sets_t = _probe_index(spark, sf_dir, "t_repersist")
+    batch = _docs(spark, sf_dir).filter(F.col("doc_id") % 7 == 1)
 
     def reads_cache(df):
         plan = df._jdf.queryExecution().withCachedData().toString()
         return "InMemoryRelation" in plan
 
+    def probe():
+        probe_lsh_index(spark, batch, "doc_id", "text", keys_t, sets_t)
+
     _ivf_centroids(c, 4)
     pagerank(edges, nodes, local_edge_cap=0)
+    probe()
     spark.catalog.clearCache()
     assert _ivf_centroids(c, 4).storageLevel != StorageLevel.NONE
     assert reads_cache(pagerank(edges, nodes, local_edge_cap=0))
+    probe()
+    assert _probe_profile(batch).storageLevel != StorageLevel.NONE
+
+
+def test_probe_holds_the_newest_four_profiles(spark, sf_dir):
+    """Probe results are lazy, so the probe cannot release its profile
+    itself: of five probes of distinct batches at most four profiles
+    stay cached, and the newest is one of them."""
+    from pyspark import StorageLevel
+
+    from task_on_dataframes_spark.operators.dedup import probe_lsh_index
+
+    keys_t, sets_t = _probe_index(spark, sf_dir, "t_hold4")
+    docs = _docs(spark, sf_dir)
+    batches = [docs.filter(F.col("doc_id") % 5 == i) for i in range(5)]
+    for b in batches:
+        probe_lsh_index(spark, b, "doc_id", "text", keys_t, sets_t)
+    cached = [
+        _probe_profile(b).storageLevel != StorageLevel.NONE for b in batches
+    ]
+    assert sum(cached) <= 4 and cached[-1], cached
+
+
+def test_probe_profiles_are_held_per_session(spark, sf_dir):
+    """One session's probes never release another session's profile:
+    after a second session probes five distinct batches, the profile
+    the first session holds is still cached."""
+    from pyspark import StorageLevel
+
+    from task_on_dataframes_spark.operators.dedup import probe_lsh_index
+
+    keys_t, sets_t = _probe_index(spark, sf_dir, "t_session")
+    mine = _docs(spark, sf_dir).filter(F.col("doc_id") % 11 == 0)
+    probe_lsh_index(spark, mine, "doc_id", "text", keys_t, sets_t)
+    assert _probe_profile(mine).storageLevel != StorageLevel.NONE
+    other = spark.newSession()
+    theirs = _docs(other, sf_dir)
+    for i in range(1, 6):
+        b = theirs.filter(F.col("doc_id") % 11 == i)
+        probe_lsh_index(other, b, "doc_id", "text", keys_t, sets_t)
+    assert _probe_profile(mine).storageLevel != StorageLevel.NONE
+
+
+def test_hold_keeps_its_bound_under_concurrent_callers(spark):
+    """Eight threads hold 32 distinct frames in one slot: however the
+    calls interleave, exactly ``keep`` of them stay cached."""
+    import sys
+    import threading
+
+    from pyspark import StorageLevel
+
+    from task_on_dataframes_spark.operators.persist import hold
+
+    frames = [spark.range(1000 + i) for i in range(32)]
+
+    def work(fs):
+        for f in fs:
+            hold(f, "stress", keep=3)
+
+    threads = [
+        threading.Thread(target=work, args=(frames[i::8],)) for i in range(8)
+    ]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    cached = [f.storageLevel != StorageLevel.NONE for f in frames]
+    assert sum(cached) == 3, cached
 
 
 def test_index_writes_one_file_per_bucket(spark, sf_dir):

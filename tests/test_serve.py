@@ -169,3 +169,36 @@ def test_view_returns_wait_page_then_result_in_background_mode(
         time.sleep(0.2)
     assert r.status_code == 200
     assert "<table>" in r.get_data(as_text=True)
+
+
+@pytest.mark.parametrize("background", [False, True])
+def test_bad_urls_are_client_errors_and_store_nothing(
+    spark, tmp_path, background
+):
+    """An undecodable state or an unknown task is a 400 and a frame
+    index the plan does not produce is a 404, in both serve modes —
+    checked before anything is submitted or stored, so no ``_ERROR``
+    marker (or any other cache entry) is left behind."""
+    import os
+
+    from task_on_dataframes_spark.basic_tasks import register_document_tasks
+    from task_on_dataframes_spark.browse import BrowseState
+    from task_on_dataframes_spark.serve import create_app
+
+    registry = register_document_tasks(spark, "/root/testdata/sf0.001")
+    root = tmp_path / "cache"
+    client = create_app(
+        spark, registry=registry, cache_root=str(root), background=background
+    ).test_client()
+    bs = BrowseState([], [], registry=registry)
+    act = next(a for a in bs.further_actions([]) if a.Task == "get_docs")
+    q = quote(bs.with_action(act).to_url_q(), safe="")
+
+    # get_docs is the only action and produces the only frame, index 0
+    for index in (1, 7):
+        assert client.get(f"/view/0/{index}/{q}").status_code == 404
+        assert client.get(f"/download/csv/{index}/{q}").status_code == 404
+    for bad in ("act_0_task=nosuch", "file_x=a", "act_0_cm_0_c=x"):
+        assert client.get(f"/explore/{bad}").status_code == 400
+        assert client.get(f"/view/0/0/{bad}").status_code == 400
+    assert os.listdir(root) == []
