@@ -31,7 +31,7 @@ from urllib.parse import quote
 
 from .browse import BrowseState
 from .cache import ResultCache, plan_key
-from .plans.solve import perform_actions
+from .plans.solve import State, apply_action, perform_actions
 from .plans.task import TaskRegistry
 from .view import download_name, page, to_csv, to_html, palette
 
@@ -92,8 +92,9 @@ def create_app(
     load = source_loader or (lambda f: spark.read.parquet(f))
 
     def _bs(q: str) -> BrowseState:
-        """The decoded state; 400 for an undecodable query string or a
-        task the registry does not hold."""
+        """The decoded state; 400 for an undecodable query string, a
+        task the registry does not hold, or an action reading a frame
+        that no source or earlier action produces."""
         try:
             bs = BrowseState.from_url_q(q, registry=registry)
         except (ValueError, IndexError, re.error) as e:
@@ -101,6 +102,11 @@ def create_app(
         unknown = [a.Task for a in bs.actions if a.Task not in bs.registry]
         if unknown:
             abort(400, description=f"unknown tasks: {unknown}")
+        state = State(Vars=(frozenset(),) * len(bs.files), Tasks=())
+        for i, a in enumerate(bs.actions):
+            if any(not 0 <= b.frame < len(state.Vars) for b in a.Bindings):
+                abort(400, description=f"action {i} reads a missing frame")
+            state = apply_action(state, a)
         return bs
 
     def _check_frame(bs: BrowseState, index: int) -> None:

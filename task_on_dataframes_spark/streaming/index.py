@@ -68,12 +68,19 @@ def _drain(
     overwrite would record self-matches — so a ledgered batch skips
     the probe rewrite too (its previous overwrite already committed
     the pre-append probe result; parquet directory writes finish with
-    the _SUCCESS marker the ledger write follows)."""
+    the _SUCCESS marker the ledger write follows).
+
+    The query runs its micro-batches in a session of its own; what the
+    probes held there (:func:`.operators.persist.hold`) is released
+    once the query stops, since no returned frame reads it."""
     import os
+
+    from task_on_dataframes_spark.operators.persist import release
 
     schema = spark.read.parquet(src_dir).schema
     ledger = results_dir.rstrip("/") + "_ledger"
     os.makedirs(ledger, exist_ok=True)
+    run_session: list = []  # the session the batches run in
 
     def _probe_then_append(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(ledger, f"appended_{batch_id}")
@@ -82,6 +89,7 @@ def _drain(
             # per-batch results overwrite and the index append landed
             return
         sess = batch_df.sparkSession
+        run_session[:] = [sess]
         probe(sess, batch_df).write.mode("overwrite").parquet(
             os.path.join(results_dir, f"b{batch_id}")
         )
@@ -98,7 +106,11 @@ def _drain(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        for sess in run_session:
+            release(sess)
     if not os.path.exists(results_dir):  # empty stream: no batch ran
         return spark.createDataFrame([], schema=empty_schema)
     # per-batch subdirectories: recursive lookup, no partition inference

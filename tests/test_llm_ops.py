@@ -261,6 +261,47 @@ def test_probe_profiles_are_held_per_session(spark, sf_dir):
     assert _probe_profile(mine).storageLevel != StorageLevel.NONE
 
 
+def test_stream_drain_bounds_and_releases_its_profiles(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """PySpark wraps a streaming query's session in a new Python object
+    for every micro-batch, yet the query's batches share one bound:
+    over six micro-batches at most four probe profiles are cached after
+    any probe, the current one among them, and none once the drain has
+    finished."""
+    from pyspark import StorageLevel
+
+    from task_on_dataframes_spark.operators import dedup as D
+    from task_on_dataframes_spark.streaming.index import (
+        index_maintain_stream,
+        stage_wave_files,
+    )
+
+    docs = _docs(spark, sf_dir)
+    keys_t, sets_t = _probe_index(spark, sf_dir, "t_drain")
+    src = stage_wave_files(
+        spark, docs, [F.col("doc_id") % 7 == i for i in range(1, 7)]
+    )
+    probe_lsh_index = D.probe_lsh_index
+    profiles, after_probe = [], []
+
+    def probe(sess, batch, *args, **kwargs):
+        out = probe_lsh_index(sess, batch, *args, **kwargs)
+        profiles.append(_probe_profile(batch))
+        cached = [p.storageLevel != StorageLevel.NONE for p in profiles]
+        after_probe.append((sum(cached), cached[-1]))
+        return out
+
+    monkeypatch.setattr(D, "probe_lsh_index", probe)
+    index_maintain_stream(
+        spark, src, keys_t, sets_t, results_dir=str(tmp_path / "out"),
+        checkpoint=str(tmp_path / "ck"),
+    )
+    assert len(after_probe) == 6
+    assert all(n <= 4 and newest for n, newest in after_probe), after_probe
+    assert all(p.storageLevel == StorageLevel.NONE for p in profiles)
+
+
 def test_hold_keeps_its_bound_under_concurrent_callers(spark):
     """Eight threads hold 32 distinct frames in one slot: however the
     calls interleave, exactly ``keep`` of them stay cached."""

@@ -175,10 +175,11 @@ def test_view_returns_wait_page_then_result_in_background_mode(
 def test_bad_urls_are_client_errors_and_store_nothing(
     spark, tmp_path, background
 ):
-    """An undecodable state or an unknown task is a 400 and a frame
-    index the plan does not produce is a 404, in both serve modes —
-    checked before anything is submitted or stored, so no ``_ERROR``
-    marker (or any other cache entry) is left behind."""
+    """An undecodable state, an unknown task or a binding to a frame
+    the plan does not produce is a 400 and a frame index the plan does
+    not produce is a 404, in both serve modes — checked before anything
+    is submitted or stored, so no ``_ERROR`` marker (or any other cache
+    entry) is left behind."""
     import os
 
     from task_on_dataframes_spark.basic_tasks import register_document_tasks
@@ -198,7 +199,14 @@ def test_bad_urls_are_client_errors_and_store_nothing(
     for index in (1, 7):
         assert client.get(f"/view/0/{index}/{q}").status_code == 404
         assert client.get(f"/download/csv/{index}/{q}").status_code == 404
-    for bad in ("act_0_task=nosuch", "file_x=a", "act_0_cm_0_c=x"):
+    for bad in (
+        "act_0_task=nosuch",
+        "file_x=a",
+        "act_0_cm_0_c=x",
+        # decodes, but binds a frame that nothing produces
+        "act_0_task=get_docs&act_0_cm_9_c=a|Sx|0",
+        "act_0_task=get_docs&act_0_cm_-1_c=a|Sx|0",
+    ):
         assert client.get(f"/explore/{bad}").status_code == 400
         assert client.get(f"/view/0/0/{bad}").status_code == 400
     assert os.listdir(root) == []
