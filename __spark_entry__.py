@@ -4153,15 +4153,14 @@ WHERE round(i.inter / sa.sz, 6) >= 0.6
         ),
         "emb_kmeans": _kmeans_oracle_sql(),
         "dedup_levenshtein": _levenshtein_oracle(),
-        # ORACLE POLICY for approximate sketches: the HLL++ and
-        # Greenwald-Khanna operators (operators/sketches.py) have NO
-        # entry here ON PURPOSE — two engines' sketches legitimately
-        # return different estimates for the same data, so a value-hash
-        # oracle cannot exist. They are validated by error-bound
-        # property tests against exact counts (tests/test_llm_ops.py),
-        # which is the strongest check an approximate answer admits.
-        # a9_quantiles below is the EXACT-quantile twin and does carry
-        # a full value oracle.
+        # ORACLE POLICY for approximate sketches: two engines' HLL++
+        # and Greenwald-Khanna sketches legitimately return different
+        # estimates for the same data, so no oracle here hashes an
+        # estimate. sketch_hll_bound and sketch_quantile_bound expose
+        # only the sketch's error-bound verdict against exact
+        # aggregates, which the oracle checks exactly. a9_quantiles
+        # below is the EXACT-quantile twin and carries a full value
+        # oracle.
         "a9_quantiles": (
             "SELECT l_returnflag, count(*) AS n, "
             "round(quantile_cont(l_quantity, 0.25), 6) AS q25, "

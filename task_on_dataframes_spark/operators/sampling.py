@@ -45,16 +45,6 @@ def assign_split(
     return df.withColumn(out, expr.otherwise("holdout"))
 
 
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep a stable ``fraction`` of rows by key hash — same rows every
-    run, no shuffle, filter evaluated at the scan."""
-    return df.filter(
-        split_bucket(F.col(key_col), salt) < int(round(fraction * 1000))
-    )
-
-
 def weighted_sample(
     df: DataFrame, key_col: str, weight_pm: Column, salt: str = "wsamp"
 ) -> DataFrame:
@@ -124,8 +114,8 @@ def domain_mix(
     from dominating the mixture. All rate arithmetic is INTEGER
     (per-mille floor division), so Spark and the DuckDB oracle derive
     bit-identical rates; the keep decision is the same pure
-    hash-of-key predicate as :func:`deterministic_sample`, so reruns
-    and incremental loads keep exactly the same documents.
+    hash-of-key predicate as :func:`weighted_sample`, so reruns and
+    incremental loads keep exactly the same documents.
 
     Scale shape: one scan-stage aggregation to domain totals (dim
     cardinality), a broadcast of the <= |domains| rate table back onto

@@ -1,61 +1,24 @@
-"""Approximate aggregation sketches — the single-pass, bounded-memory
+"""Mergeable aggregation sketches — the single-pass, bounded-memory
 summaries a 100 TB profiling pass runs where exact answers would
 shuffle the world:
 
-* :func:`approx_distinct` — HyperLogLog++ distinct counts
-  (``approx_count_distinct``): fixed-size sketch per group, map-side
-  mergeable, relative standard deviation ``rsd``.
-* :func:`approx_quantiles` — Greenwald-Khanna quantile sketch
-  (``percentile_approx``): rank error bounded by ``1/accuracy``,
-  mergeable, one pass. (``DataFrame.approxQuantile`` collects to the
-  driver; this stays an aggregate expression so it composes with
-  groupBy and runs fully distributed.)
+* :func:`heavy_hitters` — Misra-Gries summaries per partition, merged
+  by summing counters. Its estimates are approximate, so tests check
+  their error bounds against exact counts, and the DuckDB oracle
+  checks only its no-false-negative contract
+  (``sketch_heavy_hitters``).
+* :func:`cms_counters` / :func:`cms_estimate` — a count-min sketch
+  over portable hashes whose counters are exact sums, so the DuckDB
+  oracle replays them bit for bit.
 
-Sketch outputs are engine-specific by nature (different engines ship
-different sketch implementations and seeds), so these operators are
-validated by ERROR-BOUND tests against the exact in-repo aggregates
-rather than a DuckDB value oracle — the correct check for an
-approximate answer.
+For HyperLogLog++ distinct counts and Greenwald-Khanna quantiles call
+Spark's ``F.approx_count_distinct`` and ``F.percentile_approx``
+directly.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame, functions as F
-
-
-def approx_distinct(
-    df: DataFrame, cols: Sequence[str], rsd: float = 0.05
-) -> DataFrame:
-    """One row of HLL++ distinct-count estimates, one column per input
-    column (named ``<col>_approx``)."""
-    return df.agg(
-        *[
-            F.approx_count_distinct(c, rsd=rsd).alias(f"{c}_approx")
-            for c in cols
-        ]
-    )
-
-
-def approx_quantiles(
-    df: DataFrame,
-    col: str,
-    probs: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-    accuracy: int = 10_000,
-    group_by: Sequence[str] = (),
-) -> DataFrame:
-    """Approximate quantiles of ``col`` (optionally per group) as one
-    aggregate expression — rank error <= 1/accuracy of the row count."""
-    aggs = [
-        F.percentile_approx(col, p, accuracy).alias(
-            f"q{int(p * 100):02d}"
-        )
-        for p in probs
-    ]
-    if group_by:
-        return df.groupBy(*group_by).agg(*aggs)
-    return df.agg(*aggs)
 
 
 def heavy_hitters(
@@ -127,7 +90,7 @@ def cms_counters(
     width: int = 1024,
 ) -> DataFrame:
     """Count-min sketch counter table: ``depth`` independent hash rows
-    of ``width`` buckets. UNLIKE the HLL/GK sketches above, every
+    of ``width`` buckets. UNLIKE :func:`heavy_hitters`, every
     counter is an EXACT sum over deterministic portable hashes
     (md5-derived universal family, :mod:`.hashing`), so the full
     counter table — and any estimate read from it — is bit-replayable

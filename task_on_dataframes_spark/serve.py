@@ -9,12 +9,15 @@ the encoded actions over the source *schemas only* (no data touched —
 Spark schemas are free on lazy frames), lists the legal next actions as
 links that append one action and re-encode, and links each live frame
 to ``/view``. ``/view`` is the only route that executes, and it goes
-through :class:`.cache.ResultCache`: the first hit materializes the
-frame to parquet keyed by the canonical plan digest, every later page /
-re-visit / CSV download of the same state is a zero-work
-``spark.read.parquet`` plus an offset/limit page — the reference needs
-Celery + pickle polling for this (serve.py:25-107); on Spark the
-driver/executor split plus the parquet cache covers it synchronously.
+through :meth:`.cache.ResultCache.get_or_compute`: the first visit of a
+frame computes it once (concurrent visits wait for that one
+computation) and stores it as parquet keyed by the canonical plan
+digest; that visit and every later page / re-visit / CSV download read
+the same stored parquet, so a revisit shows the same rows as the first
+visit. The reference needs Celery + pickle polling for this
+(serve.py:25-107); on Spark the driver/executor split plus the parquet
+cache covers it synchronously. A plan that fails stores nothing and is
+a 500; the next request computes it again.
 
 Scale: pagination compiles to GlobalLimit operators inside Spark
 (view.py:25), so a 100 TB result ships at most ``page_size`` rows to
@@ -43,14 +46,6 @@ _EXPLORE_TPL = """<!doctype html><html><head><title>explore</title>
 <h2>Next actions</h2><ul>{actions}</ul>
 <p>{back}</p></body></html>"""
 
-_WAIT_TPL = """<!doctype html><html><head><title>computing</title>
-<meta http-equiv="refresh" content="1"></head>
-<body><p>Query running in the background &mdash; this page refreshes
-until the result is ready.</p></body></html>"""
-
-_ERROR_TPL = """<!doctype html><html><head><title>failed</title></head>
-<body><h1>Query failed</h1><pre>{err}</pre></body></html>"""
-
 _VIEW_TPL = """<!doctype html><html><head><title>view</title>
 <style>body{{font-family:sans-serif;margin:2em}}
 table{{border-collapse:collapse}}td,th{{border:1px solid #999;
@@ -67,23 +62,12 @@ def create_app(
     cache_root: Optional[str] = None,
     page_size: int = 50,
     source_loader: Optional[Callable[[str], object]] = None,
-    background: bool = False,
 ):
     """Build the Flask app bound to ``spark``.
 
     ``source_loader`` maps an encoded file entry to a DataFrame
     (default: ``spark.read.parquet``) — the hook for glob/CSV sources.
     Flask is imported lazily so the engine has no hard web dependency.
-
-    ``background=True`` reproduces the reference's async serve loop
-    (serve.py:47-107): the first ``/view`` of an uncached plan submits
-    the materialization to :class:`ResultCache`'s thread pool and
-    returns an auto-refreshing 202 wait page immediately; every poll
-    (and any concurrent request for the same plan) gets the wait page
-    until the parquet write finishes, then the result serves from
-    cache. Default ``False`` keeps the synchronous behavior (the Spark
-    driver/executor split already keeps the web thread responsive for
-    interactive-sized plans).
     """
     from flask import Flask, Response, abort
 
@@ -109,50 +93,24 @@ def create_app(
             state = apply_action(state, a)
         return bs
 
-    def _check_frame(bs: BrowseState, index: int) -> None:
-        """404 unless the plan produces frame ``index`` — counted from
-        the encoded plan alone (sources plus each action's returns)."""
-        if index >= len(bs.abstract_state([[] for _ in bs.files]).Vars):
-            abort(404)
-
     def _sources(bs: BrowseState) -> List:
         return [load(f) for f in bs.files]
 
-    def _frames(bs: BrowseState) -> List:
-        """Live frames (sources + every action output), oldest first,
-        all still lazy."""
-        return perform_actions(
-            _sources(bs), bs.actions, registry=bs.registry,
-            return_latest_first=False,
+    def _frame(q: str, index: int):
+        """Frame ``index`` of the plan encoded in ``q``, as the cache
+        stored it. 404 unless the plan produces that frame — counted
+        from the encoded plan alone, before anything is computed."""
+        bs = _bs(q)
+        if index >= len(bs.abstract_state([[] for _ in bs.files]).Vars):
+            abort(404)
+        key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
+        return cache.get_or_compute(
+            spark, key,
+            lambda: perform_actions(
+                _sources(bs), bs.actions, registry=bs.registry,
+                return_latest_first=False,
+            )[index],
         )
-
-    def _cached_frame(bs: BrowseState, index: int):
-        key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
-
-        def compute():
-            _check_frame(bs, index)
-            return _frames(bs)[index]
-
-        return cache.get_or_compute(spark, key, compute)
-
-    def _frame_or_wait(bs: BrowseState, index: int):
-        """Background mode: (df, None) when ready, (None, response)
-        while computing or after failure."""
-        from flask import Response
-
-        key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
-        st = cache.status(key)
-        if st == "done":
-            return cache.load(spark, key), None
-        if st == "error":
-            return None, Response(
-                _ERROR_TPL.format(err=cache.error(key) or "unknown"),
-                status=500,
-                mimetype="text/html",
-            )
-        _check_frame(bs, index)
-        cache.submit(key, lambda: _frames(bs)[index])
-        return None, Response(_WAIT_TPL, status=202, mimetype="text/html")
 
     @app.route("/explore/")
     @app.route("/explore/<path:q>")
@@ -195,15 +153,7 @@ def create_app(
 
     @app.route("/view/<int:page_no>/<int:index>/<path:q>")
     def view(page_no: int, index: int, q: str):
-        bs = _bs(q)
-        if background:
-            df, wait = _frame_or_wait(bs, index)
-            if wait is not None:
-                return wait
-        else:
-            df = _cached_frame(bs, index)
-        if df is None:
-            abort(404)
+        df = _frame(q, index)
         total = df.count()
         n_pages = max((total + page_size - 1) // page_size, 1)
         page_df = page(df, page_no, page_size)
@@ -223,15 +173,7 @@ def create_app(
 
     @app.route("/download/csv/<int:index>/<path:q>")
     def download_csv(index: int, q: str):
-        bs = _bs(q)
-        if background:
-            df, wait = _frame_or_wait(bs, index)
-            if wait is not None:
-                return wait
-        else:
-            df = _cached_frame(bs, index)
-        if df is None:
-            abort(404)
+        df = _frame(q, index)
         body = to_csv(page(df, 0, page_size))
         return Response(
             body,

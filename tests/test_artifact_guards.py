@@ -109,35 +109,49 @@ def _package_sources():
 
 def test_every_public_definition_is_reachable():
     """Every public top-level function or class of the package is
-    named (called, imported — package ``__init__`` re-exports included —
-    or cross-referenced) somewhere in the package or
-    ``__spark_entry__.py`` outside its own definition. A definition
-    nothing names is dead code: delete it."""
+    referenced in code (a name, an attribute or an import — package
+    ``__init__`` re-exports included) somewhere in the package or
+    ``__spark_entry__.py`` outside its own definition. Docstring and
+    comment mentions do not count. A definition no code references is
+    dead code: delete it."""
     import ast
 
     sources = _package_sources()
     with open(os.path.join(HERE, "__spark_entry__.py")) as f:
-        lines = {"__spark_entry__.py": f.read().splitlines()}
-    lines.update({p: t.splitlines() for p, t in sources.items()})
-    # the test reference the star-contraction components are checked
-    # against (tests/test_skew_introspect.py); nothing else calls it
-    allowed = {"connected_components_hashmin"}
+        trees = {"__spark_entry__.py": ast.parse(f.read())}
+    trees.update({p: ast.parse(t) for p, t in sources.items()})
+    refs: dict = {}  # name -> [(path, lineno), ...]
+    for path, tree in trees.items():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                name = n.id
+            elif isinstance(n, ast.Attribute):
+                name = n.attr
+            elif isinstance(n, ast.alias):
+                name = n.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            refs.setdefault(name, []).append((path, n.lineno))
+    allowed = {
+        # the reference tests check star-contraction components against
+        # (tests/test_skew_introspect.py)
+        "connected_components_hashmin",
+        # the reference tests check the persisted LSH index probe against
+        "incremental_lsh_matches",
+    }
     dead = []
-    for path, text in sources.items():
-        for node in ast.parse(text).body:
+    for path in sources:
+        for node in trees[path].body:
             if not isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ) or node.name.startswith("_"):
                 continue
             first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            word = re.compile(rf"\b{node.name}\b")
-            named = any(
-                word.search(line)
-                for p, ls in lines.items()
-                for i, line in enumerate(ls, 1)
-                if not (p == path and first <= i <= node.end_lineno)
+            used = any(
+                not (p == path and first <= line <= node.end_lineno)
+                for p, line in refs.get(node.name, [])
             )
-            if not named and node.name not in allowed:
+            if not used and node.name not in allowed:
                 dead.append(f"{os.path.relpath(path, HERE)}:{node.name}")
     assert dead == [], dead
 

@@ -79,107 +79,116 @@ def test_view_is_served_from_cache_after_first_hit(served, tmp_path):
     assert cache.status(key) == "done"
 
 
-def test_background_submit_in_progress_then_done(spark, tmp_path):
+def test_get_or_compute_runs_once_for_concurrent_callers(spark, tmp_path):
+    """Four threads asking for one uncached key share a single
+    computation, and each gets every stored row back."""
+    import sys
     import threading
     import time
 
     from task_on_dataframes_spark.cache import ResultCache
 
-    cache = ResultCache(str(tmp_path / "bg_cache"))
-    release = threading.Event()
+    cache = ResultCache(str(tmp_path / "cache"))
+    calls = []
+    start = threading.Barrier(4)
 
     def slow_compute():
-        release.wait(timeout=30)
+        calls.append(1)
+        time.sleep(1.0)
         return spark.range(7).toDF("v")
 
-    key = "k" * 32
-    assert cache.status(key) == "missing"
-    assert cache.submit(key, slow_compute) == "in_progress"
-    # a second submit while in flight must not start a second job
-    assert cache.submit(key, slow_compute) == "in_progress"
-    assert cache.status(key) == "in_progress"
+    seen = []
 
-    release.set()
-    for _ in range(200):
-        if cache.status(key) == "done":
-            break
-        time.sleep(0.1)
-    assert cache.status(key) == "done"
-    assert cache.load(spark, key).count() == 7
+    def caller():
+        start.wait(timeout=60)
+        df = cache.get_or_compute(spark, "k" * 32, slow_compute)
+        seen.append(sorted(r["v"] for r in df.collect()))
+
+    threads = [threading.Thread(target=caller) for _ in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert seen == [list(range(7))] * 4
 
 
-def test_background_submit_records_failure(spark, tmp_path):
-    import time
+def test_failed_compute_stores_nothing_and_is_retried(spark, tmp_path):
+    """A ``compute`` that raises, or returns a frame whose write fails,
+    propagates its error and leaves nothing in the cache root; the next
+    call computes again."""
+    import os
+
+    from pyspark.sql import functions as F
 
     from task_on_dataframes_spark.cache import ResultCache
 
-    cache = ResultCache(str(tmp_path / "bg_err"))
+    root = tmp_path / "cache"
+    cache = ResultCache(str(root))
+    key = "e" * 32
 
     def boom():
         raise RuntimeError("deliberate failure for the error path")
 
-    key = "e" * 32
-    assert cache.submit(key, boom) == "in_progress"
-    for _ in range(100):
-        if cache.status(key) == "error":
-            break
-        time.sleep(0.1)
-    assert cache.status(key) == "error"
-    assert "deliberate failure" in cache.error(key)
-    # invalidate clears the error so the plan can be resubmitted
-    cache.invalidate(key)
+    with pytest.raises(RuntimeError, match="deliberate failure"):
+        cache.get_or_compute(spark, key, boom)
     assert cache.status(key) == "missing"
+    assert os.listdir(root) == []
+
+    def fails_in_write():
+        return spark.range(3).select(F.raise_error(F.lit("write-time failure")))
+
+    with pytest.raises(Exception, match="write-time failure"):
+        cache.get_or_compute(spark, key, fails_in_write)
+    assert not os.path.exists(os.path.join(root, key, "_SUCCESS"))
+    assert os.listdir(root) == []
+
+    df = cache.get_or_compute(spark, key, lambda: spark.range(7).toDF("v"))
+    assert df.count() == 7
+    assert cache.status(key) == "done"
 
 
-def test_view_returns_wait_page_then_result_in_background_mode(
-    spark, tmp_path
+def test_view_page_is_the_same_on_first_and_second_visit(
+    spark, sf_dir, tmp_path
 ):
-    import time
-    from urllib.parse import quote
+    """A revisit shows the rows the first visit showed: both page the
+    stored parquet, not the first visit the lazy plan. Uses sf0.01,
+    whose documents span more than three pages."""
+    import os
 
     from task_on_dataframes_spark.basic_tasks import register_document_tasks
     from task_on_dataframes_spark.browse import BrowseState
     from task_on_dataframes_spark.serve import create_app
 
-    registry = register_document_tasks(spark, "/root/testdata/sf0.001")
-    app = create_app(
-        spark,
-        registry=registry,
-        cache_root=str(tmp_path / "bg_serve"),
-        background=True,
-    )
-    client = app.test_client()
-
+    sf0_01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    registry = register_document_tasks(spark, sf0_01)
+    client = create_app(
+        spark, registry=registry, cache_root=str(tmp_path / "cache")
+    ).test_client()
     bs = BrowseState([], [], registry=registry)
     act = next(a for a in bs.further_actions([]) if a.Task == "get_docs")
     q = quote(bs.with_action(act).to_url_q(), safe="")
 
-    # first request: submitted to the pool, caller gets the wait page
-    r = client.get(f"/view/0/0/{q}")
-    assert r.status_code == 202
-    assert "background" in r.get_data(as_text=True)
-
-    # poll like the refresh tag does until the parquet write lands
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        r = client.get(f"/view/0/0/{q}")
-        if r.status_code == 200:
-            break
-        assert r.status_code == 202
-        time.sleep(0.2)
-    assert r.status_code == 200
-    assert "<table>" in r.get_data(as_text=True)
+    first = client.get(f"/view/3/0/{q}")
+    second = client.get(f"/view/3/0/{q}")
+    assert first.status_code == second.status_code == 200
+    assert first.get_data(as_text=True) == second.get_data(as_text=True)
 
 
-@pytest.mark.parametrize("background", [False, True])
-def test_bad_urls_are_client_errors_and_store_nothing(
-    spark, tmp_path, background
-):
+@pytest.mark.parametrize("warm", [False, True])
+def test_bad_urls_are_client_errors_and_store_nothing(spark, tmp_path, warm):
     """An undecodable state, an unknown task or a binding to a frame
     the plan does not produce is a 400 and a frame index the plan does
-    not produce is a 404, in both serve modes — checked before anything
-    is submitted or stored, so no ``_ERROR`` marker (or any other cache
-    entry) is left behind."""
+    not produce is a 404 — checked before anything is computed or
+    stored, so no cache entry is left behind. ``warm`` first serves the
+    valid state, so the bad URLs meet a cache that already holds its
+    result and must still add nothing to it."""
     import os
 
     from task_on_dataframes_spark.basic_tasks import register_document_tasks
@@ -189,11 +198,15 @@ def test_bad_urls_are_client_errors_and_store_nothing(
     registry = register_document_tasks(spark, "/root/testdata/sf0.001")
     root = tmp_path / "cache"
     client = create_app(
-        spark, registry=registry, cache_root=str(root), background=background
+        spark, registry=registry, cache_root=str(root)
     ).test_client()
     bs = BrowseState([], [], registry=registry)
     act = next(a for a in bs.further_actions([]) if a.Task == "get_docs")
     q = quote(bs.with_action(act).to_url_q(), safe="")
+    if warm:
+        assert client.get(f"/view/0/0/{q}").status_code == 200
+    stored = sorted(os.listdir(root)) if warm else []
+    assert bool(stored) == warm
 
     # get_docs is the only action and produces the only frame, index 0
     for index in (1, 7):
@@ -209,4 +222,4 @@ def test_bad_urls_are_client_errors_and_store_nothing(
     ):
         assert client.get(f"/explore/{bad}").status_code == 400
         assert client.get(f"/view/0/0/{bad}").status_code == 400
-    assert os.listdir(root) == []
+    assert sorted(os.listdir(root)) == stored

@@ -14,16 +14,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+from tools.check_correctness import SF_DIR, duck_conn  # noqa: E402
 
 
 def main(names: list[str]) -> int:
@@ -31,9 +26,7 @@ def main(names: list[str]) -> int:
     from task_on_dataframes_spark.session import get_spark
 
     spark = get_spark()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = duck_conn()
 
     qs = entrymod.queries()
     # foreachBatch queries start the py4j CALLBACK server, after
