@@ -1,38 +1,31 @@
 """Distributed BPE tokenizer training (Sennrich et al. 2016): learn
 byte-pair merges from the corpus — the vocabulary-induction step that
 precedes every token-count, pack, and curriculum operator in an LLM
-data pipeline.
-
-Formulation (fully declarative — no driver-side loop state):
+data pipeline — and apply a learned merge table.
 
 * **word table** — one pass over the corpus: lowercase whitespace
-  tokens filtered to ``^[a-z]+$``, grouped to (word, count). All merge
+  tokens filtered to ``^[a-z]+$`` (or, byte-level, raw whitespace
+  pieces as UTF-8 bytes), grouped to (word, count). All merge
   statistics are weighted by word frequency over this VOCABULARY-sized
-  table, so every BPE iteration touches |vocab| rows, never the corpus
-  again — the same trick every production BPE trainer uses.
+  table, so merge selection never touches the corpus again.
 * **symbol representation** — each word's symbol sequence is a string
   of wrapped symbols ``(a)(b)(c)``. Applying a merge (a,b)->ab is ONE
   literal ``replace('(a)(b)' -> '(ab)')``: both Spark (Java
   ``String.replace``) and DuckDB scan left-to-right non-overlapping,
-  which is exactly greedy BPE merge application (verified:
-  ``(a)(a)(a)(a)`` -> ``(aa)(aa)``, ``(a)(a)(a)`` -> ``(aa)(a)``).
-  The parens cannot collide with symbol text (alphabet is [a-z]), so
-  a match is always symbol-boundary aligned.
-* **per iteration** — adjacent pairs explode from the symbol arrays
-  (weighted by word count), one keyed aggregation ranks them, and the
-  argmax (ties: lexicographically smallest pair — engine-identical)
-  becomes a ONE-ROW frame that broadcasts back into the next
-  iteration's replace. The word table is persisted per iteration
-  (vocabulary-sized, the same discipline as
-  :func:`..operators.clustering.kmeans_assignments`' centroid frames)
-  so the best-pair branch and the next word table share one cached
-  subplan instead of doubling the lineage every step.
+  which is exactly greedy BPE merge application
+  (``(a)(a)(a)(a)`` -> ``(aa)(aa)``, ``(a)(a)(a)`` -> ``(aa)(a)``).
+  The parens cannot collide with symbol text, so a match is always
+  symbol-boundary aligned.
+* **greedy order** — each merge is the highest frequency-weighted
+  adjacent pair, ties to the lexicographically smallest (lhs, rhs).
+  The order is deterministic and prefix-stable: the first k merges of
+  an n-merge table are the k-merge table.
 
-Scale shape: the corpus is read once; each of the ``merges``
-iterations costs one shuffle of vocabulary-sized pair counts with
-map-side partial aggregation plus a 1-row broadcast. At 100 TB the
-vocabulary (even hundreds of millions of words) partitions freely;
-nothing ever gathers more than the single winning pair.
+:func:`bpe_train_scalable` is the trainer: one distributed word-count
+collect, then the merge loop runs driver-local over the vocabulary.
+Above its driver cap it falls back to :func:`bpe_train_batched`, which
+keeps the pair counts distributed and applies provably-sequential
+merge batches. Both replay the chained-CTE DuckDB oracle exactly.
 """
 
 from __future__ import annotations
@@ -43,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # merge tables are tokenizer-sized driver lists; the Arrow local frame
-# skips the 32-task pickled fan-out (r13, guide §6)
+# skips the per-partition pickled fan-out of createDataFrame
 from .localdata import local_frame
 
 #: extract the wrapped symbols back out of the representation string
@@ -54,7 +47,7 @@ _SYMS = r"regexp_extract_all(repr, '\\(([^)]*)\\)', 1)"
 #: pre-tokenizes for the same reason). Bounds the driver merge loop's
 #: per-piece cost for no-whitespace scripts — a 100 KB CJK clause is
 #: otherwise ONE piece, making every merge scan linear in piece bytes.
-#: Shared with the DuckDB oracle renderer in ``__spark_entry__``.
+#: Shared with the DuckDB oracle renderer in ``registry/text.py``.
 BPE_PIECE_CHAR_CAP = 64
 
 
@@ -138,57 +131,6 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def bpe_train(
-    docs: DataFrame,
-    text_col: str = "text",
-    merges: int = 6,
-) -> DataFrame:
-    """Learn ``merges`` BPE merge rules; returns the merge table
-    ``(step, lhs, rhs, merged, pair_count)`` ordered by step — the
-    tokenizer-training artifact."""
-    words = _word_table(docs, text_col).persist()
-    best_frames = []
-    for step in range(1, merges + 1):
-        best = (
-            _pair_counts(words)
-            .orderBy(F.desc("pc"), "lhs", "rhs")
-            .limit(1)
-            .select(
-                F.lit(step).alias("step"),
-                "lhs",
-                "rhs",
-                F.concat("lhs", "rhs").alias("merged"),
-                F.col("pc").alias("pair_count"),
-            )
-        )
-        best_frames.append(best)
-        if step < merges:
-            words = (
-                words.crossJoin(
-                    F.broadcast(best.select("lhs", "rhs", "merged"))
-                )
-                .select(
-                    F.replace(
-                        F.col("repr"),
-                        F.concat(
-                            F.lit("("),
-                            F.col("lhs"),
-                            F.lit(")("),
-                            F.col("rhs"),
-                            F.lit(")"),
-                        ),
-                        F.concat(F.lit("("), F.col("merged"), F.lit(")")),
-                    ).alias("repr"),
-                    "cnt",
-                )
-                .persist()
-            )
-    out = best_frames[0]
-    for b in best_frames[1:]:
-        out = out.unionAll(b)
-    return out
-
-
 def _accept_batch(
     top: list[tuple[str, str, int]],
     capped: bool,
@@ -253,7 +195,7 @@ def bpe_train_batched(
     stats: dict | None = None,
     level: str = "char",
 ) -> DataFrame:
-    """:func:`bpe_train` with DELTA pair-count maintenance and
+    """Distributed greedy BPE with DELTA pair-count maintenance and
     MULTI-MERGE BATCHES — the shape that makes a real 32k-merge
     vocabulary tractable: the pair-count table stays hot and only the
     words containing an accepted pair are re-exploded (subtract their
@@ -467,9 +409,9 @@ def bpe_train_scalable(
     merge BATCH) above it, so no input size ever collects an
     unbounded table.
 
-    Bit-identical to :func:`bpe_train` / :func:`bpe_train_batched` /
-    the chained-CTE DuckDB oracle (same weighting, same (pc DESC,
-    lhs, rhs) tie-break, same left-to-right merge application).
+    Bit-identical to :func:`bpe_train_batched` and the chained-CTE
+    DuckDB oracle (same weighting, same (pc DESC, lhs, rhs) tie-break,
+    same left-to-right merge application).
     Pass ``stats={}`` to receive ``{"path": "local"|"batched",
     "jobs": N}``.
 
@@ -507,17 +449,16 @@ def bpe_train_scalable(
 
 #: merge-rule count at/above which the apply operators switch from
 #: the chain-over-the-token-stream shape to the distinct-vocabulary
-#: join shape. Two independent reasons (SCALE.md r13 memo):
+#: join shape. Two independent reasons:
 #: performance — the chain costs O(rules x stream rows) replace scans
 #: vs the vocab shape's O(rules x DISTINCT words) plus one (doc, word)
 #: aggregation and a broadcast join-back (at the bench's 6/64-rule
-#: tables the chain wins, measured r12 and re-measured r13; the
-#: synthetic-vocab A/B locates the crossover) — and STRUCTURE: a
-#: single projection of ~512 nested ``replace`` calls overflows the
-#: JVM thread stack at plan-build time (StackOverflowError in the
-#: analyzer), so deep rule lists are only expressible as segmented
-#: chains over a materialized frame, which is corpus-cheap only on
-#: the vocabulary side.
+#: tables the chain wins; SCALE.md locates the crossover) — and
+#: STRUCTURE: a single projection of ~512 nested ``replace`` calls
+#: overflows the JVM thread stack at plan-build time (StackOverflowError
+#: in the analyzer), so deep rule lists are only expressible as
+#: segmented chains over a materialized frame, which is corpus-cheap
+#: only on the vocabulary side.
 BPE_APPLY_VOCAB_CUTOFF = 256
 
 #: replace-chain segment length inside the vocab shape: rules are
@@ -545,8 +486,8 @@ def _apply_counts(
       rule list is small (the chain is ~rules cheap scans).
     * ``via_vocab=True`` — aggregate the stream to ``(doc_id, w, c)``
       once (localCheckpoint cuts the lineage so the upstream corpus
-      pipeline runs exactly once for both consumers — the r12
-      rejection's ReusedExchange divergence), run the chain over the
+      pipeline runs exactly once for both consumers instead of
+      diverging into two ReusedExchange branches), run the chain over the
       DISTINCT words only, broadcast the tokenizer-output-sized
       ``(w, n)`` table back, and sum ``c * n`` per doc. Right when
       rules x stream-rows dwarfs rules x vocab (production
@@ -680,9 +621,8 @@ _ARTIFACT_BASE: list = []
 def merge_table_artifact(
     spark, tag: str, train_fn, merges: int = None, level: str = None
 ) -> DataFrame:
-    """Train-once BPE merge-table artifact (the r9 verdict's missing
-    infrastructure #2): the first call per ``tag`` runs ``train_fn()``
-    and PUBLISHES the merge table as parquet (the
+    """Train-once BPE merge-table artifact: the first call per ``tag``
+    runs ``train_fn()`` and PUBLISHES the merge table as parquet (the
     ``s17_incremental_read`` write-once pattern); every later call —
     bench reruns, correctness sweeps, downstream token-budget queries
     — loads the artifact instead of retraining. At 100 TB a tokenizer
@@ -697,7 +637,7 @@ def merge_table_artifact(
     a new corpus release publishes under a new tag.
 
     ``merges``/``level``, when given, are folded into the artifact
-    path (advisor, r10): the cache key then carries the trainer
+    path: the cache key then carries the trainer
     parameters itself, so a tag reused with a different merge count
     or byte/char level can never serve the wrong table. Freshness is
     decided by ``_SUCCESS`` when the writer emits one, falling back

@@ -37,7 +37,7 @@ from .persist import hold
 
 #: default 1-in-m modulo sampling of the character-shingle universe
 #: (see :func:`_char_ngrams`) — shared with the DuckDB oracle renderers
-#: in ``__spark_entry__`` so operator and oracle cannot drift
+#: in ``registry/dedup.py`` so operator and oracle cannot drift
 CHAR_SAMPLE_MOD = 4
 #: default mega-bucket cap for star candidate generation (see
 #: :func:`lsh_candidates`) — likewise the single source for the oracles
@@ -47,7 +47,7 @@ DEFAULT_STAR_BUCKET_CAP = 16
 #: (``dedup_components`` / ``dedup_keep_canonical``). 48 bits over 4
 #: chunks gives a 12-bit (4096-bucket) chunk space, so the banded
 #: candidate stream scales ~n^2/2^12 instead of the 32-bit n^2/2^8 that
-#: the round-8 three-point fit flagged super-linear at 150k docs
+#: the three-point scale fit flagged super-linear at 150k docs
 #: (SCALE.md §20: 4.8x fewer candidates, 19x sparser verified graph,
 #: 47.5 -> 21.0 s at sf3). The DuckDB oracle renderer parameterizes
 #: from these same constants, so operator and oracle cannot drift.
@@ -66,7 +66,7 @@ SIMHASH_HI_SALT = "w48:"
 #: template-stratum near-dup docs unbanded — every pair at J barely
 #: over 0.5 missed all four bands (doc_recall_vs_exact 0.9458);
 #: (20, 5) at the same rows-per-band=4 adds a fifth detection chance
-#: and measures 0.9819 for +25% signature cost (round 9). The WORD
+#: and measures 0.9819 for +25% signature cost. The WORD
 #: path keeps (16, 4) — its bigram shingles are sparser and its eval
 #: (dedup_recall_eval) already measures recall 1.0 there.
 CHAR_LSH_NUM_PERM = 20
@@ -137,22 +137,21 @@ def jaccard_verify(
     """Exact Jaccard for candidate (a, b) pairs given distinct
     (did, tok) sets; keeps pairs with similarity >= threshold.
 
-    Physical shape (rewritten r9 after the sf3 three-point fit): each
-    document's shingle set is packed ONCE into an array of ``xxhash64``
-    64-bit keys (8-byte keys beat 15-40-byte n-gram text ~3x; collision
+    Physical shape: each document's shingle set is packed ONCE into an
+    array of ``xxhash64`` 64-bit keys (8-byte keys beat 15-40-byte n-gram text ~3x; collision
     odds n^2/2^65 per document pair — immaterial; the oracle intersects
     raw strings and would surface one as a mismatch), and the
     intersection is ``array_intersect`` evaluated ROW-WISE on the pair.
-    The r8-era form exploded candidates x |shingles(a)| rows through a
-    (b, key) sort-merge join — a ~200M-row intermediate at sf3 that put
-    ``dedup_minhash_char`` at 266 s for 3.9M candidates; the array form
+    Exploding candidates x |shingles(a)| rows through a (b, key)
+    sort-merge join instead builds a ~200M-row intermediate at sf3
+    that puts ``dedup_minhash_char`` at 266 s for 3.9M candidates; the array form
     returns the identical 4,718 pairs in 8.9 s (measured, SCALE.md §24)
     because the only shuffles are two doc-keyed hash joins whose rows
     carry one packed set each. At 100 TB the pair row carries both
     sampled gram arrays (~|text|/sample_mod x 8 B per side) — bounded
     per row FOR THE SAMPLED CHAR PATH, and the candidate table is
     already star-capped, so the stage is linear in candidates, not
-    candidates x set size. Caveat (advisor, r9): word-gram consumers
+    candidates x set size. Caveat: word-gram consumers
     (``ngram_jaccard_pairs``, ``winnow_pairs``) verify over FULL
     unsampled gram sets, so a giant document in many candidate pairs
     replicates its whole packed array once per pair through the join
@@ -161,8 +160,8 @@ def jaccard_verify(
     gram sets at pack time.
 
     Zero-intersection pairs are dropped explicitly (``inter > 0``):
-    the pre-r9 hash-key inner join could never emit them, and pinning
-    that keeps ``threshold == 0`` callers from suddenly seeing
+    a hash-key inner join could never emit them, and pinning that
+    keeps ``threshold == 0`` callers from suddenly seeing
     jaccard=0.0 rows."""
     packed = pack_shingle_sets(sets)
     pa = packed.select(
@@ -201,8 +200,8 @@ def jaccard_verify_packed(
     row-wise ``array_intersect``, round-6 Jaccard, threshold filter.
     ``pa`` is (a, hka, sza); ``pb`` is (b, hkb, szb).
 
-    The intersect is forced to evaluate EXACTLY ONCE (r10, found by
-    the sf10 grow-with-scale fit): written naively, Catalyst pushes
+    The intersect is forced to evaluate EXACTLY ONCE (found by the
+    sf10 grow-with-scale fit): written naively, Catalyst pushes
     the ``inter > 0`` / threshold filters INTO the second join's
     condition, where ``array_intersect`` is re-evaluated per row in
     the non-codegen condition path and AGAIN in the output projection
@@ -216,7 +215,7 @@ def jaccard_verify_packed(
     intersect is blocked, and column pruning cannot drop the barrier
     because the filter references it. The filter is semantically
     ``rand(0) > -1`` = always true; the seed pins plan stability
-    across sessions (advisor, r10) and task retries re-draw the same
+    across sessions and task retries re-draw the same
     sequence, but the result set never depends on the value. A pinned
     plan test asserts the single-evaluation shape AND that
     ``__barrier`` never escapes into the output schema
@@ -264,7 +263,7 @@ def minhash_signatures(
     in ONE groupBy (single shuffle, map-side partial min).
 
     The md5 base hash is PRE-PROJECTED once per shingle row before the
-    aggregation (r12, guide §1.2 per-task work): inlining
+    aggregation: inlining
     ``perm_hash(hash32(tok), i)`` into each of the k aggregate inputs
     made every partial-aggregate row evaluate the md5 k times (the
     aggregate codegen path does not share subexpressions across
@@ -336,10 +335,10 @@ def minhash_lsh_pairs(
     threshold decisions are approximate near the cut. Pass
     ``sample_mod=1`` for exact char-universe Jaccard at ~``sample_mod``x
     the shingle volume."""
-    # FUSED one-shot path (r13, guide §2.1 one shuffle): signatures
-    # and packed sets come from ONE _lsh_doc_profile aggregation over
-    # the shingles — the same fusion the persisted-index path got in
-    # r12 — instead of lsh_candidates' two separate groupBys
+    # FUSED one-shot path (one shuffle): signatures and packed sets
+    # come from ONE _lsh_doc_profile aggregation over the shingles —
+    # the same fusion the persisted-index path uses — instead of
+    # lsh_candidates' two separate groupBys
     # (minhash_signatures + jaccard_verify's pack_shingle_sets) over a
     # persisted shingle table. Bit-identical values (hashing.py:
     # perm_hash(h,i) == (a_i*(h%P)+b_i)%P; same collect_set pack);
@@ -396,7 +395,7 @@ def _char_ngrams(
     (keep gram iff ``hash32(gram) % sample_mod == 0`` — the standard
     bottom-sketch trick): every position of a document yields a char
     gram, so the raw table is ~|text| rows — ~1.5B at sf1, which
-    GC-killed an 8 GiB local JVM in the round-7 sweep's first attempt.
+    GC-kills an 8 GiB local JVM.
     Sampling by GRAM VALUE (not per row) keeps the estimator exact on
     the sampled universe — identical docs still share every sampled
     gram (Jaccard 1.0), and the expected Jaccard over a 1/m uniform
@@ -452,11 +451,11 @@ def lsh_candidates(
     shingles under plain all-pairs) contribute cap·|bucket| pairs,
     linear in bucket size.
 
-    The cap's recall cost is MEASURED, not argued: the r8
-    ``dedup_star_recall_eval`` found the original SINGLE-pivot
+    The cap's recall cost is MEASURED, not argued:
+    ``dedup_star_recall_eval`` found a SINGLE-pivot
     (bucket-min) star recovering only 0.044 of exact template-stratum
     pairs at cap 16 — one collision-placed min failing verification
-    dropped whole cliques. The r9 multi-pivot form admits each member
+    dropped whole cliques. The multi-pivot form admits each member
     through the cap smallest ids, which is the id order keep-one
     marking consumes (a doc is marked when some verified SMALLER-id
     near-dup exists), and the same eval now reports doc-level marking
@@ -509,15 +508,15 @@ def star_candidates(
     while a mega-bucket contributes cap·|bucket| pairs (linear in
     bucket size, the mega-bucket mitigation).
 
-    This replaces the round-7 single-pivot (bucket-min) star after
-    ``dedup_star_recall_eval`` measured its template-stratum cost:
-    one signature-collision min could fail Jaccard verification
+    Multi-pivot, not a single-pivot (bucket-min) star, because
+    ``dedup_star_recall_eval`` measured the latter's template-stratum
+    cost: one signature-collision min could fail Jaccard verification
     against every true near-dup member and mark NOTHING (pair recall
     0.044 vs exact at cap 16). With cap pivots, a member is admitted
     through the cap smallest ids — for keep-one marking (docs marked
     when some verified smaller-id near-dup exists) that is precisely
     the id order the marking consumes, so doc-level marking recall is
-    the metric (measured by the same eval, r9).
+    the metric (measured by the same eval).
 
     Equivalent characterization used by the eval and the DuckDB
     oracles: pair (a, b) is a candidate iff rank(a) <= cap inside
@@ -621,21 +620,19 @@ def _lsh_doc_profile(toks: DataFrame, num_perm: int) -> DataFrame:
     per document: ``(did, mh0..mh{k-1}, hks, sz)`` — the minhash
     signature minima AND the packed ``xxhash64`` shingle set.
 
-    Before round 12 the build/probe/append paths ran
-    :func:`minhash_signatures` and :func:`pack_shingle_sets` as two
-    separate ``groupBy("did")`` jobs over the same shingle frame — two
-    shuffles, and (wherever the shingle frame wasn't cached) two full
-    shingle explode+distinct passes. BENCH_r11 measured exactly that
-    cost when the probe's shingle persist was dropped to fix a cache
-    leak: ``dedup_incremental_lsh`` regressed 1.8x because every probe
-    re-shingled the batch once per branch. Fusing the two aggregations
+    Running :func:`minhash_signatures` and :func:`pack_shingle_sets`
+    as two separate ``groupBy("did")`` jobs over the same shingle
+    frame costs two shuffles and (wherever the shingle frame isn't
+    cached) two full shingle explode+distinct passes:
+    ``dedup_incremental_lsh`` measured 1.8x slower that way, because
+    every probe re-shingled the batch once per branch. Fusing the two aggregations
     keys ONE shuffle by ``did`` (map-side partial min + partial
     collect_set) and leaves a single narrow upstream, so downstream
     consumers branch off a one-row-per-document frame instead of the
     exploded shingle rows.
 
-    Hashes are PRE-PROJECTED once per shingle row (r12, same
-    rationale as :func:`minhash_signatures`): the aggregation then
+    Hashes are PRE-PROJECTED once per shingle row (same rationale as
+    :func:`minhash_signatures`): the aggregation then
     folds ``num_perm`` cheap ``(a*h+b) % P`` minima plus the packed
     ``collect_set`` instead of re-evaluating the md5 per aggregate
     input — bit-identical values, one md5 per shingle."""
@@ -666,7 +663,7 @@ def _lsh_doc_profile(toks: DataFrame, num_perm: int) -> DataFrame:
 #: through two BroadcastHashJoins with zero corpus movement either
 #: way). Both shapes are value-identical (equi-joins + the same
 #: verify tail); the default is the sf0.1/sf1/sf3-adjudicated winner
-#: (SCALE.md r13).
+#: (SCALE.md).
 PROBE_LSH_SHAPE = "broadcast"
 
 
@@ -684,9 +681,8 @@ def build_lsh_index(
 ) -> tuple:
     """Persist the write-once LSH corpus index: the artifact
     :func:`probe_lsh_index` probes so that deduping ingest wave N+1
-    never re-shingles or re-signs crawls 1..N (the scale defect the
-    round-9 verdict flagged in the one-shot
-    :func:`incremental_lsh_matches`).
+    never re-shingles or re-signs crawls 1..N (which the one-shot
+    :func:`incremental_lsh_matches` does).
 
     Two bucketed parquet tables (the ``s13_bucketed_join`` layout
     contract — pay the layout once, join shuffle-free forever after):
@@ -827,7 +823,7 @@ def probe_lsh_index(
     #   build side of both joins (guide §3.1), so the batch-side
     #   Exchanges and every Sort disappear; the index scan streams
     #   through the hash joins. Adjudicated at sf0.1/sf1/sf3
-    #   (SCALE.md r13).
+    #   (SCALE.md).
     ikeys = spark.table(keys_table).select(
         F.col("did").alias("b"), "bk"
     )
@@ -1134,7 +1130,7 @@ def simhash_pairs(
         # STREAMS ~n^2/2^width candidate rows through codegen, which
         # is pure CPU, but the old order hash-aggregated that whole
         # stream for the dedup and OOMed at 150k docs (caught by the
-        # r8 three-point scale fit at sf3); now only true near-dups —
+        # three-point scale fit at sf3); now only true near-dups —
         # a vanishing fraction — ever enter aggregation state. The
         # residual n^2/2^width join CPU is the 8-bit chunk space
         # saturating: past ~10^6 docs, widen the fingerprint
@@ -1170,8 +1166,8 @@ def dot(x, y) -> Column:
     ``x[1]*y[1] + ...`` chain measured 10x SLOWER inside join stages
     (the wide expression falls out of whole-stage codegen and every
     ``element_at`` re-checks interpretively), while the higher-order
-    fold keeps a tight specialized loop. Measured on the round-4 sf1
-    sweep: 42.8s unrolled vs 4.2s fold for the same 6.2M-pair stage.
+    fold keeps a tight specialized loop. Measured on the sf1 sweep
+    (SCALE.md): 42.8s unrolled vs 4.2s fold for the same 6.2M-pair stage.
     What DOES matter per pair: precompute each row's :func:`norm`
     before the join (never re-derive norms per pair) and make sure
     the pair stage is actually parallel (see ``embedding_lsh_pairs``,
@@ -1382,7 +1378,7 @@ def connected_components(
             node_t = all_nodes.schema["node"].dataType.simpleString()
             if stats is not None:
                 stats["path"] = "local"
-            # Arrow local frame (r13, guide §6): component map ships
+            # Arrow local frame: component map ships
             # as driver-built Arrow batches — no Python-worker fan-out
             from .localdata import local_frame
 
@@ -1603,7 +1599,7 @@ def embedding_lsh_pairs(
     One shuffle on the bucket id; no all-pairs stage. Recall misses are
     the LSH trade; raise recall by unioning over rotated plane sets.
 
-    Three scale levers, all found by the round-4 sf1 sweep (the naive
+    Three scale levers, all found by the sf1 sweep (SCALE.md; the naive
     form measured 112x wall for 10x data):
 
     - each row's norm is computed once BEFORE the join and only the
@@ -1877,11 +1873,10 @@ def repeated_gram_spans(
       per-doc array first;
     * duplicated positions come from ONE digest-partitioned window
       (``count(*) over (partition by dg)``, ``occ >= 2`` cut): the
-      corpus shuffles at gram granularity exactly ONCE. The round-4
-      formulation (groupBy + join-back on the digest) computed the
-      gram subplan twice and was the measured 4.25x-at-10x-data tail
-      in SCALE_SWEEP_r04; the r6 row-hash window form measures ~1.7x
-      for 10x data;
+      corpus shuffles at gram granularity exactly ONCE. A groupBy +
+      join-back on the digest computes the gram subplan twice (the
+      measured 4.25x-at-10x-data tail in SCALE_SWEEP_r04); the
+      row-hash window form measures ~1.7x for 10x data;
     * ultra-hot digests (a gram duplicated ~50k+ times would
       serialize its window partition — AQE cannot split a window
       partition) are detected by a ~1% sampled frequency count

@@ -11,17 +11,27 @@ from pyspark.sql import functions as F
 
 #: every registered query by name, in registration order
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+#: each query's DuckDB oracle: the SQL text, or a zero-argument function
+#: returning it where the text depends on the environment at call time
+ORACLES: dict[str, str | Callable[[], str]] = {}
 
 
-def query(fn: Callable[[SparkSession, str], DataFrame]):
-    """Register ``fn`` under its name without the leading underscore
-    (``_q1_pricing_summary`` is the query ``q1_pricing_summary``).
-    Names are unique: registering one twice raises."""
-    name = fn.__name__.removeprefix("_")
-    if name in QUERIES:
-        raise ValueError(f"query {name!r} is already registered")
-    QUERIES[name] = fn
-    return fn
+def query(*, oracle: str | Callable[[], str]):
+    """Register the decorated function under its name without the
+    leading underscore (``_q1_pricing_summary`` is the query
+    ``q1_pricing_summary``), together with its DuckDB ``oracle``.
+    Names are unique: registering one twice raises. ``oracle`` is
+    keyword-only, so a bare ``@query`` (no oracle) is a TypeError."""
+
+    def register(fn: Callable[[SparkSession, str], DataFrame]):
+        name = fn.__name__.removeprefix("_")
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
+        QUERIES[name] = fn
+        ORACLES[name] = oracle
+        return fn
+
+    return register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -50,15 +60,13 @@ def _scan_parts(
     by the byte-based split count (``ceil(bytes / maxPartitionBytes)``)
     — Spark packs row groups into maxPartitionBytes-sized splits, so a
     file with 37 tiny row groups and a 16 MB split size still scans as
-    ~2 tasks. The r8 three-point fit caught exactly that: the sf3
-    documents file cleared the old row-group-count check (37 >= 16),
-    skipped the floor, and ran every fingerprint pipeline on 2 tasks —
-    text_winnow measured 4.3x for 3x data until the estimate used the
-    min of the two bounds. Read from the parquet footer via pyarrow
+    ~2 tasks; a row-group count alone would skip the floor there and
+    run every fingerprint pipeline on 2 tasks (SCALE.md: text_winnow
+    measured 4.3x for 3x data until the estimate used the min of the
+    two bounds). Read from the parquet footer via pyarrow
     (~0.3 ms, cached) rather than ``df.rdd.getNumPartitions()`` — the
     RDD probe runs full physical planning on the driver (~0.13 s
-    measured) and was paid on EVERY query invocation, which is where
-    the round-4 common-set bench regression actually came from (the
+    measured) and would be paid on EVERY query invocation (the
     repartition itself measures free at sf0.1). Returns ``None`` for
     non-local paths — a real cluster corpus has thousands of
     full-size row groups, so skipping the floor there is the correct
@@ -79,8 +87,8 @@ def _scan_parts(
             files = [path]
         n = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
         if max_partition_bytes:
-            # mirror Spark's FilePartition.maxSplitBytes (ADVICE r8 —
-            # the bare ceil(bytes/maxPartitionBytes) underestimates
+            # mirror Spark's FilePartition.maxSplitBytes (the bare
+            # ceil(bytes/maxPartitionBytes) underestimates
             # splits whenever total/defaultParallelism is the binding
             # term, triggering repartitions that are not needed):
             # maxSplit = min(maxPartitionBytes,
@@ -210,7 +218,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H-shape SQL breadth (round 2): correlated subqueries, scalar
+# TPC-H-shape SQL breadth: correlated subqueries, scalar
 # subqueries, groupwise-min join-back, disjunctive pushdown. The
 # synthetic tables lack partsupp, so q2/q9/q11/q16/q20-shapes use
 # lineitem as the part-supplier bridge — same plan shapes, same

@@ -1,7 +1,6 @@
 """Embedding, ANN, and graph analytics queries.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -9,10 +8,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import _embs, _t, query
+from .common import ORACLES, _embs, _t, query
+from .dedup import _hyperplane_bucket_sql, _kmeans_ctes
 
 
-@query
+_COS = (
+    "round(list_dot_product(q.v, c.v) / "
+    "(sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 5)"
+)
+
+
+@query(oracle=(
+    "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), "
+    "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v "
+    "FROM embeddings WHERE vec_id < 10), "
+    f"s AS (SELECT q.query_id, c.vec_id, {_COS} AS cos "
+    "FROM c, q WHERE q.query_id != c.vec_id), "
+    "r AS (SELECT query_id, vec_id, cos, row_number() OVER "
+    "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank FROM s) "
+    "SELECT query_id, vec_id, cos, CAST(rank AS INTEGER) AS rank "
+    "FROM r WHERE rank <= 10"
+))
 def _ann_cosine_topk(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import cosine_topk
 
@@ -22,7 +38,19 @@ def _ann_cosine_topk(spark, sf_dir):
     )
     return cosine_topk(emb, queries_df, k=10)
 
-@query
+@query(oracle=(
+    "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v, "
+    + _hyperplane_bucket_sql("(embedding::DOUBLE[])", 64, 8)
+    + " AS bucket FROM embeddings), "
+    "q AS (SELECT vec_id AS query_id, v, bucket FROM c WHERE vec_id < 10), "
+    f"s AS (SELECT q.query_id, c.vec_id, {_COS} AS cos "
+    "FROM c JOIN q ON c.bucket = q.bucket "
+    "WHERE q.query_id != c.vec_id), "
+    "r AS (SELECT query_id, vec_id, cos, row_number() OVER "
+    "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank FROM s) "
+    "SELECT query_id, vec_id, cos, CAST(rank AS INTEGER) AS rank "
+    "FROM r WHERE rank <= 10"
+))
 def _ann_lsh_topk(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import lsh_ann_topk
 
@@ -32,7 +60,51 @@ def _ann_lsh_topk(spark, sf_dir):
     )
     return lsh_ann_topk(emb, queries_df, k=10, dims=64, planes=8)
 
-@query
+def _ivf_oracle(where: str = "") -> str:
+    """IVF ANN oracle (mirrors similarity.ivf_ann_topk): centroids from
+    a deterministic hash-stratified sample, probe the 4 nearest lists,
+    exact cosine within them. ``where`` pre-filters the corpus — the
+    filtered-search variant trains its centroids on the filtered
+    sub-corpus, exactly like the Spark plan it replays."""
+    return (
+        "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        f"FROM embeddings{where}), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM c), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "assign AS (SELECT c.vec_id, c.v, cent.cid, "
+        "round(list_dot_product(c.v, cent.cv) / "
+        "(sqrt(list_dot_product(c.v, c.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM c, cent), "
+        "member AS (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn FROM assign) "
+        "WHERE rn = 1), "
+        "qa AS (SELECT vec_id AS query_id, v, cid, sim FROM assign "
+        "WHERE vec_id < 10), "
+        "probes AS (SELECT query_id, v, cid FROM ("
+        "SELECT query_id, v, cid, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY sim DESC, cid ASC) AS pr FROM qa) "
+        "WHERE pr <= 4), "
+        "s AS (SELECT p.query_id, m.vec_id, "
+        "round(list_dot_product(p.v, m.v) / "
+        "(sqrt(list_dot_product(p.v, p.v)) * "
+        "sqrt(list_dot_product(m.v, m.v))), 5) AS cos "
+        "FROM member m JOIN probes p ON m.cid = p.cid "
+        "WHERE p.query_id != m.vec_id), "
+        "r AS (SELECT query_id, vec_id, cos, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank FROM s) "
+        "SELECT query_id, vec_id, cos, CAST(rank AS INTEGER) AS rank "
+        "FROM r WHERE rank <= 10"
+    )
+
+
+@query(oracle=_ivf_oracle())
 def _ann_ivf_topk(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import ivf_ann_topk
 
@@ -42,7 +114,14 @@ def _ann_ivf_topk(spark, sf_dir):
     )
     return ivf_ann_topk(emb, queries_df, k=10, n_centroids=16, n_probe=4)
 
-@query
+def _kmeans_oracle_sql(k: int = 8, iters: int = 3, dims: int = 64) -> str:
+    return (
+        ", ".join(_kmeans_ctes(k, iters, dims))
+        + f" SELECT vec_id, cl AS cluster, sim AS cos FROM as{iters - 1}"
+    )
+
+
+@query(oracle=_kmeans_oracle_sql())
 def _emb_kmeans(spark, sf_dir):
     """Spherical k-means over the embeddings table: 8 clusters, 3
     fixed Lloyd iterations (deterministic — the DuckDB oracle replays
@@ -53,13 +132,57 @@ def _emb_kmeans(spark, sf_dir):
 
     return kmeans_assignments(_embs(spark, sf_dir), k=8, iters=3)
 
-@query
+@query(oracle=(
+    "WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+    "FROM embeddings), "
+    "m AS (SELECT vec_id, v, "
+    "list_max(list_transform(v, x -> abs(x))) AS amax FROM v), "
+    "q AS (SELECT vec_id, amax / 127.0 AS scale, "
+    "CASE WHEN amax > 0 THEN list_transform(v, "
+    "x -> CAST(round(x / (amax / 127.0)) AS INT)) "
+    "ELSE list_transform(v, x -> 0) END AS qv, "
+    "len(v) AS n_dims FROM m) "
+    "SELECT vec_id, round(scale, 6) AS scale, "
+    "list_min(qv) AS q_min, list_max(qv) AS q_max, "
+    "CAST(list_sum(list_transform(qv, x -> abs(x))) AS INT) AS q_l1, "
+    "CAST(n_dims AS INT) AS n_dims FROM q"
+))
 def _emb_quantize(spark, sf_dir):
     from task_on_dataframes_spark.operators.similarity import quantize_int8
 
     return quantize_int8(_embs(spark, sf_dir))
 
-@query
+# stage-1 int8 dot is exact in double (values <= 127, 64 dims
+# -> sums < 2^53); the scale product mirrors Spark's multiply
+# order, so shortlist membership and ranks replay exactly
+@query(oracle=(
+    "WITH c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+    "FROM embeddings), "
+    "m AS (SELECT vec_id, v, "
+    "list_max(list_transform(v, x -> abs(x))) AS amax FROM c0), "
+    "cq AS (SELECT vec_id, v, amax / 127.0 AS scale, "
+    "CASE WHEN amax > 0 THEN list_transform(v, "
+    "x -> CAST(round(x / (amax / 127.0)) AS INT)) "
+    "ELSE list_transform(v, x -> 0) END AS q8 FROM m), "
+    "q AS (SELECT vec_id AS query_id, v AS vq, scale AS scale_q, "
+    "q8 AS q8q FROM cq WHERE vec_id < 10), "
+    "s1 AS (SELECT q.query_id, c.vec_id, q.vq, c.v AS vc, "
+    "round(list_dot_product(q.q8q::DOUBLE[], c.q8::DOUBLE[]) "
+    "* q.scale_q * c.scale, 6) AS approx "
+    "FROM cq c, q WHERE q.query_id != c.vec_id), "
+    "r1 AS (SELECT *, row_number() OVER (PARTITION BY query_id "
+    "ORDER BY approx DESC, vec_id ASC) AS rn FROM s1), "
+    "s2 AS (SELECT query_id, vec_id, approx, "
+    "round(list_dot_product(vq, vc) / "
+    "(sqrt(list_dot_product(vq, vq)) * "
+    "sqrt(list_dot_product(vc, vc))), 5) AS cos "
+    "FROM r1 WHERE rn <= 50), "
+    "r2 AS (SELECT query_id, vec_id, approx, cos, "
+    "row_number() OVER (PARTITION BY query_id "
+    "ORDER BY cos DESC, vec_id ASC) AS rank FROM s2) "
+    "SELECT query_id, vec_id, approx, cos, "
+    "CAST(rank AS INTEGER) AS rank FROM r2 WHERE rank <= 10"
+))
 def _ann_sq_rerank(spark, sf_dir):
     """Two-stage scalar-quantized retrieval: int8 approximate scan
     (4x less bandwidth than float32 at corpus scale) shortlists 50
@@ -74,7 +197,32 @@ def _ann_sq_rerank(spark, sf_dir):
     )
     return sq_ann_rerank(emb, queries_df, k=10, shortlist=50)
 
-@query
+@query(oracle=(
+    "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), "
+    "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v "
+    "FROM embeddings WHERE vec_id < 10), "
+    "ct AS (SELECT vec_id, 0 AS t, "
+    + _hyperplane_bucket_sql("v", 64, 4, 0)
+    + " AS b FROM c UNION ALL SELECT vec_id, 1 AS t, "
+    + _hyperplane_bucket_sql("v", 64, 4, 4)
+    + " AS b FROM c), "
+    "qt AS (SELECT query_id, 0 AS t, "
+    + _hyperplane_bucket_sql("v", 64, 4, 0)
+    + " AS b FROM q UNION ALL SELECT query_id, 1 AS t, "
+    + _hyperplane_bucket_sql("v", 64, 4, 4)
+    + " AS b FROM q), "
+    "p AS (SELECT DISTINCT qt.query_id, ct.vec_id "
+    "FROM ct JOIN qt ON ct.t = qt.t AND ct.b = qt.b "
+    "WHERE qt.query_id != ct.vec_id), "
+    f"s AS (SELECT p.query_id, p.vec_id, {_COS} AS cos "
+    "FROM p JOIN q ON p.query_id = q.query_id "
+    "JOIN c ON p.vec_id = c.vec_id), "
+    "r AS (SELECT query_id, vec_id, cos, row_number() OVER "
+    "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank "
+    "FROM s) "
+    "SELECT query_id, vec_id, cos, CAST(rank AS INTEGER) AS rank "
+    "FROM r WHERE rank <= 10"
+))
 def _ann_lsh_multi_topk(spark, sf_dir):
     """Multi-table LSH ANN (2 tables x 4 planes): candidate union
     across independent plane sets — the recall lever of LSH search."""
@@ -88,7 +236,16 @@ def _ann_lsh_multi_topk(spark, sf_dir):
         emb, queries_df, k=10, dims=64, planes=4, n_tables=2
     )
 
-@query
+@query(oracle=(
+    "WITH x AS (SELECT "
+    "CAST(unnest(generate_series(0, len(embedding) - 1)) AS INT) "
+    "AS dim, CAST(unnest(embedding) AS DOUBLE) AS v "
+    "FROM embeddings) "
+    "SELECT dim, count(*) AS n, round(avg(v), 6) AS mean, "
+    "round(avg(v * v) - avg(v) * avg(v), 6) AS var_pop, "
+    "round(min(v), 5) AS min_val, round(max(v), 5) AS max_val "
+    "FROM x GROUP BY dim"
+))
 def _emb_dim_stats(spark, sf_dir):
     """Per-dimension embedding profile (mean / population variance /
     min / max) — the normalization-stats pass before whitening or
@@ -112,7 +269,13 @@ def _emb_dim_stats(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH p AS (SELECT unnest(generate_series(1, 64)) AS pos) "
+    "SELECT label, p.pos, "
+    "round(CAST(sum(CAST(CAST(embedding[p.pos] AS DOUBLE) "
+    "AS DECIMAL(28,12))) AS DOUBLE) / count(1), 6) AS mean "
+    "FROM embeddings, p GROUP BY 1, 2"
+))
 def _emb_label_centroids(spark, sf_dir):
     """Per-label mean embedding: ONE keyed shuffle of n x d exploded
     rows with map-side partial DECIMAL sums (partition-order-proof,
@@ -121,7 +284,14 @@ def _emb_label_centroids(spark, sf_dir):
 
     return label_centroids(_embs(spark, sf_dir))
 
-@query
+@query(oracle=(
+    "WITH p AS (SELECT unnest(generate_series(1, 64)) AS pos), "
+    "e AS (SELECT vec_id, p.pos, "
+    "CAST(embedding[p.pos] AS DOUBLE) AS x FROM embeddings, p) "
+    "SELECT a.pos AS i, b.pos AS j, round(sum(a.x * b.x), 6) AS v "
+    "FROM e a JOIN e b ON a.vec_id = b.vec_id AND a.pos <= b.pos "
+    "GROUP BY 1, 2"
+))
 def _emb_gram(spark, sf_dir):
     """Distributed Gram matrix: per-partition NumPy X^T X partials via
     mapInPandas, one d(d+1)/2-key shuffle of partials — the corpus is
@@ -133,7 +303,52 @@ def _emb_gram(spark, sf_dir):
     # pre-shuffling the corpus costs more than the parallelism it buys.
     return gram_matrix(_embs(spark, sf_dir, floor=False))
 
-@query
+def _pca_oracle_sql(dims: int = 64, iters: int = 8) -> str:
+    """DuckDB replay of operators.linalg.pca_power_top: the SAME
+    rounded Gram (round 6 — identical inputs on both engines), the
+    same all-ones start, ``iters`` matvec+normalize steps as chained
+    CTEs, the same largest-|loading|-positive sign rule, loadings
+    rounded to 5."""
+    # AS MATERIALIZED everywhere: inlined CTEs re-evaluate per
+    # reference, which cascades exponentially through the iteration
+    # chain (v8 -> m8 -> g0 + v7 -> ...)
+    sql = (
+        f"WITH p AS (SELECT unnest(generate_series(1, {dims})) AS pos), "
+        "e AS MATERIALIZED (SELECT vec_id, p.pos, "
+        "CAST(embedding[p.pos] AS DOUBLE) AS x FROM embeddings, p), "
+        "g0 AS MATERIALIZED (SELECT a.pos AS i, b.pos AS j, "
+        "round(sum(a.x * b.x), 6) "
+        "AS v FROM e a JOIN e b ON a.vec_id = b.vec_id GROUP BY 1, 2), "
+        "v0 AS (SELECT pos, 1.0 AS x FROM p), "
+    )
+    prev = "v0"
+    for k in range(1, iters + 1):
+        sql += (
+            f"m{k} AS MATERIALIZED (SELECT g0.i AS pos, "
+            f"sum(g0.v * {prev}.x) AS y "
+            f"FROM g0 JOIN {prev} ON g0.j = {prev}.pos GROUP BY 1), "
+            f"n{k} AS MATERIALIZED (SELECT sqrt(sum(y * y)) AS nrm "
+            f"FROM m{k}), "
+            f"v{k} AS MATERIALIZED (SELECT pos, y / n{k}.nrm AS x "
+            f"FROM m{k}, n{k}), "
+        )
+        prev = f"v{k}"
+    sql += (
+        f"sg AS (SELECT CASE WHEN (SELECT x FROM {prev} "
+        "ORDER BY abs(round(x, 12)) DESC, pos LIMIT 1) < 0 "
+        "THEN -1.0 ELSE 1.0 END AS s), "
+        f"d AS (SELECT {prev}.pos, round({prev}.x * sg.s, 5) AS loading "
+        f"FROM {prev}, sg) "
+    )
+    return sql
+
+
+def _pca_oracle_sql_final() -> str:
+    """Top-direction loadings (query emb_pca_top)."""
+    return _pca_oracle_sql() + "SELECT pos, loading FROM d"
+
+
+@query(oracle=_pca_oracle_sql_final())
 def _emb_pca_top(spark, sf_dir):
     """Top principal direction: distributed Gram reduction, then a
     deterministic driver-side power iteration on the d x d result
@@ -148,7 +363,18 @@ def _emb_pca_top(spark, sf_dir):
     gram = gram_matrix(_embs(spark, sf_dir, floor=False))
     return pca_power_top(spark, gram)
 
-@query
+def _pca_project_oracle_sql() -> str:
+    """Per-vector projection onto the top direction: DECIMAL-exact dot
+    product so the 64-term sum is summation-order-free on both
+    engines (products are bitwise-identical doubles)."""
+    return _pca_oracle_sql() + (
+        "SELECT e.vec_id, round(CAST(sum(CAST(e.x * d.loading "
+        "AS DECIMAL(28,12))) AS DOUBLE), 6) AS proj "
+        "FROM e JOIN d ON e.pos = d.pos GROUP BY 1"
+    )
+
+
+@query(oracle=_pca_project_oracle_sql())
 def _emb_pca_project(spark, sf_dir):
     """Apply the learned transform: project every embedding onto the
     top principal direction. The direction (64 floats) comes from the
@@ -188,7 +414,44 @@ def _emb_pca_project(spark, sf_dir):
     )
     return emb.select("vec_id", proj.alias("proj"))
 
-@query
+def _pagerank_oracle_sql(iters: int = 5, damping: float = 0.85) -> str:
+    """DuckDB replay of operators.graph.pagerank over the trade graph:
+    same edge fractions (BIGINT / BIGINT -> double on both engines),
+    same teleport expression shape ((1 - d)/n evaluated in doubles, so
+    the IEEE bits match the Python-side computation), same
+    per-iteration round-12 / final round-8."""
+    sql = (
+        "WITH e0 AS MATERIALIZED (SELECT c.c_nationkey AS src, "
+        "s.s_nationkey AS dst, count(*) AS w "
+        "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey "
+        "JOIN customer c ON o.o_custkey = c.c_custkey "
+        "JOIN supplier s ON l.l_suppkey = s.s_suppkey GROUP BY 1, 2), "
+        "ow AS (SELECT src, sum(w) AS outw FROM e0 GROUP BY 1), "
+        "e AS MATERIALIZED (SELECT e0.src, e0.dst, e0.w / ow.outw AS frac "
+        "FROM e0 JOIN ow ON e0.src = ow.src), "
+        "nodes AS (SELECT n_nationkey AS node FROM nation), "
+        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes), "
+        "r0 AS (SELECT node, 1.0 / nn.n AS rank FROM nodes, nn), "
+    )
+    prev = "r0"
+    for k in range(1, iters + 1):
+        sql += (
+            f"c{k} AS MATERIALIZED (SELECT e.dst, "
+            f"round(sum(e.frac * {prev}.rank), 12) AS c "
+            f"FROM e JOIN {prev} ON e.src = {prev}.node GROUP BY 1), "
+            f"r{k} AS MATERIALIZED (SELECT nodes.node, "
+            f"round((1 - {damping}) / nn.n + "
+            f"{damping} * coalesce(c{k}.c, 0.0), 12) AS rank "
+            f"FROM nodes CROSS JOIN nn "
+            f"LEFT JOIN c{k} ON nodes.node = c{k}.dst), "
+        )
+        prev = f"r{k}"
+    sql = sql.rstrip(", ")
+    sql += f" SELECT node, round(rank, 8) AS rank FROM {prev}"
+    return sql
+
+
+@query(oracle=_pagerank_oracle_sql(iters=5, damping=0.85))
 def _graph_pagerank(spark, sf_dir):
     """PageRank over the customer-nation -> supplier-nation trade
     graph (edge weight = lineitem count). Edge list stays distributed;
@@ -216,7 +479,116 @@ def _graph_pagerank(spark, sf_dir):
     return pagerank(edges, nodes, iters=5, damping=0.85)
 
 
-@query
+def _pq_training_ctes(m: int, k: int, iters: int, dims: int) -> list:
+    """CTE parts replaying PQ training+encoding (shared by the PQ and
+    IVFPQ oracles): per-subspace hash-stratified init, Lloyd
+    iterations with DECIMAL-exact means, squared-L2 via the same
+    dot-product composition as operators/pq.py (rounded 6), ties to
+    the smallest code. Ends with ``codes`` and ``cents``."""
+    d = dims // m
+    parts = [
+        "WITH full_v AS (SELECT vec_id, embedding::DOUBLE[] AS fv "
+        "FROM embeddings)"
+    ]
+    d2 = (
+        "round(list_dot_product({a}, {a}) - 2*list_dot_product({a}, {b}) "
+        "+ list_dot_product({b}, {b}), 6)"
+    )
+    for j in range(m):
+        lo, hi = j * d + 1, (j + 1) * d
+        means = ", ".join(
+            f"round(CAST(sum(CAST(v[{i + 1}] AS DECIMAL(28,12))) AS DOUBLE)"
+            f" / count(1), 6)"
+            for i in range(d)
+        )
+        parts.append(
+            f"c{j} AS (SELECT vec_id, list_slice(fv, {lo}, {hi}) AS v "
+            "FROM full_v), "
+            f"ch{j} AS (SELECT vec_id, v, CAST(('0x' || substr(md5("
+            f"'pq{j}:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h "
+            f"FROM c{j}), "
+            f"cent{j}_0 AS (SELECT h % {k} AS code, v AS cv FROM "
+            f"(SELECT h, v, vec_id, row_number() OVER (PARTITION BY h % {k} "
+            f"ORDER BY h, vec_id) AS rn FROM ch{j}) WHERE rn = 1)"
+        )
+        for it in range(iters):
+            parts.append(
+                f"sc{j}_{it} AS (SELECT c.vec_id, c.v, t.code, "
+                + d2.format(a="c.v", b="t.cv")
+                + f" AS dd FROM c{j} c, cent{j}_{it} t), "
+                f"as{j}_{it} AS (SELECT vec_id, v, code FROM (SELECT *, "
+                "row_number() OVER (PARTITION BY vec_id ORDER BY dd ASC, "
+                f"code ASC) AS rn FROM sc{j}_{it}) WHERE rn = 1)"
+            )
+            if it < iters - 1:
+                parts.append(
+                    f"cent{j}_{it + 1} AS (SELECT code, list_value({means}) "
+                    f"AS cv FROM as{j}_{it} GROUP BY code)"
+                )
+    last = iters - 1
+    parts.append(
+        "codes AS ("
+        + " UNION ALL ".join(
+            f"SELECT vec_id, {j} AS sub, code FROM as{j}_{last}"
+            for j in range(m)
+        )
+        + ")"
+    )
+    parts.append(
+        "cents AS ("
+        + " UNION ALL ".join(
+            f"SELECT {j} AS sub, code, cv FROM cent{j}_{last}"
+            for j in range(m)
+        )
+        + ")"
+    )
+    return parts
+
+
+def _pq_lut_ctes(m: int, dims: int) -> str:
+    """Query LUT CTEs shared by the PQ and IVFPQ oracles."""
+    d = dims // m
+    d2 = (
+        "round(list_dot_product({a}, {a}) - 2*list_dot_product({a}, {b}) "
+        "+ list_dot_product({b}, {b}), 6)"
+    )
+    return (
+        "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv "
+        "FROM embeddings WHERE vec_id < 10), "
+        "qsub AS (SELECT query_id, s.sub, "
+        f"list_slice(qv, s.sub * {d} + 1, s.sub * {d} + {d}) AS v "
+        f"FROM q, (SELECT unnest(generate_series(0, {m - 1})) AS sub) s), "
+        "lut AS (SELECT query_id, qsub.sub, cents.code, "
+        + d2.format(a="qsub.v", b="cents.cv")
+        + " AS dd FROM qsub JOIN cents ON qsub.sub = cents.sub)"
+    )
+
+
+def _pq_oracle_sql(
+    m: int = 4, k: int = 16, iters: int = 2, dims: int = 64, k_top: int = 10
+) -> str:
+    """Replay PQ training + encoding + ADC in DuckDB (see
+    :func:`_pq_training_ctes`); ADC sums are DECIMAL-exact, ties to
+    the smallest vec_id."""
+    parts = _pq_training_ctes(m, k, iters, dims)
+    parts.append(_pq_lut_ctes(m, dims))
+    parts.append(
+        "adc AS (SELECT l.query_id, codes.vec_id, "
+        "CAST(round(sum(CAST(l.dd AS DECIMAL(18,6))), 5) AS DOUBLE) "
+        "AS adc_dist FROM codes "
+        "JOIN lut l ON codes.sub = l.sub AND codes.code = l.code "
+        "GROUP BY 1, 2)"
+    )
+    return (
+        ", ".join(parts)
+        + " SELECT query_id, vec_id, adc_dist, CAST(rk AS INTEGER) AS rk "
+        "FROM (SELECT *, row_number() OVER (PARTITION BY query_id "
+        "ORDER BY adc_dist ASC, vec_id ASC) AS rk FROM adc) "
+        f"WHERE rk <= {k_top}"
+    )
+
+
+@query(oracle=_pq_oracle_sql(m=8, k=32, iters=2, dims=64, k_top=10))
 def _ann_pq_topk(spark, sf_dir):
     """Product-quantization ADC top-10 (m=8 subspaces x k=32 codes =
     40 bits/vector, 2 Lloyd iterations per sub-quantizer,
@@ -235,7 +607,69 @@ def _ann_pq_topk(spark, sf_dir):
     return pq_ann_topk(emb, queries_df, k_top=10, m=8, k=32, iters=2)
 
 
-@query
+def _ivfpq_oracle_sql(
+    m: int = 8,
+    k: int = 32,
+    iters: int = 2,
+    dims: int = 64,
+    k_top: int = 10,
+    n_centroids: int = 16,
+    n_probe: int = 4,
+) -> str:
+    """IVF coarse index (cosine, hash-stratified centroids — identical
+    CTEs to the ann_ivf_topk oracle) + PQ ADC over probed candidates
+    only, self-hits excluded."""
+    parts = _pq_training_ctes(m, k, iters, dims)
+    cos = (
+        "round(list_dot_product({a}, {b}) / "
+        "(sqrt(list_dot_product({a}, {a}))"
+        " * sqrt(list_dot_product({b}, {b}))), 5)"
+    )
+    parts.append(
+        "ivf_ch AS (SELECT vec_id, fv AS v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM full_v), "
+        "ivf_cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        f"(PARTITION BY h % {n_centroids} ORDER BY h, vec_id) AS rn "
+        "FROM ivf_ch) WHERE rn = 1), "
+        "ivf_assign AS (SELECT c.vec_id, c.fv AS v, t.cid, "
+        + cos.format(a="c.fv", b="t.cv")
+        + " AS sim FROM full_v c, ivf_cent t), "
+        "member AS (SELECT vec_id, cid FROM ("
+        "SELECT vec_id, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn "
+        "FROM ivf_assign) WHERE rn = 1), "
+        "probes AS (SELECT query_id, cid FROM ("
+        "SELECT vec_id AS query_id, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS pr "
+        "FROM ivf_assign WHERE vec_id < 10) WHERE pr <= "
+        f"{n_probe})"
+    )
+    parts.append(_pq_lut_ctes(m, dims))
+    parts.append(
+        "cand AS (SELECT p.query_id, mm.vec_id FROM member mm "
+        "JOIN probes p ON mm.cid = p.cid WHERE p.query_id != mm.vec_id), "
+        "adc AS (SELECT cand.query_id, cand.vec_id, "
+        "CAST(round(sum(CAST(l.dd AS DECIMAL(18,6))), 5) AS DOUBLE) "
+        "AS adc_dist FROM cand "
+        "JOIN codes ON codes.vec_id = cand.vec_id "
+        "JOIN lut l ON l.query_id = cand.query_id AND l.sub = codes.sub "
+        "AND l.code = codes.code GROUP BY 1, 2)"
+    )
+    return (
+        ", ".join(parts)
+        + " SELECT query_id, vec_id, adc_dist, CAST(rk AS INTEGER) AS rk "
+        "FROM (SELECT *, row_number() OVER (PARTITION BY query_id "
+        "ORDER BY adc_dist ASC, vec_id ASC) AS rk FROM adc) "
+        f"WHERE rk <= {k_top}"
+    )
+
+
+@query(oracle=_ivfpq_oracle_sql(
+    m=8, k=32, iters=2, dims=64, k_top=10,
+    n_centroids=16, n_probe=4,
+))
 def _ann_ivfpq_topk(spark, sf_dir):
     """IVF+PQ hybrid ADC top-10: coarse cosine inverted index
     (16 cells, 4 probes — identical machinery to ann_ivf_topk)
@@ -254,7 +688,70 @@ def _ann_ivfpq_topk(spark, sf_dir):
     )
 
 
-@query
+def _ivfsq_oracle() -> str:
+    """IVF + int8 SQ + exact rerank oracle (mirrors
+    similarity.ivfsq_ann_topk): identical centroid selection /
+    assignment / probe ranking to :func:`_ivf_oracle`, then the int8
+    quantized dot over probed-list members with the exact-cosine
+    rerank of the top-50 shortlist (identical quantization math to
+    the ann_sq_rerank oracle)."""
+    q8 = (
+        "CASE WHEN amax > 0 THEN list_transform(v, "
+        "x -> CAST(round(x / (amax / 127.0)) AS INT)) "
+        "ELSE list_transform(v, x -> 0) END"
+    )
+    return (
+        "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        "FROM embeddings), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM c), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "assign AS (SELECT c.vec_id, c.v, cent.cid, "
+        "round(list_dot_product(c.v, cent.cv) / "
+        "(sqrt(list_dot_product(c.v, c.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM c, cent), "
+        "member0 AS (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn FROM assign) "
+        "WHERE rn = 1), "
+        "member AS (SELECT vec_id, v, cid, amax / 127.0 AS scale, "
+        f"{q8} AS q8 FROM (SELECT vec_id, v, cid, "
+        "list_max(list_transform(v, x -> abs(x))) AS amax FROM member0)), "
+        "qa AS (SELECT vec_id AS query_id, v, cid, sim FROM assign "
+        "WHERE vec_id < 10), "
+        "probes0 AS (SELECT query_id, v, cid FROM ("
+        "SELECT query_id, v, cid, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY sim DESC, cid ASC) AS pr FROM qa) "
+        "WHERE pr <= 12), "
+        "probes AS (SELECT query_id, v, cid, amax / 127.0 AS scale, "
+        f"{q8} AS q8 FROM (SELECT query_id, v, cid, "
+        "list_max(list_transform(v, x -> abs(x))) AS amax FROM probes0)), "
+        "s1 AS (SELECT p.query_id, m.vec_id, p.v AS vq, m.v AS vc, "
+        "round(list_dot_product(p.q8::DOUBLE[], m.q8::DOUBLE[]) "
+        "* p.scale * m.scale, 6) AS approx "
+        "FROM member m JOIN probes p ON m.cid = p.cid "
+        "WHERE p.query_id != m.vec_id), "
+        "r1 AS (SELECT *, row_number() OVER (PARTITION BY query_id "
+        "ORDER BY approx DESC, vec_id ASC) AS rn FROM s1), "
+        "s2 AS (SELECT query_id, vec_id, approx, "
+        "round(list_dot_product(vq, vc) / "
+        "(sqrt(list_dot_product(vq, vq)) * "
+        "sqrt(list_dot_product(vc, vc))), 5) AS cos "
+        "FROM r1 WHERE rn <= 50), "
+        "r2 AS (SELECT query_id, vec_id, approx, cos, "
+        "row_number() OVER (PARTITION BY query_id "
+        "ORDER BY cos DESC, vec_id ASC) AS rank FROM s2) "
+        "SELECT query_id, vec_id, approx, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r2 WHERE rank <= 10"
+    )
+
+
+@query(oracle=_ivfsq_oracle())
 def _ann_ivfsq_topk(spark, sf_dir):
     """IVF + int8 scalar-quantized list scan + exact rerank (FAISS
     ``IVF16,SQ8`` shape): the coarse index prunes WHICH vectors are
@@ -279,7 +776,59 @@ def _ann_ivfsq_topk(spark, sf_dir):
     )
 
 
-@query
+def _ivf_incr_oracle() -> str:
+    """IVF incremental-maintenance oracle (mirrors
+    similarity.ivf_ann_incremental): centroids from the base split
+    only, assignment over base ∪ new batch, probes and exact scoring
+    identical to :func:`_ivf_oracle`."""
+    return (
+        "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        "FROM embeddings), "
+        "base AS (SELECT vec_id, v FROM c WHERE vec_id % 10 != 0), "
+        "newb AS (SELECT vec_id, v FROM c "
+        "WHERE vec_id % 10 = 0 AND vec_id >= 10), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM base), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "un AS (SELECT vec_id, v, FALSE AS is_new FROM base "
+        "UNION ALL SELECT vec_id, v, TRUE AS is_new FROM newb), "
+        "assign AS (SELECT u.vec_id, u.v, u.is_new, cent.cid, "
+        "round(list_dot_product(u.v, cent.cv) / "
+        "(sqrt(list_dot_product(u.v, u.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM un u, cent), "
+        "member AS (SELECT vec_id, v, is_new, cid FROM ("
+        "SELECT vec_id, v, is_new, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn FROM assign) "
+        "WHERE rn = 1), "
+        "q AS (SELECT vec_id AS query_id, v AS vq FROM c WHERE vec_id < 10), "
+        "qa AS (SELECT q.query_id, q.vq, cent.cid, "
+        "round(list_dot_product(q.vq, cent.cv) / "
+        "(sqrt(list_dot_product(q.vq, q.vq)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS qsim "
+        "FROM q, cent), "
+        "probes AS (SELECT query_id, vq, cid FROM ("
+        "SELECT query_id, vq, cid, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY qsim DESC, cid ASC) AS pr FROM qa) "
+        "WHERE pr <= 4), "
+        "s AS (SELECT p.query_id, m.vec_id, m.is_new, "
+        "round(list_dot_product(p.vq, m.v) / "
+        "(sqrt(list_dot_product(p.vq, p.vq)) * "
+        "sqrt(list_dot_product(m.v, m.v))), 5) AS cos "
+        "FROM member m JOIN probes p ON m.cid = p.cid "
+        "WHERE p.query_id != m.vec_id), "
+        "r AS (SELECT query_id, vec_id, is_new, cos, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rank FROM s) "
+        "SELECT query_id, vec_id, is_new, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r WHERE rank <= 10"
+    )
+
+
+@query(oracle=_ivf_incr_oracle())
 def _ann_ivf_incremental(spark, sf_dir):
     """IVF index maintenance: centroids frozen on the 90% base corpus
     (vec_id % 10 != 0), the 10% "new arrivals" batch assigned to those
@@ -322,10 +871,39 @@ def _ensure_ivf_index(spark, sf_dir):
     )
 
 
-@query
+def _ivf_index_build_oracle() -> str:
+    """Persisted-IVF-index content oracle (mirrors
+    similarity.build_ivf_index over the base split): hash-stratified
+    centroid selection on vec_id % 10 != 0, argmax list assignment,
+    and the stored per-vector norm."""
+    return (
+        "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        "FROM embeddings WHERE vec_id % 10 != 0), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM c), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "assign AS (SELECT c.vec_id, c.v, cent.cid, "
+        "round(list_dot_product(c.v, cent.cv) / "
+        "(sqrt(list_dot_product(c.v, c.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM c, cent), "
+        "member AS (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn FROM assign) "
+        "WHERE rn = 1) "
+        "SELECT vec_id, cid, "
+        "round(sqrt(list_dot_product(v, v)), 5) AS nc FROM member"
+    )
+
+
+@query(oracle=_ivf_index_build_oracle())
 def _ann_index_build(spark, sf_dir):
-    """The write-once IVF corpus index as a first-class query (r10
-    verdict item 6 — the vector twin of dedup_index_build): persist
+    """The write-once IVF corpus index as a first-class query (the
+    vector twin of dedup_index_build): persist
     coarse centroids + cid-bucketed inverted lists with precomputed
     norms for the base corpus (vec_id % 10 != 0), then return the
     index content — one row per vector with its list assignment and
@@ -339,7 +917,65 @@ def _ann_index_build(spark, sf_dir):
     )
 
 
-@query
+def _ivf_index_probe_oracle() -> str:
+    """Probe-only search oracle (mirrors similarity.probe_ivf_index
+    driven by registry._ann_index_probe): two query waves ranked
+    against the base-split centroids, exact cosine within the probed
+    stored lists, top-10 per query per wave."""
+    waves = []
+    for wave, (lo, hi) in enumerate([(0, 10), (10, 20)], start=1):
+        waves.append(
+            f"q{wave} AS (SELECT vec_id AS query_id, v AS vq FROM call "
+            f"WHERE vec_id >= {lo} AND vec_id < {hi}), "
+            f"qa{wave} AS (SELECT q.query_id, q.vq, cent.cid, "
+            "round(list_dot_product(q.vq, cent.cv) / "
+            "(sqrt(list_dot_product(q.vq, q.vq)) * "
+            "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS qsim "
+            f"FROM q{wave} q, cent), "
+            f"probes{wave} AS (SELECT query_id, vq, cid FROM ("
+            "SELECT query_id, vq, cid, row_number() OVER "
+            "(PARTITION BY query_id ORDER BY qsim DESC, cid ASC) AS pr "
+            f"FROM qa{wave}) WHERE pr <= 4), "
+            f"s{wave} AS (SELECT p.query_id, m.vec_id, "
+            "round(list_dot_product(p.vq, m.v) / "
+            "(sqrt(list_dot_product(p.vq, p.vq)) * "
+            "sqrt(list_dot_product(m.v, m.v))), 5) AS cos "
+            f"FROM member m JOIN probes{wave} p ON m.cid = p.cid "
+            "WHERE p.query_id != m.vec_id), "
+            f"r{wave} AS (SELECT query_id, vec_id, cos, row_number() OVER "
+            "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) "
+            f"AS rank FROM s{wave})"
+        )
+    return (
+        "WITH call AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        "FROM embeddings), "
+        "c AS (SELECT vec_id, v FROM call WHERE vec_id % 10 != 0), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM c), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "assign AS (SELECT c.vec_id, c.v, cent.cid, "
+        "round(list_dot_product(c.v, cent.cv) / "
+        "(sqrt(list_dot_product(c.v, c.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM c, cent), "
+        "member AS (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn FROM assign) "
+        "WHERE rn = 1), "
+        + ", ".join(waves)
+        + " SELECT CAST(1 AS INTEGER) AS wave, query_id, vec_id, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r1 WHERE rank <= 10 "
+        "UNION ALL "
+        "SELECT CAST(2 AS INTEGER) AS wave, query_id, vec_id, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r2 WHERE rank <= 10"
+    )
+
+
+@query(oracle=_ivf_index_probe_oracle())
 def _ann_index_probe(spark, sf_dir):
     """Two query waves probed against the SAME persisted IVF index —
     the reuse contract that makes vector search incremental: wave 1
@@ -369,9 +1005,76 @@ def _ann_index_probe(spark, sf_dir):
     )
 
 
-@query
+def _ivf_index_maintain_oracle() -> str:
+    """Lifecycle oracle (mirrors registry._ann_index_maintain): the
+    base split (vec_id % 10 not in (0, 5)) elects the centroids and
+    phase-1 membership; phase 2 adds the growth wave (% 10 = 5)
+    assigned to the SAME frozen centroids. One bounded query batch
+    (% 10 = 0, vec_id < 200) is ranked once (probes are
+    centroid-only, so phase-invariant) and scored against each
+    phase's member set, top-10 per query per phase."""
+    phase_score = (
+        "s{p} AS (SELECT pr.query_id, m.vec_id, "
+        "round(list_dot_product(pr.vq, m.v) / "
+        "(sqrt(list_dot_product(pr.vq, pr.vq)) * "
+        "sqrt(list_dot_product(m.v, m.v))), 5) AS cos "
+        "FROM member{p} m JOIN probes pr ON m.cid = pr.cid "
+        "WHERE pr.query_id != m.vec_id), "
+        "r{p} AS (SELECT query_id, vec_id, cos, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) "
+        "AS rank FROM s{p})"
+    )
+    member = (
+        "assign{p} AS (SELECT u.vec_id, u.v, cent.cid, "
+        "round(list_dot_product(u.v, cent.cv) / "
+        "(sqrt(list_dot_product(u.v, u.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM {src} u, cent), "
+        "member{p} AS (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn "
+        "FROM assign{p}) WHERE rn = 1)"
+    )
+    return (
+        "WITH call AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        "FROM embeddings), "
+        "c AS (SELECT vec_id, v FROM call "
+        "WHERE vec_id % 10 NOT IN (0, 5)), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM c), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "grown AS (SELECT vec_id, v FROM c UNION ALL "
+        "SELECT vec_id, v FROM call WHERE vec_id % 10 = 5), "
+        + member.format(p=1, src="c") + ", "
+        + member.format(p=2, src="grown") + ", "
+        "q AS (SELECT vec_id AS query_id, v AS vq FROM call "
+        "WHERE vec_id % 10 = 0 AND vec_id < 200), "
+        "qa AS (SELECT q.query_id, q.vq, cent.cid, "
+        "round(list_dot_product(q.vq, cent.cv) / "
+        "(sqrt(list_dot_product(q.vq, q.vq)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS qsim "
+        "FROM q, cent), "
+        "probes AS (SELECT query_id, vq, cid FROM ("
+        "SELECT query_id, vq, cid, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY qsim DESC, cid ASC) AS pr "
+        "FROM qa) WHERE pr <= 4), "
+        + phase_score.format(p=1) + ", "
+        + phase_score.format(p=2)
+        + " SELECT CAST(1 AS INTEGER) AS phase, query_id, vec_id, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r1 WHERE rank <= 10 "
+        "UNION ALL "
+        "SELECT CAST(2 AS INTEGER) AS phase, query_id, vec_id, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r2 WHERE rank <= 10"
+    )
+
+
+@query(oracle=_ivf_index_maintain_oracle())
 def _ann_index_maintain(spark, sf_dir):
-    """The full vector-index lifecycle in one query (r11, the twin of
+    """The full vector-index lifecycle in one query (the twin of
     dedup_index_maintain): build the persisted IVF index on the base
     split (vec_id % 10 not in (0, 5)), probe a bounded query batch
     (vec_id % 10 == 0, vec_id < 200) against it, APPEND the growth
@@ -417,9 +1120,65 @@ def _ann_index_maintain(spark, sf_dir):
     )
 
 
-@query
+def _ivf_index_compact_oracle() -> str:
+    """Compaction-invariance oracle (mirrors registry
+    ._ann_index_compact): compaction only rewrites the file LAYOUT, so
+    the probe against the compacted index must equal the grown-index
+    replay — identical to :func:`_ivf_index_maintain_oracle` phase 2
+    (base split elects centroids, growth wave joins the member set
+    under the frozen quantizer, bounded query batch scores against
+    the grown members), without the phase column."""
+    return (
+        "WITH call AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        "FROM embeddings), "
+        "c AS (SELECT vec_id, v FROM call "
+        "WHERE vec_id % 10 NOT IN (0, 5)), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM c), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "grown AS (SELECT vec_id, v FROM c UNION ALL "
+        "SELECT vec_id, v FROM call WHERE vec_id % 10 = 5), "
+        "assign AS (SELECT u.vec_id, u.v, cent.cid, "
+        "round(list_dot_product(u.v, cent.cv) / "
+        "(sqrt(list_dot_product(u.v, u.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM grown u, cent), "
+        "member AS (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn "
+        "FROM assign) WHERE rn = 1), "
+        "q AS (SELECT vec_id AS query_id, v AS vq FROM call "
+        "WHERE vec_id % 10 = 0 AND vec_id < 200), "
+        "qa AS (SELECT q.query_id, q.vq, cent.cid, "
+        "round(list_dot_product(q.vq, cent.cv) / "
+        "(sqrt(list_dot_product(q.vq, q.vq)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS qsim "
+        "FROM q, cent), "
+        "probes AS (SELECT query_id, vq, cid FROM ("
+        "SELECT query_id, vq, cid, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY qsim DESC, cid ASC) AS pr "
+        "FROM qa) WHERE pr <= 4), "
+        "s AS (SELECT pr.query_id, m.vec_id, "
+        "round(list_dot_product(pr.vq, m.v) / "
+        "(sqrt(list_dot_product(pr.vq, pr.vq)) * "
+        "sqrt(list_dot_product(m.v, m.v))), 5) AS cos "
+        "FROM member m JOIN probes pr ON m.cid = pr.cid "
+        "WHERE pr.query_id != m.vec_id), "
+        "r AS (SELECT query_id, vec_id, cos, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) "
+        "AS rank FROM s) "
+        "SELECT query_id, vec_id, cos, CAST(rank AS INTEGER) AS rank "
+        "FROM r WHERE rank <= 10"
+    )
+
+
+@query(oracle=_ivf_index_compact_oracle())
 def _ann_index_compact(spark, sf_dir):
-    """Vector-index compaction as a first-class query (r12, the twin
+    """Vector-index compaction as a first-class query (the twin
     of dedup_index_compact): build the persisted IVF index on the
     base split (vec_id % 10 not in (0, 5)), APPEND the growth wave
     (% 10 == 5) — leaving multi-file cid buckets — then COMPACT to
@@ -498,7 +1257,90 @@ def clustered_embeddings(
     return base.select("vec_id", cvec.alias("embedding"))
 
 
-@query
+def _ivf_clustered_recall_oracle() -> str:
+    """Oracle for ann_recall_clustered: derive the deterministically
+    clustered table (12 hash-assigned clusters, hash-derived centers in
+    [-1,1], 0.15x original embedding as jitter), build the SAME IVF
+    index the Spark side builds (hash-stratified centroids, argmax
+    assignment), replay the probe sweep at n_probe ∈ {1,2,4} and the
+    exact top-10 baseline, and emit per-(n_probe, query) recall@10."""
+    h_clu = (
+        "CAST(('0x' || substr(md5(CAST('clu:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT)"
+    )
+    h_ctr = (
+        "CAST(('0x' || substr(md5(CAST('ctr:' || CAST(cl AS VARCHAR) || "
+        "':' || CAST(j - 1 AS VARCHAR) AS VARCHAR)), 1, 8)) AS BIGINT)"
+    )
+    parts = [
+        f"WITH clu AS (SELECT vec_id, {h_clu} % 12 AS cl, "
+        "embedding::DOUBLE[] AS v0 FROM embeddings)",
+        "cv AS MATERIALIZED (SELECT vec_id, "
+        f"list(({h_ctr} % 2001 - 1000) / 1000.0 + 0.15::DOUBLE * elem "
+        "ORDER BY j) AS v FROM (SELECT c.vec_id, c.cl, t.j, c.v0[t.j] "
+        "AS elem FROM clu c, LATERAL unnest(generate_series(1, "
+        "len(c.v0))) AS t(j)) GROUP BY vec_id)",
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM cv)",
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1)",
+        "assign AS MATERIALIZED (SELECT c.vec_id, c.v, cent.cid, "
+        "round(list_dot_product(c.v, cent.cv) / "
+        "(sqrt(list_dot_product(c.v, c.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM cv c, cent)",
+        "member AS MATERIALIZED (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn "
+        "FROM assign) WHERE rn = 1)",
+        "qa AS (SELECT vec_id AS query_id, v, cid, sim FROM assign "
+        "WHERE vec_id < 8)",
+        # exact top-10 baseline over the clustered table
+        "ex AS MATERIALIZED (SELECT query_id, vec_id FROM ("
+        "SELECT q.query_id, m.vec_id, row_number() OVER "
+        "(PARTITION BY q.query_id ORDER BY "
+        "round(list_dot_product(q.v, m.v) / "
+        "(sqrt(list_dot_product(q.v, q.v)) * "
+        "sqrt(list_dot_product(m.v, m.v))), 5) DESC, m.vec_id ASC) "
+        "AS rank FROM (SELECT DISTINCT query_id, v FROM qa) q "
+        "JOIN cv m ON m.vec_id != q.query_id) WHERE rank <= 10)",
+    ]
+    sels = []
+    for p in (1, 2, 4):
+        parts.append(
+            f"probes{p} AS (SELECT query_id, v, cid FROM ("
+            "SELECT query_id, v, cid, row_number() OVER "
+            "(PARTITION BY query_id ORDER BY sim DESC, cid ASC) AS pr "
+            f"FROM qa) WHERE pr <= {p})"
+        )
+        parts.append(
+            f"top{p} AS (SELECT query_id, vec_id FROM ("
+            "SELECT p.query_id, m.vec_id, row_number() OVER "
+            "(PARTITION BY p.query_id ORDER BY "
+            "round(list_dot_product(p.v, m.v) / "
+            "(sqrt(list_dot_product(p.v, p.v)) * "
+            "sqrt(list_dot_product(m.v, m.v))), 5) DESC, m.vec_id ASC) "
+            f"AS rank FROM member m JOIN probes{p} p ON m.cid = p.cid "
+            "WHERE p.query_id != m.vec_id) WHERE rank <= 10)",
+        )
+        parts.append(
+            f"hits{p} AS (SELECT e.query_id, count(*) AS h FROM ex e "
+            f"JOIN top{p} a ON e.query_id = a.query_id "
+            "AND e.vec_id = a.vec_id GROUP BY 1)"
+        )
+        sels.append(
+            f"SELECT CAST({p} AS INTEGER) AS n_probe, q.query_id, "
+            "round(CAST(coalesce(h.h, 0) AS DOUBLE) / 10, 3) AS "
+            "recall_at_10 FROM (SELECT DISTINCT query_id FROM qa) q "
+            f"LEFT JOIN hits{p} h ON q.query_id = h.query_id"
+        )
+    return ", ".join(parts) + " " + " UNION ALL ".join(sels)
+
+
+@query(oracle=_ivf_clustered_recall_oracle())
 def _ann_recall_clustered(spark, sf_dir):
     """IVF recall sweep on CLUSTERED vectors — uniform-random
     embeddings are IVF-pessimal (recall ~= list coverage, SCALE.md
@@ -622,7 +1464,22 @@ def _ann_recall_clustered(spark, sf_dir):
     return out
 
 
-@query
+# ANN recall eval composes the two search oracles registered above
+# verbatim (DuckDB allows a WITH inside a derived table), so the eval's
+# ground truth is the same statement the driver already validates
+@query(oracle=(
+    "WITH exact AS (SELECT query_id, vec_id FROM ("
+    + ORACLES["ann_cosine_topk"]
+    + ")), approx AS (SELECT query_id, vec_id FROM ("
+    + ORACLES["ann_lsh_multi_topk"]
+    + ")), hits AS (SELECT e.query_id, count(*) AS h FROM exact e "
+    "JOIN approx a ON e.query_id = a.query_id AND e.vec_id = a.vec_id "
+    "GROUP BY 1) "
+    "SELECT q.vec_id AS query_id, "
+    "round(CAST(coalesce(h.h, 0) AS DOUBLE) / 10, 3) AS recall_at_10 "
+    "FROM (SELECT vec_id FROM embeddings WHERE vec_id < 10) q "
+    "LEFT JOIN hits h ON q.vec_id = h.query_id"
+))
 def _ann_recall_eval(spark, sf_dir):
     """ANN quality evaluation: recall@10 of the multi-table LSH index
     against the exact cosine top-10, per query — the measurement loop
@@ -659,7 +1516,67 @@ def _ann_recall_eval(spark, sf_dir):
     )
 
 
-@query
+def _pca2_oracle_sql(dims: int = 64, iters: int = 8) -> str:
+    """DuckDB replay of operators.linalg.pca_power_top2: v1 chain over
+    g0, Rayleigh lam1 (rounded 6), deflated g2 entries (rounded 6 —
+    identical on both engines, re-synchronizing IEEE noise), v2 chain
+    over g2, same sign rule and round-5 loadings as the rank-1
+    oracle."""
+
+    def chain(mat: str, tag: str) -> str:
+        s = f"v{tag}0 AS (SELECT pos, 1.0 AS x FROM p), "
+        prev = f"v{tag}0"
+        for k in range(1, iters + 1):
+            s += (
+                f"m{tag}{k} AS MATERIALIZED (SELECT {mat}.i AS pos, "
+                f"sum({mat}.v * {prev}.x) AS y "
+                f"FROM {mat} JOIN {prev} ON {mat}.j = {prev}.pos "
+                "GROUP BY 1), "
+                f"n{tag}{k} AS MATERIALIZED (SELECT sqrt(sum(y * y)) "
+                f"AS nrm FROM m{tag}{k}), "
+                f"v{tag}{k} AS MATERIALIZED (SELECT pos, "
+                f"y / n{tag}{k}.nrm AS x FROM m{tag}{k}, n{tag}{k}), "
+            )
+            prev = f"v{tag}{k}"
+        s += (
+            f"sg{tag} AS (SELECT CASE WHEN (SELECT x FROM {prev} "
+            "ORDER BY abs(round(x, 12)) DESC, pos LIMIT 1) < 0 "
+            "THEN -1.0 ELSE 1.0 END AS s), "
+            f"d{tag} AS MATERIALIZED (SELECT {prev}.pos, "
+            f"round({prev}.x * sg{tag}.s, 5) AS loading "
+            f"FROM {prev}, sg{tag}), "
+        )
+        return s
+
+    sql = (
+        f"WITH p AS (SELECT unnest(generate_series(1, {dims})) AS pos), "
+        "e AS MATERIALIZED (SELECT vec_id, p.pos, "
+        "CAST(embedding[p.pos] AS DOUBLE) AS x FROM embeddings, p), "
+        "g0 AS MATERIALIZED (SELECT a.pos AS i, b.pos AS j, "
+        "round(sum(a.x * b.x), 6) "
+        "AS v FROM e a JOIN e b ON a.vec_id = b.vec_id GROUP BY 1, 2), "
+    )
+    sql += chain("g0", "a")
+    sql += (
+        "lam AS (SELECT round("
+        "(SELECT sum(g0.v * a.loading * b.loading) FROM g0, da a, da b "
+        "WHERE a.pos = g0.i AND b.pos = g0.j) / "
+        "(SELECT sum(loading * loading) FROM da), 6) AS l), "
+        "g2 AS MATERIALIZED (SELECT g0.i, g0.j, "
+        "round(g0.v - lam.l * a.loading * b.loading, 6) AS v "
+        "FROM g0, lam, da a, da b "
+        "WHERE a.pos = g0.i AND b.pos = g0.j), "
+    )
+    sql += chain("g2", "b")
+    sql = sql.rstrip(", ")
+    return sql + (
+        " SELECT CAST(1 AS INT) AS component, pos, loading FROM da "
+        "UNION ALL "
+        "SELECT CAST(2 AS INT) AS component, pos, loading FROM db"
+    )
+
+
+@query(oracle=_pca2_oracle_sql())
 def _emb_pca_top2(spark, sf_dir):
     """Top-2 PCA via power iteration + Hotelling deflation: v1 from
     the distributed Gram, Rayleigh lam1, deflated G2 = G - lam1*v1*v1'
@@ -676,7 +1593,7 @@ def _emb_pca_top2(spark, sf_dir):
     return pca_power_top2(spark, gram)
 
 
-@query
+@query(oracle=_ivf_oracle(" WHERE label % 4 = 0"))
 def _ann_filtered_topk(spark, sf_dir):
     """Filtered vector search — top-k cosine neighbors WITHIN a
     metadata predicate (label % 4 == 0), the retrieval shape every
@@ -699,7 +1616,42 @@ def _ann_filtered_topk(spark, sf_dir):
     return ivf_ann_topk(emb, queries_df, k=10, n_centroids=16, n_probe=4)
 
 
-@query
+@query(oracle=(
+    "WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+    "FROM embeddings), "
+    "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v "
+    "FROM embeddings WHERE vec_id < 5), "
+    "sf_ AS (SELECT q.query_id, c.vec_id, "
+    "round(list_dot_product(q.v, c.v) / "
+    "(sqrt(list_dot_product(q.v, q.v)) * "
+    "sqrt(list_dot_product(c.v, c.v))), 5) AS cos "
+    "FROM c, q WHERE q.query_id != c.vec_id), "
+    "rf AS (SELECT query_id, vec_id FROM ("
+    "SELECT query_id, vec_id, row_number() OVER "
+    "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rk "
+    "FROM sf_) WHERE rk <= 10), "
+    "cp AS (SELECT vec_id, v[1:16] AS v FROM c), "
+    "qp AS (SELECT query_id, v[1:16] AS v FROM q), "
+    "sp AS (SELECT qp.query_id, cp.vec_id, "
+    "round(list_dot_product(qp.v, cp.v) / "
+    "(sqrt(list_dot_product(qp.v, qp.v)) * "
+    "sqrt(list_dot_product(cp.v, cp.v))), 5) AS cos "
+    "FROM cp, qp WHERE qp.query_id != cp.vec_id), "
+    "rp AS (SELECT query_id, vec_id FROM ("
+    "SELECT query_id, vec_id, row_number() OVER "
+    "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rk "
+    "FROM sp) WHERE rk <= 10), "
+    "hit AS (SELECT rf.query_id FROM rf WHERE EXISTS ("
+    "SELECT 1 FROM rp WHERE rp.query_id = rf.query_id "
+    "AND rp.vec_id = rf.vec_id)), "
+    "cnt AS (SELECT query_id, count(*) AS n_overlap FROM hit "
+    "GROUP BY query_id) "
+    "SELECT qq.query_id, "
+    "CAST(coalesce(cnt.n_overlap, 0) AS BIGINT) AS n_overlap, "
+    "round(coalesce(cnt.n_overlap, 0) / 10.0, 2) AS recall10 "
+    "FROM (SELECT DISTINCT query_id FROM q) qq "
+    "LEFT JOIN cnt USING (query_id)"
+))
 def _emb_matryoshka_eval(spark, sf_dir):
     """Matryoshka / truncated-dimension retrieval evaluation: how much
     recall@10 survives searching on only the FIRST 16 of 64 dimensions?

@@ -1,7 +1,6 @@
 """Event-stream batch analytics (sessionize/funnel/retention/gap-fill) queries.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -16,7 +15,12 @@ from .common import _events, query
 # events: batch time-window aggregation (§2.9 ⊕)
 # ---------------------------------------------------------------------------
 
-@query
+@query(oracle=(
+    "SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS sum_value FROM events "
+    "GROUP BY date_trunc('hour', ts), event_type"
+))
 def _ev_hourly_agg(spark, sf_dir):
     ev = _events(spark, sf_dir)
     return (
@@ -32,7 +36,18 @@ def _ev_hourly_agg(spark, sf_dir):
         )
     )
 
-@query
+# open/close replay via ordered first/last on the unique
+# (ts, event_id) prefix — mirrors Spark's struct-min/max
+@query(oracle=(
+    "SELECT date_trunc('hour', ts) AS hour, event_type, "
+    "first(value ORDER BY ts, event_id) AS open, "
+    "max(value) AS high, min(value) AS low, "
+    "last(value ORDER BY ts, event_id) AS close, "
+    "count(*) AS n, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS sum_value FROM events "
+    "GROUP BY date_trunc('hour', ts), event_type"
+))
 def _ev_ohlc_bars(spark, sf_dir):
     """Hourly OHLC bars per event_type — the classic time-series
     downsample (hypertable continuous-aggregate shape): open/close are
@@ -62,7 +77,18 @@ def _ev_ohlc_bars(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    # an event at t belongs to the 4 sliding windows starting at
+    # floor(t/900)*900 - k*900, k in 0..3
+    "SELECT CAST(to_timestamp(CAST(floor(epoch(e.ts) / 900) * 900 "
+    "- k.k * 900 AS BIGINT)) AS TIMESTAMP) AS win_start, "
+    "e.event_type, count(*) AS n, "
+    "CAST(round(sum(CAST(e.value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS sum_value "
+    "FROM events e CROSS JOIN "
+    "(SELECT unnest(generate_series(0, 3)) AS k) k "
+    "GROUP BY 1, 2"
+))
 def _ev_sliding_agg(spark, sf_dir):
     """1-hour windows sliding every 15 minutes: each event lands in 4
     windows. Spark's F.window replicates rows window-count times before
@@ -87,7 +113,23 @@ def _ev_sliding_agg(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH g AS (SELECT user_id, event_id, value, ts, "
+    "CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) IS NULL "
+    "OR epoch_us(ts) - lag(epoch_us(ts)) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) > 1800000000 "
+    "THEN 1 ELSE 0 END AS new_sess FROM events), "
+    "s AS (SELECT user_id, value, sum(new_sess) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq "
+    "FROM g) "
+    "SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, "
+    "count(*) AS n_events, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS session_value FROM s "
+    "GROUP BY user_id, session_seq"
+))
 def _ev_sessionize(spark, sf_dir):
     """Gaps-and-islands sessionization: a new session starts after a
     >30min silence per user. Pure window functions — no UDF."""
@@ -114,7 +156,23 @@ def _ev_sessionize(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH stats AS (SELECT event_type, count(*) AS n, "
+    "sum(CAST(value AS DECIMAL(18,6))) AS s1, "
+    "sum(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))) "
+    "AS s2 FROM events GROUP BY event_type), "
+    "st AS (SELECT event_type, n, "
+    "CAST(s1 AS DOUBLE) / n AS mean, "
+    "sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * "
+    "CAST(s1 AS DOUBLE) / n) / (n - 1)) AS std FROM stats), "
+    "fl AS (SELECT e.event_type FROM events e "
+    "JOIN st ON e.event_type = st.event_type "
+    "WHERE abs((e.value - st.mean) / st.std) > 2) "
+    "SELECT f.event_type, count(*) AS n_anomalies, "
+    "round(count(*) / st.n, 6) AS rate "
+    "FROM fl f JOIN st ON f.event_type = st.event_type "
+    "GROUP BY f.event_type, st.n"
+))
 def _ev_zscore_anomalies(spark, sf_dir):
     """Group-wise standardization: per event_type mean/std of value
     from DECIMAL-exact moment sums (sum, sum of squares) so the
@@ -156,7 +214,26 @@ def _ev_zscore_anomalies(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH s1 AS (SELECT user_id, min(CASE WHEN event_type = 'view' "
+    "THEN epoch_us(ts) END) AS t_view FROM events GROUP BY user_id), "
+    "s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t_click "
+    "FROM events e JOIN s1 ON e.user_id = s1.user_id "
+    "WHERE e.event_type = 'click' AND s1.t_view IS NOT NULL "
+    "AND epoch_us(e.ts) > s1.t_view "
+    "AND epoch_us(e.ts) <= s1.t_view + 86400000000 "
+    "GROUP BY e.user_id), "
+    "s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t_purchase "
+    "FROM events e JOIN s2 ON e.user_id = s2.user_id "
+    "WHERE e.event_type = 'purchase' "
+    "AND epoch_us(e.ts) > s2.t_click "
+    "AND epoch_us(e.ts) <= s2.t_click + 86400000000 "
+    "GROUP BY e.user_id) "
+    "SELECT '1_view' AS stage, count(*) AS n FROM s1 "
+    "WHERE t_view IS NOT NULL "
+    "UNION ALL SELECT '2_click', count(*) FROM s2 "
+    "UNION ALL SELECT '3_purchase', count(*) FROM s3"
+))
 def _ev_funnel(spark, sf_dir):
     """Conversion funnel: per user, the first view -> first click after
     it -> first purchase after that, each within 24h of the previous
@@ -201,7 +278,21 @@ def _ev_funnel(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH hourly AS (SELECT date_trunc('hour', ts) AS hour, "
+    "event_type, count(*) AS cnt FROM events "
+    "GROUP BY 1, 2), "
+    "bounds AS (SELECT date_trunc('hour', min(ts)) AS lo, "
+    "date_trunc('hour', max(ts)) AS hi FROM events), "
+    "spine_hours AS (SELECT unnest(generate_series(lo, hi, "
+    "INTERVAL 1 HOUR)) AS hour FROM bounds), "
+    "types AS (SELECT DISTINCT event_type FROM events), "
+    "spine AS (SELECT hour, event_type FROM spine_hours, types) "
+    "SELECT s.hour, s.event_type, "
+    "coalesce(h.cnt, 0) AS n "
+    "FROM spine s LEFT JOIN hourly h "
+    "ON s.hour = h.hour AND s.event_type = h.event_type"
+))
 def _ev_gap_fill(spark, sf_dir):
     """Zero-filled hourly time series (date-spine gap filling): the
     spine is sequence(min_hour, max_hour) x distinct event types —
@@ -234,7 +325,12 @@ def _ev_gap_fill(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT CAST(floor(CAST(json_extract_string(props, '$.k') "
+    "AS INT) / 10) AS INT) AS k_bucket, count(*) AS n, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS sum_value FROM events GROUP BY 1 ORDER BY k_bucket"
+))
 def _ev_json_props(spark, sf_dir):
     """Semi-structured extraction: parse the events `props` JSON
     column, bucket the numeric field, aggregate per bucket. The JSON
@@ -256,7 +352,15 @@ def _ev_json_props(spark, sf_dir):
         .orderBy("k_bucket")
     )
 
-@query
+@query(oracle=(
+    "WITH first AS (SELECT user_id, min(date_trunc('day', ts)) AS "
+    "cohort_day FROM events GROUP BY user_id) "
+    "SELECT f.cohort_day, CAST(floor(date_diff('day', "
+    "CAST(f.cohort_day AS DATE), CAST(e.ts AS DATE)) / 7) AS BIGINT) "
+    "AS week_offset, count(DISTINCT e.user_id) AS n_users "
+    "FROM events e JOIN first f ON e.user_id = f.user_id "
+    "GROUP BY 1, 2"
+))
 def _ev_retention(spark, sf_dir):
     """Cohort retention: users cohorted by first-event date, then
     distinct-user counts per (cohort_day, weeks-since-first). Two keyed
@@ -280,7 +384,21 @@ def _ev_retention(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH o AS (SELECT user_id, ts, value, epoch_us(ts) AS us, "
+    "lag(epoch_us(ts)) OVER (PARTITION BY user_id "
+    "ORDER BY ts, event_id) AS prev_us FROM events), "
+    "f AS (SELECT user_id, ts, value, us, CASE WHEN prev_us IS NULL "
+    "OR us - prev_us >= 1800000000 THEN 1 ELSE 0 END AS new_s "
+    "FROM o), "
+    "g AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id "
+    "ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid FROM f) "
+    "SELECT user_id, min(ts) AS session_start, "
+    "max(ts) + INTERVAL 30 MINUTE AS session_end, "
+    "count(*) AS n_events, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS session_value FROM g GROUP BY user_id, sid"
+))
 def _ev_session_window_builtin(spark, sf_dir):
     """Spark's built-in ``session_window`` aggregation (the canonical
     dynamic-gap session primitive — state-store-backed in streaming,
@@ -312,7 +430,16 @@ def _ev_session_window_builtin(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH pairs AS (SELECT from_type, to_type FROM ("
+    "SELECT event_type AS from_type, lead(event_type) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) AS to_type "
+    "FROM events) WHERE to_type IS NOT NULL), "
+    "c AS (SELECT from_type, to_type, count(*) AS n FROM pairs "
+    "GROUP BY 1, 2) "
+    "SELECT from_type, to_type, n, round(n / CAST(sum(n) OVER "
+    "(PARTITION BY from_type) AS DOUBLE), 6) AS p FROM c"
+))
 def _ev_markov(spark, sf_dir):
     """First-order Markov transition matrix over per-user event
     sequences: lead() within (user, ts, event_id) order gives the next
@@ -340,7 +467,17 @@ def _ev_markov(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH latest AS (SELECT user_id, event_type, value, "
+    "row_number() OVER (PARTITION BY user_id "
+    "ORDER BY ts DESC, event_id DESC) AS rn FROM events), "
+    "c AS (SELECT user_id, count(*) AS n_ops FROM events "
+    "GROUP BY user_id) "
+    "SELECT l.user_id, l.event_type AS last_op, "
+    "round(CAST(l.value AS DOUBLE), 6) AS last_value, c.n_ops "
+    "FROM latest l JOIN c USING (user_id) "
+    "WHERE rn = 1 AND event_type <> 'error'"
+))
 def _ev_cdc_apply(spark, sf_dir):
     """Ordered changelog fold: treat the event stream as a CDC log
     (signup/view/click/purchase upsert a user's value, error is a
@@ -373,7 +510,22 @@ def _ev_cdc_apply(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH med AS (SELECT event_type, "
+    "quantile_cont(value, 0.5) AS med, count(*) AS n "
+    "FROM events GROUP BY event_type), "
+    "mad AS (SELECT e.event_type, "
+    "quantile_cont(abs(e.value - m.med), 0.5) AS mad "
+    "FROM events e JOIN med m USING (event_type) "
+    "GROUP BY e.event_type) "
+    "SELECT e.event_type, any_value(m.n) AS n, "
+    "round(any_value(m.med), 6) AS med, "
+    "round(any_value(d.mad), 6) AS mad, "
+    "CAST(sum(CASE WHEN round(abs(e.value - m.med), 6) > "
+    "round(3 * d.mad, 6) THEN 1 ELSE 0 END) AS BIGINT) AS n_anom "
+    "FROM events e JOIN med m USING (event_type) "
+    "JOIN mad d USING (event_type) GROUP BY e.event_type"
+))
 def _ev_anomaly_mad(spark, sf_dir):
     """Robust anomaly counts: median/MAD instead of mean/stddev (the
     z-score twin ev_zscore_anomalies is itself skewed by the outliers

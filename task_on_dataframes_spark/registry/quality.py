@@ -1,8 +1,7 @@
 """Data-quality audit, bucketed-join, windowed top-k, and token-entropy
 queries.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -10,10 +9,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_on_dataframes_spark.operators.hashing import (
+    hash32_sql,
+    perm_hash_sql,
+)
+from task_on_dataframes_spark.operators.probe import (
+    grouped_probe_oracle_sql,
+    linear_probe_oracle_sql,
+    probe_apply_oracle_sql,
+)
+
 from .common import _docs, _events, _t, query
 
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT doc_id % 2 = 0 AS is_a, "
+    "least(99, len(string_split_regex(lower(text), '\\s+'))) AS bin "
+    "FROM documents), "
+    "c AS (SELECT bin, "
+    "sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS ca, "
+    "sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS cb "
+    "FROM b GROUP BY bin), "
+    "g AS (SELECT "
+    "sum(ca) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) "
+    "/ CAST(sum(ca) OVER () AS DOUBLE) - "
+    "sum(cb) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) "
+    "/ CAST(sum(cb) OVER () AS DOUBLE) AS gap, "
+    "CAST(sum(ca) OVER () AS BIGINT) AS n_a, "
+    "CAST(sum(cb) OVER () AS BIGINT) AS n_b FROM c) "
+    "SELECT round(max(abs(gap)), 6) AS ks_stat, n_a, n_b "
+    "FROM g GROUP BY n_a, n_b"
+))
 def _quality_ks_drift(spark, sf_dir):
     """Two-sample Kolmogorov-Smirnov drift statistic between two
     corpus slices (even vs odd doc_id — the stand-in for crawl
@@ -50,7 +76,31 @@ def _quality_ks_drift(spark, sf_dir):
     ).select("ks_stat", "n_a", "n_b")
 
 
-@query
+# add-one-smoothed 10-bin PSI; per-bin ln terms round to 12
+# decimals before the final sum (text_bigram_lm discipline)
+@query(oracle=(
+    "WITH b AS (SELECT doc_id % 2 = 0 AS is_a, "
+    "least(99, len(string_split_regex(lower(text), '\\s+'))) // 10 "
+    "AS bin FROM documents), "
+    "c AS (SELECT bin, "
+    "sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS ca, "
+    "sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS cb "
+    "FROM b GROUP BY bin), "
+    "f AS (SELECT gs.b AS bin, coalesce(ca, 0) AS ca, "
+    "coalesce(cb, 0) AS cb FROM "
+    "(SELECT unnest(generate_series(0, 9)) AS b) gs "
+    "LEFT JOIN c ON c.bin = gs.b), "
+    "g AS (SELECT round("
+    "((ca + 1) / CAST(sum(ca) OVER () + 10 AS DOUBLE) "
+    "- (cb + 1) / CAST(sum(cb) OVER () + 10 AS DOUBLE)) * ln("
+    "((ca + 1) / CAST(sum(ca) OVER () + 10 AS DOUBLE)) "
+    "/ ((cb + 1) / CAST(sum(cb) OVER () + 10 AS DOUBLE))), 12) "
+    "AS term, "
+    "CAST(sum(ca) OVER () AS BIGINT) AS n_a, "
+    "CAST(sum(cb) OVER () AS BIGINT) AS n_b FROM f) "
+    "SELECT round(sum(term), 6) AS psi, n_a, n_b "
+    "FROM g GROUP BY n_a, n_b"
+))
 def _quality_psi_drift(spark, sf_dir):
     """Population Stability Index between two corpus slices (even vs
     odd doc_id — crawl snapshot A vs B), the standard companion gate to
@@ -96,7 +146,69 @@ def _quality_psi_drift(spark, sf_dir):
     ).select("psi", "n_a", "n_b")
 
 
-@query
+# Gopher quality-table gate: every measure and flag replays from
+# the same token array the Spark scan computes; flags compare on
+# RAW integer/integer divisions (bit-identical IEEE), only the
+# emitted measures round
+@query(oracle=(
+    "WITH t AS (SELECT doc_id, "
+    "list_filter(string_split_regex(lower(text), '\\s+'), "
+    "x -> x <> '') AS toks, "
+    "len(regexp_replace(text, '\\s', '', 'g')) AS nc "
+    "FROM documents), "
+    "g AS (SELECT doc_id, toks[gi.i] || ' ' || toks[gi.i + 1] "
+    "AS gram FROM t, "
+    "LATERAL unnest(generate_series(1, len(toks) - 1)) gi(i)), "
+    "g2 AS (SELECT doc_id, count(*) AS n2, "
+    "count(DISTINCT gram) AS nd FROM g GROUP BY 1), "
+    "topc AS (SELECT doc_id, max(c) AS mc FROM ("
+    "SELECT doc_id, tok, count(*) AS c FROM ("
+    "SELECT doc_id, unnest(toks) AS tok FROM t) GROUP BY 1, 2) "
+    "GROUP BY 1), "
+    "base AS (SELECT doc_id, len(toks) AS n, nc, "
+    "len(list_intersect(list_distinct(toks), "
+    "['the', 'a', 'of', 'and', 'to', 'in', 'is', 'it'])) "
+    "AS stop_hits, "
+    "len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) "
+    "AS na FROM t), "
+    "j AS (SELECT b.doc_id, n, nc, stop_hits, na, mc, "
+    "CASE WHEN coalesce(n2, 0) > 0 "
+    "THEN (n2 - nd) / CAST(n2 AS DOUBLE) ELSE 0.0 END AS dup2 "
+    "FROM base b LEFT JOIN g2 USING (doc_id) "
+    "LEFT JOIN topc USING (doc_id)) "
+    "SELECT doc_id, CAST(n AS INT) AS n_words, "
+    "CASE WHEN n > 0 THEN round(nc / CAST(n AS DOUBLE), 6) END "
+    "AS mean_word_len, "
+    "CASE WHEN n > 0 THEN round(na / CAST(n AS DOUBLE), 6) END "
+    "AS alpha_word_frac, "
+    "CAST(stop_hits AS INT) AS stop_hits, "
+    "CASE WHEN n > 0 THEN round(mc / CAST(n AS DOUBLE), 6) END "
+    "AS top_token_frac, "
+    "round(dup2, 6) AS dup_2gram_frac, "
+    # word-free docs: Spark emits NULL measures -> coalesce
+    # false. 0/0.0 is NULL on DuckDB 1.0 but NaN (> everything)
+    # under >= 1.1's ieee_floating_point_ops default, so the
+    # flag divisions are gated on n > 0 explicitly instead of
+    # relying on NULL propagation through the division
+    "n >= 50 AND n <= 100000 AS flag_words, "
+    "CASE WHEN n > 0 THEN nc / CAST(n AS DOUBLE) >= 3.0 AND "
+    "nc / CAST(n AS DOUBLE) <= 10.0 ELSE false END AS flag_word_len, "
+    "CASE WHEN n > 0 THEN na / CAST(n AS DOUBLE) >= 0.80 "
+    "ELSE false END AS flag_alpha, "
+    "stop_hits >= 2 AS flag_stopwords, "
+    "CASE WHEN n > 0 THEN mc / CAST(n AS DOUBLE) <= 0.10 "
+    "ELSE false END AS flag_top_token, "
+    "dup2 <= 0.05 AS flag_dup_2gram, "
+    "(n >= 50 AND n <= 100000) AND "
+    "CASE WHEN n > 0 THEN nc / CAST(n AS DOUBLE) >= 3.0 AND "
+    "nc / CAST(n AS DOUBLE) <= 10.0 ELSE false END AND "
+    "CASE WHEN n > 0 THEN na / CAST(n AS DOUBLE) >= 0.80 "
+    "ELSE false END "
+    "AND stop_hits >= 2 AND "
+    "CASE WHEN n > 0 THEN mc / CAST(n AS DOUBLE) <= 0.10 "
+    "ELSE false END AND "
+    "dup2 <= 0.05 AS gopher_pass FROM j"
+))
 def _quality_gopher_gate(spark, sf_dir):
     """Gopher-style document-quality gate over the documents table:
     word-count / mean-word-length / alpha-fraction / required-stopword
@@ -111,7 +223,14 @@ def _quality_gopher_gate(spark, sf_dir):
     return gopher_quality_gate(_docs(spark, sf_dir), "doc_id", "text")
 
 
-@query
+@query(oracle=(
+    "SELECT o_orderstatus, count(*) AS n, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * "
+    "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
+    "), 2) AS DOUBLE) AS revenue "
+    "FROM orders JOIN lineitem ON o_orderkey = l_orderkey "
+    "GROUP BY o_orderstatus"
+))
 def _s13_bucketed_join(spark, sf_dir):
     """Bucketed co-located join: write orders and lineitem as tables
     bucketed by the join key (8 buckets), then join WITHOUT a shuffle —
@@ -173,7 +292,26 @@ def _s13_bucketed_join(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "SELECT 'lineitem_nonpositive_qty' AS rule, "
+    "count(*) FILTER (l_quantity IS NULL OR l_quantity <= 0) "
+    "AS violations FROM lineitem "
+    "UNION ALL SELECT 'lineitem_discount_range', "
+    "count(*) FILTER (NOT l_discount BETWEEN 0 AND 1) FROM lineitem "
+    "UNION ALL SELECT 'lineitem_negative_tax', "
+    "count(*) FILTER (l_tax < 0) FROM lineitem "
+    "UNION ALL SELECT 'lineitem_null_shipdate', "
+    "count(*) FILTER (l_shipdate IS NULL) FROM lineitem "
+    "UNION ALL SELECT 'orders_nonpositive_total', "
+    "count(*) FILTER (o_totalprice <= 0) FROM orders "
+    "UNION ALL SELECT 'orders_null_date', "
+    "count(*) FILTER (o_orderdate IS NULL) FROM orders "
+    "UNION ALL SELECT 'lineitem_orphan_orderkey', count(*) "
+    "FROM lineitem l WHERE NOT EXISTS "
+    "(SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey) "
+    "UNION ALL SELECT 'orders_duplicate_pk', count(*) FROM "
+    "(SELECT o_orderkey FROM orders GROUP BY 1 HAVING count(*) > 1)"
+))
 def _dq_rules(spark, sf_dir):
     """Data-quality rule audit: one conditional-aggregation pass per
     table (every per-row rule is a ``sum(case ...)`` inside a single
@@ -244,7 +382,14 @@ def _dq_rules(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH c AS (SELECT date_trunc('hour', ts) AS hour, event_type, "
+    "count(*) AS n FROM events GROUP BY 1, 2), "
+    "r AS (SELECT hour, event_type, n, row_number() OVER "
+    "(PARTITION BY hour ORDER BY n DESC, event_type) AS rk FROM c) "
+    "SELECT hour, event_type, n, CAST(rk AS INTEGER) AS rk "
+    "FROM r WHERE rk <= 3"
+))
 def _ev_windowed_topk(spark, sf_dir):
     """Top-3 event types per hour by event count: keyed agg on
     (hour, type) then a rank window partitioned BY HOUR — the window
@@ -265,7 +410,22 @@ def _ev_windowed_topk(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH toks AS ("
+    "SELECT doc_id, regexp_replace(t.tok, '^\\W+|\\W+$', '', 'g') "
+    "AS tok FROM ("
+    "SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) "
+    "AS tok FROM documents) t), "
+    "clean AS (SELECT doc_id, tok FROM toks WHERE length(tok) >= 2), "
+    "c AS (SELECT doc_id, tok, count(*) AS c FROM clean "
+    "GROUP BY 1, 2) "
+    "SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, "
+    "count(*) AS n_types, "
+    "round(log2(CAST(sum(c) AS DOUBLE)) - "
+    "sum(c * log2(CAST(c AS DOUBLE))) / sum(c), 4) AS entropy_bits, "
+    "round(count(*) * 1.0 / sum(c), 5) AS ttr "
+    "FROM c GROUP BY doc_id"
+))
 def _text_entropy(spark, sf_dir):
     """Per-document unigram entropy + type-token ratio — an
     information-theoretic quality score for corpus curation (low
@@ -308,7 +468,10 @@ def _text_entropy(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "SELECT event_type, count(DISTINCT user_id) AS n_exact, "
+    "true AS within_bound FROM events GROUP BY event_type"
+))
 def _sketch_hll_bound(spark, sf_dir):
     """HLL++ distinct-count sketch with its accuracy contract made
     oracle-checkable: per event type, the approx_count_distinct(rsd=5%)
@@ -333,7 +496,10 @@ def _sketch_hll_bound(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, count(*) AS n, true AS rank_ok "
+    "FROM lineitem GROUP BY l_returnflag"
+))
 def _sketch_quantile_bound(spark, sf_dir):
     """Greenwald-Khanna quantile sketch with its rank-error contract
     made oracle-checkable: the percentile_approx(0.5, accuracy=1000)
@@ -369,7 +535,15 @@ def _sketch_quantile_bound(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH toks AS (SELECT t.tok FROM ("
+    "SELECT unnest(string_split_regex(lower(text), '\\s+')) AS tok "
+    "FROM documents) t WHERE length(t.tok) > 0), "
+    "exact AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok), "
+    "tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n_total FROM exact) "
+    "SELECT e.tok, e.cnt, true AS found FROM exact e, tot "
+    "WHERE e.cnt > tot.n_total / 64"
+))
 def _sketch_heavy_hitters(spark, sf_dir):
     """Misra-Gries heavy-hitters sketch with its no-false-negative
     contract made oracle-checkable: every token whose exact frequency
@@ -402,7 +576,11 @@ def _sketch_heavy_hitters(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, count(*) AS n, "
+    "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) "
+    "AS sum_qty FROM lineitem GROUP BY l_returnflag"
+))
 def _s14_compaction(spark, sf_dir):
     """Small-files compaction as a registry query: scatter a lineitem
     projection into 48 tiny files, compact to ~2 files with
@@ -430,7 +608,16 @@ def _s14_compaction(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH per_flag AS (SELECT l_orderkey, l_returnflag, count(*) AS c "
+    "FROM lineitem GROUP BY 1, 2) "
+    "SELECT l_orderkey, "
+    "CAST(count(*) AS INTEGER) AS n_flags, "
+    "coalesce(CAST(sum(c) FILTER (l_returnflag = 'R') AS BIGINT), 0) "
+    "AS r_lines, "
+    "CAST(sum(c) AS BIGINT) AS total_lines "
+    "FROM per_flag GROUP BY l_orderkey"
+))
 def _f_map_funcs(spark, sf_dir):
     """Map construction + lookup + transform functions (⊕ §2.8
     breadth): per-order map of lineitem return flags to their line
@@ -455,7 +642,12 @@ def _f_map_funcs(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "SELECT coalesce(CASE WHEN doc_id % 2 = 1 THEN lang END, "
+    "'<pre-schema>') AS lang, count(*) AS n_docs, "
+    "CAST(sum(n_chars) AS BIGINT) AS total_chars "
+    "FROM documents GROUP BY 1"
+))
 def _s15_schema_merge(spark, sf_dir):
     """Parquet schema evolution: two generations of a dataset (the
     second adds a ``lang`` column) read back as one table with
@@ -484,7 +676,19 @@ def _s15_schema_merge(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH o AS (SELECT doc_id, md5(text) AS od FROM documents "
+    "WHERE doc_id % 10 != 0), "
+    "n AS (SELECT doc_id, md5(CASE WHEN doc_id % 5 = 0 "
+    "THEN text || ' v2' ELSE text END) AS nd FROM documents "
+    "WHERE doc_id % 7 != 0) "
+    "SELECT coalesce(o.doc_id, n.doc_id) AS doc_id, "
+    "CASE WHEN od IS NULL THEN 'added' "
+    "WHEN nd IS NULL THEN 'removed' "
+    "WHEN od != nd THEN 'changed' "
+    "ELSE 'unchanged' END AS status "
+    "FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id"
+))
 def _snapshot_diff(spark, sf_dir):
     """Snapshot-to-snapshot corpus diff: classify every doc_id as
     added/removed/changed/unchanged between two derived snapshots
@@ -508,7 +712,23 @@ def _snapshot_diff(spark, sf_dir):
     )
 
 
-@query
+def _morton_sql_xy(bits: int = 10) -> str:
+    from task_on_dataframes_spark.operators.layout import morton_code_sql
+
+    return morton_code_sql("x", "y", bits)
+
+
+@query(oracle=(
+    # the layout rewrite must be lossless, so the oracle
+    # aggregates the ORIGINAL table with the same interleave
+    "WITH b AS (SELECT (l_partkey % 1024) AS x, "
+    "(l_suppkey % 1024) AS y FROM lineitem) "
+    "SELECT ("
+    + _morton_sql_xy()
+    + " >> 12) AS zbucket, count(*) AS n, "
+    "min(x) AS min_x, max(x) AS max_x, "
+    "min(y) AS min_y, max(y) AS max_y FROM b GROUP BY 1"
+))
 def _s16_zorder_stats(spark, sf_dir):
     """Z-order layout: write lineitem keys Morton-clustered (range
     partition + in-partition sort on the interleaved code), read back,
@@ -545,7 +765,12 @@ def _s16_zorder_stats(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "SELECT o_orderstatus, count(*) AS n, "
+    "CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) "
+    "AS DOUBLE) AS sum_price FROM orders "
+    "WHERE o_orderkey % 3 = 0 GROUP BY 1"
+))
 def _s17_incremental_read(spark, sf_dir):
     """Incremental ingestion without table-format metadata: write
     batch 1, snapshot the file manifest, append batch 2, then read
@@ -579,7 +804,7 @@ def _s17_incremental_read(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=linear_probe_oracle_sql(iters=4))
 def _quality_linear_probe(spark, sf_dir):
     """Supervised training loop as a first-class operator: least-squares
     linear probe (stopword fraction ~ length/digit features) fit by 4
@@ -596,7 +821,31 @@ def _quality_linear_probe(spark, sf_dir):
     return linear_probe_weights(docs, "text", iters=4)
 
 
-@query
+#: count-min sketch cells of the oracle: 3 hash rows x 1024 buckets
+_CMS_BUCKETS = " UNION ALL ".join(
+    f"SELECT tok, {r} AS r, {perm_hash_sql(hash32_sql('tok'), r)} % 1024 AS bk"
+    " FROM toks"
+    for r in range(3)
+)
+
+
+@query(oracle=(
+    "WITH toks AS (SELECT t.tok FROM (SELECT "
+    "unnest(string_split_regex(lower(text), '\\s+')) AS tok "
+    "FROM documents) t WHERE length(t.tok) > 0), "
+    f"b AS ({_CMS_BUCKETS}), "
+    "counters AS (SELECT r, bk, count(*) AS c FROM b "
+    "GROUP BY r, bk), "
+    "exact AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok), "
+    "top20 AS (SELECT tok, cnt FROM exact "
+    "ORDER BY cnt DESC, tok LIMIT 20), "
+    "probes AS (SELECT p.tok, p.cnt, b.r, b.bk FROM top20 p "
+    "JOIN b ON b.tok = p.tok), "
+    "est AS (SELECT p.tok, any_value(p.cnt) AS cnt, "
+    "min(c.c) AS est FROM (SELECT DISTINCT tok, cnt, r, bk "
+    "FROM probes) p JOIN counters c USING (r, bk) GROUP BY p.tok) "
+    "SELECT tok, cnt, est, est - cnt AS overcount FROM est"
+))
 def _sketch_cms(spark, sf_dir):
     """Count-min sketch with an EXACT-replay oracle: 3x1024 counters
     over the document token stream (portable md5 hash family), point
@@ -628,7 +877,7 @@ def _sketch_cms(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=grouped_probe_oracle_sql("lang", iters=4))
 def _quality_probe_by_lang(spark, sf_dir):
     """Per-language linear probes trained simultaneously: the grouped
     variant of quality_linear_probe — one GROUP BY gradient aggregation
@@ -643,7 +892,13 @@ def _quality_probe_by_lang(spark, sf_dir):
     return grouped_probe_weights(docs, "lang", "text", iters=4)
 
 
-@query
+@query(oracle=(
+    "SELECT o_orderstatus, count(*) AS n, "
+    "CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))), 2) "
+    "AS DOUBLE) AS total "
+    "FROM orders JOIN customer ON o_custkey = c_custkey "
+    "WHERE c_nationkey = 3 GROUP BY o_orderstatus"
+))
 def _s18_bloom_join_prune(spark, sf_dir):
     """Runtime Bloom-filter join pruning: the selective dim predicate
     (customers of one nation) compresses to a <=65536-bit Bloom set,
@@ -684,7 +939,25 @@ def _s18_bloom_join_prune(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH scored AS (SELECT doc_id, source, "
+    "(CAST(len(list_filter(arr, t -> t IN ('the', 'a', 'of',"
+    " 'and', 'to', 'in', 'is', 'it'))) AS BIGINT) * 1000)"
+    " // len(arr) AS bin "
+    "FROM (SELECT doc_id, source, "
+    "list_filter(string_split_regex(lower(text), '\\s+'), "
+    "t -> len(t) > 0) AS arr FROM documents) WHERE len(arr) > 0), "
+    "cdf AS (SELECT source, bin, count(*) AS c FROM scored "
+    "GROUP BY source, bin), "
+    "cdf2 AS (SELECT source, bin, "
+    "CAST(sum(c) OVER (PARTITION BY source ORDER BY bin) - c "
+    "AS BIGINT) AS below, "
+    "CAST(sum(c) OVER (PARTITION BY source) AS BIGINT) AS n "
+    "FROM cdf) "
+    "SELECT s.doc_id, s.source, s.bin, "
+    "round(below / CAST(n AS DOUBLE), 6) AS pctile "
+    "FROM scored s JOIN cdf2 USING (source, bin)"
+))
 def _quality_domain_calibrate(spark, sf_dir):
     """Per-domain score calibration WITHOUT a per-domain global sort:
     a raw quality score (stopword fraction, integer fixed-point) is
@@ -746,7 +1019,16 @@ def _quality_domain_calibrate(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH ev AS (SELECT date_trunc('day', ts) AS day, event_type "
+    "FROM events), "
+    "t AS (SELECT min(day) AS d FROM ev), "
+    "f AS (SELECT day, event_type FROM ev, t "
+    "WHERE day <> d OR event_type <> 'error') "
+    "SELECT day, count(*) AS n, "
+    "CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) "
+    "AS BIGINT) AS n_errors FROM f GROUP BY day"
+))
 def _s19_dynamic_partition_overwrite(spark, sf_dir):
     """Partition-level incremental overwrite — the daily-backfill move:
     events land hive-partitioned by day; one day is then corrected
@@ -788,7 +1070,14 @@ def _s19_dynamic_partition_overwrite(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH rng AS (SELECT min(l_extendedprice) AS lo, "
+    "max(l_extendedprice) AS hi FROM lineitem) "
+    "SELECT l_returnflag, "
+    "CAST(least(floor((l_extendedprice - lo) / ((hi - lo) / 10)),"
+    " 9) AS INT) AS bin, count(*) AS n "
+    "FROM lineitem, rng GROUP BY l_returnflag, bin"
+))
 def _a11_histogram(spark, sf_dir):
     """Grouped equi-width histogram — the profiling op between min/max
     (profile_table) and exact percentiles (a9): 10 equal-width bins of
@@ -821,7 +1110,7 @@ def _a11_histogram(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=probe_apply_oracle_sql(iters=4))
 def _quality_probe_apply(spark, sf_dir):
     """Train-then-apply in one lazy plan: the 4-iteration GD probe's
     weights (a d-sized plan prefix) broadcast onto every document to

@@ -1,7 +1,6 @@
 """Wider relational surface (rollup/cube/windows/upserts/IO round-trips) queries.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -12,7 +11,13 @@ from pyspark.sql import functions as F
 from .common import _embs, _events, _t, query
 
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, "
+    "round(quantile_cont(l_extendedprice, 0.25), 4) AS p25, "
+    "round(quantile_cont(l_extendedprice, 0.5), 4) AS p50, "
+    "round(quantile_cont(l_extendedprice, 0.75), 4) AS p75 "
+    "FROM lineitem GROUP BY l_returnflag"
+))
 def _a5_percentiles(spark, sf_dir):
     """Exact linear-interpolation percentiles per group (Spark
     ``percentile`` == DuckDB ``quantile_cont``)."""
@@ -23,7 +28,13 @@ def _a5_percentiles(spark, sf_dir):
         F.round(F.percentile("l_extendedprice", 0.75), 4).alias("p75"),
     )
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, "
+    "round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price, "
+    "round(covar_samp(l_quantity, l_extendedprice), 2) AS cov_qty_price, "
+    "round(stddev_samp(l_quantity), 4) AS sd_qty "
+    "FROM lineitem GROUP BY l_returnflag"
+))
 def _a6_stats(spark, sf_dir):
     """Statistical aggregates: correlation, sample covariance/stddev."""
     li = _t(spark, sf_dir, "lineitem")
@@ -33,7 +44,14 @@ def _a6_stats(spark, sf_dir):
         F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
     )
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, "
+    "CAST(sum(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END) "
+    "AS BIGINT) AS n_f, "
+    "CAST(sum(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) "
+    "AS BIGINT) AS n_o "
+    "FROM lineitem GROUP BY l_returnflag"
+))
 def _p7_pivot(spark, sf_dir):
     """Pivot: linestatus columns per returnflag row (explicit value
     list so the plan is one pass, no distinct-values pre-query)."""
@@ -49,7 +67,12 @@ def _p7_pivot(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT p_partkey, 'size' AS attr, CAST(p_size AS DOUBLE) AS value "
+    "FROM part UNION ALL "
+    "SELECT p_partkey, 'retailprice' AS attr, "
+    "round(p_retailprice, 2) AS value FROM part"
+))
 def _p8_unpivot(spark, sf_dir):
     """Unpivot/melt: wide part attributes to long (attr, value) rows."""
     part = _t(spark, sf_dir, "part")
@@ -64,7 +87,18 @@ def _p8_unpivot(spark, sf_dir):
         valueColumnName="value",
     )
 
-@query
+@query(oracle=(
+    "SELECT l_orderkey, l_linenumber, "
+    "CAST(date_diff('day', o_orderdate, l_shipdate) AS INT) "
+    "AS ship_delay_days, "
+    "CAST(year(o_orderdate) AS INT) AS o_year, "
+    "CAST(month(o_orderdate) AS INT) AS o_month, "
+    "CAST(day(o_orderdate) AS INT) AS o_day, "
+    "o_orderdate + INTERVAL 30 DAY AS due_date, "
+    "CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP) "
+    "AS month_end "
+    "FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+))
 def _f_date_funcs(spark, sf_dir):
     """Date/time scalar functions (absent in the reference ⊕): ship
     delay in days, truncations, offsets, month boundaries."""
@@ -82,7 +116,18 @@ def _f_date_funcs(spark, sf_dir):
         F.last_day("o_orderdate").cast("timestamp").alias("month_end"),
     )
 
-@query
+@query(oracle=(
+    "WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings) "
+    "SELECT vec_id, CAST(len(e) AS INT) AS dim, "
+    "round(e[1], 5) AS first, "
+    "round(list_max(e), 5) AS vmax, "
+    "round(list_min(e), 5) AS vmin, "
+    "round(list_reduce(list_prepend(0.0, e[1:8]), (a, x) -> a + x), 5) "
+    "AS head8_sum, "
+    "round(list_reduce(list_prepend(0.0, "
+    "list_transform(e, x -> x * x)), (a, x) -> a + x), 5) AS sq_norm "
+    "FROM v"
+))
 def _f_array_funcs(spark, sf_dir):
     """Array functions over array<float> (absent in the reference ⊕):
     size, element access, slicing aggregates, higher-order transform."""
@@ -105,7 +150,12 @@ def _f_array_funcs(spark, sf_dir):
         ).alias("sq_norm"),
     )
 
-@query
+@query(oracle=(
+    "SELECT doc_id, upper(lang) AS lang_up, length(text) AS text_len, "
+    "substring(source, 1, 3) AS src3, "
+    "concat(lang, '-', source) AS tag, "
+    "regexp_replace(text, '\\d', '', 'g') AS no_digits FROM documents"
+))
 def _f_string_funcs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
@@ -117,7 +167,10 @@ def _f_string_funcs(spark, sf_dir):
         F.regexp_replace(F.col("text"), r"\d", "").alias("no_digits"),
     )
 
-@query
+@query(oracle=(
+    "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k "
+    "FROM events"
+))
 def _f_json_extract(spark, sf_dir):
     ev = _events(spark, sf_dir)
     return ev.select(
@@ -125,7 +178,15 @@ def _f_json_extract(spark, sf_dir):
         F.get_json_object(F.col("props"), "$.k").cast("bigint").alias("k"),
     )
 
-@query
+@query(oracle=(
+    "WITH x AS (SELECT event_type, "
+    "CAST(json_extract(props, '$.k') AS INT) AS k FROM events) "
+    "SELECT event_type, count(*) AS n, "
+    "CAST(sum(CAST(k AS BIGINT)) AS BIGINT) AS sum_k, "
+    "CAST(sum(CASE WHEN k % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) "
+    "AS n_even, max(k) AS max_k, min(k) AS min_k FROM x "
+    "GROUP BY event_type"
+))
 def _f_variant_json(spark, sf_dir):
     """Semi-structured extraction through Spark 4's VARIANT type:
     ``parse_json`` decodes the props JSON ONCE into the binary variant
@@ -149,7 +210,16 @@ def _f_variant_json(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT event_id, event_type, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))) OVER w, 4) "
+    "AS DOUBLE) AS trailing_sum, "
+    "count(*) OVER w AS n_window "
+    "FROM events "
+    "WINDOW w AS (PARTITION BY event_type "
+    "ORDER BY CAST(floor(epoch(ts)) AS BIGINT) "
+    "RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)"
+))
 def _w4_moving_avg(spark, sf_dir):
     """RANGE-frame window: per event type, trailing-hour value sum and
     window population (event-time range, not row count). Decimal-exact
@@ -174,7 +244,18 @@ def _w4_moving_avg(spark, sf_dir):
 # §2.4 ⊕ distinct-agg / rollup; tf-idf
 # ---------------------------------------------------------------------------
 
-@query
+@query(oracle=(
+    "WITH c AS (SELECT event_id, user_id, ts FROM events "
+    "WHERE event_type = 'click'), "
+    "p AS (SELECT event_id AS pid, user_id, ts, value FROM events "
+    "WHERE event_type = 'purchase'), "
+    "m AS (SELECT c.event_id, c.user_id, p.pid, p.value, "
+    "row_number() OVER (PARTITION BY c.event_id "
+    "ORDER BY p.ts DESC, p.pid DESC) AS rn "
+    "FROM c LEFT JOIN p ON c.user_id = p.user_id AND p.ts <= c.ts) "
+    "SELECT event_id, user_id, pid AS prev_purchase_id, "
+    "round(value, 4) AS prev_purchase_value FROM m WHERE rn = 1"
+))
 def _j6_asof_join(spark, sf_dir):
     """For each click event, the most recent prior purchase by the same
     user — merge as-of via union-tag + running last() (one shuffle)."""
@@ -202,7 +283,15 @@ def _j6_asof_join(spark, sf_dir):
         F.round("asof_value", 4).alias("prev_purchase_value"),
     )
 
-@query
+@query(oracle=(
+    "SELECT b.label, count(*) AS n, "
+    "CAST(round(sum(CAST(l.l_quantity AS DECIMAL(18,6))), 4) "
+    "AS DOUBLE) AS sum_qty "
+    "FROM lineitem l JOIN (VALUES (0.0, 10.0, 'low'), (10.0, 25.0, 'mid'), "
+    "(25.0, 40.0, 'high'), (40.0, 100.0, 'top')) AS b(lo, hi, label) "
+    "ON l.l_quantity >= b.lo AND l.l_quantity < b.hi "
+    "GROUP BY b.label"
+))
 def _j7_range_join(spark, sf_dir):
     """Bucket lineitem quantities into literal ranges: broadcast range
     join, then aggregate per bucket — the big side never shuffles for
@@ -226,7 +315,17 @@ def _j7_range_join(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT * FROM ("
+    "SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price, "
+    "row_number() OVER w AS rn, rank() OVER w AS rnk, "
+    "dense_rank() OVER w AS drnk, "
+    "round(lag(o_totalprice) OVER w, 2) AS prev_price "
+    "FROM orders "
+    "WINDOW w AS (PARTITION BY o_custkey "
+    "ORDER BY o_totalprice DESC, o_orderkey ASC)"
+    ") WHERE rn <= 3"
+))
 def _w3_ranking(spark, sf_dir):
     """row_number / rank / dense_rank / lag over a per-customer window —
     partitioned by key, so fully parallel."""
@@ -247,7 +346,20 @@ def _w3_ranking(spark, sf_dir):
         .filter(F.col("rn") <= 3)
     )
 
-@query
+@query(oracle=(
+    "WITH urgent AS (SELECT DISTINCT o_custkey AS custkey FROM orders "
+    "WHERE o_orderpriority = '1-URGENT'), "
+    "high AS (SELECT DISTINCT o_custkey AS custkey FROM orders "
+    "WHERE o_orderpriority = '2-HIGH') "
+    "SELECT custkey, 'both' AS tag FROM "
+    "(SELECT custkey FROM urgent INTERSECT SELECT custkey FROM high) "
+    "UNION ALL "
+    "SELECT custkey, 'urgent_only' AS tag FROM "
+    "(SELECT custkey FROM urgent EXCEPT SELECT custkey FROM high) "
+    "UNION ALL "
+    "SELECT custkey, 'high_only' AS tag FROM "
+    "(SELECT custkey FROM high EXCEPT SELECT custkey FROM urgent)"
+))
 def _set_ops(spark, sf_dir):
     """UNION / INTERSECT / EXCEPT (distinct semantics) over customer key
     sets, tagged — §2.7 is absent in the reference; free in Spark."""
@@ -268,7 +380,11 @@ def _set_ops(spark, sf_dir):
         .unionByName(high.subtract(urgent).withColumn("tag", F.lit("high_only")))
     )
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supp, "
+    "count(DISTINCT l_partkey) AS n_part, count(*) AS n "
+    "FROM lineitem GROUP BY l_returnflag"
+))
 def _a3_distinct_agg(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
@@ -277,7 +393,14 @@ def _a3_distinct_agg(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
     )
 
-@query
+@query(oracle=(
+    "SELECT coalesce(l_returnflag, 'ALL') AS flag, "
+    "coalesce(l_linestatus, 'ALL') AS status, "
+    "count(*) AS n, "
+    "CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS sum_qty "
+    "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"
+))
 def _a4_rollup(spark, sf_dir):
     """ROLLUP over (returnflag, linestatus): subtotal rows materialize
     NULL group keys, coalesced to 'ALL' so both engines agree."""
@@ -298,7 +421,14 @@ def _a4_rollup(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT coalesce(l_returnflag, 'ALL') AS flag, "
+    "coalesce(l_linestatus, 'ALL') AS status, count(*) AS n, "
+    "CAST(round(sum(CAST(l_quantity AS DECIMAL(12,2))), 2) AS DOUBLE) "
+    "AS sum_qty FROM lineitem "
+    "GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), "
+    "(l_linestatus), ())"
+))
 def _a7_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (beyond rollup's prefix chain): totals by
     (flag, status), by status alone, and grand total — one shuffle."""
@@ -316,7 +446,12 @@ def _a7_grouping_sets(spark, sf_dir):
         """
     ).withColumn("sum_qty", F.col("sum_qty").cast("double"))
 
-@query
+@query(oracle=(
+    "WITH t AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') "
+    "AS ts FROM documents WHERE doc_id < 100) "
+    "SELECT doc_id, CAST(i.i AS INT) AS ord, ts[i.i] AS token "
+    "FROM t, LATERAL unnest(generate_series(1, len(ts))) AS i(i)"
+))
 def _f_posexplode(spark, sf_dir):
     """Explode with ordinality: token position within each document."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
@@ -325,7 +460,12 @@ def _f_posexplode(spark, sf_dir):
         F.posexplode(F.split(F.lower("text"), r"\s+")).alias("pos", "token"),
     ).select("doc_id", (F.col("pos") + 1).alias("ord"), "token")
 
-@query
+@query(oracle=(
+    "SELECT o_orderpriority, count(*) AS n FROM orders "
+    "WHERE EXISTS (SELECT 1 FROM lineitem "
+    "WHERE l_orderkey = o_orderkey AND l_quantity > 45) "
+    "GROUP BY o_orderpriority"
+))
 def _sql_exists_subquery(spark, sf_dir):
     """The SQL entry point: EXISTS decorrelates to a left-semi join
     (same plan the DataFrame API produces)."""
@@ -343,7 +483,16 @@ def _sql_exists_subquery(spark, sf_dir):
         """
     )
 
-@query
+# round-trip oracles read the ORIGINAL parquet: equality proves
+# the ORC/JSONL write+read cycle preserved the data
+@query(oracle=(
+    "SELECT l_returnflag, count(*) AS n, "
+    "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) "
+    "AS sum_qty, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 2) "
+    "AS DOUBLE) AS sum_price "
+    "FROM lineitem WHERE l_quantity <= 10 GROUP BY 1"
+))
 def _s9_orc_roundtrip(spark, sf_dir):
     """ORC sink + source: write a pruned, filtered projection to ORC,
     read it back, aggregate. Proves the ORC connector end-to-end (the
@@ -370,7 +519,14 @@ def _s9_orc_roundtrip(spark, sf_dir):
         .alias("sum_price"),
     )
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, count(*) AS n, "
+    "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) "
+    "AS sum_qty, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 2) "
+    "AS DOUBLE) AS sum_price "
+    "FROM lineitem WHERE l_quantity <= 10 GROUP BY 1"
+))
 def _s10_jsonl_roundtrip(spark, sf_dir):
     """JSON-lines sink + source round-trip with the same aggregate
     check as the ORC twin (Spark writes shortest-round-trip doubles,
@@ -395,7 +551,15 @@ def _s10_jsonl_roundtrip(spark, sf_dir):
         .alias("sum_price"),
     )
 
-@query
+@query(oracle=(
+    "SELECT coalesce(c.c_custkey, o.o_custkey) AS custkey, "
+    "c.c_acctbal, coalesce(o.n_orders, 0) AS n_orders "
+    "FROM (SELECT c_custkey, c_acctbal FROM customer "
+    "WHERE c_custkey % 3 = 0) c "
+    "FULL OUTER JOIN (SELECT o_custkey, count(*) AS n_orders "
+    "FROM orders WHERE o_custkey % 5 = 0 GROUP BY 1) o "
+    "ON c.c_custkey = o.o_custkey"
+))
 def _j9_full_outer(spark, sf_dir):
     """Full outer join with both-side-only rows (disjoint key filters
     guarantee unmatched rows in each direction). Shuffle-keyed on the
@@ -418,7 +582,15 @@ def _j9_full_outer(spark, sf_dir):
         F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
     )
 
-@query
+@query(oracle=(
+    "SELECT l_orderkey, l_linenumber, "
+    "first_value(l_quantity) OVER w AS first_qty, "
+    "last_value(l_quantity) OVER w AS last_qty, "
+    "nth_value(l_quantity, 2) OVER w AS second_qty "
+    "FROM lineitem WHERE l_orderkey < 200 "
+    "WINDOW w AS (PARTITION BY l_orderkey ORDER BY l_linenumber "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+))
 def _w8_first_last(spark, sf_dir):
     """first_value / last_value / nth_value over the full-partition
     frame (ROWS UNBOUNDED PRECEDING..UNBOUNDED FOLLOWING) — the frame
@@ -437,7 +609,27 @@ def _w8_first_last(spark, sf_dir):
         F.nth_value("l_quantity", 2).over(w).alias("second_qty"),
     )
 
-@query
+@query(oracle=(
+    "SELECT 'o_custkey' AS col_name, "
+    "count(*) - count(o_custkey) AS n_nulls, "
+    "count(DISTINCT o_custkey) AS n_distinct, "
+    "CAST(min(o_custkey) AS DOUBLE) AS min_num, "
+    "CAST(max(o_custkey) AS DOUBLE) AS max_num, "
+    "CAST(NULL AS VARCHAR) AS min_str, "
+    "CAST(NULL AS VARCHAR) AS max_str FROM orders "
+    "UNION ALL SELECT 'o_totalprice', "
+    "count(*) - count(o_totalprice), count(DISTINCT o_totalprice), "
+    "CAST(min(o_totalprice) AS DOUBLE), "
+    "CAST(max(o_totalprice) AS DOUBLE), NULL, NULL FROM orders "
+    "UNION ALL SELECT 'o_orderstatus', "
+    "count(*) - count(o_orderstatus), "
+    "count(DISTINCT o_orderstatus), NULL, NULL, "
+    "min(o_orderstatus), max(o_orderstatus) FROM orders "
+    "UNION ALL SELECT 'o_orderpriority', "
+    "count(*) - count(o_orderpriority), "
+    "count(DISTINCT o_orderpriority), NULL, NULL, "
+    "min(o_orderpriority), max(o_orderpriority) FROM orders"
+))
 def _profile_table(spark, sf_dir):
     """Data-quality profile of the orders table: per column null count,
     exact distinct count, numeric min/max and string min/max. ONE
@@ -485,7 +677,24 @@ def _profile_table(spark, sf_dir):
     )
     return one.select(F.expr(stack))
 
-@query
+@query(oracle=(
+    "WITH c AS (SELECT user_id, event_id, event_type, ts, "
+    "CASE WHEN lag(event_type) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) IS NULL "
+    "OR event_type <> lag(event_type) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) "
+    "THEN 1 ELSE 0 END AS chg FROM events), "
+    "g AS (SELECT user_id, event_type, ts, sum(chg) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp "
+    "FROM c), "
+    "iv AS (SELECT user_id, grp, event_type, min(ts) AS valid_from, "
+    "count(*) AS n_events FROM g GROUP BY 1, 2, 3) "
+    "SELECT user_id, event_type, valid_from, "
+    "lead(valid_from) OVER "
+    "(PARTITION BY user_id ORDER BY valid_from, grp) AS valid_to, "
+    "n_events FROM iv"
+))
 def _scd2_history(spark, sf_dir):
     """SCD-2 interval build from a change stream: per user, each
     event_type change opens a validity interval [valid_from, valid_to)
@@ -514,7 +723,11 @@ def _scd2_history(spark, sf_dir):
         "n_events",
     )
 
-@query
+@query(oracle=(
+    "SELECT event_type, count(*) AS n FROM events "
+    "WHERE CAST(ts AS DATE) = "
+    "(SELECT min(CAST(ts AS DATE)) FROM events) GROUP BY 1"
+))
 def _s11_partition_prune(spark, sf_dir):
     """Hive-style partitioned layout: write events partitioned by
     event date, read back filtered to the earliest date — the scan
@@ -533,7 +746,15 @@ def _s11_partition_prune(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
-@query
+@query(oracle=(
+    "SELECT user_id, event_id, "
+    "epoch_us(ts) - lag(epoch_us(ts)) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) AS gap_us, "
+    "CAST(round(CAST(value AS DECIMAL(18,6)) - "
+    "lag(CAST(value AS DECIMAL(18,6))) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id), 4) AS DOUBLE) "
+    "AS value_delta FROM events"
+))
 def _w5_lag_delta(spark, sf_dir):
     """lead/lag window coverage: per-user inter-event time delta and
     value change, keyed window (no global sort)."""
@@ -555,7 +776,17 @@ def _w5_lag_delta(spark, sf_dir):
         .alias("value_delta"),
     )
 
-@query
+@query(oracle=(
+    "WITH th AS (SELECT "
+    "round(quantile_cont(n_chars, 0.25), 6) AS q25, "
+    "round(quantile_cont(n_chars, 0.5), 6) AS q50, "
+    "round(quantile_cont(n_chars, 0.75), 6) AS q75 FROM documents) "
+    "SELECT 1 + CAST(CAST(n_chars AS DOUBLE) > q25 AS INT) "
+    "+ CAST(CAST(n_chars AS DOUBLE) > q50 AS INT) "
+    "+ CAST(CAST(n_chars AS DOUBLE) > q75 AS INT) AS bin, "
+    "count(*) AS n, min(n_chars) AS min_chars, "
+    "max(n_chars) AS max_chars FROM documents, th GROUP BY 1"
+))
 def _w6_ntile_bins(spark, sf_dir):
     """Quartile binning by document length (curriculum/difficulty
     bucketing): counts and length ranges per quartile. Boundaries come
@@ -592,7 +823,26 @@ def _w6_ntile_bins(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH changed AS (SELECT c_custkey, c_name, c_nationkey, "
+    "c_mktsegment, CAST(CAST(c_acctbal AS DECIMAL(12,2)) + 100 "
+    "AS DOUBLE) AS c_acctbal FROM customer WHERE c_custkey % 10 = 0), "
+    "new_rows AS (SELECT n_nationkey + 1000000 AS c_custkey, "
+    "'new customer ' || n_name AS c_name, "
+    "n_nationkey AS c_nationkey, 'BUILDING' AS c_mktsegment, "
+    "0.0 AS c_acctbal FROM nation WHERE n_nationkey < 5), "
+    "updates AS (SELECT * FROM changed "
+    "UNION ALL SELECT * FROM new_rows), "
+    "surv AS (SELECT c_custkey, c_name, c_nationkey, c_mktsegment, "
+    "c_acctbal FROM customer WHERE c_custkey NOT IN "
+    "(SELECT c_custkey FROM updates)), "
+    "merged AS (SELECT * FROM surv UNION ALL SELECT * FROM updates) "
+    "SELECT count(*) AS n_rows, "
+    "CAST(round(sum(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) "
+    "AS total_bal, "
+    "CAST(sum(CASE WHEN c_custkey >= 1000000 THEN 1 ELSE 0 END) "
+    "AS BIGINT) AS n_new FROM merged"
+))
 def _j8_upsert(spark, sf_dir):
     """SCD-1 merge: a deterministic CDC batch (every 10th customer with
     bumped balance, plus 5 brand-new keys) upserted into customer —
@@ -636,7 +886,22 @@ def _j8_upsert(spark, sf_dir):
         F.sum((F.col("c_custkey") >= 1_000_000).cast("int")).alias("n_new"),
     )
 
-@query
+# ORACLE POLICY for approximate sketches: two engines' HLL++
+# and Greenwald-Khanna sketches legitimately return different
+# estimates for the same data, so no oracle here hashes an
+# estimate. sketch_hll_bound and sketch_quantile_bound
+# (registry/quality.py) expose only the sketch's error-bound verdict
+# against exact aggregates, which the oracle checks exactly.
+# a9_quantiles is the EXACT-quantile twin and carries a full value
+# oracle.
+@query(oracle=(
+    "SELECT l_returnflag, count(*) AS n, "
+    "round(quantile_cont(l_quantity, 0.25), 6) AS q25, "
+    "round(quantile_cont(l_quantity, 0.5), 6) AS q50, "
+    "round(quantile_cont(l_quantity, 0.75), 6) AS q75, "
+    "round(quantile_cont(l_quantity, 0.95), 6) AS q95 "
+    "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"
+))
 def _a9_quantiles(spark, sf_dir):
     """Exact per-group quantiles (sort-based `percentile`, identical
     interpolation formula to DuckDB's quantile_cont)."""
@@ -653,7 +918,16 @@ def _a9_quantiles(spark, sf_dir):
         .orderBy("l_returnflag")
     )
 
-@query
+@query(oracle=(
+    "SELECT date_trunc('day', ts) AS day, "
+    "count(CASE WHEN event_type = 'click' THEN 1 END) AS click, "
+    "count(CASE WHEN event_type = 'error' THEN 1 END) AS error, "
+    "count(CASE WHEN event_type = 'purchase' THEN 1 END) "
+    "AS purchase, "
+    "count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup, "
+    "count(CASE WHEN event_type = 'view' THEN 1 END) AS view "
+    "FROM events GROUP BY 1 ORDER BY day"
+))
 def _a10_pivot(spark, sf_dir):
     """Pivot: per-day event counts spread into one column per event
     type (explicit value list keeps the schema static — at scale an
@@ -668,7 +942,14 @@ def _a10_pivot(spark, sf_dir):
         .orderBy("day")
     )
 
-@query
+@query(oracle=(
+    "SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity, "
+    "round(percent_rank() OVER w, 6) AS pct_rank, "
+    "round(cume_dist() OVER w, 6) AS cume "
+    "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-06-01' "
+    "AND l_shipdate < TIMESTAMP '1996-06-08' "
+    "WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_quantity)"
+))
 def _w7_percent_rank(spark, sf_dir):
     """percent_rank + cume_dist windows per return flag over one ship
     week — (rank-1)/(n-1) on identical operands is engine-exact."""
@@ -686,7 +967,13 @@ def _w7_percent_rank(spark, sf_dir):
         F.round(F.cume_dist().over(w), 6).alias("cume"),
     )
 
-@query
+@query(oracle=(
+    "SELECT coalesce(l_returnflag, 'ALL') AS flag, "
+    "coalesce(l_linestatus, 'ALL') AS status, count(*) AS n, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 4) "
+    "AS DOUBLE) AS sum_price "
+    "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"
+))
 def _a8_cube(spark, sf_dir):
     """CUBE over (returnflag, linestatus): all 2^2 grouping combinations
     in one shuffle (Expand feeds a single hash aggregate — no union of
@@ -711,7 +998,14 @@ def _a8_cube(spark, sf_dir):
     )
 
 
-@query
+# oracle reads the ORIGINAL events parquet: equality proves the
+# sorted rewrite is lossless and the pruned scan is correct
+@query(oracle=(
+    "SELECT event_type, count(*) AS n, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS total_value FROM events "
+    "WHERE user_id >= 100 AND user_id < 200 GROUP BY event_type"
+))
 def _s12_sorted_stats_prune(spark, sf_dir):
     """Sort-on-write data skipping: events range-partitioned and
     sorted by user_id on write, so every parquet row group carries a
@@ -767,7 +1061,18 @@ SELECT node, min(hop) AS hops FROM reach GROUP BY node
 """
 
 
-@query
+@query(oracle=(
+    "WITH ud AS (SELECT user_id, CAST(ts AS DATE) AS du, "
+    "min(epoch_us(ts)) AS ulo, max(epoch_us(ts)) AS uhi "
+    "FROM events GROUP BY 1, 2), "
+    "td AS (SELECT event_type, CAST(ts AS DATE) AS dt, "
+    "min(epoch_us(ts)) AS tlo, max(epoch_us(ts)) AS thi "
+    "FROM events GROUP BY 1, 2), "
+    "p AS (SELECT DISTINCT ud.user_id, ud.du, td.event_type, td.dt "
+    "FROM ud JOIN td ON ud.ulo <= td.thi AND td.tlo <= ud.uhi) "
+    "SELECT event_type, count(*) AS n_pairs FROM p "
+    "GROUP BY event_type"
+))
 def _j10_interval_overlap_join(spark, sf_dir):
     """Interval x interval overlap join with BOTH sides large — the
     shape j7's broadcast point-in-range join can't cover. Per-(user,
@@ -831,7 +1136,15 @@ FROM lineitem
 """
 
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, l_linestatus, count(*) AS n, "
+    "CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))), 2) "
+    "AS DOUBLE) AS sum_qty, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 2) "
+    "AS DOUBLE) AS sum_price "
+    "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' "
+    "GROUP BY l_returnflag, l_linestatus"
+))
 def _sql_pipe_syntax(spark, sf_dir):
     """SQL pipe syntax (|>, new in Spark 4): the q1-style pricing
     aggregate written as a linear FROM -> WHERE -> AGGREGATE -> WHERE
@@ -843,7 +1156,8 @@ def _sql_pipe_syntax(spark, sf_dir):
     return spark.sql(PIPE_SQL)
 
 
-@query
+# the recursive-CTE query ships ONE SQL text for both engines
+@query(oracle=RECURSIVE_REACH_SQL)
 def _sql_recursive_reach(spark, sf_dir):
     """Recursive-CTE BFS reachability (WITH RECURSIVE, new in Spark 4)
     over the strong-trade nation graph: shortest hop count from nation

@@ -1,7 +1,6 @@
 """Sampling, sharding, and skew-mitigation queries.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -9,10 +8,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_on_dataframes_spark.operators.hashing import hash32_sql
+
 from .common import _docs, _embs, _t, query
 
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT CAST(('0x' || substr(md5(CAST(('split:' || CAST(doc_id AS VARCHAR)) AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 AS bucket FROM documents) "
+    "SELECT CASE WHEN bucket < 900 THEN 'train' WHEN bucket < 950 THEN 'val' WHEN bucket < 1000 THEN 'test' ELSE 'holdout' END AS split, "
+    "count(*) AS n FROM b GROUP BY 1"
+))
 def _sample_split(spark, sf_dir):
     """Deterministic train/val/test split counts: hash-bucket labeling
     so the split is reproducible across runs, engines, partitionings."""
@@ -25,7 +30,14 @@ def _sample_split(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT lang, "
+    "CAST(('0x' || substr(md5(CAST(('strat:' || CAST(doc_id AS VARCHAR)) "
+    "AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 AS bucket FROM documents) "
+    "SELECT lang, count(*) AS n_kept FROM b "
+    "WHERE bucket < (CASE WHEN lang = 'en' THEN 200 ELSE 1000 END) "
+    "GROUP BY lang"
+))
 def _sample_stratified(spark, sf_dir):
     """Language-rebalancing sample: keep 20% of English, all of the
     rest — summarized as kept-count per language (a deterministic
@@ -38,7 +50,14 @@ def _sample_stratified(spark, sf_dir):
     )
     return kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_kept"))
 
-@query
+@query(oracle=(
+    "WITH w AS (SELECT doc_id, lang, "
+    "least(1000, 5 * len(string_split_regex(lower(text), '\\s+'))) "
+    "AS weight_pm, "
+    "CAST(('0x' || substr(md5(CAST(('wsamp:' || CAST(doc_id AS VARCHAR)) "
+    "AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 AS bucket FROM documents) "
+    "SELECT doc_id, lang, weight_pm FROM w WHERE bucket < weight_pm"
+))
 def _sample_weighted(spark, sf_dir):
     """Quality-weighted importance resampling (the corpus-mixing move
     in DCLM/FineWeb-style pipelines): weight_pm = min(1000, 5 *
@@ -57,7 +76,12 @@ def _sample_weighted(spark, sf_dir):
     kept = weighted_sample(weighted, "doc_id", F.col("weight_pm"))
     return kept.select("doc_id", "lang", "weight_pm")
 
-@query
+@query(oracle=(
+    "SELECT CAST(('0x' || substr(md5('shard:' "
+    "|| CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 16 AS shard, "
+    "count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars "
+    "FROM documents GROUP BY 1"
+))
 def _shard_assign(spark, sf_dir):
     """Deterministic balanced shard assignment for training-data
     export: shard = portable_hash(doc_id) % 16. Zero shuffle on the
@@ -80,7 +104,21 @@ def _shard_assign(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT source, doc_id, "
+    "CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) "
+    "AS n_tokens FROM documents), "
+    "c AS (SELECT source, n_tokens, "
+    "sum(n_tokens) OVER (PARTITION BY source "
+    "ORDER BY n_tokens DESC, doc_id "
+    "ROWS UNBOUNDED PRECEDING) - n_tokens AS start_offset FROM b) "
+    "SELECT source, count(*) AS n_docs, "
+    "CAST(sum(CASE WHEN start_offset < 600 THEN 1 ELSE 0 END) "
+    "AS BIGINT) AS n_kept, "
+    "CAST(sum(CASE WHEN start_offset < 600 THEN n_tokens "
+    "ELSE 0 END) AS BIGINT) AS tokens_kept "
+    "FROM c GROUP BY source"
+))
 def _mix_token_budget(spark, sf_dir):
     """Per-source token-budget curation (the domain-cap move when a
     corpus over-represents one crawl/source): rank documents longest-
@@ -122,7 +160,12 @@ def _mix_token_budget(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT doc_id, lang FROM (SELECT doc_id, lang, "
+    "CAST(('0x' || substr(md5('bk:' || CAST(doc_id AS VARCHAR)), "
+    "1, 8)) AS BIGINT) AS h FROM documents "
+    "ORDER BY h, doc_id LIMIT 100)"
+))
 def _sample_bottomk(spark, sf_dir):
     """Exact-size uniform sample without a global sort: bottom-k by
     the portable stable hash (TakeOrderedAndProject — per-partition
@@ -140,7 +183,15 @@ def _sample_bottomk(spark, sf_dir):
         .select("doc_id", "lang")
     )
 
-@query
+@query(oracle=(
+    "WITH s AS (SELECT lang, doc_id, "
+    "round(least(len(string_split_regex(lower(text), '\\s+')) / 100.0, "
+    "1.0), 6) AS score FROM documents), "
+    "r AS (SELECT lang, doc_id, score, row_number() OVER "
+    "(PARTITION BY lang ORDER BY score DESC, doc_id ASC) AS rn FROM s) "
+    "SELECT lang, doc_id, score, CAST(rn AS INTEGER) AS rn "
+    "FROM r WHERE rn <= 3"
+))
 def _sample_topk_per_stratum(spark, sf_dir):
     """Corpus curation: keep the top-3 documents per language by the
     length-quality score (desc, doc_id tiebreak) — per-group top-k via
@@ -163,7 +214,12 @@ def _sample_topk_per_stratum(spark, sf_dir):
         .filter(F.col("rn") <= 3)
     )
 
-@query
+# the skew-shape plans must give the PLAIN answer — the oracle
+# is the unsalted formulation
+@query(oracle=(
+    "SELECT l_returnflag, count(DISTINCT l_partkey) AS n_distinct "
+    "FROM lineitem GROUP BY l_returnflag"
+))
 def _skew_distinct_2phase(spark, sf_dir):
     """Hot-key-safe COUNT(DISTINCT): phase 1 groups on (key, value) so
     the value spreads the hot key across reducers; phase 2 counts pairs
@@ -175,7 +231,12 @@ def _skew_distinct_2phase(spark, sf_dir):
         li, ["l_returnflag"], "l_partkey", out="n_distinct"
     )
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, "
+    "CAST(round(sum(CAST(l_quantity AS DECIMAL(12,2))), 2) AS DOUBLE) "
+    "AS sum_qty, count(*) AS n "
+    "FROM lineitem GROUP BY l_returnflag"
+))
 def _skew_salted_agg(spark, sf_dir):
     """Salted two-phase aggregation over a 3-value (maximally skewed)
     key — content-derived salts, decimal-exact sums, answer identical
@@ -197,7 +258,10 @@ def _skew_salted_agg(spark, sf_dir):
         n_salt=8,
     )
 
-@query
+@query(oracle=(
+    "SELECT c_mktsegment, count(*) AS n FROM orders "
+    "JOIN customer ON o_custkey = c_custkey GROUP BY c_mktsegment"
+))
 def _skew_salted_join(spark, sf_dir):
     """Salted skew join (the stream-static / AQE-unavailable shape):
     orders salted on content hash, customer replicated per salt; the
@@ -212,7 +276,20 @@ def _skew_salted_join(spark, sf_dir):
     return joined.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n"))
 
 
-@query
+@query(oracle=(
+    "WITH n AS (SELECT count(*) AS n FROM documents), "
+    "c AS (SELECT doc_id, j, "
+    "CAST(('0x' || substr(md5('neg:' || CAST(doc_id AS VARCHAR) "
+    "|| ':' || CAST(j AS VARCHAR)), 1, 8)) AS BIGINT) % n.n AS raw, "
+    "n.n AS nn FROM documents, n, "
+    "LATERAL unnest([0, 1, 2]) AS t(j)) "
+    "SELECT c.doc_id AS anchor_id, c.j AS neg_rank, "
+    "CASE WHEN c.raw = c.doc_id THEN (c.raw + 1) % c.nn "
+    "ELSE c.raw END AS neg_id, d.n_chars AS neg_chars "
+    "FROM c JOIN documents d ON d.doc_id = "
+    "(CASE WHEN c.raw = c.doc_id THEN (c.raw + 1) % c.nn "
+    "ELSE c.raw END)"
+))
 def _sample_negatives(spark, sf_dir):
     """Deterministic contrastive negative sampling: for every anchor
     document, k=3 pseudo-random negatives drawn by portable md5 hash
@@ -255,7 +332,28 @@ def _sample_negatives(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    # integer per-mille rates (floor `//`), same md5 bucket as
+    # operators/sampling.split_bucket(salt='mix'); DuckDB
+    # sum() widens to HUGEINT, so every sum casts back
+    "WITH t AS (SELECT source AS domain, count(*) AS n_docs, "
+    "CAST(sum(n_chars) AS BIGINT) AS total_size "
+    "FROM documents GROUP BY 1), "
+    "g AS (SELECT CAST(sum(total_size) AS BIGINT) AS g, "
+    "count(*) AS nd FROM t), "
+    "r AS (SELECT domain, n_docs, total_size, "
+    "least(CAST(1000 AS BIGINT), "
+    "(g.g * 500) // (g.nd * total_size)) AS rate_pm FROM t, g), "
+    "k AS (SELECT d.source AS domain, count(*) AS docs_kept, "
+    "CAST(sum(d.n_chars) AS BIGINT) AS size_kept "
+    "FROM documents d JOIN r ON d.source = r.domain "
+    "WHERE (" + hash32_sql("'mix:' || CAST(doc_id AS VARCHAR)")
+    + " % 1000) < r.rate_pm GROUP BY 1) "
+    "SELECT r.domain, r.n_docs, r.total_size, r.rate_pm, "
+    "coalesce(k.docs_kept, 0) AS docs_kept, "
+    "coalesce(k.size_kept, 0) AS size_kept "
+    "FROM r LEFT JOIN k USING (domain)"
+))
 def _mix_domains(spark, sf_dir):
     """Token-budget domain mixing audit: uniform per-source share of a
     50% corpus-size budget, integer per-mille rates, stable-hash keep
@@ -267,7 +365,21 @@ def _mix_domains(spark, sf_dir):
     )
 
 
-@query
+# per-term p^alpha rounds to 12 decimals before the normalizing
+# sum (ln-term replay discipline); everything runs over one row
+# per source
+@query(oracle=(
+    "WITH per AS (SELECT source, count(*) AS n_docs, "
+    "CAST(sum(len(string_split_regex(lower(text), '\\s+'))) "
+    "AS BIGINT) AS tokens FROM documents GROUP BY source), "
+    "s AS (SELECT source, n_docs, tokens, "
+    "round(tokens / CAST(sum(tokens) OVER () AS DOUBLE), 6) "
+    "AS p_raw, "
+    "round(pow(tokens / CAST(sum(tokens) OVER () AS DOUBLE), "
+    "0.3), 12) AS pa FROM per) "
+    "SELECT source, n_docs, tokens, p_raw, "
+    "round(pa / sum(pa) OVER (), 6) AS w_temp FROM s"
+))
 def _mix_temperature(spark, sf_dir):
     """Temperature-scaled domain sampling weights (the multilingual
     mixing rule of Arivazhagan et al. 2019 / used for pretraining
@@ -305,7 +417,19 @@ def _mix_temperature(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH doms AS (SELECT domain, "
+    "row_number() OVER (ORDER BY domain) - 1 AS dom_ix, "
+    "(SELECT count(DISTINCT source) FROM documents) AS n_dom "
+    "FROM (SELECT DISTINCT source AS domain FROM documents)), "
+    "ranked AS (SELECT doc_id AS key, source AS domain, "
+    "row_number() OVER (PARTITION BY source ORDER BY "
+    + hash32_sql("'interleave:' || CAST(doc_id AS VARCHAR)")
+    + ", doc_id) AS rnk FROM documents) "
+    "SELECT (rnk - 1) * n_dom + dom_ix AS position, key, domain "
+    "FROM ranked JOIN doms USING (domain) "
+    "WHERE (rnk - 1) * n_dom + dom_ix < 100 ORDER BY position"
+))
 def _sample_interleave(spark, sf_dir):
     """Deterministic round-robin epoch order over sources: per-domain
     hash ranking + interleave, pruned per-domain before the final
@@ -317,7 +441,42 @@ def _sample_interleave(spark, sf_dir):
     )
 
 
-@query
+def _kcenter_oracle_sql(k: int = 8) -> str:
+    """Replay greedy k-center exactly: same squared-L2 composition
+    rounded to 5, same (mind DESC, vec_id ASC) argmax, same constant
+    seed round."""
+    d2 = (
+        "round(list_dot_product(w.v, w.v) - 2*list_dot_product(w.v, c.v) "
+        "+ list_dot_product(c.v, c.v), 5)"
+    )
+    parts = [
+        "WITH full_v AS (SELECT vec_id, embedding::DOUBLE[] AS fv "
+        "FROM embeddings), "
+        "w0 AS MATERIALIZED (SELECT vec_id, fv AS v, "
+        "CAST(1e18 AS DOUBLE) AS mind FROM full_v)"
+    ]
+    for i in range(1, k + 1):
+        parts.append(
+            f"c{i} AS (SELECT {i} AS step, vec_id, mind, v FROM w{i - 1} "
+            "ORDER BY mind DESC, vec_id ASC LIMIT 1)"
+        )
+        if i < k:
+            parts.append(
+                f"w{i} AS MATERIALIZED (SELECT w.vec_id, w.v, "
+                f"least(w.mind, {d2}) AS mind FROM w{i - 1} w, c{i} c)"
+            )
+    union = " UNION ALL ".join(
+        f"SELECT step, vec_id, mind FROM c{i}" for i in range(1, k + 1)
+    )
+    return (
+        ", ".join(parts)
+        + f" SELECT CAST(step AS INT) AS sel_order, vec_id, "
+        "CASE WHEN step = 1 THEN NULL ELSE mind END AS min_dist "
+        f"FROM ({union})"
+    )
+
+
+@query(oracle=_kcenter_oracle_sql())
 def _sample_kcenter(spark, sf_dir):
     """Greedy k-center diversity selection (k=8): farthest-point
     coreset over the embedding table — k scan-stage passes, one
@@ -329,7 +488,22 @@ def _sample_kcenter(spark, sf_dir):
     return kcenter_select(_embs(spark, sf_dir), k=8)
 
 
-@query
+@query(oracle=(
+    "WITH a AS (SELECT doc_id, text, "
+    "list_filter(string_split_regex(lower(text), '\\s+'), "
+    "t -> len(t) > 0) AS arr FROM documents), "
+    "g AS (SELECT doc_id, text, len(arr) AS n_tokens FROM a "
+    "WHERE len(arr) >= 20), "
+    "reps AS (SELECT min(doc_id) AS doc_id FROM ("
+    "SELECT doc_id, md5(trim(regexp_replace(lower(text), "
+    "'\\s+', ' ', 'g'))) AS dg FROM g) GROUP BY dg), "
+    "k AS (SELECT g.doc_id, g.n_tokens FROM g "
+    "JOIN reps USING (doc_id)) "
+    "SELECT CAST(('0x' || substr(md5('export:' || "
+    "CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS shard, "
+    "count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) "
+    "AS total_tokens FROM k GROUP BY shard"
+))
 def _export_training_shards(spark, sf_dir):
     """End-to-end training-data export capstone: quality-gate (>= 20
     tokens) -> exact-dedup keep-lowest-id -> deterministic hash shards

@@ -1,7 +1,6 @@
 """Structured Streaming queries drained to completion.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -9,10 +8,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_on_dataframes_spark.operators.hashing import (
+    hash32_sql,
+    perm_hash_sql,
+)
+
 from .common import _events, _t, query
+from .dedup import _lsh_index_maintain_oracle
 
 
-@query
+# the streaming twin is checked against the SAME SQL as the
+# batch plan — decimal-exact sums make stream output
+# bit-identical to batch, so a real streaming execution
+# (watermark + window state) passes an exact oracle
+@query(oracle=(
+    "SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS sum_value FROM events "
+    "GROUP BY date_trunc('hour', ts), event_type"
+))
 def _stream_hourly_agg(spark, sf_dir):
     """Structured Streaming twin of ev_hourly_agg, driven to completion
     with an availableNow trigger into a memory sink and returned as a
@@ -40,7 +54,28 @@ def _stream_hourly_agg(spark, sf_dir):
     )
     return spark.table(name)
 
-@query
+# drained-to-completion stream (sentinel watermark advance)
+# emits the full session set -> same oracle as the batch twin;
+# session_value tolerance: the stream sums doubles sequentially
+# in event order, the oracle decimal-exactly — both round to 4
+# decimals, and the comparator re-rounds at 6, so they agree
+@query(oracle=(
+    "WITH g AS (SELECT user_id, event_id, value, ts, "
+    "CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) IS NULL "
+    "OR epoch_us(ts) - lag(epoch_us(ts)) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id) > 1800000000 "
+    "THEN 1 ELSE 0 END AS new_sess FROM events), "
+    "s AS (SELECT user_id, value, sum(new_sess) OVER "
+    "(PARTITION BY user_id ORDER BY ts, event_id "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq "
+    "FROM g) "
+    "SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, "
+    "count(*) AS n_events, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS session_value FROM s "
+    "GROUP BY user_id, session_seq"
+))
 def _stream_sessionize(spark, sf_dir):
     """Custom stateful streaming sessionization (applyInPandasWithState,
     30-min gap, event-time timeout), drained to COMPLETION: two
@@ -70,7 +105,11 @@ def _stream_sessionize(spark, sf_dir):
         "session_value",
     )
 
-@query
+# single-drain streaming dedup keeps every key in state (the
+# watermark never passes it), so the emitted keys == DISTINCT
+@query(oracle=(
+    "SELECT DISTINCT user_id, event_type FROM events"
+))
 def _stream_dedup(spark, sf_dir):
     """Streaming exact dedup via ``dropDuplicatesWithinWatermark`` on
     (user_id, event_type), drained with availableNow. In a single-drain
@@ -103,7 +142,11 @@ def _stream_dedup(spark, sf_dir):
     )
     return spark.table(name)
 
-@query
+@query(oracle=(
+    "SELECT user_id % 7 AS segment, event_type, count(*) AS n, "
+    "CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) "
+    "AS sum_value FROM events GROUP BY 1, 2"
+))
 def _stream_enrich(spark, sf_dir):
     """Stream-static enrichment: the event stream joins a small static
     dimension (user -> segment) broadcast into every micro-batch — the
@@ -147,7 +190,13 @@ def _stream_enrich(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT date_trunc('hour', l.ts) AS view_hour, count(*) AS n_pairs "
+    "FROM events l JOIN events r ON l.user_id = r.user_id "
+    "AND l.event_type = 'view' AND r.event_type = 'purchase' "
+    "AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR "
+    "GROUP BY 1"
+))
 def _stream_stream_join(spark, sf_dir):
     """Watermarked stream-stream inner join: purchases within 1 hour
     AFTER a view by the same user. Both sides carry watermarks and the
@@ -187,7 +236,14 @@ def _stream_stream_join(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH c AS (SELECT date_trunc('hour', ts) AS hour, event_type, "
+    "count(*) AS n FROM events GROUP BY 1, 2), "
+    "r AS (SELECT hour, event_type, n, row_number() OVER "
+    "(PARTITION BY hour ORDER BY n DESC, event_type) AS rk FROM c) "
+    "SELECT hour, event_type, n, CAST(rk AS INTEGER) AS rk "
+    "FROM r WHERE rk <= 3"
+))
 def _stream_windowed_topk(spark, sf_dir):
     """Streaming-fed windowed top-k: the hourly counts come from a REAL
     Structured Streaming execution (watermark + tumbling window +
@@ -228,7 +284,13 @@ def _stream_windowed_topk(spark, sf_dir):
     )
 
 
-@query
+# the incremental 3-batch foreachBatch merge must equal the
+# one-pass batch aggregate (batching-invariance IS the claim)
+@query(oracle=(
+    "SELECT user_id, count(*) AS n, "
+    "round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) "
+    "AS sum_value FROM events GROUP BY 1"
+))
 def _stream_mv_upsert(spark, sf_dir):
     """Incrementally maintained materialized aggregate: the events file
     is re-staged as THREE parquet files and drained one file per
@@ -263,7 +325,20 @@ def _stream_mv_upsert(spark, sf_dir):
     )
 
 
-@query
+#: count-min sketch cells of the oracle: 3 hash rows x 1024 buckets
+_CMS_BUCKETS = " UNION ALL ".join(
+    f"SELECT {r} AS r, {perm_hash_sql(hash32_sql('tok'), r)} % 1024 AS bk"
+    " FROM items"
+    for r in range(3)
+)
+
+
+@query(oracle=(
+    "WITH items AS (SELECT CAST(user_id AS VARCHAR) AS tok "
+    "FROM events), "
+    f"b AS ({_CMS_BUCKETS}) "
+    "SELECT r, bk, count(*) AS c FROM b GROUP BY r, bk"
+))
 def _stream_cms(spark, sf_dir):
     """Continuously maintained count-min sketch: events re-staged as
     three files, drained one per micro-batch, each batch's partial
@@ -290,10 +365,12 @@ def _stream_cms(spark, sf_dir):
     )
     return state.select("r", "bk", "c")
 
-@query
+# the streaming drain reproduces the batch lifecycle exactly:
+# same grown-index replay as dedup_index_maintain
+@query(oracle=_lsh_index_maintain_oracle(16, 4, 0.5))
 def _stream_index_maintain(spark, sf_dir):
     """Continuous-ingest index maintenance through a REAL Structured
-    Streaming drain (r11): the corpus slice (doc_id % 7 == 0) is
+    Streaming drain: the corpus slice (doc_id % 7 == 0) is
     indexed once, then two ingest waves (% 7 == 1, then % 7 == 2)
     arrive as ordered micro-batches; each batch is probed against the
     index AS OF the previous batch inside foreachBatch and then
@@ -336,10 +413,80 @@ def _stream_index_maintain(spark, sf_dir):
         "doc_id", "n_matches", "max_jaccard",
     )
 
-@query
+def _stream_ann_maintain_oracle() -> str:
+    """Grown-index replay for the STREAMING vector maintain (mirrors
+    registry.streaming._stream_ann_maintain): the base split
+    (vec_id % 10 not in (0, 5)) elects the centroids and the phase-1
+    member set; phase 2 adds wave 1 (% 20 = 5) under the frozen
+    quantizer. Each wave's ARRIVING vectors are the queries — wave 1
+    (% 20 = 5) scores against the base members only (it is probed
+    before its own append), wave 2 (% 20 = 15) against base + wave 1.
+    Top-10 per query by cosine within its 4 probed lists."""
+    phase_block = (
+        "qa{p} AS (SELECT q.query_id, q.vq, cent.cid, "
+        "round(list_dot_product(q.vq, cent.cv) / "
+        "(sqrt(list_dot_product(q.vq, q.vq)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS qsim "
+        "FROM q{p} q, cent), "
+        "probes{p} AS (SELECT query_id, vq, cid FROM ("
+        "SELECT query_id, vq, cid, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY qsim DESC, cid ASC) AS pr "
+        "FROM qa{p}) WHERE pr <= 4), "
+        "s{p} AS (SELECT pr.query_id, m.vec_id, "
+        "round(list_dot_product(pr.vq, m.v) / "
+        "(sqrt(list_dot_product(pr.vq, pr.vq)) * "
+        "sqrt(list_dot_product(m.v, m.v))), 5) AS cos "
+        "FROM member{p} m JOIN probes{p} pr ON m.cid = pr.cid "
+        "WHERE pr.query_id != m.vec_id), "
+        "r{p} AS (SELECT query_id, vec_id, cos, row_number() OVER "
+        "(PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) "
+        "AS rank FROM s{p})"
+    )
+    member = (
+        "assign{p} AS (SELECT u.vec_id, u.v, cent.cid, "
+        "round(list_dot_product(u.v, cent.cv) / "
+        "(sqrt(list_dot_product(u.v, u.v)) * "
+        "sqrt(list_dot_product(cent.cv, cent.cv))), 5) AS sim "
+        "FROM {src} u, cent), "
+        "member{p} AS (SELECT vec_id, v, cid FROM ("
+        "SELECT vec_id, v, cid, row_number() OVER "
+        "(PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn "
+        "FROM assign{p}) WHERE rn = 1)"
+    )
+    return (
+        "WITH call AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+        "FROM embeddings), "
+        "c AS (SELECT vec_id, v FROM call "
+        "WHERE vec_id % 10 NOT IN (0, 5)), "
+        "ch AS (SELECT vec_id, v, "
+        "CAST(('0x' || substr(md5(CAST('ivf:' || CAST(vec_id AS VARCHAR) "
+        "AS VARCHAR)), 1, 8)) AS BIGINT) AS h FROM c), "
+        "cent AS (SELECT vec_id AS cid, v AS cv FROM ("
+        "SELECT vec_id, v, row_number() OVER "
+        "(PARTITION BY h % 16 ORDER BY h, vec_id) AS rn FROM ch) "
+        "WHERE rn = 1), "
+        "grown AS (SELECT vec_id, v FROM c UNION ALL "
+        "SELECT vec_id, v FROM call WHERE vec_id % 20 = 5), "
+        + member.format(p=1, src="c") + ", "
+        + member.format(p=2, src="grown") + ", "
+        "q1 AS (SELECT vec_id AS query_id, v AS vq FROM call "
+        "WHERE vec_id % 20 = 5), "
+        "q2 AS (SELECT vec_id AS query_id, v AS vq FROM call "
+        "WHERE vec_id % 20 = 15), "
+        + phase_block.format(p=1) + ", "
+        + phase_block.format(p=2)
+        + " SELECT CAST(1 AS INTEGER) AS phase, query_id, vec_id, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r1 WHERE rank <= 10 "
+        "UNION ALL "
+        "SELECT CAST(2 AS INTEGER) AS phase, query_id, vec_id, cos, "
+        "CAST(rank AS INTEGER) AS rank FROM r2 WHERE rank <= 10"
+    )
+
+
+@query(oracle=_stream_ann_maintain_oracle())
 def _stream_ann_maintain(spark, sf_dir):
     """Continuous-ingest VECTOR index maintenance through a real
-    Structured Streaming drain (r12) — the IVF twin of
+    Structured Streaming drain — the IVF twin of
     :func:`_stream_index_maintain`, completing the lifecycle matrix
     {LSH, IVF} x {batch, streaming}: the base corpus
     (vec_id % 10 not in (0, 5)) is indexed once, then two ingest

@@ -1,7 +1,6 @@
 """Text analysis and curation pipeline queries.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -9,34 +8,120 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from task_on_dataframes_spark.operators.dedup import (
+    CHAR_LSH_BANDS,
+    CHAR_LSH_NUM_PERM,
+)
+from task_on_dataframes_spark.operators.hashing import hash32_sql
+
 from .common import _BM25_TERMS, _CLS_WEIGHTS_FP, _docs, _embs, _t, query
+from .dedup import _lsh_cand_ctes, _lsh_g_char
+from .embeddings import _COS
 
 
-@query
+@query(oracle=(
+    "SELECT doc_id, "
+    "len(string_split_regex(lower(text), '\\s+')) AS n_tokens, "
+    "len(list_distinct(string_split_regex(lower(text), '\\s+'))) "
+    "AS n_distinct_tokens, "
+    "length(text) AS n_chars, "
+    "round((length(text) - len(string_split_regex(lower(text), '\\s+')) + 1) "
+    "/ len(string_split_regex(lower(text), '\\s+')), 4) AS mean_token_len "
+    "FROM documents"
+))
 def _text_token_stats(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import token_stats
 
     return token_stats(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
-@query
+def _stop_arr(lang: str) -> str:
+    from task_on_dataframes_spark.operators.textstats import STOPWORDS
+
+    return "[" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "]"
+
+
+@query(oracle=(
+    "WITH b AS (SELECT doc_id, text, "
+    "string_split_regex(lower(text), '\\s+') AS ts FROM documents) "
+    "SELECT doc_id, len(ts) AS n_tokens, "
+    f"round(len(list_filter(ts, t -> list_contains({_stop_arr('en')}, t))) "
+    "/ len(ts), 6) AS stopword_ratio, "
+    "CASE WHEN length(text) > 0 THEN "
+    "round(length(regexp_replace(text, '[\\w\\s]', '', 'g')) / length(text), 6) "
+    "END AS punct_ratio, "
+    "round(least(len(ts) / 100.0, 1.0), 6) AS length_score FROM b"
+))
 def _text_quality(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import quality_score
 
     return quality_score(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
-@query
+@query(oracle=(
+    "WITH base AS (SELECT doc_id, "
+    "string_split_regex(lower(text), '\\s+') AS toks, "
+    "list_filter(string_split(text, chr(10)), "
+    "l -> trim(l) <> '') AS lines FROM documents), "
+    "g AS (SELECT doc_id, toks, lines, "
+    "CASE WHEN len(toks) >= 2 THEN list_transform("
+    "range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]) "
+    "ELSE CAST([] AS VARCHAR[]) END AS g2, "
+    "CASE WHEN len(toks) >= 3 THEN list_transform("
+    "range(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i+1] "
+    "|| ' ' || toks[i+2]) ELSE CAST([] AS VARCHAR[]) END AS g3 "
+    "FROM base), "
+    "top2 AS (SELECT doc_id, max(c) AS topc FROM "
+    "(SELECT doc_id, gram, count(*) AS c FROM "
+    "(SELECT doc_id, unnest(g2) AS gram FROM g) "
+    "GROUP BY doc_id, gram) GROUP BY doc_id) "
+    "SELECT g.doc_id, CAST(len(toks) AS INT) AS n_tokens, "
+    "CASE WHEN len(lines) > 0 THEN round((len(lines) - "
+    "len(list_distinct(lines))) / CAST(len(lines) AS DOUBLE), 6) "
+    "ELSE 0.0 END AS dup_line_frac, "
+    "CASE WHEN len(toks) > 0 THEN round((len(toks) - "
+    "len(list_distinct(toks))) / CAST(len(toks) AS DOUBLE), 6) "
+    "ELSE 0.0 END AS dup_token_frac, "
+    "CASE WHEN len(g2) > 0 THEN round(coalesce(top2.topc, 0) / "
+    "CAST(len(g2) AS DOUBLE), 6) ELSE 0.0 END AS top_2gram_frac, "
+    "CASE WHEN len(g2) > 0 THEN round((len(g2) - "
+    "len(list_distinct(g2))) / CAST(len(g2) AS DOUBLE), 6) "
+    "ELSE 0.0 END AS dup_2gram_frac, "
+    "CASE WHEN len(g3) > 0 THEN round((len(g3) - "
+    "len(list_distinct(g3))) / CAST(len(g3) AS DOUBLE), 6) "
+    "ELSE 0.0 END AS dup_3gram_frac, "
+    "(CASE WHEN len(g2) > 0 THEN round(coalesce(top2.topc, 0) / "
+    "CAST(len(g2) AS DOUBLE), 6) ELSE 0.0 END > 0.20 OR "
+    "CASE WHEN len(g3) > 0 THEN round((len(g3) - "
+    "len(list_distinct(g3))) / CAST(len(g3) AS DOUBLE), 6) "
+    "ELSE 0.0 END > 0.18) AS is_repetitive "
+    "FROM g LEFT JOIN top2 ON g.doc_id = top2.doc_id"
+))
 def _text_repetition(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import repetition_stats
 
     return repetition_stats(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT doc_id, "
+    "string_split_regex(lower(text), '\\s+') AS ts FROM documents), "
+    "s AS (SELECT doc_id, "
+    + ", ".join(
+        f"len(list_filter(ts, t -> list_contains({_stop_arr(lang)}, t))) "
+        f"AS score_{lang}"
+        for lang in ["en", "de", "fr", "es"]
+    )
+    + " FROM b) "
+    "SELECT doc_id, score_en, score_de, score_fr, score_es, "
+    "CASE WHEN score_en >= score_de AND score_en >= score_fr "
+    "AND score_en >= score_es THEN 'en' "
+    "WHEN score_de >= score_fr AND score_de >= score_es THEN 'de' "
+    "WHEN score_fr >= score_es THEN 'fr' ELSE 'es' END AS pred_lang FROM s"
+))
 def _text_langid(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import lang_id
 
     return lang_id(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
-@query
+@query(oracle="WITH s AS (SELECT doc_id, length(regexp_replace(substr(text, 1, 512), '[^A-Za-z]', '', 'g')) AS n_latin, length(regexp_replace(substr(text, 1, 512), '[^\\x{4e00}-\\x{9fff}]', '', 'g')) AS n_cjk, length(regexp_replace(substr(text, 1, 512), '[^\\x{0600}-\\x{06ff}]', '', 'g')) AS n_arabic, length(regexp_replace(substr(text, 1, 512), '[^\\x{0400}-\\x{04ff}]', '', 'g')) AS n_cyrillic, length(regexp_replace(substr(text, 1, 512), '[^\\x{0370}-\\x{03ff}]', '', 'g')) AS n_greek, length(regexp_replace(substr(text, 1, 512), '[^\\x{0900}-\\x{097f}]', '', 'g')) AS n_devanagari, length(regexp_replace(substr(text, 1, 512), '[^\\x{ac00}-\\x{d7af}]', '', 'g')) AS n_hangul, length(regexp_replace(substr(text, 1, 512), '[^\\x{3040}-\\x{30ff}]', '', 'g')) AS n_kana FROM documents) SELECT doc_id, n_latin, n_cjk, n_arabic, n_cyrillic, n_greek, n_devanagari, n_hangul, n_kana, CASE WHEN greatest(n_latin, n_cjk, n_arabic, n_cyrillic, n_greek, n_devanagari, n_hangul, n_kana) > 0 THEN CASE WHEN n_latin >= n_cjk AND n_latin >= n_arabic AND n_latin >= n_cyrillic AND n_latin >= n_greek AND n_latin >= n_devanagari AND n_latin >= n_hangul AND n_latin >= n_kana THEN 'latin' WHEN n_cjk >= n_arabic AND n_cjk >= n_cyrillic AND n_cjk >= n_greek AND n_cjk >= n_devanagari AND n_cjk >= n_hangul AND n_cjk >= n_kana THEN 'cjk' WHEN n_arabic >= n_cyrillic AND n_arabic >= n_greek AND n_arabic >= n_devanagari AND n_arabic >= n_hangul AND n_arabic >= n_kana THEN 'arabic' WHEN n_cyrillic >= n_greek AND n_cyrillic >= n_devanagari AND n_cyrillic >= n_hangul AND n_cyrillic >= n_kana THEN 'cyrillic' WHEN n_greek >= n_devanagari AND n_greek >= n_hangul AND n_greek >= n_kana THEN 'greek' WHEN n_devanagari >= n_hangul AND n_devanagari >= n_kana THEN 'devanagari' WHEN n_hangul >= n_kana THEN 'hangul' WHEN true THEN 'kana' END ELSE 'none' END AS script FROM s")
 def _text_langid_script(spark, sf_dir):
     """Script-block language detection (operators/textstats.py:
     script_id): per-script character counts via scan-stage regex
@@ -46,8 +131,7 @@ def _text_langid_script(spark, sf_dir):
 
     Scale shape, measured at sf1 (500k docs): 512-char prefix sample
     (CLD-style) + the exploded-argmax form of script_id = ~4 s, vs
-    ~8-11 s for full-text / fold-inlined variants tried first (the
-    r7 sweep's first attempt measured 7.7 s). A parallelism-floor
+    ~8-11 s for full-text / fold-inlined variants. A parallelism-floor
     repartition was measured NOT to help here: Catalyst keeps the
     count projection above the exchange but 32-way regex execution
     gains only ~1.4x over the 2-task scan (memory-bandwidth-bound
@@ -58,26 +142,81 @@ def _text_langid_script(spark, sf_dir):
 
     return script_id(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
-@query
+@query(oracle=(
+    "SELECT doc_id, "
+    "len(string_split_regex(text, '\\s+')) AS n_ws_tokens, "
+    "len(list_filter(regexp_extract_all(text, "
+    "'''[a-z]{1,2}| ?[a-zA-Z]+| ?[0-9]{1,3}| ?[^a-zA-Z0-9\\s]+|\\s+'), "
+    "p -> regexp_matches(p, '\\S'))) AS n_bpe_pieces, "
+    "CASE WHEN len(list_filter(regexp_extract_all(text, "
+    "'''[a-z]{1,2}| ?[a-zA-Z]+| ?[0-9]{1,3}| ?[^a-zA-Z0-9\\s]+|\\s+'), "
+    "p -> regexp_matches(p, '\\S'))) > 0 THEN "
+    "round(length(text) / len(list_filter(regexp_extract_all(text, "
+    "'''[a-z]{1,2}| ?[a-zA-Z]+| ?[0-9]{1,3}| ?[^a-zA-Z0-9\\s]+|\\s+'), "
+    "p -> regexp_matches(p, '\\S'))), 4) END AS chars_per_piece "
+    "FROM documents"
+))
 def _text_token_count(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import token_count_estimate
 
     return token_count_estimate(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
-@query
+@query(oracle=(
+    "WITH nrm AS (SELECT doc_id, "
+    "trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm "
+    "FROM documents), "
+    "g AS (SELECT doc_id, norm, substr(norm, i.i, 8) AS gram FROM nrm, "
+    "LATERAL unnest(generate_series(1, greatest(length(norm) - 7, 1))) "
+    "AS i(i)) "
+    "SELECT doc_id, min(md5(norm)) AS digest, "
+    "min(CAST(('0x' || substr(md5(CAST(gram AS VARCHAR)), 1, 8)) AS BIGINT)) "
+    "AS min_shingle_hash FROM g GROUP BY doc_id"
+))
 def _text_fingerprint(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import doc_fingerprint
 
     return doc_fingerprint(_docs(spark, sf_dir), "doc_id", "text")
 
-@query
+@query(oracle=(
+    "WITH toks AS (SELECT doc_id, "
+    "regexp_replace(t.tok, '^\\W+|\\W+$', '') AS tok "
+    "FROM (SELECT doc_id, "
+    "unnest(string_split_regex(lower(text), '\\s+')) AS tok "
+    "FROM documents) t), "
+    "clean AS (SELECT doc_id, tok FROM toks WHERE length(tok) >= 2), "
+    "tf AS (SELECT doc_id, tok, count(*) AS tf FROM clean "
+    "GROUP BY doc_id, tok), "
+    "dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok), "
+    "n AS (SELECT count(*) AS n FROM documents), "
+    "scored AS (SELECT tf.doc_id, tf.tok, "
+    "tf.tf * ln(n.n / dfreq.df) AS score "
+    "FROM tf JOIN dfreq ON tf.tok = dfreq.tok CROSS JOIN n), "
+    "ranked AS (SELECT doc_id, tok, score, row_number() OVER "
+    "(PARTITION BY doc_id ORDER BY score DESC, tok ASC) AS rn "
+    "FROM scored) "
+    "SELECT doc_id, tok AS token, round(score, 6) AS tfidf, rn "
+    "FROM ranked WHERE rn <= 3"
+))
 def _text_tfidf(spark, sf_dir):
     from task_on_dataframes_spark.operators.text import tfidf_top_terms
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     return tfidf_top_terms(docs, "doc_id", "text", k=3)
 
-@query
+@query(oracle=(
+    "WITH t AS (SELECT doc_id, string_split_regex(text, '\\s+') AS ts "
+    "FROM documents), "
+    "c AS (SELECT doc_id, CAST(i.i AS INT) AS chunk_id, "
+    "CAST(least(len(ts) - i.i * 64, 64) AS INT) AS n_tokens "
+    "FROM t, LATERAL unnest(generate_series(0, "
+    "CAST(ceil(len(ts) / 64.0) AS INT) - 1)) AS i(i)), "
+    "s AS (SELECT *, sum(n_tokens) OVER (ORDER BY doc_id, chunk_id "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens "
+    "AS start FROM c) "
+    "SELECT CAST(floor(start / 2048) AS BIGINT) AS pack_id, "
+    "count(*) AS n_chunks, CAST(sum(n_tokens) AS BIGINT) AS pack_tokens "
+    "FROM s GROUP BY 1"
+))
 def _text_pack(spark, sf_dir):
     """Sequence packing: chunk the corpus, then assign chunks to
     2048-token packs by global token offset — computed with the
@@ -95,14 +234,38 @@ def _text_pack(spark, sf_dir):
         F.sum("n_tokens").alias("pack_tokens"),
     )
 
-@query
+@query(oracle=(
+    "WITH t AS (SELECT doc_id, string_split_regex(text, '\\s+') AS ts "
+    "FROM documents) "
+    "SELECT doc_id, CAST(i.i AS INT) AS chunk_id, "
+    "array_to_string(ts[i.i * 64 + 1 : i.i * 64 + 64], ' ') AS chunk, "
+    "CAST(least(len(ts) - i.i * 64, 64) AS INT) AS n_tokens "
+    "FROM t, LATERAL unnest(generate_series(0, "
+    "CAST(ceil(len(ts) / 64.0) AS INT) - 1)) AS i(i)"
+))
 def _text_chunk(spark, sf_dir):
     from task_on_dataframes_spark.operators.text import chunk_text
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     return chunk_text(docs, "doc_id", "text", chunk_tokens=64)
 
-@query
+# the digest proves the full PSM string byte-for-byte
+@query(oracle=(
+    "WITH x AS (SELECT doc_id, text, length(text) AS L, "
+    "(doc_id * 37) % (length(text) + 1) AS h1, "
+    "(doc_id * 61) % (length(text) + 1) AS h2 FROM documents), "
+    "y AS (SELECT doc_id, text, L, "
+    "least(h1, h2) AS a, greatest(h1, h2) AS b FROM x), "
+    "z AS (SELECT doc_id, a, b, "
+    "'<PRE>' || substr(text, 1, CAST(a AS INT)) || '<SUF>' || "
+    "substr(text, CAST(b + 1 AS INT), CAST(L - b AS INT)) || "
+    "'<MID>' || "
+    "substr(text, CAST(a + 1 AS INT), CAST(b - a AS INT)) "
+    "AS fim FROM y) "
+    "SELECT doc_id, CAST(a AS INT) AS cut1, CAST(b AS INT) "
+    "AS cut2, CAST(b - a AS INT) AS mid_len, md5(fim) "
+    "AS fim_digest, substr(fim, 1, 48) AS fim_head FROM z"
+))
 def _text_fim_transform(spark, sf_dir):
     """Fill-in-the-middle transform (Bavarian et al. 2022, the code-LLM
     pretraining rewrite): split each document at two deterministic
@@ -143,7 +306,19 @@ def _text_fim_transform(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH t AS (SELECT doc_id, "
+    "unnest(string_split_regex(lower(text), '\\s+')) AS tok "
+    "FROM documents), "
+    "b AS (SELECT doc_id, "
+    "(CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % 16) AS bkt "
+    "FROM t), "
+    "z AS (SELECT doc_id, CAST(sum("
+    f"({_CLS_WEIGHTS_FP})[bkt + 1]"
+    ") AS BIGINT) AS z_fp FROM b GROUP BY doc_id) "
+    "SELECT doc_id, z_fp, z_fp / 10000.0 AS score, "
+    "z_fp > 0 AS is_positive FROM z"
+))
 def _text_classifier(spark, sf_dir):
     """Model-based quality filter: score each document with a
     fasttext-style hashed linear classifier (16 md5 buckets, integer
@@ -160,19 +335,56 @@ def _text_classifier(spark, sf_dir):
         _CLS_WEIGHTS_FP,
     )
 
-@query
+def _pii_redact_oracle() -> str:
+    """Render the PII-scrub oracle from the SAME pattern table the
+    Spark operator uses (single source of truth; the patterns are
+    restricted to the Java-regex/RE2 common subset)."""
+    from task_on_dataframes_spark.operators.textstats import PII_PATTERNS
+
+    counts = ", ".join(
+        f"CAST(len(regexp_extract_all(text, '{pat}')) AS INT) AS n_{name}"
+        for name, pat, _ in PII_PATTERNS
+    )
+    red = "text"
+    for _, pat, repl in PII_PATTERNS:
+        red = f"regexp_replace({red}, '{pat}', '{repl}', 'g')"
+    return (
+        f"SELECT doc_id, {counts}, CAST(length({red}) AS INT) AS redacted_len "
+        "FROM documents"
+    )
+
+
+@query(oracle=_pii_redact_oracle())
 def _text_pii_redact(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import pii_redact
 
     return pii_redact(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
-@query
+@query(oracle=(
+    "WITH t AS (SELECT string_split_regex(lower(text), '\\s+') AS ts "
+    "FROM documents), "
+    "g AS (SELECT ts[i.i] || ' ' || ts[i.i + 1] AS gram "
+    "FROM t, LATERAL unnest(generate_series(1, len(ts) - 1)) AS i(i) "
+    "WHERE len(ts) >= 2) "
+    "SELECT gram, count(*) AS cnt FROM g GROUP BY gram "
+    "ORDER BY cnt DESC, gram ASC LIMIT 100"
+))
 def _text_ngram_counts(spark, sf_dir):
     from task_on_dataframes_spark.operators.text import ngram_counts
 
     return ngram_counts(_docs(spark, sf_dir), "text", n=2, k=100)
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT doc_id, "
+    "list_filter(string_split_regex(text, '[.!?]+\\s+'), "
+    "s -> trim(s) <> '') AS ss FROM documents), "
+    "g AS (SELECT doc_id, ss, "
+    "unnest(generate_series(1, len(ss))) AS i FROM b) "
+    "SELECT doc_id, CAST(i - 1 AS INT) AS sent_idx, "
+    "trim(ss[i]) AS sentence, "
+    "CAST(len(string_split_regex(trim(ss[i]), '\\s+')) AS INT) "
+    "AS n_tokens FROM g"
+))
 def _text_sentences(spark, sf_dir):
     """Sentence segmentation + per-sentence token counts: one regex
     split (Java/RE2-common pattern, no lookbehind) + posexplode that
@@ -195,7 +407,22 @@ def _text_sentences(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT doc_id, "
+    "string_split_regex(lower(text), '\\s+') AS ts FROM documents), "
+    "q AS (SELECT doc_id, len(ts) AS n_tokens, "
+    "round(len(list_filter(ts, t -> list_contains("
+    "['the','a','of','and','to','in','is','it','for','on'], t))) "
+    "/ len(ts), 6) AS sr FROM b), "
+    "th AS (SELECT round(quantile_cont(sr, 0.25), 6) AS q25, "
+    "round(quantile_cont(sr, 0.5), 6) AS q50, "
+    "round(quantile_cont(sr, 0.75), 6) AS q75 FROM q) "
+    "SELECT 1 + CAST(sr > q25 AS INT) + CAST(sr > q50 AS INT) "
+    "+ CAST(sr > q75 AS INT) AS bin, count(*) AS n_docs, "
+    "round(CAST(sum(n_tokens) AS DOUBLE) / count(*), 6) "
+    "AS mean_tokens, min(sr) AS min_sr, max(sr) AS max_sr "
+    "FROM q, th GROUP BY 1"
+))
 def _curriculum_quality_bins(spark, sf_dir):
     """Curriculum construction: bin the corpus into quality quartiles
     by exact stopword-ratio percentiles, then per-bin stats. The
@@ -234,7 +461,65 @@ def _curriculum_quality_bins(spark, sf_dir):
         )
     )
 
-@query
+def _curation_oracle_sql(
+    min_tokens: int = 20,
+    min_stop: float = 0.015,
+    top2_thr: float = 0.20,
+    dup3_thr: float = 0.18,
+) -> str:
+    """DuckDB twin of textstats.curation_verdicts: same lexicons, same
+    argmax tie order, same rounded signals, same gate priority."""
+    lex = {
+        "en": "['the','a','of','and','to','in','is','it','for','on']",
+        "de": "['der','die','das','und','ist','ein','zu','mit','von','auf']",
+        "fr": "['le','la','les','et','est','un','une','de','pour','dans']",
+        "es": "['el','la','los','las','y','es','un','una','de','para']",
+    }
+    scores = ", ".join(
+        f"len(list_filter(ts, t -> list_contains({w}, t))) AS score_{lang}"
+        for lang, w in lex.items()
+    )
+    return (
+        "WITH b AS (SELECT doc_id, "
+        "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS digest, "
+        "string_split_regex(lower(text), '\\s+') AS ts FROM documents), "
+        f"sc AS (SELECT doc_id, digest, ts, len(ts) AS n_tokens, {scores}, "
+        "CASE WHEN len(ts) >= 2 THEN list_transform(range(1, len(ts)), "
+        "i -> ts[i] || ' ' || ts[i+1]) ELSE CAST([] AS VARCHAR[]) END AS g2, "
+        "CASE WHEN len(ts) >= 3 THEN list_transform(range(1, len(ts) - 1), "
+        "i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) "
+        "ELSE CAST([] AS VARCHAR[]) END AS g3 FROM b), "
+        "top2 AS (SELECT doc_id, max(c) AS topc FROM "
+        "(SELECT doc_id, gram, count(*) AS c FROM "
+        "(SELECT doc_id, unnest(g2) AS gram FROM sc) GROUP BY 1, 2) "
+        "GROUP BY 1), "
+        "sig AS (SELECT sc.doc_id, digest, n_tokens, "
+        "CASE WHEN score_en >= score_de AND score_en >= score_fr "
+        "AND score_en >= score_es THEN 'en' "
+        "WHEN score_de >= score_fr AND score_de >= score_es THEN 'de' "
+        "WHEN score_fr >= score_es THEN 'fr' ELSE 'es' END AS pred_lang, "
+        "round(score_en / CAST(n_tokens AS DOUBLE), 6) AS stopword_ratio, "
+        "CASE WHEN len(g2) > 0 THEN "
+        "round(coalesce(topc, 0) / CAST(len(g2) AS DOUBLE), 6) "
+        "ELSE 0.0 END AS top2, "
+        "CASE WHEN len(g3) > 0 THEN "
+        "round((len(g3) - len(list_distinct(g3))) / CAST(len(g3) AS DOUBLE), 6) "
+        "ELSE 0.0 END AS dup3, "
+        "min(sc.doc_id) OVER (PARTITION BY digest) AS rep_id "
+        "FROM sc LEFT JOIN top2 ON sc.doc_id = top2.doc_id), "
+        "r AS (SELECT doc_id, pred_lang, CAST(n_tokens AS INT) AS n_tokens, "
+        "CASE WHEN pred_lang <> 'en' THEN 'lang' "
+        f"WHEN n_tokens < {min_tokens} THEN 'too_short' "
+        f"WHEN stopword_ratio < {min_stop} THEN 'low_stopword' "
+        f"WHEN top2 > {top2_thr} OR dup3 > {dup3_thr} THEN 'repetitive' "
+        "WHEN rep_id <> doc_id THEN 'duplicate' ELSE 'kept' END AS reason "
+        "FROM sig) "
+        "SELECT doc_id, pred_lang, n_tokens, reason, "
+        "reason = 'kept' AS kept FROM r"
+    )
+
+
+@query(oracle=_curation_oracle_sql())
 def _pipeline_c4_curation(spark, sf_dir):
     """Flagship curation pass: language gate -> length gate ->
     stopword gate -> Gopher repetition gate -> exact-dup keep-one, as
@@ -317,12 +602,8 @@ def _multilingual_pipeline_frames(spark, sf_dir):
     (doc_id, text) and ``out`` is the full verdict frame
     (doc_id, script, n_tokens, n_chars, reason, kept). Split out so
     ``pipeline_multilingual_tokens`` can reuse the identical gate +
-    near-dup logic without duplicating it (r8 verdict item 8)."""
-    from task_on_dataframes_spark.operators.dedup import (
-        CHAR_LSH_BANDS,
-        CHAR_LSH_NUM_PERM,
-        minhash_lsh_pairs,
-    )
+    near-dup logic without duplicating it."""
+    from task_on_dataframes_spark.operators.dedup import minhash_lsh_pairs
     from task_on_dataframes_spark.operators.textstats import (
         multilingual_curation_verdicts,
     )
@@ -377,17 +658,151 @@ def _multilingual_pipeline_frames(spark, sf_dir):
     return corp, out
 
 
-@query
+def _multilingual_curation_oracle(
+    min_tokens: int = 20,
+    min_chars: int = 40,
+    min_stop: float = 0.015,
+    top2_thr: float = 0.20,
+    dup3_thr: float = 0.18,
+    char_dup3_thr: float = 0.30,
+    prefix: int = 512,
+) -> str:
+    """DuckDB twin of pipeline_multilingual_curation: the seed corpus
+    renders from the SAME MULTILINGUAL_SEED_DOCS tuples,
+    the script classes/lexicons from the same operator tables, and the
+    char-LSH near-dup stage reuses the shared candidate-CTE renderer
+    over the survivor set — one source of truth end to end."""
+    from task_on_dataframes_spark.operators.textstats import (
+        SCRIPT_RANGES,
+        STOPWORDS,
+    )
+
+    values = ", ".join(
+        f"(CAST({did} AS BIGINT), '{txt}')"
+        for did, txt in MULTILINGUAL_SEED_DOCS
+    )
+    n_cols = ", ".join(
+        f"length(regexp_replace(p, '[^{rng}]', '', 'g')) AS n_{name}"
+        for name, rng in SCRIPT_RANGES
+    )
+    names = [name for name, _ in SCRIPT_RANGES]
+    greatest_all = "greatest(" + ", ".join(f"n_{x}" for x in names) + ")"
+    cases = []
+    for i, name in enumerate(names[:-1]):
+        conds = " AND ".join(
+            f"n_{name} >= n_{other}" for other in names[i + 1 :]
+        )
+        cases.append(f"WHEN {conds} THEN '{name}'")
+    cases.append(f"WHEN true THEN '{names[-1]}'")
+    script_expr = (
+        f"CASE WHEN {greatest_all} > 0 THEN CASE "
+        + " ".join(cases)
+        + " END ELSE 'none' END"
+    )
+    scores = ", ".join(
+        "len(list_filter(ts, t -> list_contains(["
+        + ", ".join(f"'{w}'" for w in words)
+        + f"], t))) AS score_{lang}"
+        for lang, words in STOPWORDS.items()
+    )
+    best_stop = (
+        "greatest(" + ", ".join(f"score_{l}" for l in STOPWORDS) + ")"
+    )
+    # char-LSH CTE chain over the survivor set (same renderer as the
+    # dedup_minhash_char oracle, re-pointed at surv); strip its WITH
+    lsh = _lsh_cand_ctes(
+        CHAR_LSH_NUM_PERM,
+        CHAR_LSH_BANDS,
+        _lsh_g_char(source="surv"),
+        star=True,
+    ).strip()
+    assert lsh.startswith("WITH ")
+    lsh = lsh[len("WITH ") :]
+    return (
+        "WITH corp AS MATERIALIZED (SELECT doc_id, text FROM documents "
+        f"UNION ALL SELECT * FROM (VALUES {values}) v(doc_id, text)), "
+        "b0 AS (SELECT doc_id, text, "
+        "trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS nm, "
+        "list_filter(string_split_regex(lower(text), '\\s+'), "
+        "x -> x <> '') AS ts, "
+        "len(regexp_replace(text, '\\s', '', 'g')) AS n_chars, "
+        f"substr(text, 1, {prefix}) AS p FROM corp), "
+        "sc AS (SELECT doc_id, md5(nm) AS digest, ts, n_chars, "
+        f"len(ts) AS n_tokens, {n_cols}, {scores}, "
+        "CASE WHEN len(ts) >= 2 THEN list_transform(range(1, len(ts)), "
+        "i -> ts[i] || ' ' || ts[i+1]) ELSE CAST([] AS VARCHAR[]) END AS g2, "
+        "CASE WHEN len(ts) >= 3 THEN list_transform(range(1, len(ts) - 1), "
+        "i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) "
+        "ELSE CAST([] AS VARCHAR[]) END AS g3, "
+        f"CASE WHEN len(substr(nm, 1, {prefix})) >= 3 THEN "
+        f"list_transform(generate_series(1, len(substr(nm, 1, {prefix})) - 2), "
+        f"i -> substr(substr(nm, 1, {prefix}), i, 3)) "
+        "ELSE CAST([] AS VARCHAR[]) END AS c3 FROM b0), "
+        "tp AS (SELECT doc_id, max(c) AS topc FROM "
+        "(SELECT doc_id, gram, count(*) AS c FROM "
+        "(SELECT doc_id, unnest(g2) AS gram FROM sc) GROUP BY 1, 2) "
+        "GROUP BY 1), "
+        "sg AS (SELECT sc.doc_id, digest, n_tokens, n_chars, "
+        f"{script_expr} AS script, "
+        "CASE WHEN n_tokens > 0 THEN "
+        f"round({best_stop} / CAST(n_tokens AS DOUBLE), 6) "
+        "ELSE 0.0 END AS stop_ratio, "
+        "CASE WHEN len(g2) > 0 THEN "
+        "round(coalesce(topc, 0) / CAST(len(g2) AS DOUBLE), 6) "
+        "ELSE 0.0 END AS top2, "
+        "CASE WHEN len(g3) > 0 THEN "
+        "round((len(g3) - len(list_distinct(g3))) / CAST(len(g3) AS DOUBLE), 6) "
+        "ELSE 0.0 END AS dup3, "
+        "CASE WHEN len(c3) > 0 THEN "
+        "round((len(c3) - len(list_distinct(c3))) / CAST(len(c3) AS DOUBLE), 6) "
+        "ELSE 0.0 END AS dup3c, "
+        "min(sc.doc_id) OVER (PARTITION BY digest) AS rep_id "
+        "FROM sc LEFT JOIN tp ON sc.doc_id = tp.doc_id), "
+        "r AS MATERIALIZED (SELECT doc_id, script, n_tokens, n_chars, "
+        "CASE WHEN script = 'none' THEN 'no_script' "
+        f"WHEN script = 'latin' AND n_tokens < {min_tokens} "
+        "THEN 'too_short' "
+        f"WHEN script <> 'latin' AND n_chars < {min_chars} "
+        "THEN 'too_short' "
+        f"WHEN script = 'latin' AND (top2 > {top2_thr} "
+        f"OR dup3 > {dup3_thr}) THEN 'repetitive' "
+        f"WHEN script <> 'latin' AND dup3c > {char_dup3_thr} "
+        "THEN 'repetitive' "
+        f"WHEN script = 'latin' AND stop_ratio < {min_stop} "
+        "THEN 'low_stopword' "
+        "WHEN rep_id <> doc_id THEN 'duplicate' "
+        "ELSE 'kept_pre' END AS reason FROM sg), "
+        "surv AS MATERIALIZED (SELECT c.doc_id, c.text FROM corp c "
+        "JOIN r ON r.doc_id = c.doc_id WHERE r.reason = 'kept_pre'), "
+        f"{lsh}, "
+        "vsz AS (SELECT did, count(*) AS sz FROM g GROUP BY did), "
+        "vin AS (SELECT c.a, c.b, count(*) AS inter FROM cand c "
+        "JOIN g ga ON ga.did = c.a "
+        "JOIN g gb ON gb.did = c.b AND gb.tok = ga.tok GROUP BY 1, 2), "
+        "vv AS (SELECT i.a, i.b FROM vin i "
+        "JOIN vsz sa ON i.a = sa.did JOIN vsz sb ON i.b = sb.did "
+        "WHERE round(i.inter / (sa.sz + sb.sz - i.inter), 6) >= 0.5), "
+        "dupb AS (SELECT DISTINCT b FROM vv) "
+        "SELECT doc_id, script, CAST(n_tokens AS INT) AS n_tokens, "
+        "CAST(n_chars AS INT) AS n_chars, reason, "
+        "reason = 'kept' AS kept FROM ("
+        "SELECT r.doc_id, script, n_tokens, n_chars, "
+        "CASE WHEN r.reason <> 'kept_pre' THEN r.reason "
+        "WHEN r.doc_id IN (SELECT b FROM dupb) THEN 'near_duplicate' "
+        "ELSE 'kept' END AS reason FROM r)"
+    )
+
+
+@query(oracle=_multilingual_curation_oracle())
 def _pipeline_multilingual_curation(spark, sf_dir):
-    """Flagship MULTILINGUAL curation pass (r7 verdict item 4: the
-    round-7 operators existed but the C4 flagship still killed every
-    CJK document at its Latin gates). Composition, in gate-priority
+    """Flagship MULTILINGUAL curation pass (the C4 flagship's Latin
+    gates would kill every CJK document). Composition, in gate-priority
     order: script routing (script_id's prefix-sampled argmax) ->
     script-appropriate quality gates (word gates + multilingual
     stopword lexicons for Latin; char-count and char-3gram repetition
     gates for non-whitespace scripts) -> exact-dup keep-one -> CHAR-
     shingle minhash-LSH near-dup marking over the survivors (the
-    r7 dedup_minhash_char operator, star-capped). Input is the
+    dedup_minhash_char operator, star-capped). Input is the
     documents table unioned with the deterministic multilingual seed
     corpus above, so every routing branch is exercised end-to-end and
     oracle-checked.
@@ -402,7 +817,121 @@ def _pipeline_multilingual_curation(spark, sf_dir):
     return out
 
 
-@query
+#: char-level w0: lowercased [a-z]+ words, one wrapped symbol per char
+_BPE_W0_CHAR = (
+    "WITH w0 AS MATERIALIZED (SELECT regexp_replace(w, '(.)', '(\\1)', 'g') "
+    "AS repr, cnt FROM (SELECT w, count(*) AS cnt FROM "
+    "(SELECT unnest(string_split_regex(lower(text), '\\s+')) AS w "
+    "FROM documents) WHERE regexp_matches(w, '^[a-z]+$') "
+    "GROUP BY w))"
+)
+
+
+#: byte-level w0: RAW whitespace pieces split at the operator's
+#: BPE_PIECE_CHAR_CAP (stepped generate_series — same chunk boundaries
+#: as the Spark transform), symbols = UTF-8 bytes as 2-hex-digit
+#: tokens (uppercase hex — Spark hex(encode()) and DuckDB
+#: hex(encode()) agree byte-for-byte)
+def _bpe_w0_bytes(source: str = "documents") -> str:
+    from task_on_dataframes_spark.operators.bpe import BPE_PIECE_CHAR_CAP
+
+    cap = BPE_PIECE_CHAR_CAP
+    return (
+        "WITH w0 AS MATERIALIZED (SELECT regexp_replace(hex(encode(w)), "
+        "'(..)', '(\\1)', 'g') AS repr, cnt FROM "
+        "(SELECT w, count(*) AS cnt FROM "
+        f"(SELECT substr(p.w0, s.s, {cap}) AS w FROM "
+        "(SELECT w0 FROM (SELECT unnest(string_split_regex(text, "
+        f"'\\s+')) AS w0 FROM {source}) WHERE len(w0) > 0) p, "
+        f"LATERAL unnest(generate_series(1, len(p.w0), {cap})) AS s(s)) "
+        "GROUP BY w))"
+    )
+
+
+def _bpe_ctes(merges: int = 6, w0: str = _BPE_W0_CHAR) -> list:
+    """BPE training CTE chain (shared by the train and apply oracles,
+    char- and byte-level via the ``w0`` base table): word table ->
+    per-iteration pair counts (p{i}), argmax (b{i}), and merged word
+    table (w{i}) — identical greedy replace semantics and
+    lexicographic tie-breaks to operators/bpe.py."""
+    parts = [w0]
+    for i in range(1, merges + 1):
+        prev = f"w{i - 1}"
+        parts.append(
+            f"p{i} AS (SELECT lhs, rhs, CAST(sum(cnt) AS BIGINT) AS pc "
+            "FROM (SELECT syms[i.i] AS lhs, syms[i.i+1] AS rhs, cnt "
+            "FROM (SELECT regexp_extract_all(repr, '\\(([^)]*)\\)', 1) "
+            f"AS syms, cnt FROM {prev}), "
+            "LATERAL unnest(generate_series(1, len(syms) - 1)) AS i(i) "
+            "WHERE len(syms) >= 2) GROUP BY lhs, rhs), "
+            f"b{i} AS MATERIALIZED (SELECT CAST({i} AS INT) AS step, lhs, rhs, "
+            "lhs || rhs AS merged, pc AS pair_count "
+            f"FROM p{i} ORDER BY pc DESC, lhs, rhs LIMIT 1)"
+        )
+        if i < merges:
+            parts.append(
+                f"w{i} AS MATERIALIZED (SELECT replace(repr, "
+                "'(' || b.lhs || ')(' || b.rhs || ')', "
+                "'(' || b.merged || ')') AS repr, cnt "
+                f"FROM w{i - 1}, b{i} b)"
+            )
+    return parts
+
+
+def _multilingual_tokens_oracle(merges: int = 64) -> str:
+    """DuckDB twin of ``pipeline_multilingual_tokens``: wraps the full
+    curation oracle to reconstruct the kept-survivor set, then replays
+    the byte-level BPE trainer (the text_bpe_bytes chained-CTE merge
+    program, w0 re-pointed at the survivors) and the per-document
+    apply chain — identical piece chunking, hex symbols, greedy
+    replace, and tie-breaks; one source of truth end to end."""
+    from task_on_dataframes_spark.operators.bpe import BPE_PIECE_CHAR_CAP
+
+    cap = BPE_PIECE_CHAR_CAP
+    pipe = _multilingual_curation_oracle().strip()
+    assert pipe.startswith("WITH ")
+    parts = [
+        pipe[len("WITH ") :].rsplit("SELECT doc_id, script,", 1)[0].rstrip()
+        # the curation oracle ends in its final SELECT; everything
+        # before it is the CTE body we extend (split on the unique
+        # final-select prefix keeps the dupb CTE list intact)
+        .rstrip(",")
+        + ", keptd AS MATERIALIZED ("
+        "SELECT r.doc_id, r.script, r.n_tokens, c.text FROM r "
+        "JOIN corp c ON c.doc_id = r.doc_id "
+        "WHERE r.reason = 'kept_pre' "
+        "AND r.doc_id NOT IN (SELECT b FROM dupb))",
+        _bpe_w0_bytes(source="keptd")[len("WITH ") :],
+    ]
+    merge_parts = _bpe_ctes(merges, w0="WITH __unused AS (SELECT 1)")[1:]
+    parts.extend(merge_parts)
+    parts.append(
+        "r0 AS (SELECT doc_id, regexp_replace(hex(encode(w)), "
+        "'(..)', '(\\1)', 'g') AS r FROM "
+        f"(SELECT doc_id, substr(p.wx, s.s, {cap}) AS w FROM "
+        "(SELECT doc_id, wx FROM (SELECT doc_id, "
+        "unnest(string_split_regex(text, '\\s+')) AS wx FROM keptd) "
+        "WHERE len(wx) > 0) p, "
+        f"LATERAL unnest(generate_series(1, len(p.wx), {cap})) AS s(s)))"
+    )
+    for i in range(1, merges + 1):
+        parts.append(
+            f"r{i} AS (SELECT doc_id, replace(r, "
+            "'(' || b.lhs || ')(' || b.rhs || ')', "
+            f"'(' || b.merged || ')') AS r FROM r{i - 1}, b{i} b)"
+        )
+    return (
+        "WITH "
+        + ", ".join(parts)
+        + " SELECT k.doc_id, k.script, CAST(k.n_tokens AS INT) AS n_tokens, "
+        "t.bpe_tokens FROM keptd k JOIN "
+        "(SELECT doc_id, CAST(sum(len(regexp_extract_all(r, "
+        f"'\\(([^)]*)\\)', 1))) AS BIGINT) AS bpe_tokens FROM r{merges} "
+        "GROUP BY doc_id) t ON t.doc_id = k.doc_id"
+    )
+
+
+@query(oracle=_multilingual_tokens_oracle())
 def _pipeline_multilingual_tokens(spark, sf_dir):
     """Honest multilingual token accounting for the curation flagship
     (r8 verdict item 8): the pipeline's ``n_tokens`` is a WHITESPACE
@@ -415,7 +944,7 @@ def _pipeline_multilingual_tokens(spark, sf_dir):
     merge loop), and reports per-survivor BPE piece counts next to
     the whitespace count.
 
-    Scale shape: the pipeline frames are unchanged (audited r8); BPE
+    Scale shape: the pipeline frames are the curation pass's; BPE
     training is ONE corpus-scale aggregation; application is a
     collect-free scan-stage replace chain over the survivor pieces
     plus one per-doc count shuffle (operators/bpe.py:
@@ -432,10 +961,9 @@ def _pipeline_multilingual_tokens(spark, sf_dir):
     )
     # checkpoint at the SMALL point: kept is doc-count rows of three
     # narrow columns, and it feeds three consumers (the survivor
-    # semi-join, and both sides of the final join). The r9 sf3 fit
-    # caught the previous shape — checkpointing the bulky survivor
-    # TEXT frame but not kept — re-running the whole verdict pipeline
-    # per consumer inside one action (175 s at sf3, excess 2.67);
+    # semi-join, and both sides of the final join). Checkpointing the
+    # bulky survivor TEXT frame instead of kept re-runs the whole
+    # verdict pipeline per consumer inside one action (175 s at sf3);
     # with kept materialized eagerly the pipeline runs once and the
     # survivor frame rebuilds from a parquet scan + broadcast
     # semi-join, far cheaper than materializing corpus text
@@ -465,7 +993,21 @@ def _pipeline_multilingual_tokens(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH toks AS (SELECT doc_id, "
+    "unnest(string_split_regex(lower(text), '\\s+')) AS tok "
+    "FROM documents), "
+    "nz AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0), "
+    "vocab AS (SELECT tok FROM (SELECT tok, count(*) AS cnt "
+    "FROM nz GROUP BY tok ORDER BY cnt DESC, tok ASC LIMIT 500)), "
+    "f AS (SELECT nz.doc_id, "
+    "CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END AS oov "
+    "FROM nz LEFT JOIN vocab v ON nz.tok = v.tok) "
+    "SELECT doc_id, count(*) AS n_tokens, "
+    "CAST(sum(oov) AS BIGINT) AS n_oov, "
+    "round(CAST(sum(oov) AS BIGINT) / count(*), 6) AS oov_rate "
+    "FROM f GROUP BY doc_id"
+))
 def _text_vocab_oov(spark, sf_dir):
     """Vocabulary build + OOV rate (the LM-preprocessing pair): vocab =
     top-500 tokens by corpus frequency (count desc, token asc — total
@@ -498,7 +1040,18 @@ def _text_vocab_oov(spark, sf_dir):
         ).alias("oov_rate"),
     )
 
-@query
+@query(oracle=(
+    "WITH nrm AS (SELECT doc_id, "
+    "trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n "
+    "FROM documents), "
+    "h AS (SELECT doc_id, "
+    "list_transform(generate_series(1, greatest(length(n) - 7, 1)), "
+    f"i -> {hash32_sql('substr(n, i, 8)')}) AS hs FROM nrm), "
+    "m AS (SELECT doc_id, list_distinct("
+    "list_transform(generate_series(1, greatest(len(hs) - 3, 1)), "
+    "i -> list_min(hs[i:i + 3]))) AS fps FROM h) "
+    "SELECT doc_id, unnest(fps) AS fingerprint FROM m"
+))
 def _text_winnow(spark, sf_dir):
     from task_on_dataframes_spark.operators.textstats import (
         winnow_fingerprints,
@@ -517,9 +1070,9 @@ def _bm25_doc_scores(docs: DataFrame) -> DataFrame:
     With a FIXED query-term set, dl and every term's tf fold into ONE
     explode + ONE map-side-combined groupBy (conditional sums per
     term): the token stream is derived once per consumer instead of
-    three times (the r5 form rebuilt the explode+groupBy lineage for
-    dl, n_avg, AND tf — Catalyst does not reuse subplans across join
-    sides), and corpus-level stats (n_docs, avgdl, df x 3) are one
+    three times (separate explode+groupBy lineages for dl, n_avg,
+    AND tf would each rescan — Catalyst does not reuse subplans
+    across join sides), and corpus-level stats (n_docs, avgdl, df x 3) are one
     scalar reduction over the doc-sized table, broadcast back.
     Measured 1.4 -> 0.86 s at sf0.1 and 2.1 -> 1.1 s at 10x data.
     (A zero-shuffle scan-stage variant — dl/tf as size-of-filter over
@@ -529,7 +1082,8 @@ def _bm25_doc_scores(docs: DataFrame) -> DataFrame:
     aggregation wins; same lesson as text_winnow's rejected
     Karp-Rabin fold, SCALE.md §16.)
 
-    Values are identical to the exploded r5 form token for token:
+    Values are identical to the per-statistic exploded form token for
+    token:
     docs with zero clean tokens stay outside n_docs/avgdl exactly as
     they produced no token rows before."""
     toks = (
@@ -589,7 +1143,44 @@ def _bm25_doc_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-@query
+#: BM25 scoring CTE chain shared by the text_bm25 and ann_hybrid_rrf
+#: oracles — mirrors registry/text.py:_bm25_doc_scores exactly (fixed
+#: 3-term query, k1=1.2, b=0.75, Lucene idf, fixed-order scalar add).
+_BM25_SQL_CTES = (
+    "toks AS (SELECT doc_id, "
+    "regexp_replace(t.tok, '^\\W+|\\W+$', '') AS tok "
+    "FROM (SELECT doc_id, "
+    "unnest(string_split_regex(lower(text), '\\s+')) AS tok "
+    "FROM documents) t), "
+    "clean AS (SELECT doc_id, tok FROM toks WHERE length(tok) >= 2), "
+    "dl AS (SELECT doc_id, count(*) AS dl FROM clean GROUP BY doc_id), "
+    "navg AS (SELECT count(*) AS n_docs, "
+    "CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl), "
+    "tf AS (SELECT doc_id, tok, count(*) AS tf FROM clean "
+    "WHERE tok IN ('hash', 'join', 'vector') GROUP BY doc_id, tok), "
+    "dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok), "
+    "scored AS (SELECT tf.doc_id, tf.tok, "
+    "ln((navg.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5) + 1.0) "
+    "* (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / "
+    "navg.avgdl)) AS s "
+    "FROM tf JOIN dfreq ON tf.tok = dfreq.tok "
+    "JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN navg), "
+    "piv AS (SELECT doc_id, "
+    "max(CASE WHEN tok = 'hash' THEN s END) AS s_hash, "
+    "max(CASE WHEN tok = 'join' THEN s END) AS s_join, "
+    "max(CASE WHEN tok = 'vector' THEN s END) AS s_vector "
+    "FROM scored GROUP BY doc_id), "
+    "bm AS (SELECT doc_id, round(coalesce(s_hash, 0.0) + "
+    "coalesce(s_join, 0.0) + coalesce(s_vector, 0.0), 6) AS score "
+    "FROM piv)"
+)
+
+
+@query(oracle=(
+    f"WITH {_BM25_SQL_CTES} "
+    "SELECT doc_id, score FROM bm "
+    "ORDER BY score DESC, doc_id LIMIT 20"
+))
 def _text_bm25(spark, sf_dir):
     """BM25 document ranking for a fixed 3-term query (k1=1.2, b=0.75,
     Lucene-style idf = ln(1 + (N - df + .5)/(df + .5))). Doc-length and
@@ -605,7 +1196,16 @@ def _text_bm25(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT doc_id, "
+    "CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) "
+    "AS n FROM documents), "
+    "e AS (SELECT doc_id, n, "
+    "unnest(generate_series(0, n - 1, 96)) AS s FROM b) "
+    "SELECT doc_id, CAST(s // 96 AS INT) AS chunk_idx, "
+    "CAST(s AS INT) AS start_tok, "
+    "CAST(least(128, n - s) AS INT) AS len_toks FROM e"
+))
 def _text_chunk_overlap(spark, sf_dir):
     """Sliding-window chunking with overlap (size=128 tokens, stride=96
     — 32-token context carry, the standard long-document prep for a
@@ -636,7 +1236,28 @@ def _text_chunk_overlap(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    "WITH b AS (SELECT lang, "
+    "string_split_regex(lower(text), '\\s+') AS ts FROM documents), "
+    "s AS (SELECT lang, "
+    + ", ".join(
+        f"len(list_filter(ts, t -> list_contains({_stop_arr(lang)}, t))) "
+        f"AS score_{lang}"
+        for lang in ["en", "de", "fr", "es"]
+    )
+    + " FROM b), "
+    "p AS (SELECT lang, "
+    "CASE WHEN score_en >= score_de AND score_en >= score_fr "
+    "AND score_en >= score_es THEN 'en' "
+    "WHEN score_de >= score_fr AND score_de >= score_es THEN 'de' "
+    "WHEN score_fr >= score_es THEN 'fr' ELSE 'es' END "
+    "AS pred_lang FROM s), "
+    "g AS (SELECT lang, pred_lang, count(*) AS n_docs "
+    "FROM p GROUP BY 1, 2) "
+    "SELECT lang, pred_lang, n_docs, "
+    "round(n_docs / sum(n_docs) OVER (PARTITION BY lang), 6) "
+    "AS share FROM g"
+))
 def _text_langid_confusion(spark, sf_dir):
     """Heuristic-vs-gold language-ID evaluation: confusion matrix cells
     (gold lang x predicted lang) with each cell's share of its gold
@@ -660,7 +1281,28 @@ def _text_langid_confusion(spark, sf_dir):
     )
 
 
-@query
+@query(oracle=(
+    f"WITH {_BM25_SQL_CTES}, "
+    "lex AS (SELECT doc_id, CAST(row_number() OVER "
+    "(ORDER BY score DESC, doc_id) AS INT) AS r_lex FROM "
+    "(SELECT doc_id, score FROM bm "
+    "ORDER BY score DESC, doc_id LIMIT 50)), "
+    "c AS (SELECT vec_id, embedding::DOUBLE[] AS v "
+    "FROM embeddings WHERE vec_id != 0), "
+    "q AS (SELECT embedding::DOUBLE[] AS v "
+    "FROM embeddings WHERE vec_id = 0), "
+    f"sc AS (SELECT c.vec_id, {_COS} AS cos FROM c, q), "
+    "sem AS (SELECT vec_id AS doc_id, CAST(row_number() OVER "
+    "(ORDER BY cos DESC, vec_id) AS INT) AS r_sem FROM sc "
+    "ORDER BY cos DESC, vec_id LIMIT 50), "
+    "f AS (SELECT coalesce(lex.doc_id, sem.doc_id) AS doc_id, "
+    "r_lex, r_sem, "
+    "round(coalesce(1.0 / (60 + r_lex), 0.0) + "
+    "coalesce(1.0 / (60 + r_sem), 0.0), 6) AS rrf_score "
+    "FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id) "
+    "SELECT doc_id, r_lex, r_sem, rrf_score FROM f "
+    "ORDER BY rrf_score DESC, doc_id LIMIT 10"
+))
 def _ann_hybrid_rrf(spark, sf_dir):
     """Hybrid lexical+semantic retrieval with reciprocal-rank fusion
     (RRF, k=60): the BM25 top-50 for the fixed term query and the
@@ -707,7 +1349,26 @@ def _ann_hybrid_rrf(spark, sf_dir):
     )
 
 
-@query
+# per-bigram logp rounds to 12 on both sides before averaging so
+# IEEE summation order cannot flip the 6-decimal hash
+@query(oracle=(
+    "WITH t AS MATERIALIZED (SELECT doc_id, "
+    "string_split_regex(lower(text), '\\s+') AS ts FROM documents), "
+    "bg AS MATERIALIZED (SELECT doc_id, ts[i] AS w1, ts[i+1] AS w2 "
+    "FROM t, LATERAL unnest(generate_series(1, len(ts) - 1)) "
+    "AS u(i)), "
+    "cb AS MATERIALIZED (SELECT w1, w2, count(*) AS c_bg FROM bg "
+    "GROUP BY 1, 2), "
+    "allw AS MATERIALIZED (SELECT unnest(ts) AS w1 FROM t), "
+    "cu AS MATERIALIZED (SELECT w1, count(*) AS c_uni FROM allw "
+    "GROUP BY 1), "
+    "v AS (SELECT count(DISTINCT w1) AS v FROM allw) "
+    "SELECT bg.doc_id, count(*) AS n_bigrams, "
+    "round(avg(round(ln((cb.c_bg + 1) / (cu.c_uni + v.v)), 12)), 6) "
+    "AS avg_logp "
+    "FROM bg JOIN cb USING (w1, w2) JOIN cu USING (w1) "
+    "CROSS JOIN v GROUP BY bg.doc_id"
+))
 def _text_bigram_lm(spark, sf_dir):
     """Add-one-smoothed bigram language-model scoring: train corpus
     bigram/unigram counts, then score each document by its mean
@@ -748,33 +1409,40 @@ def _text_bigram_lm(spark, sf_dir):
     )
 
 
-@query
+def _bpe_train_oracle_sql(merges: int = 6, w0: str = _BPE_W0_CHAR) -> str:
+    parts = _bpe_ctes(merges, w0)
+    union = " UNION ALL ".join(f"SELECT * FROM b{i}" for i in range(1, merges + 1))
+    return ", ".join(parts) + f" SELECT * FROM ({union}) ORDER BY step"
+
+
+@query(oracle=_bpe_train_oracle_sql())
 def _text_bpe_train(spark, sf_dir):
-    """Distributed BPE tokenizer training: 6 merge rules learned from
+    """BPE tokenizer training: 6 merge rules learned from
     frequency-weighted adjacent-symbol counts over the vocabulary-sized
-    word table. Corpus read once; each iteration is one keyed shuffle
-    of pair counts + a 1-row broadcast. Oracle replays the full
-    training chain (same greedy replace semantics, same tie-breaks)."""
-    from task_on_dataframes_spark.operators.bpe import bpe_train
+    word table (operators/bpe.py:bpe_train_scalable — one distributed
+    word-count collect, then the merge loop runs driver-local). The
+    oracle replays the full training chain (same greedy replace
+    semantics, same tie-breaks)."""
+    from task_on_dataframes_spark.operators.bpe import bpe_train_scalable
 
-    return bpe_train(_docs(spark, sf_dir), "text", merges=6)
+    return bpe_train_scalable(_docs(spark, sf_dir), "text", merges=6)
 
 
-@query
+@query(oracle=_bpe_train_oracle_sql(16))
 def _text_bpe_train16(spark, sf_dir):
     """16-merge BPE training through the SCALABLE path
     (operators/bpe.py:bpe_train_scalable): one distributed word-count
     collect, then the merge loop runs driver-local in exact greedy
     order. The oracle replays all 16 merges as a chained-CTE DuckDB
-    program with identical greedy-replace and tie-break semantics,
-    pinning the scalable trainer against the same reference
-    :func:`_text_bpe_train` checks the full-recount loop with."""
+    program with identical greedy-replace and tie-break semantics;
+    greedy tables are prefix-stable, so its first 6 rows are
+    :func:`_text_bpe_train`'s table."""
     from task_on_dataframes_spark.operators.bpe import bpe_train_scalable
 
     return bpe_train_scalable(_docs(spark, sf_dir), "text", merges=16)
 
 
-@query
+@query(oracle=_bpe_train_oracle_sql(256))
 def _text_bpe_train256(spark, sf_dir):
     """256-merge BPE training through the SCALABLE path
     (operators/bpe.py:bpe_train_scalable): one distributed word-count
@@ -793,7 +1461,10 @@ def _text_bpe_train256(spark, sf_dir):
     return bpe_train_scalable(_docs(spark, sf_dir), "text", merges=256)
 
 
-@query
+_BPE_W0_BYTES = _bpe_w0_bytes()
+
+
+@query(oracle=_bpe_train_oracle_sql(64, _BPE_W0_BYTES))
 def _text_bpe_bytes(spark, sf_dir):
     """64-merge BYTE-LEVEL BPE training (operators/bpe.py:
     bpe_train_scalable with level="bytes"): whitespace pieces of the
@@ -814,12 +1485,34 @@ def _text_bpe_bytes(spark, sf_dir):
     )
 
 
-@query
+def _bpe_apply_oracle_sql(merges: int = 6) -> str:
+    parts = _bpe_ctes(merges)
+    parts.append(
+        "r0 AS (SELECT doc_id, regexp_replace(w, '(.)', '(\\1)', 'g') "
+        "AS r FROM (SELECT doc_id, "
+        "unnest(string_split_regex(lower(text), '\\s+')) AS w "
+        "FROM documents) WHERE regexp_matches(w, '^[a-z]+$'))"
+    )
+    for i in range(1, merges + 1):
+        parts.append(
+            f"r{i} AS (SELECT doc_id, replace(r, "
+            "'(' || b.lhs || ')(' || b.rhs || ')', "
+            f"'(' || b.merged || ')') AS r FROM r{i - 1}, b{i} b)"
+        )
+    return (
+        ", ".join(parts)
+        + " SELECT doc_id, CAST(sum(len(regexp_extract_all(r, "
+        f"'\\(([^)]*)\\)', 1))) AS BIGINT) AS bpe_tokens FROM r{merges} "
+        "GROUP BY doc_id"
+    )
+
+
+@query(oracle=_bpe_apply_oracle_sql())
 def _text_bpe_apply(spark, sf_dir):
     """Apply the learned BPE merge table to the corpus: per-document
     token counts under the trained vocabulary. The 6-rule table is the
     only driver-side state; application is a scan-stage replace chain
-    with a single final aggregation. Since r10 the table is a
+    with a single final aggregation. The table is a
     TRAIN-ONCE published artifact (operators/bpe.py:
     merge_table_artifact): the first run per sf_dir trains and writes
     parquet, every later run loads it — tokenizers are corpus-release
@@ -828,14 +1521,14 @@ def _text_bpe_apply(spark, sf_dir):
 
     from task_on_dataframes_spark.operators.bpe import (
         bpe_apply_token_counts,
-        bpe_train,
+        bpe_train_scalable,
         merge_table_artifact,
     )
 
     docs = _docs(spark, sf_dir)
     tag = "docs_c6_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     merge_table = merge_table_artifact(
-        spark, tag, lambda: bpe_train(docs, "text", merges=6),
+        spark, tag, lambda: bpe_train_scalable(docs, "text", merges=6),
         merges=6, level="word",
     )
     return bpe_apply_token_counts(docs, merge_table)

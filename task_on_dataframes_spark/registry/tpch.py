@@ -1,7 +1,6 @@
 """TPC-H-shaped analytical queries.
 
-Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame;
-its DuckDB oracle SQL lives in ``__spark_entry__.oracle_sql``.
+Each ``@query`` function maps ``(spark, sf_dir)`` to a lazy DataFrame.
 """
 
 from __future__ import annotations
@@ -16,7 +15,22 @@ from .common import _dec_disc, _dec_ep, _dec_qty, _t, query
 # TPC-H-shaped pipelines (multi-operator coverage)
 # ---------------------------------------------------------------------------
 
-@query
+@query(oracle=(
+    "SELECT l_returnflag, l_linestatus, "
+    "CAST(round(sum(CAST(l_quantity AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_qty, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_base_price, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS sum_disc_price, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2))) * (1 + CAST(l_tax AS DECIMAL(4,2)))), 2) AS DOUBLE) AS sum_charge, "
+    "round(CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) "
+    "/ count(*), 4) AS avg_qty, "
+    "round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) "
+    "/ count(*), 4) AS avg_price, "
+    "round(CAST(sum(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) "
+    "/ count(*), 4) AS avg_disc, "
+    "count(*) AS count_order "
+    "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' "
+    "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"
+))
 def _q1_pricing_summary(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     # the money columns are exact 2-decimal values: decimal arithmetic
@@ -55,7 +69,17 @@ def _q1_pricing_summary(spark, sf_dir):
         .orderBy("l_returnflag", "l_linestatus")
     )
 
-@query
+@query(oracle=(
+    "SELECT l_orderkey, o_orderdate, o_orderpriority, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue "
+    "FROM customer JOIN orders ON c_custkey = o_custkey "
+    "JOIN lineitem ON l_orderkey = o_orderkey "
+    "WHERE c_mktsegment = 'BUILDING' "
+    "AND o_orderdate < TIMESTAMP '1998-03-15' "
+    "AND l_shipdate > TIMESTAMP '1998-03-15' "
+    "GROUP BY l_orderkey, o_orderdate, o_orderpriority "
+    "ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10"
+))
 def _q3_shipping_priority(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -83,7 +107,15 @@ def _q3_shipping_priority(spark, sf_dir):
         .limit(10)
     )
 
-@query
+@query(oracle=(
+    "SELECT n_name, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue "
+    "FROM customer, orders, lineitem, supplier, nation, region "
+    "WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey "
+    "AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey "
+    "AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey "
+    "AND r_name = 'ASIA' GROUP BY n_name ORDER BY revenue DESC, n_name"
+))
 def _q5_region_volume(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
@@ -114,7 +146,13 @@ def _q5_region_volume(spark, sf_dir):
         .orderBy(F.desc("revenue"), "n_name")
     )
 
-@query
+@query(oracle=(
+    "SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "CAST(l_discount AS DECIMAL(4,2))), 2) AS DOUBLE) AS revenue "
+    "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01' "
+    "AND l_shipdate < TIMESTAMP '1997-01-01' "
+    "AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"
+))
 def _q6_forecast_revenue(spark, sf_dir):
     """TPC-H Q6 shape: pure scan+filter+agg — the pushdown showcase
     (all three predicates reach the parquet scan)."""
@@ -140,7 +178,19 @@ def _q6_forecast_revenue(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation, "
+    "CAST(year(l_shipdate) AS INT) AS l_year, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue "
+    "FROM lineitem, orders, customer, supplier, nation n1, nation n2 "
+    "WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey "
+    "AND l_suppkey = s_suppkey AND s_nationkey = n1.n_nationkey "
+    "AND c_nationkey = n2.n_nationkey "
+    "AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2') "
+    "OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')) "
+    "GROUP BY 1, 2, 3"
+))
 def _q7_nation_volume(spark, sf_dir):
     """TPC-H Q7 shape: bilateral trade volume by year — self-aliased
     nation dim joined twice (both broadcast), disjunctive nation-pair
@@ -176,7 +226,23 @@ def _q7_nation_volume(spark, sf_dir):
         .agg(F.round(F.sum(vol), 2).cast("double").alias("revenue"))
     )
 
-@query
+@query(oracle=(
+    "SELECT CAST(year(o_orderdate) AS INT) AS o_year, "
+    "round(CAST(sum(CASE WHEN n2.n_name = 'NATION_2' THEN "
+    "CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2))) END) AS DOUBLE) / "
+    "CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE), 6) "
+    "AS mkt_share "
+    "FROM lineitem, orders, customer, supplier, part, "
+    "nation n1, nation n2, region "
+    "WHERE l_partkey = p_partkey AND p_type = 'PROMO' "
+    "AND l_orderkey = o_orderkey AND o_custkey = c_custkey "
+    "AND l_suppkey = s_suppkey AND c_nationkey = n1.n_nationkey "
+    "AND n1.n_regionkey = r_regionkey AND r_name = 'ASIA' "
+    "AND s_nationkey = n2.n_nationkey "
+    "GROUP BY 1"
+))
 def _q8_market_share(spark, sf_dir):
     """TPC-H Q8 shape: national market share = conditional revenue
     ratio per year over a 7-table join (dims broadcast; exact decimal
@@ -218,7 +284,18 @@ def _q8_market_share(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT c_custkey, c_name, c_acctbal, n_name, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * "
+    "(1 - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS revenue "
+    "FROM lineitem, orders, customer, nation "
+    "WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey "
+    "AND c_nationkey = n_nationkey AND l_returnflag = 'R' "
+    "AND o_orderdate >= TIMESTAMP '1996-01-01' "
+    "AND o_orderdate < TIMESTAMP '1996-04-01' "
+    "GROUP BY c_custkey, c_name, c_acctbal, n_name "
+    "ORDER BY revenue DESC, c_custkey LIMIT 20"
+))
 def _q10_returned_items(spark, sf_dir):
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
@@ -248,7 +325,17 @@ def _q10_returned_items(spark, sf_dir):
         .limit(20)
     )
 
-@query
+@query(oracle=(
+    "SELECT l_linestatus, "
+    "CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') "
+    "THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, "
+    "CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') "
+    "THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count "
+    "FROM lineitem, orders WHERE l_orderkey = o_orderkey "
+    "AND l_shipdate >= TIMESTAMP '1996-01-01' "
+    "AND l_shipdate < TIMESTAMP '1997-01-01' "
+    "GROUP BY l_linestatus"
+))
 def _q12_priority_lines(spark, sf_dir):
     """TPC-H Q12 shape: conditional counts (case-when inside sum) per
     line status."""
@@ -267,7 +354,19 @@ def _q12_priority_lines(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT round(100.0 * "
+    "CAST(sum(CASE WHEN p_type = 'PROMO' "
+    "THEN CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2))) "
+    "ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) / "
+    "CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE), 4) "
+    "AS promo_revenue_pct "
+    "FROM lineitem, part WHERE l_partkey = p_partkey "
+    "AND l_shipdate >= TIMESTAMP '1996-03-01' "
+    "AND l_shipdate < TIMESTAMP '1996-04-01'"
+))
 def _q14_promo_share(spark, sf_dir):
     """TPC-H Q14 shape: ratio of conditional aggregates after a
     fact-dim join (part broadcasts)."""
@@ -297,7 +396,17 @@ def _q14_promo_share(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "WITH big AS (SELECT l_orderkey, "
+    "CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE) "
+    "AS sum_qty FROM lineitem GROUP BY l_orderkey "
+    "HAVING CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 2) "
+    "AS DOUBLE) > 150) "
+    "SELECT c_custkey, c_name, o_orderkey, o_orderdate, "
+    "round(o_totalprice, 2) AS o_totalprice, sum_qty "
+    "FROM big, orders, customer "
+    "WHERE o_orderkey = l_orderkey AND o_custkey = c_custkey"
+))
 def _q18_large_orders(spark, sf_dir):
     """TPC-H Q18 shape: having-filtered aggregate re-joined to its fact
     — the small post-agg side broadcasts, so the orders/customer tables
@@ -327,7 +436,16 @@ def _q18_large_orders(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT p_partkey, p_name, s_suppkey, s_name, price FROM ("
+    "SELECT p_partkey, p_name, s_suppkey, s_name, "
+    "round(l_extendedprice, 2) AS price, "
+    "row_number() OVER (PARTITION BY p_partkey "
+    "ORDER BY round(l_extendedprice, 2), s_suppkey) AS rn "
+    "FROM lineitem JOIN part ON l_partkey = p_partkey "
+    "JOIN supplier ON l_suppkey = s_suppkey "
+    "WHERE p_type = 'LARGE' AND p_size < 10) WHERE rn = 1"
+))
 def _q2_min_cost_supplier(spark, sf_dir):
     """TPC-H Q2 shape: groupwise-min + join-back — per qualifying part,
     the supplier offering the minimum price (scalar-subquery-per-group
@@ -353,7 +471,14 @@ def _q2_min_cost_supplier(spark, sf_dir):
         .orderBy("p_partkey")
     )
 
-@query
+@query(oracle=(
+    "SELECT o_orderpriority, count(*) AS order_count FROM orders "
+    "WHERE o_orderdate >= TIMESTAMP '1996-01-01' "
+    "AND o_orderdate < TIMESTAMP '1996-07-01' "
+    "AND EXISTS (SELECT 1 FROM lineitem "
+    "WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate) "
+    "GROUP BY o_orderpriority ORDER BY o_orderpriority"
+))
 def _q4_order_priority(spark, sf_dir):
     """TPC-H Q4 shape: correlated EXISTS — count orders per priority
     having at least one line shipped after the order date. The EXISTS
@@ -375,7 +500,19 @@ def _q4_order_priority(spark, sf_dir):
         .orderBy("o_orderpriority")
     )
 
-@query
+@query(oracle=(
+    "SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year, "
+    "CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2))) - "
+    "CAST(p_retailprice AS DECIMAL(12,2)) * "
+    "CAST(l_quantity AS DECIMAL(12,2))), 2) AS DOUBLE) AS profit "
+    "FROM lineitem JOIN part ON l_partkey = p_partkey "
+    "JOIN supplier ON l_suppkey = s_suppkey "
+    "JOIN orders ON l_orderkey = o_orderkey "
+    "JOIN nation ON s_nationkey = n_nationkey "
+    "WHERE p_name LIKE '%gear%' "
+    "GROUP BY n_name, year(o_orderdate)"
+))
 def _q9_product_profit(spark, sf_dir):
     """TPC-H Q9 shape: multi-join profit rollup by supplier nation and
     order year (retail price stands in for supply cost — no partsupp in
@@ -401,7 +538,12 @@ def _q9_product_profit(spark, sf_dir):
         .orderBy("nation", F.desc("o_year"))
     )
 
-@query
+@query(oracle=(
+    "WITH co AS (SELECT c_custkey, count(o_orderkey) AS c_count "
+    "FROM customer LEFT JOIN orders ON c_custkey = o_custkey "
+    "GROUP BY c_custkey) "
+    "SELECT c_count, count(*) AS custdist FROM co GROUP BY c_count"
+))
 def _q13_order_distribution(spark, sf_dir):
     """TPC-H Q13: distribution of orders-per-customer (left join keeps
     zero-order customers; two keyed aggregations, both map-side
@@ -419,7 +561,17 @@ def _q13_order_distribution(spark, sf_dir):
         .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
-@query
+@query(oracle=(
+    "WITH rev AS (SELECT l_suppkey, "
+    "sum(CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2)))) AS rev_dec "
+    "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01' "
+    "AND l_shipdate < TIMESTAMP '1996-04-01' GROUP BY l_suppkey) "
+    "SELECT s_suppkey, s_name, "
+    "CAST(round(rev_dec, 2) AS DOUBLE) AS total_revenue "
+    "FROM rev JOIN supplier ON l_suppkey = s_suppkey "
+    "WHERE rev_dec = (SELECT max(rev_dec) FROM rev)"
+))
 def _q15_top_supplier(spark, sf_dir):
     """TPC-H Q15 shape: revenue view + MAX scalar subquery — the max
     travels as a broadcast 1-row frame joined back to the view."""
@@ -444,7 +596,14 @@ def _q15_top_supplier(spark, sf_dir):
         .orderBy("s_suppkey")
     )
 
-@query
+@query(oracle=(
+    "SELECT p_brand, p_type, p_size, "
+    "count(DISTINCT l_suppkey) AS supplier_cnt "
+    "FROM lineitem JOIN part ON l_partkey = p_partkey "
+    "WHERE p_brand <> 'Brand#1' AND p_type NOT LIKE 'PROMO%' "
+    "AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35) "
+    "GROUP BY p_brand, p_type, p_size"
+))
 def _q16_supplier_counts(spark, sf_dir):
     """TPC-H Q16 shape: COUNT(DISTINCT supplier) per part descriptor
     with negated predicates (lineitem is the part-supplier bridge)."""
@@ -461,7 +620,18 @@ def _q16_supplier_counts(spark, sf_dir):
         .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
-@query
+@query(oracle=(
+    "WITH branded AS (SELECT p_partkey, l_quantity, l_extendedprice "
+    "FROM lineitem JOIN part ON l_partkey = p_partkey "
+    "WHERE p_brand = 'Brand#15'), "
+    "thresh AS (SELECT p_partkey, "
+    "0.2 * CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) "
+    "/ count(*) AS qty_cut FROM branded GROUP BY p_partkey) "
+    "SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) "
+    "AS DOUBLE) / 7.0, 2) AS avg_yearly "
+    "FROM branded JOIN thresh USING (p_partkey) "
+    "WHERE l_quantity < qty_cut"
+))
 def _q17_small_quantity_revenue(spark, sf_dir):
     """TPC-H Q17 shape: correlated scalar AVG subquery — weekly revenue
     from small-quantity orders of one brand. The per-part threshold is
@@ -490,7 +660,17 @@ def _q17_small_quantity_revenue(spark, sf_dir):
         )
     )
 
-@query
+@query(oracle=(
+    "SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * "
+    "(1 - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue "
+    "FROM lineitem JOIN part ON l_partkey = p_partkey "
+    "WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 "
+    "AND l_quantity BETWEEN 1 AND 11) "
+    "OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 "
+    "AND l_quantity BETWEEN 10 AND 20) "
+    "OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 "
+    "AND l_quantity BETWEEN 20 AND 30)"
+))
 def _q19_disjunctive_filter(spark, sf_dir):
     """TPC-H Q19 shape: OR-of-ANDs across join sides — Catalyst still
     pushes the common join key and per-side implied filters down."""
@@ -520,7 +700,20 @@ def _q19_disjunctive_filter(spark, sf_dir):
         .alias("revenue")
     )
 
-@query
+@query(oracle=(
+    "WITH lines AS (SELECT l_orderkey, l_suppkey, "
+    "l_shipdate > o_orderdate + INTERVAL 60 DAY AS late "
+    "FROM lineitem JOIN orders ON l_orderkey = o_orderkey), "
+    "per_order AS (SELECT l_orderkey, "
+    "count(DISTINCT l_suppkey) AS n_supp, "
+    "count(DISTINCT CASE WHEN late THEN l_suppkey END) AS n_late_supp "
+    "FROM lines GROUP BY l_orderkey) "
+    "SELECT s_name, count(*) AS numwait "
+    "FROM lines JOIN per_order USING (l_orderkey) "
+    "JOIN supplier ON l_suppkey = s_suppkey "
+    "WHERE late AND n_supp > 1 AND n_late_supp = 1 "
+    "GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20"
+))
 def _q21_waiting_supplier(spark, sf_dir):
     """TPC-H Q21 shape: the EXISTS/NOT-EXISTS pair ("another supplier in
     the order, but no OTHER supplier late") expressed as window
@@ -569,7 +762,20 @@ def _q21_waiting_supplier(spark, sf_dir):
         .limit(20)
     )
 
-@query
+@query(oracle=(
+    "WITH shipped AS ("
+    "SELECT l_suppkey, "
+    "CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS BIGINT) AS qty "
+    "FROM lineitem JOIN part ON l_partkey = p_partkey "
+    "WHERE p_name LIKE 'small%' "
+    "AND l_shipdate >= TIMESTAMP '1996-01-01' "
+    "AND l_shipdate < TIMESTAMP '1997-01-01' "
+    "GROUP BY l_suppkey "
+    "HAVING CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS BIGINT) > 300) "
+    "SELECT s_name, n_name, qty FROM supplier "
+    "JOIN shipped ON s_suppkey = l_suppkey "
+    "JOIN nation ON s_nationkey = n_nationkey"
+))
 def _q20_excess_volume(spark, sf_dir):
     """q20-shape (adapted: the synthetic schema has no partsupp):
     suppliers that shipped more than 300 units of 'small'-named parts
@@ -604,7 +810,15 @@ def _q20_excess_volume(spark, sf_dir):
         .select("s_name", "n_name", "qty")
     )
 
-@query
+@query(oracle=(
+    "WITH pv AS (SELECT l_partkey, "
+    "sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS v "
+    "FROM lineitem GROUP BY l_partkey), "
+    "t AS (SELECT sum(v) AS tot, count(*) AS np FROM pv) "
+    "SELECT l_partkey, CAST(round(v, 2) AS DOUBLE) AS value "
+    "FROM pv, t WHERE 2 * v * np > 3 * tot "
+    "ORDER BY value DESC, l_partkey"
+))
 def _q11_value_concentration(spark, sf_dir):
     """TPC-H Q11 shape: scalar-subquery HAVING — keep parts whose
     revenue exceeds 1.5x the average part revenue. The share test is
@@ -628,7 +842,22 @@ def _q11_value_concentration(spark, sf_dir):
         .orderBy(F.desc("value"), "l_partkey")
     )
 
-@query
+@query(oracle=(
+    "WITH p AS (SELECT sum(CAST(c_acctbal AS DECIMAL(12,2))) "
+    "AS s, count(*) AS n FROM customer WHERE c_acctbal > 0), "
+    "oc AS (SELECT o_custkey, count(*) AS n_orders FROM orders "
+    "GROUP BY o_custkey) "
+    "SELECT n_name, count(*) AS numcust, "
+    "CAST(round(sum(CAST(c_acctbal AS DECIMAL(12,2))), 2) "
+    "AS DOUBLE) AS totacctbal "
+    "FROM customer "
+    "LEFT JOIN oc ON c_custkey = o_custkey "
+    "JOIN nation ON c_nationkey = n_nationkey "
+    "WHERE CAST(c_acctbal AS DECIMAL(12,2)) * (SELECT n FROM p) "
+    "> (SELECT s FROM p) "
+    "AND coalesce(n_orders, 0) <= 5 "
+    "GROUP BY n_name ORDER BY n_name"
+))
 def _q22_idle_customers(spark, sf_dir):
     """TPC-H Q22 shape: wealthy low-activity customers — balance above
     the global positive average (division-free `bal * n > sum` over

