@@ -7,10 +7,18 @@ the md5 of the canonical plan serialization and the payload is a
 parquet directory (columnar, splittable, reloadable by ANY Spark
 cluster). There is one synchronous path, :meth:`ResultCache.
 get_or_compute`, which holds a per-key lock: a hit is a zero-work
-``spark.read.parquet``; a miss computes and stores, so concurrent
-callers of one key wait for a single computation, and every caller
-gets the stored parquet back. Spark's ``_SUCCESS`` marker is the only
-"done" signal; a failed computation stores nothing, and the next call
+read through the source catalog (:mod:`.sources.catalog`, whose
+memoized schema spares the inference job); a miss computes and
+stores, so concurrent callers of one key wait for a single
+computation, and every caller gets the stored parquet back.
+
+The key names the plan, not the data it read: the catalog records the
+stamp of every parquet source resolved while ``compute()`` and the
+write run, and those go into a ``_sources.json`` sidecar beside
+Spark's ``_SUCCESS``, written after the commit. The sidecar is the
+"done" signal, and a result whose sources no longer have the recorded
+stamps is a miss, so a rewritten source is recomputed instead of
+served stale. A failed computation stores nothing, and the next call
 computes again.
 """
 
@@ -28,6 +36,10 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from .plans.solve import Action
+from .sources import catalog
+
+#: beside ``_SUCCESS``: ``{source path: stamp digest}`` the result read
+_SOURCES = "_sources.json"
 
 
 def plan_key(actions: List[Action], goal: List[str]) -> str:
@@ -63,15 +75,19 @@ class ResultCache:
         return os.path.join(self.root, key)
 
     def status(self, key: str) -> str:
-        """'done' once Spark committed the parquet, else 'missing'."""
-        if os.path.exists(os.path.join(self._dir(key), "_SUCCESS")):
-            return "done"
-        return "missing"
+        """'done' once the sources sidecar is written and every source
+        it names still has its recorded stamp, else 'missing'."""
+        try:
+            with open(os.path.join(self._dir(key), _SOURCES)) as fh:
+                sources = json.load(fh)
+        except (OSError, ValueError):
+            return "missing"
+        return "done" if catalog.unchanged(sources) else "missing"
 
     def load(self, spark: SparkSession, key: str) -> Optional[DataFrame]:
         if self.status(key) != "done":
             return None
-        return spark.read.parquet(self._dir(key))
+        return catalog.read(spark, self._dir(key))
 
     def store(self, df: DataFrame, key: str) -> DataFrame:
         df.write.mode("overwrite").parquet(self._dir(key))
@@ -90,7 +106,12 @@ class ResultCache:
             hit = self.load(spark, key)
             if hit is None:
                 try:
-                    self.store(compute(), key)
+                    with catalog.recording() as sources:
+                        self.store(compute(), key)
+                    side = os.path.join(self._dir(key), _SOURCES)
+                    with open(side + ".tmp", "w") as fh:
+                        json.dump(sources, fh)
+                    os.replace(side + ".tmp", side)
                 except BaseException:
                     shutil.rmtree(self._dir(key), ignore_errors=True)
                     raise

@@ -24,6 +24,7 @@ import os
 import tempfile
 from typing import Optional
 
+from ..sources import catalog
 from ..sources.writers import bucketed_table_sink
 
 
@@ -77,6 +78,17 @@ def _parallel_writes(fn, jobs) -> None:
 def _write_tables(
     specs, n_buckets: int, mode: str, base: Optional[str] = None
 ) -> None:
+    """Write the specs concurrently. In ``overwrite`` mode every
+    spec's table is first DROPped, one after another on this thread:
+    catalog DDL stays single-threaded (two pool threads dropping and
+    creating tables at once have failed inside ``DROP TABLE IF
+    EXISTS`` with ``NumberFormatException: Cannot parse null
+    string``), and only the data writes overlap."""
+    specs = list(specs)
+    if mode == "overwrite":
+        for table, df, _ in specs:
+            df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+
     def write(spec):
         table, df, key = spec
         bucketed_table_sink(
@@ -127,7 +139,9 @@ def _path_reread(spark, table: str):
     files = cat.inputFiles()
     if not files:
         return spark.createDataFrame([], cat.schema)
-    return spark.read.schema(cat.schema).parquet(os.path.dirname(files[0]))
+    return catalog.read(
+        spark, os.path.dirname(files[0]), schema=cat.schema
+    )
 
 
 def compact_tables(

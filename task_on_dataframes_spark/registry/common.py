@@ -9,6 +9,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import catalog
+
 #: every registered query by name, in registration order
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 #: each query's DuckDB oracle: the SQL text, or a zero-argument function
@@ -35,13 +37,7 @@ def query(*, oracle: str | Callable[[], str]):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-#: effective scan-split estimates, keyed by (path, maxPartitionBytes,
-#: parallelism) — testdata is immutable, so one footer read per key per
-#: process
-_SCAN_PARTS_CACHE: dict[tuple, int] = {}
+    return catalog.read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _size_bytes(v: str) -> int:
@@ -63,53 +59,41 @@ def _scan_parts(
     ~2 tasks; a row-group count alone would skip the floor there and
     run every fingerprint pipeline on 2 tasks (SCALE.md: text_winnow
     measured 4.3x for 3x data until the estimate used the min of the
-    two bounds). Read from the parquet footer via pyarrow
-    (~0.3 ms, cached) rather than ``df.rdd.getNumPartitions()`` — the
-    RDD probe runs full physical planning on the driver (~0.13 s
-    measured) and would be paid on EVERY query invocation (the
-    repartition itself measures free at sf0.1). Returns ``None`` for
-    non-local paths — a real cluster corpus has thousands of
-    full-size row groups, so skipping the floor there is the correct
-    no-op."""
-    key = (path, max_partition_bytes, parallelism)
-    if key in _SCAN_PARTS_CACHE:
-        return _SCAN_PARTS_CACHE[key]
+    two bounds). Row groups and file sizes come from the source
+    catalog's stamped footer facts (:func:`..sources.catalog.footer`),
+    so a rewritten file gets a fresh estimate, rather than from
+    ``df.rdd.getNumPartitions()`` — the RDD probe runs full physical
+    planning on the driver (~0.13 s measured) and would be paid on
+    EVERY query invocation (the repartition itself measures free at
+    sf0.1). Returns ``None`` for non-local paths — a real cluster
+    corpus has thousands of full-size row groups, so skipping the
+    floor there is the correct no-op."""
     try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-        else:
-            files = [path]
-        n = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-        if max_partition_bytes:
-            # mirror Spark's FilePartition.maxSplitBytes (the bare
-            # ceil(bytes/maxPartitionBytes) underestimates
-            # splits whenever total/defaultParallelism is the binding
-            # term, triggering repartitions that are not needed):
-            # maxSplit = min(maxPartitionBytes,
-            #                max(openCostInBytes, total/parallelism)),
-            # splits counted per file because a split never spans files
-            total = sum(os.path.getsize(f) for f in files)
-            open_cost = 4 << 20  # spark.sql.files.openCostInBytes default
-            max_split = min(
-                max_partition_bytes,
-                max(open_cost, total // max(parallelism, 1)),
-            )
-            byte_splits = sum(
-                -(-os.path.getsize(f) // max_split) for f in files
-            )
-            n = min(n, byte_splits)
+        files = catalog.footer(path)
     except Exception:
-        # Missing pyarrow raises ImportError, corrupt/remote paths raise
+        # Missing pyarrow raises ImportError, corrupt files raise
         # pyarrow.ArrowInvalid — the floor must degrade to a no-op for
         # any path Spark itself can read, never fail query construction.
         return None
-    _SCAN_PARTS_CACHE[key] = n
+    if files is None:
+        return None
+    n = sum(groups for groups, _ in files)
+    if max_partition_bytes:
+        # mirror Spark's FilePartition.maxSplitBytes (the bare
+        # ceil(bytes/maxPartitionBytes) underestimates
+        # splits whenever total/defaultParallelism is the binding
+        # term, triggering repartitions that are not needed):
+        # maxSplit = min(maxPartitionBytes,
+        #                max(openCostInBytes, total/parallelism)),
+        # splits counted per file because a split never spans files
+        total = sum(size for _, size in files)
+        open_cost = 4 << 20  # spark.sql.files.openCostInBytes default
+        max_split = min(
+            max_partition_bytes,
+            max(open_cost, total // max(parallelism, 1)),
+        )
+        byte_splits = sum(-(-size // max_split) for _, size in files)
+        n = min(n, byte_splits)
     return n
 
 
@@ -190,12 +174,12 @@ def _embs(
     Every embedding pipeline does per-row array math (quantization,
     PQ encoding, centroid distances, plane projections) right above
     the scan; with the testdata's single-row-group parquet that work
-    serializes onto one or two tasks — emb_quantize measured 8.27x at
-    10x data in SCALE_SWEEP_r04 purely from the 2-task scan, the worst
-    completed ratio in the sweep. Same contract as ``_docs``: when the
-    footer shows fewer row groups than half the cores, one cheap
-    round-robin shuffle spreads the vectors; at real scale (thousands
-    of row groups) this is a no-op with no repartition in the plan.
+    serializes onto one or two tasks (emb_quantize scaled 8.27x for
+    10x data on the 2-task scan; SCALE.md). Same contract as
+    ``_docs``: when the footer shows fewer row groups than half the
+    cores, one cheap round-robin shuffle spreads the vectors; at real
+    scale (thousands of row groups) this is a no-op with no
+    repartition in the plan.
 
     ``floor=False`` opts a consumer out: map-side-reduction pipelines
     (the Gram partials) already collapse each input split to d^2

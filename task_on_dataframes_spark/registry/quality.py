@@ -19,6 +19,7 @@ from task_on_dataframes_spark.operators.probe import (
     probe_apply_oracle_sql,
 )
 
+from ..sources import catalog
 from .common import _docs, _events, _t, query
 
 
@@ -599,7 +600,7 @@ def _s14_compaction(spark, sf_dir):
     )
     li.repartition(48).write.mode("overwrite").parquet(out)
     compact_parquet(spark, out, target_file_mb=8, sort_cols=["l_orderkey"])
-    back = spark.read.parquet(out)
+    back = catalog.read(spark, out)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("l_quantity").cast("decimal(18,2)"))
@@ -665,8 +666,8 @@ def _s15_schema_merge(spark, sf_dir):
     )
     gen1.write.mode("overwrite").parquet(f"{out}/gen=1")
     gen2.write.mode("overwrite").parquet(f"{out}/gen=2")
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        f"{out}/gen=1", f"{out}/gen=2"
+    merged = catalog.read(
+        spark, f"{out}/gen=1", f"{out}/gen=2", mergeSchema="true"
     )
     return merged.groupBy(
         F.coalesce(F.col("lang"), F.lit("<pre-schema>")).alias("lang")
@@ -750,7 +751,7 @@ def _s16_zorder_stats(spark, sf_dir):
     )
     out = tempfile.mkdtemp(prefix="tada_zorder_") + "/li"
     zorder_write(li, "x", "y", out, bits=10, files=8)
-    back = spark.read.parquet(out)
+    back = catalog.read(spark, out)
     z = morton_code(F.col("x"), F.col("y"), 10)
     return (
         back.withColumn("zbucket", F.shiftright(z, 12))
@@ -1061,7 +1062,7 @@ def _s19_dynamic_partition_overwrite(spark, sf_dir):
         .mode("overwrite")
         .parquet(base)
     )
-    back = spark.read.parquet(base)
+    back = catalog.read(spark, base)
     return back.groupBy("day").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("event_type") == "error").cast("long")).alias(

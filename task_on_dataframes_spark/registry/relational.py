@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources import catalog
 from .common import _embs, _events, _t, query
 
 
@@ -739,7 +740,7 @@ def _s11_partition_prune(spark, sf_dir):
     out = tempfile.mkdtemp(prefix="tada_part_") + "/events"
     ev.write.mode("overwrite").partitionBy("event_date").parquet(out)
     d = ev.agg(F.min("event_date")).collect()[0][0]
-    back = spark.read.parquet(out)
+    back = catalog.read(spark, out)
     return (
         back.filter(F.col("event_date") == F.lit(d))
         .groupBy("event_type")
@@ -1024,7 +1025,7 @@ def _s12_sorted_stats_prune(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(out)
     )
-    back = spark.read.parquet(out)
+    back = catalog.read(spark, out)
     return (
         back.filter((F.col("user_id") >= 100) & (F.col("user_id") < 200))
         .groupBy("event_type")
@@ -1169,5 +1170,5 @@ def _sql_recursive_reach(spark, sf_dir):
     100 TB the edge aggregation is the only corpus-scale stage; the
     recursion runs over the 25-node nation graph."""
     for t in ("customer", "orders", "lineitem", "supplier"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        _t(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(RECURSIVE_REACH_SQL)

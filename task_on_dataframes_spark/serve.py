@@ -36,6 +36,7 @@ from .browse import BrowseState
 from .cache import ResultCache, plan_key
 from .plans.solve import State, apply_action, perform_actions
 from .plans.task import TaskRegistry
+from .sources import catalog
 from .view import download_name, page, to_csv, to_html, palette
 
 _EXPLORE_TPL = """<!doctype html><html><head><title>explore</title>
@@ -66,14 +67,15 @@ def create_app(
     """Build the Flask app bound to ``spark``.
 
     ``source_loader`` maps an encoded file entry to a DataFrame
-    (default: ``spark.read.parquet``) — the hook for glob/CSV sources.
+    (default: a parquet read through :func:`.sources.catalog.read`) —
+    the hook for glob/CSV sources.
     Flask is imported lazily so the engine has no hard web dependency.
     """
     from flask import Flask, Response, abort
 
     app = Flask("task_on_dataframes_spark")
     cache = ResultCache(cache_root)
-    load = source_loader or (lambda f: spark.read.parquet(f))
+    load = source_loader or (lambda f: catalog.read(spark, f))
 
     def _bs(q: str) -> BrowseState:
         """The decoded state; 400 for an undecodable query string, a

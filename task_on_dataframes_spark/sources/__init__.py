@@ -8,7 +8,9 @@ serve.py:38-78). Spark-native equivalents here:
 
 * globs and whole-file reads are *scans*, not driver loops — Spark
   distributes file listing and reading across executors;
-* pickle becomes parquet (columnar, splittable, predicate-pushdown);
+* pickle becomes parquet (columnar, splittable, predicate-pushdown),
+  and every parquet read resolves through :mod:`.catalog` (a fresh
+  relation per read over a stamp-keyed schema memo);
 * the result cache is a parquet directory keyed by a plan hash
   (:mod:`..cache`).
 """

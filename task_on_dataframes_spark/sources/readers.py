@@ -14,6 +14,8 @@ from typing import Any, List, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import catalog
+
 
 def glob_source(
     spark: SparkSession, pattern: str, out: str = "path"
@@ -64,7 +66,7 @@ def csv_source(
 
 
 def parquet_source(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return catalog.read(spark, path)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -93,12 +95,14 @@ def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
     """Schema-faithful read of the events table. Only mutates the
     session conf (``nanosAsLong``) when the legacy TIMESTAMP(NANOS)
     layout is actually present — Spark's reader rejects that type, so
-    the retry is the detection."""
+    the retry is the detection. The conf is part of the catalog's
+    schema key, so the retry infers afresh and a warm read of either
+    layout launches no job."""
     try:
-        return spark.read.parquet(path)
+        return catalog.read(spark, path)
     except Exception:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path)
+        return catalog.read(spark, path)
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -122,9 +126,10 @@ def literal_source(
 def schema_peek(spark: SparkSession, path: str, fmt: str = "parquet") -> List[str]:
     """Column names without reading data — replaces the reference's
     1-row CSV read (browse.py:23, 42-48); on Spark only file footers /
-    headers are touched."""
+    headers are touched, and a parquet schema the catalog has seen at
+    the path's current stamp is not read again."""
     if fmt == "parquet":
-        return spark.read.parquet(path).columns
+        return catalog.schema_of(spark, path).names
     if fmt == "csv":
         return spark.read.option("header", True).csv(path).columns
     raise ValueError(f"unsupported format: {fmt}")

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from . import catalog
+
 
 def csv_sink(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
     df.write.option("header", header).mode(mode).csv(path)
@@ -63,7 +65,7 @@ def compact_parquet(
     import os
     import shutil
 
-    df = spark.read.parquet(path)
+    df = catalog.read(spark, path)
     total = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _, fs in os.walk(path)
@@ -110,14 +112,15 @@ def bucketed_table_sink(
     ``bucket_cols`` writes a plain table through the same steps (the
     IVF centroid table: a few rows that every consumer broadcasts).
 
-    ``overwrite`` DROPs any existing table of that name first, so the
-    new table lands at ``path`` — callers pass a fresh directory,
-    because an in-memory catalog forgets tables across sessions while
-    their warehouse directories linger, and a managed overwrite would
-    hit LOCATION_ALREADY_EXISTS. ``append`` adds files to the existing
-    table (Spark validates the bucket spec against the catalog)."""
-    if mode == "overwrite":
-        df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    ``overwrite`` lands the new table at ``path`` — callers pass a
+    fresh directory, because an in-memory catalog forgets tables
+    across sessions while their warehouse directories linger, and a
+    managed overwrite would hit LOCATION_ALREADY_EXISTS. The sink
+    issues no DDL of its own: a caller writing several tables at once
+    drops the old ones first, on one thread
+    (``operators/index._write_tables``). ``append`` adds files to the
+    existing table (Spark validates the bucket spec against the
+    catalog)."""
     w = df.write
     if bucket_cols:
         w = (
@@ -162,4 +165,4 @@ def read_new_files(spark, path: str, manifest: list):
     ]
     if not new:
         return None
-    return spark.read.parquet(*new)
+    return catalog.read(spark, *new)

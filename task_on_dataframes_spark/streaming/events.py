@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..sources import catalog
 from ..sources.readers import (
     normalize_events_ts,
     read_events,
@@ -414,7 +415,7 @@ def materialized_user_agg(
     def _merge(batch_df, batch_id: int) -> None:
         batch_df = batch_df.persist()
         if os.path.exists(state_dir):
-            state = batch_df.sparkSession.read.parquet(state_dir)
+            state = catalog.read(batch_df.sparkSession, state_dir)
             keep = state.join(
                 F.broadcast(batch_df.select("user_id")),
                 on="user_id",
@@ -438,7 +439,7 @@ def materialized_user_agg(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(state_dir)
+    return catalog.read(spark, state_dir)
 
 
 def cms_stream(
@@ -479,7 +480,7 @@ def cms_stream(
             width=width,
         ).persist()
         if os.path.exists(state_dir):
-            state = part.sparkSession.read.parquet(state_dir)
+            state = catalog.read(part.sparkSession, state_dir)
             merged = (
                 state.withColumnRenamed("c", "c_old")
                 .join(part.withColumnRenamed("c", "c_new"),
@@ -509,4 +510,4 @@ def cms_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(state_dir)
+    return catalog.read(spark, state_dir)

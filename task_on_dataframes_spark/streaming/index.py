@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources import catalog
+
 
 def _drain(
     spark: SparkSession,
@@ -77,7 +79,7 @@ def _drain(
 
     from task_on_dataframes_spark.operators.persist import release
 
-    schema = spark.read.parquet(src_dir).schema
+    schema = catalog.schema_of(spark, src_dir)
     ledger = results_dir.rstrip("/") + "_ledger"
     os.makedirs(ledger, exist_ok=True)
     run_session: list = []  # the session the batches run in
@@ -114,10 +116,7 @@ def _drain(
     if not os.path.exists(results_dir):  # empty stream: no batch ran
         return spark.createDataFrame([], schema=empty_schema)
     # per-batch subdirectories: recursive lookup, no partition inference
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(results_dir)
-    )
+    return catalog.read(spark, results_dir, recursiveFileLookup="true")
 
 
 def index_maintain_stream(
@@ -149,7 +148,7 @@ def index_maintain_stream(
         # shape="merge": the streaming drain is the one probe call
         # site where the broadcast-batch shape measured SLOWER, both
         # locally and at scale (sf0.1: 5.9 vs 7.4 s; sf3: 14.5 vs
-        # 24.3 s, interleaved min-of-2 — SCALE.md r13): each
+        # 24.3 s, interleaved min-of-2; SCALE.md): each
         # micro-batch pays two driver-side broadcast builds whose
         # fixed latency cannot amortize over a drain of small batches,
         # while the SMJ probe is one pipelined multi-stage job.

@@ -202,3 +202,36 @@ def test_no_global_in_operators_and_no_same_semantics():
         if "sameSemantics" in t
     ]
     assert same == [], same
+
+
+def test_parquet_reads_go_through_the_source_catalog():
+    """Every parquet read of the package resolves through
+    ``sources/catalog.py`` (stamped schema memo, fresh relation per
+    read): no ``<reader>.parquet(...)`` call on a chain that starts at
+    ``.read`` — ``spark.read.parquet``, ``spark.read.option(...)
+    .parquet``, ``spark.read.schema(...).parquet`` — appears anywhere
+    else."""
+    import ast
+
+    def chain(node):
+        """Attribute names along a call chain, outermost first."""
+        names = []
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names
+
+    home = os.path.join(HERE, "task_on_dataframes_spark", "sources", "catalog.py")
+    reads = [
+        f"{os.path.relpath(p, HERE)}:{n.lineno}"
+        for p, t in _package_sources().items()
+        if p != home
+        for n in ast.walk(ast.parse(t))
+        if isinstance(n, ast.Call)
+        and chain(n.func)[:1] == ["parquet"]
+        and "read" in chain(n.func)
+    ]
+    assert reads == [], reads

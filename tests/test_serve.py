@@ -223,3 +223,38 @@ def test_bad_urls_are_client_errors_and_store_nothing(spark, tmp_path, warm):
         assert client.get(f"/explore/{bad}").status_code == 400
         assert client.get(f"/view/0/0/{bad}").status_code == 400
     assert sorted(os.listdir(root)) == stored
+
+
+def test_rewritten_source_is_recomputed_not_served_stale(spark, sf_dir, tmp_path):
+    """The cache key names the plan, not the data: a source rewritten
+    between two visits re-stamps, so the second ``/view`` recomputes
+    and pages the new rows."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from task_on_dataframes_spark.basic_tasks import register_document_tasks
+    from task_on_dataframes_spark.browse import BrowseState
+    from task_on_dataframes_spark.serve import create_app
+
+    src = tmp_path / "data"
+    src.mkdir()
+    docs = str(src / "documents.parquet")
+    shutil.copy(f"{sf_dir}/documents.parquet", docs)
+    registry = register_document_tasks(spark, str(src))
+    client = create_app(
+        spark, registry=registry, cache_root=str(tmp_path / "cache")
+    ).test_client()
+    bs = BrowseState([], [], registry=registry)
+    act = next(a for a in bs.further_actions([]) if a.Task == "get_docs")
+    q = quote(bs.with_action(act).to_url_q(), safe="")
+
+    first = client.get(f"/view/0/0/{q}").get_data(as_text=True)
+    assert "rewritten-doc-" not in first
+    old = pq.read_table(docs).slice(0, 3)
+    texts = pa.array([f"rewritten-doc-{i}" for i in range(3)])
+    pq.write_table(old.set_column(1, "text", texts), docs)
+    second = client.get(f"/view/0/0/{q}").get_data(as_text=True)
+    assert second != first
+    assert all(f"rewritten-doc-{i}" in second for i in range(3))
