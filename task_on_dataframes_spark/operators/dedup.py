@@ -32,7 +32,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .hashing import MERSENNE_P, hash32, perm_coeffs
-from .index import append_tables, build_tables, compact_tables
+from .index import append_tables, build_tables, committed, compact_tables
+from .index import read_committed
 from .persist import hold
 
 #: default 1-in-m modulo sampling of the character-shingle universe
@@ -673,7 +674,6 @@ def build_lsh_index(
     id_col: str,
     text_col: str,
     name_tag: str,
-    base_path: Optional[str] = None,
     num_perm: int = 16,
     bands: int = 4,
     shingle_n: int = 2,
@@ -698,19 +698,20 @@ def build_lsh_index(
       intersects, bucketed and sorted by ``did`` so verification joins
       shuffle only the candidate side.
 
-    Returns ``(keys_table, sets_table)`` names. Idempotent per
-    ``name_tag``: an existing layout is reused, not rewritten (an
-    ingest wave appends under a NEW tag or rebuilds explicitly with
-    ``overwrite=True`` semantics by dropping the tables first).
+    Both tables are partitioned by generation (:mod:`.index`); the
+    keys table heads the index and holds its commit. Returns
+    ``(keys_table, sets_table)`` names. Idempotent per ``name_tag``: a
+    committed index is reused, not rewritten; a pair whose build never
+    committed (one of its writes raised) is rebuilt.
 
     Reference note: the reference engine
     (`frame_tasks/basic_tasks.py`) has only whole-frame distinct; the
-    persisted index is the ⊕ production shape for incremental corpus
+    persisted index is the production shape for incremental corpus
     dedup at 100 TB.
     """
     keys_t = f"tada_lshidx_keys_{name_tag}"
     sets_t = f"tada_lshidx_sets_{name_tag}"
-    if all(spark.catalog.tableExists(t) for t in (keys_t, sets_t)):
+    if committed(spark, keys_t):
         return keys_t, sets_t
     cid = corpus.select(
         F.col(id_col).alias("did"), F.col(text_col).alias("text")
@@ -723,11 +724,7 @@ def build_lsh_index(
     # materialize the shared profile once, before the two concurrent
     # table writes read it
     prof.count()
-    build_tables(
-        _lsh_specs(prof, keys_t, sets_t, num_perm, bands),
-        n_buckets,
-        base_path,
-    )
+    build_tables(_lsh_specs(prof, keys_t, sets_t, num_perm, bands), n_buckets)
     prof.unpersist()
     return keys_t, sets_t
 
@@ -824,15 +821,15 @@ def probe_lsh_index(
     #   Exchanges and every Sort disappear; the index scan streams
     #   through the hash joins. Adjudicated at sf0.1/sf1/sf3
     #   (SCALE.md).
-    ikeys = spark.table(keys_table).select(
-        F.col("did").alias("b"), "bk"
-    )
+    # one snapshot of the committed generations for both tables
+    ikeys, isets = read_committed(spark, keys_table, sets_table)
+    ikeys = ikeys.select(F.col("did").alias("b"), "bk")
     pa = prof.select(
         F.col("did").alias("a"),
         F.col("hks").alias("hka"),
         F.col("sz").alias("sza"),
     )
-    pb = spark.table(sets_table).select(
+    pb = isets.select(
         F.col("did").alias("b"),
         F.col("hks").alias("hkb"),
         F.col("sz").alias("szb"),
@@ -871,6 +868,7 @@ def append_lsh_index(
     bands: int = 4,
     shingle_n: int = 2,
     n_buckets: int = LSH_INDEX_BUCKETS,
+    gen: Optional[str] = None,
 ) -> None:
     """Fold a deduped ingest ``batch`` INTO the persisted LSH index —
     the maintenance step that completes the index lifecycle
@@ -880,10 +878,12 @@ def append_lsh_index(
 
     Scale shape: only the BATCH is shingled, signed, and packed (the
     same batch-sized plan as the probe); the new rows are written as
-    additional bucketed+sorted files into the SAME tables
-    (:func:`.index.append_tables`). The existing index
-    files are never read, rewritten, or shuffled: append cost is
-    O(batch), independent of corpus size.
+    one new generation of the SAME tables, committed once both writes
+    land (:func:`.index.append_tables`; ``gen`` names it, and an
+    already committed ``gen`` makes the call a no-op). The existing
+    index files are never read, rewritten, or shuffled: append cost is
+    O(batch), independent of corpus size. If a write raises, the
+    committed index is unchanged and a retry is safe.
 
     Contract drift after appends: each append adds one file per
     occupied bucket, so the bucketed scan keeps its no-Exchange
@@ -917,6 +917,7 @@ def append_lsh_index(
     append_tables(
         _lsh_specs(prof, keys_table, sets_table, num_perm, bands),
         n_buckets,
+        gen,
     )
     if owned:
         prof.unpersist()
@@ -926,41 +927,20 @@ def compact_lsh_index(
     spark,
     keys_table: str,
     sets_table: str,
-    name_tag: str,
-    base_path: Optional[str] = None,
     n_buckets: int = LSH_INDEX_BUCKETS,
-) -> tuple:
-    """Rewrite an appended-to LSH index into a fresh one-file-per-
-    bucket layout — the amortized maintenance pass (the Iceberg/Delta
-    ``rewrite_data_files`` analog for this layout). What it buys:
+) -> None:
+    """Rewrite an appended-to LSH index in place, under the same
+    names, into one sorted file per bucket (:func:`.index.compact_tables`):
     bounded file listing, one sorted run per bucket for the probe
-    SMJ's local sort to consume (appends accumulate one run per wave),
-    and scan-side IO back to one sequential file per bucket. It does
-    NOT remove the local Sort node itself — Spark stopped claiming
-    bucketed-scan output ordering in 3.0 (SPARK-28632) even at one
-    file per bucket, so the sort stays as a cheap single-run pass;
-    the no-Exchange probe contract is unchanged either way
-    (plan-pinned for the compacted index in tests/test_plan_shapes).
-
-    Both tables go through :func:`.index.compact_tables` (by-path
-    re-read, then the one-file-per-bucket write). Cost: one full
-    shuffle of the INDEX (not the corpus text — band keys and packed
-    digests only), paid once per compaction window; probes in between
-    stay O(batch).
-
-    Returns the new ``(keys_table, sets_table)`` names under
-    ``name_tag``; the old tables are left for the caller to drop once
-    readers drain (snapshot-style swap, never in-place).
-    """
-    new_keys = f"tada_lshidx_keys_{name_tag}"
-    new_sets = f"tada_lshidx_sets_{name_tag}"
+    SMJ's local sort (appends accumulate one run per wave), and
+    sequential scan IO. The local Sort node stays — Spark has not
+    claimed bucketed-scan output ordering since 3.0 (SPARK-28632) —
+    and the no-Exchange probe contract is unchanged (plan-pinned in
+    tests/test_plan_shapes). Cost: one shuffle of the INDEX (band keys
+    and packed digests, not corpus text) per compaction window."""
     compact_tables(
-        spark,
-        [(keys_table, new_keys, "bk"), (sets_table, new_sets, "did")],
-        n_buckets,
-        base_path,
+        spark, [(keys_table, "bk"), (sets_table, "did")], n_buckets
     )
-    return new_keys, new_sets
 
 
 def levenshtein_pairs(

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from .dedup import cosine, dot, norm
 from .hashing import hash32, perm_coeffs, MERSENNE_P
-from .index import append_tables, build_tables, compact_tables
+from .index import append_tables, build_tables, committed, compact_tables
+from .index import read_committed
 from .persist import hold
 
 
@@ -144,31 +145,19 @@ def _plane_sign(plane: int, dim: int) -> int:
 
 
 def hyperplane_bucket(
-    vec, dims: int, planes: int, plane_offset: int = 0
+    vec: str, dims: int, planes: int, plane_offset: int = 0
 ) -> Column:
     """LSH bucket id: bit p is the sign of <plane_{offset+p}, vec>.
     ``plane_offset`` selects an independent plane set, giving the
     independent hash tables of multi-table LSH.
 
-    ``vec`` is the COLUMN NAME of an array<double> column (a
-    ``Column`` is also accepted for backward compatibility but costs
-    far more to build). The expression is rendered as ONE SQL string
-    through ``F.expr`` — building the dims x planes projection as
-    chained Column operators costs thousands of py4j round-trips
-    (~4 s of driver time per query at 64x8); the SQL string is one
-    call and parses in milliseconds. The arithmetic (left-fold sum,
-    same sign matrix) is identical either way, bit-for-bit with the
-    DuckDB oracle."""
-    if not isinstance(vec, str):
-        # Column fallback: legacy slow path, kept for API compatibility
-        bucket: Column = F.lit(0).cast("bigint")
-        for p in range(planes):
-            signs = [_plane_sign(plane_offset + p, d) for d in range(dims)]
-            proj: Column = F.lit(0.0)
-            for d, s in enumerate(signs):
-                proj = proj + F.element_at(vec, d + 1) * F.lit(float(s))
-            bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(0)
-        return bucket
+    ``vec`` is the COLUMN NAME of an array<double> column. The
+    expression is rendered as ONE SQL string through ``F.expr`` —
+    building the dims x planes projection as chained Column operators
+    costs thousands of py4j round-trips (~4 s of driver time per query
+    at 64x8); the SQL string is one call and parses in milliseconds.
+    The arithmetic (left-fold sum, fixed sign matrix) is bit-for-bit
+    the DuckDB oracle's."""
     terms = []
     for p in range(planes):
         proj = "0.0D" + "".join(
@@ -368,16 +357,13 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     name_tag: str = "default",
-    base_path: Optional[str] = None,
     n_centroids: int = 16,
     n_buckets: int = IVF_INDEX_BUCKETS,
 ) -> tuple:
     """Persist the write-once IVF index — the vector twin of
-    ``dedup.build_lsh_index`` (r10 verdict item 6:
-    :func:`ivf_ann_incremental` still re-derived coarse lists
-    in-session; a production vector index pays the coarse quantizer
-    ONCE per corpus release and every later query batch probes the
-    stored lists).
+    ``dedup.build_lsh_index``: the coarse quantizer is paid ONCE per
+    corpus release and every later query batch probes the stored
+    lists (:func:`ivf_ann_incremental` re-derives them in-session).
 
     Two parquet tables:
 
@@ -392,11 +378,17 @@ def build_ivf_index(
       only the probed lists (bucket pruning on the ``cid IN (...)``
       probe filter) and never recomputes a corpus norm.
 
-    Returns ``(cents_table, lists_table)``. Idempotent per
-    ``name_tag`` — an existing layout is reused, not rewritten."""
+    Both tables are partitioned by generation (:mod:`.index`). The
+    list table heads the index and holds its commit: it is the table
+    every append and compaction writes. The centroid table is written
+    once, here, as gen ``0``, and is read whole — the quantizer is
+    frozen, and a build returns only after its commit. Returns
+    ``(cents_table, lists_table)``. Idempotent per ``name_tag``: a
+    committed index is reused, not rewritten; a half-built pair is
+    rebuilt."""
     cents_t = f"tada_ivfidx_cents_{name_tag}"
     lists_t = f"tada_ivfidx_lists_{name_tag}"
-    if all(spark.catalog.tableExists(t) for t in (cents_t, lists_t)):
+    if committed(spark, lists_t):
         return cents_t, lists_t
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
@@ -408,11 +400,7 @@ def build_ivf_index(
     # concurrent writes: a lazy persist lets both race to compute it
     cents.count()
     lists = member.select("cid", "vec_id", "vc", "nc")
-    build_tables(
-        [(cents_t, cents, None), (lists_t, lists, "cid")],
-        n_buckets,
-        base_path,
-    )
+    build_tables([(lists_t, lists, "cid"), (cents_t, cents, None)], n_buckets)
     return cents_t, lists_t
 
 
@@ -424,6 +412,7 @@ def append_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_buckets: int = IVF_INDEX_BUCKETS,
+    gen: Optional[str] = None,
 ) -> None:
     """Fold a batch of NEW vectors into the persisted IVF index — the
     maintenance step that completes the vector-index lifecycle
@@ -435,10 +424,11 @@ def append_ivf_index(
     :func:`ivf_ann_incremental` already pins in-session: re-training
     centroids per wave would invalidate every stored assignment):
     batch vectors are scored against the broadcast STORED centroid
-    table, argmax-assigned, normed, and appended as additional
-    bucketed+sorted files into the list table. The existing index
-    files are never read or rewritten — append cost is O(batch x
-    n_centroids), independent of corpus size. Bucket pruning and the
+    table, argmax-assigned, normed, and appended as one new generation
+    of the list table (:func:`.index.append_tables`; ``gen`` names it,
+    and an already committed ``gen`` makes the call a no-op). The
+    existing index files are never read or rewritten — append cost is
+    O(batch x n_centroids), independent of corpus size. Bucket pruning and the
     no-Exchange probe join survive appends (file-count-independent);
     multi-file buckets only add a LOCAL sort in SMJ plans, and the
     probe path joins via broadcast anyway."""
@@ -450,7 +440,7 @@ def append_ivf_index(
         "nc", norm("vc")
     )
     lists = member.select("cid", "vec_id", "vc", "nc")
-    append_tables([(lists_table, lists, "cid")], n_buckets)
+    append_tables([(lists_table, lists, "cid")], n_buckets, gen)
 
 
 def probe_ivf_index(
@@ -490,7 +480,9 @@ def probe_ivf_index(
     cids = sorted(
         r["cid"] for r in probes.select("cid").distinct().collect()
     )
-    lists = spark.table(lists_table).filter(F.col("cid").isin(cids))
+    lists = read_committed(spark, lists_table)[0].filter(
+        F.col("cid").isin(cids)
+    )
     scored = (
         lists.join(F.broadcast(probes.withColumn("nq", norm("vq"))), on="cid")
         .filter(F.col("query_id") != F.col("vec_id"))
@@ -511,40 +503,15 @@ def probe_ivf_index(
 
 def compact_ivf_index(
     spark,
-    cents_table: str,
     lists_table: str,
-    name_tag: str,
-    base_path: Optional[str] = None,
     n_buckets: int = IVF_INDEX_BUCKETS,
-) -> tuple:
-    """Rewrite an appended-to IVF index into a fresh one-file-per-
-    bucket layout — the vector twin of ``dedup.compact_lsh_index``
-    (r11 verdict, What's missing #2: every :func:`append_ivf_index`
-    wave adds one file per written cid bucket forever; multi-file
-    buckets degrade file listing, turn the per-bucket sort into a
-    multi-run merge, and fragment scan IO). Compaction restores one
-    sorted sequential file per cid bucket, paid as ONE shuffle of the
-    INDEX (vectors + norms, not query traffic), once per maintenance
-    window; probes in between stay O(batch x n_centroids).
-
-    Both tables go through :func:`.index.compact_tables` (by-path
-    re-read, then the one-file-per-bucket write).
-
-    The centroid table (n_centroids rows) is copied under the new tag
-    so the returned pair is a self-contained snapshot — callers swap
-    to ``(new_cents, new_lists)`` and drop the old pair once readers
-    drain; the frozen-quantizer contract (append_ivf_index) means the
-    copy is value-identical, never re-trained. Returns the new
-    ``(cents_table, lists_table)`` names."""
-    new_cents = f"tada_ivfidx_cents_{name_tag}"
-    new_lists = f"tada_ivfidx_lists_{name_tag}"
-    compact_tables(
-        spark,
-        [(cents_table, new_cents, None), (lists_table, new_lists, "cid")],
-        n_buckets,
-        base_path,
-    )
-    return new_cents, new_lists
+) -> None:
+    """Rewrite an appended-to IVF list table in place into one sorted
+    file per cid bucket — the vector twin of ``dedup.compact_lsh_index``
+    (:func:`.index.compact_tables`), paid as ONE shuffle of the INDEX
+    (vectors + norms) per maintenance window. The frozen centroid
+    table is left as it is."""
+    compact_tables(spark, [(lists_table, "cid")], n_buckets)
 
 
 def quantize_int8(
@@ -844,26 +811,25 @@ def lsh_ann_topk_multi(
     """
     def tabled(df: DataFrame, idc: str, out_id: str) -> DataFrame:
         v = F.col(vec_col).cast("array<double>")
+        # each table's bucket is its own projected column BEFORE the
+        # explode: inlined into the Generate, the n_tables x planes
+        # dot-product sums overflow what Janino compiles in one method
+        buckets = [
+            hyperplane_bucket("__v", dims, planes, plane_offset=t * planes)
+            .alias(f"__b{t}")
+            for t in range(n_tables)
+        ]
         tables = F.array(
             *[
-                F.struct(
-                    F.lit(t).alias("t"),
-                    hyperplane_bucket(
-                        "__v", dims, planes, plane_offset=t * planes
-                    ).alias("b"),
-                )
+                F.struct(F.lit(t).alias("t"), F.col(f"__b{t}").alias("b"))
                 for t in range(n_tables)
             ]
         )
         return (
             df.select(F.col(idc).alias(out_id), v.alias("__v"))
-            .withColumn("__tb", F.explode(tables))
-            .select(
-                out_id,
-                "__v",
-                F.col("__tb.t").alias("t"),
-                F.col("__tb.b").alias("b"),
-            )
+            .select(out_id, "__v", *buckets)
+            .select(out_id, "__v", F.explode(tables).alias("__tb"))
+            .select(out_id, "__v", "__tb.t", "__tb.b")
         )
 
     ce = tabled(corpus, id_col, "vec_id")

@@ -569,10 +569,10 @@ def _dedup_index_build(spark, sf_dir):
     semantics are pinned by the probe query's Jaccard outputs.
     Build cost is one corpus scan + one signature shuffle + one
     pack shuffle, paid once per ingest wave."""
-    keys_t, sets_t = _ensure_lsh_index(spark, sf_dir)
-    keys = spark.table(keys_t).select("did", "band", "key")
-    sz = spark.table(sets_t).select("did", "sz")
-    return keys.join(sz, "did").select(
+    from task_on_dataframes_spark.operators.index import read_committed
+
+    keys, sets = read_committed(spark, *_ensure_lsh_index(spark, sf_dir))
+    return keys.join(sets.select("did", "sz"), "did").select(
         F.col("did").alias("doc_id"), "band", "key", "sz"
     )
 
@@ -771,10 +771,10 @@ def _dedup_index_compact(spark, sf_dir):
         spark, wave1, "doc_id", "text", keys_t, sets_t,
         num_perm=16, bands=4, shingle_n=2,
     )
-    ck, cs = compact_lsh_index(spark, keys_t, sets_t, tag + "_c")
+    compact_lsh_index(spark, keys_t, sets_t)
     wave2 = docs.filter(F.col("doc_id") % 7 == 2)
     return probe_lsh_index(
-        spark, wave2, "doc_id", "text", ck, cs,
+        spark, wave2, "doc_id", "text", keys_t, sets_t,
         num_perm=16, bands=4, threshold=0.5, shingle_n=2,
     )
 

@@ -911,8 +911,10 @@ def _ann_index_build(spark, sf_dir):
     assignment, and the norm from the raw parquet. Build cost is one
     corpus scan + the centroid-sample shuffle + the assignment argmax,
     paid once per corpus release."""
-    cents_t, lists_t = _ensure_ivf_index(spark, sf_dir)
-    return spark.table(lists_t).select(
+    from task_on_dataframes_spark.operators.index import read_committed
+
+    _, lists_t = _ensure_ivf_index(spark, sf_dir)
+    return read_committed(spark, lists_t)[0].select(
         "vec_id", "cid", F.round("nc", 5).alias("nc")
     )
 
@@ -1210,11 +1212,11 @@ def _ann_index_compact(spark, sf_dir):
     )
     growth = emb.filter(F.col("vec_id") % 10 == 5)
     append_ivf_index(spark, growth, cents_t, lists_t)
-    cc, cl = compact_ivf_index(spark, cents_t, lists_t, tag + "_c")
+    compact_ivf_index(spark, lists_t)
     queries = emb.filter(
         (F.col("vec_id") % 10 == 0) & (F.col("vec_id") < 200)
     ).select(F.col("vec_id").alias("query_id"), "embedding")
-    return probe_ivf_index(spark, queries, cc, cl, k=10, n_probe=4)
+    return probe_ivf_index(spark, queries, cents_t, lists_t, k=10, n_probe=4)
 
 
 def clustered_embeddings(

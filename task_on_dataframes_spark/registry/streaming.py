@@ -379,9 +379,9 @@ def _stream_index_maintain(spark, sf_dir):
     dedup_index_maintain query, checked by the SAME value oracle, but
     produced by the streaming engine (sequential micro-batches;
     foreachBatch is at-least-once, made idempotent by the per-batch
-    overwrite + ledger gating in streaming/index.py). phase = doc_id % 7
-    recovers the wave tag. Output: (phase, doc_id, n_matches,
-    max_jaccard)."""
+    overwrite + committed generations in streaming/index.py).
+    phase = doc_id % 7 recovers the wave tag. Output: (phase, doc_id,
+    n_matches, max_jaccard)."""
     import tempfile
     import uuid
 
@@ -497,8 +497,8 @@ def _stream_ann_maintain(spark, sf_dir):
     quantizer. Wave 2's neighbors can therefore include wave-1
     vectors — the same grown-index semantics as ann_index_maintain,
     produced by the streaming engine (foreachBatch at-least-once,
-    made idempotent by the per-batch overwrite + ledger gating in
-    streaming/index.py). phase = 1 for % 20 == 5 arrivals, 2 for
+    made idempotent by the per-batch overwrite + committed generations
+    in streaming/index.py). phase = 1 for % 20 == 5 arrivals, 2 for
     % 20 == 15. Output: (phase, query_id, vec_id, cos, rank)."""
     import tempfile
     import uuid

@@ -94,14 +94,15 @@ def bucketed_table_sink(
     bucket_cols: list[str],
     n_buckets: int = 32,
     path: str | None = None,
-    mode: str = "overwrite",
+    partition_cols: list[str] | None = None,
 ) -> None:
-    """Write a bucketed (+sorted) catalog table: repeated joins /
-    aggregations on ``bucket_cols`` then read co-located partitions and
-    skip the shuffle entirely — the persistent-layout lever for a table
-    joined on the same key by every query. (Bucketing requires a
-    metastore-backed table.) The one writer of every persisted index
-    table (``operators/index.py``).
+    """Create a bucketed (+sorted) catalog table holding ``df``:
+    repeated joins / aggregations on ``bucket_cols`` then read
+    co-located partitions and skip the shuffle entirely — the
+    persistent-layout lever for a table joined on the same key by
+    every query. (Bucketing requires a metastore-backed table.) The
+    creator of every persisted index table (``operators/index.py``,
+    which adds later generations as ``partition_cols`` partitions).
 
     Layout rule: rows are first placed with ``repartition(n_buckets,
     *bucket_cols)``, which shares ``bucketBy``'s murmur3-pmod
@@ -112,15 +113,12 @@ def bucketed_table_sink(
     ``bucket_cols`` writes a plain table through the same steps (the
     IVF centroid table: a few rows that every consumer broadcasts).
 
-    ``overwrite`` lands the new table at ``path`` — callers pass a
-    fresh directory, because an in-memory catalog forgets tables
-    across sessions while their warehouse directories linger, and a
-    managed overwrite would hit LOCATION_ALREADY_EXISTS. The sink
-    issues no DDL of its own: a caller writing several tables at once
-    drops the old ones first, on one thread
-    (``operators/index._write_tables``). ``append`` adds files to the
-    existing table (Spark validates the bucket spec against the
-    catalog)."""
+    The table must not exist yet. Callers pass a fresh ``path``,
+    because an in-memory catalog forgets tables across sessions while
+    their warehouse directories linger, and a managed table would hit
+    LOCATION_ALREADY_EXISTS. The sink issues no DDL of its own: a
+    caller writing several tables at once drops the old ones first,
+    on one thread (``operators/index.build_tables``)."""
     w = df.write
     if bucket_cols:
         w = (
@@ -128,9 +126,11 @@ def bucketed_table_sink(
             .write.bucketBy(n_buckets, *bucket_cols)
             .sortBy(*bucket_cols)
         )
+    if partition_cols:
+        w = w.partitionBy(*partition_cols)
     if path is not None:
         w = w.option("path", path)
-    w.mode(mode).format("parquet").saveAsTable(table)
+    w.format("parquet").saveAsTable(table)
 
 
 def manifest_snapshot(path: str) -> list:

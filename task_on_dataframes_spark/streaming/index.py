@@ -15,15 +15,15 @@ their probe and append.
 Micro-batches execute sequentially, but ``foreachBatch`` is
 AT-LEAST-ONCE: a micro-batch that fails (or whose driver dies) after
 side effects but before its offset commits is re-run with the same
-``batch_id`` on restart. Neither a parquet append nor an index-table
-append is naturally idempotent, so the batch body makes itself so:
-results are written under a per-batch directory with ``overwrite``
-(a retry replaces, never duplicates), and the index append is gated
-by a per-batch ledger marker written after the append lands (a retry
-skips it). The residual window — a crash exactly between the index
-append and its marker — is the window every non-transactional sink
-has; a production deployment closes it with a transactional table
-format (Delta/Iceberg) whose append and commit are atomic.
+``batch_id`` on restart. The batch body is idempotent because the
+index append is one generation with one commit
+(``operators/index.py``): each batch appends as the generation
+labelled by ``(results_dir, batch_id)``. A batch whose label is
+committed has landed whole and is skipped. Any other batch re-runs
+from the start: its results directory is overwritten, and its index
+generation is rewritten and committed. Probes read committed
+generations only, so a re-run probe never sees its own batch's
+partial rows.
 
 Scale shape: identical to the batch probe/append — every stage inside
 ``foreachBatch`` is micro-batch-sized (shingle, sign, pack, probe
@@ -33,14 +33,19 @@ not in Spark streaming state, so there is nothing watermark-bounded
 to evict: the operator is stateless from the engine's point of view.
 
 Reference note: the reference engine (frame_tasks/) has no streaming
-surface at all; this is ⊕ production shape for rolling 100 TB crawl
+surface at all; this is the production shape for rolling 100 TB crawl
 ingest where dedup must converge across waves.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.index import committed
+from ..operators.persist import release
 from ..sources import catalog
 
 
@@ -50,54 +55,41 @@ def _drain(
     results_dir: str,
     checkpoint: str,
     max_files_per_trigger: int,
+    head: str,
     probe,
     append,
     empty_schema: str,
 ) -> DataFrame:
     """Drain ``src_dir`` (one parquet file per ingest wave; the file
     source orders files oldest-mtime-first) with ``availableNow``. Per
-    micro-batch, in order: ``probe(sess, batch_df)`` overwrites
-    ``results_dir/b{batch_id}``, then ``append(sess, batch_df)`` runs,
-    gated by the ledger marker ``{results_dir}_ledger/appended_{batch_id}``.
-    Returns the drained results frame, or an empty ``empty_schema``
-    frame when no batch ran.
+    micro-batch whose generation label is not yet committed on the
+    index headed by ``head``, in order: ``probe(sess, batch_df)``
+    overwrites ``results_dir/b{batch_id}``, then ``append(sess,
+    batch_df, gen)`` writes and commits the batch as generation
+    ``gen``. Returns the drained results frame, or an empty
+    ``empty_schema`` frame when no batch ran.
 
     The probe result must be materialized BEFORE the append (the
     write action does this naturally) — a lazy probe evaluated after
-    the append would see the batch's own rows and self-match. On a
-    retried batch whose append already landed, the probe would run
-    against an index that already CONTAINS the batch and the
-    overwrite would record self-matches — so a ledgered batch skips
-    the probe rewrite too (its previous overwrite already committed
-    the pre-append probe result; parquet directory writes finish with
-    the _SUCCESS marker the ledger write follows).
+    the commit would see the batch's own rows and self-match.
 
     The query runs its micro-batches in a session of its own; what the
     probes held there (:func:`.operators.persist.hold`) is released
     once the query stops, since no returned frame reads it."""
-    import os
-
-    from task_on_dataframes_spark.operators.persist import release
-
     schema = catalog.schema_of(spark, src_dir)
-    ledger = results_dir.rstrip("/") + "_ledger"
-    os.makedirs(ledger, exist_ok=True)
+    scope = hashlib.md5(results_dir.encode()).hexdigest()[:8]
     run_session: list = []  # the session the batches run in
 
     def _probe_then_append(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger, f"appended_{batch_id}")
-        if os.path.exists(marker):
-            # at-least-once replay of a fully-applied batch: both the
-            # per-batch results overwrite and the index append landed
-            return
         sess = batch_df.sparkSession
+        gen = f"{scope}_{batch_id}"
+        if gen in committed(sess, head):
+            return  # an at-least-once replay of a batch that landed
         run_session[:] = [sess]
         probe(sess, batch_df).write.mode("overwrite").parquet(
             os.path.join(results_dir, f"b{batch_id}")
         )
-        append(sess, batch_df)
-        with open(marker, "w") as fh:
-            fh.write("committed\n")
+        append(sess, batch_df, gen)
 
     q = (
         spark.readStream.schema(schema)
@@ -158,15 +150,15 @@ def index_maintain_stream(
             shingle_n=shingle_n, shape="merge",
         )
 
-    def append(sess, batch_df):
+    def append(sess, batch_df, gen):
         append_lsh_index(
             sess, batch_df, id_col, text_col, keys_table, sets_table,
-            num_perm=num_perm, bands=bands, shingle_n=shingle_n,
+            num_perm=num_perm, bands=bands, shingle_n=shingle_n, gen=gen,
         )
 
     return _drain(
         spark, src_dir, results_dir, checkpoint, max_files_per_trigger,
-        probe, append,
+        keys_table, probe, append,
         f"{id_col} bigint, n_matches int, max_jaccard double",
     )
 
@@ -218,15 +210,15 @@ def ann_maintain_stream(
             k=k, n_probe=n_probe, vec_col=vec_col,
         )
 
-    def append(sess, batch_df):
+    def append(sess, batch_df, gen):
         append_ivf_index(
             sess, batch_df, cents_table, lists_table,
-            id_col=id_col, vec_col=vec_col,
+            id_col=id_col, vec_col=vec_col, gen=gen,
         )
 
     return _drain(
         spark, src_dir, results_dir, checkpoint, max_files_per_trigger,
-        probe, append,
+        lists_table, probe, append,
         "query_id bigint, vec_id bigint, cos double, rank int",
     )
 
@@ -244,7 +236,6 @@ def stage_wave_files(
     production the crawl already lands as timestamped files; this
     simulates that arrival from a static table. Driver-local pyarrow
     write — wave-sized, bounded by the simulated ingest batch."""
-    import os
     import tempfile
     import time
 

@@ -385,11 +385,11 @@ def test_index_writes_one_file_per_bucket(spark, sf_dir):
 def test_lsh_build_half_failure_propagates_and_retry_rebuilds(
     spark, sf_dir, monkeypatch
 ):
-    """Fault injection on the shared two-table write: when the sets
-    write of an LSH build raises, the exception reaches the caller
-    only after the concurrent keys write has finished, and a retried
-    build under the same tag rebuilds both tables to exactly what a
-    clean build writes."""
+    """Fault injection on the shared two-table build: when the sets
+    write raises, the exception reaches the caller only after the
+    concurrent keys write has finished, and nothing is committed. A
+    retried build under the same tag rebuilds the half-built pair
+    (it is not reused) to exactly what a clean build writes."""
     import pytest
 
     from task_on_dataframes_spark.operators import index
@@ -408,10 +408,11 @@ def test_lsh_build_half_failure_propagates_and_retry_rebuilds(
     monkeypatch.setattr(index, "bucketed_table_sink", flaky_sink)
     with pytest.raises(RuntimeError, match="injected sets-write failure"):
         build_lsh_index(spark, corpus, "doc_id", "text", name_tag="t_fault")
-    # the sibling write ran to completion before the error propagated
+    # the sibling write ran to completion before the error propagated,
+    # and the half-built pair has no committed generation
     assert finished == ["tada_lshidx_keys_t_fault"]
     assert spark.catalog.tableExists("tada_lshidx_keys_t_fault")
-    assert not spark.catalog.tableExists("tada_lshidx_sets_t_fault")
+    assert index.committed(spark, "tada_lshidx_keys_t_fault") == []
 
     monkeypatch.setattr(index, "bucketed_table_sink", real_sink)
     retried = build_lsh_index(
@@ -420,18 +421,159 @@ def test_lsh_build_half_failure_propagates_and_retry_rebuilds(
     clean = build_lsh_index(
         spark, corpus, "doc_id", "text", name_tag="t_fault_clean"
     )
-    for got_t, want_t in zip(retried, clean):
-        got = sorted(map(tuple, spark.table(got_t).collect()))
-        want = sorted(map(tuple, spark.table(want_t).collect()))
-        assert got == want and want, (got_t, want_t)
+    assert index.committed(spark, retried[0]) == ["0"]
+    for got_df, want_df in zip(
+        index.read_committed(spark, *retried),
+        index.read_committed(spark, *clean),
+    ):
+        got = sorted(map(tuple, got_df.collect()))
+        want = sorted(map(tuple, want_df.collect()))
+        assert got == want and want
+
+
+def _fault_fixture(spark):
+    """A two-doc corpus, a wave holding a near-dup of corpus doc 100,
+    and a probe batch that near-dups both: its probe result tells
+    which generations a reader sees."""
+    base = (
+        "the quick brown fox jumps over the lazy dog near the old "
+        "stone bridge by the river every single morning without fail"
+    )
+    corpus = spark.createDataFrame(
+        [(100, base), (101, "completely different corpus text here "
+                            "about astronomy and telescopes at night")],
+        ["doc_id", "text"],
+    )
+    wave = spark.createDataFrame(
+        [(200, base.replace("lazy", "sleepy"))], ["doc_id", "text"]
+    )
+    probe = spark.createDataFrame(
+        [(300, base.replace("lazy", "drowsy"))], ["doc_id", "text"]
+    )
+    return corpus, wave, probe
+
+
+def _probe_rows(spark, batch, keys_t, sets_t):
+    from task_on_dataframes_spark.operators.dedup import probe_lsh_index
+
+    return {
+        tuple(r)
+        for r in probe_lsh_index(
+            spark, batch, "doc_id", "text", keys_t, sets_t, threshold=0.5
+        ).collect()
+    }
+
+
+def test_lsh_append_half_failure_leaves_the_commit_unchanged(
+    spark, monkeypatch
+):
+    """Fault injection on the two-table append: the sets write raises
+    while the keys write lands. The error propagates, the committed
+    generations are unchanged, a probe returns what it returned before
+    the append (the keys rows of the failed generation are invisible),
+    and a retried append probes equal to a clean append."""
+    import pytest
+
+    from task_on_dataframes_spark.operators import index
+    from task_on_dataframes_spark.operators.dedup import (
+        append_lsh_index,
+        build_lsh_index,
+    )
+
+    corpus, wave, batch = _fault_fixture(spark)
+    keys_t, sets_t = build_lsh_index(
+        spark, corpus, "doc_id", "text", name_tag="t_append_fault"
+    )
+    gens = index.committed(spark, keys_t)
+    before = _probe_rows(spark, batch, keys_t, sets_t)
+    real_write = index._write_gen
+
+    def flaky_write(spec, *args):
+        if spec[0] == sets_t:
+            raise RuntimeError("injected sets-append failure")
+        real_write(spec, *args)
+
+    monkeypatch.setattr(index, "_write_gen", flaky_write)
+    with pytest.raises(RuntimeError, match="injected sets-append failure"):
+        append_lsh_index(spark, wave, "doc_id", "text", keys_t, sets_t)
+    assert index.committed(spark, keys_t) == gens
+    assert _probe_rows(spark, batch, keys_t, sets_t) == before
+
+    monkeypatch.setattr(index, "_write_gen", real_write)
+    append_lsh_index(spark, wave, "doc_id", "text", keys_t, sets_t)
+    ck, cs = build_lsh_index(
+        spark, corpus, "doc_id", "text", name_tag="t_append_clean"
+    )
+    append_lsh_index(spark, wave, "doc_id", "text", ck, cs)
+    assert index.committed(spark, keys_t) == index.committed(spark, ck)
+    after = _probe_rows(spark, batch, keys_t, sets_t)
+    assert after == _probe_rows(spark, batch, ck, cs)
+    # the wave's near-dup is visible once its generation is committed
+    assert after != before
+
+
+def test_lsh_compact_failure_before_commit_keeps_the_index(
+    spark, monkeypatch
+):
+    """Fault injection on compaction: the commit raises after the
+    compacted generation is written. The probe is unchanged and the
+    committed generations are the old ones; a rerun compacts to one
+    generation of at most one file per bucket, probe still unchanged."""
+    import glob
+    import os
+
+    import pytest
+
+    from task_on_dataframes_spark.operators import index
+    from task_on_dataframes_spark.operators.dedup import (
+        LSH_INDEX_BUCKETS,
+        append_lsh_index,
+        build_lsh_index,
+        compact_lsh_index,
+    )
+
+    corpus, wave, batch = _fault_fixture(spark)
+    keys_t, sets_t = build_lsh_index(
+        spark, corpus, "doc_id", "text", name_tag="t_compact_fault"
+    )
+    append_lsh_index(spark, wave, "doc_id", "text", keys_t, sets_t)
+    gens = index.committed(spark, keys_t)
+    before = _probe_rows(spark, batch, keys_t, sets_t)
+    assert before
+
+    def failing_commit(*args):
+        raise RuntimeError("injected commit failure")
+
+    monkeypatch.setattr(index, "_commit", failing_commit)
+    with pytest.raises(RuntimeError, match="injected commit failure"):
+        compact_lsh_index(spark, keys_t, sets_t)
+    assert index.committed(spark, keys_t) == gens
+    assert _probe_rows(spark, batch, keys_t, sets_t) == before
+
+    monkeypatch.undo()
+    compact_lsh_index(spark, keys_t, sets_t)
+    (new,) = index.committed(spark, keys_t)
+    assert new not in gens
+    assert _probe_rows(spark, batch, keys_t, sets_t) == before
+    for t in (keys_t, sets_t):
+        loc = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
+            .filter(F.col("col_name") == "Location")
+            .collect()[0]["data_type"]
+        ).removeprefix("file:")
+        assert os.listdir(loc) and all(
+            d == f"gen={new}" for d in os.listdir(loc) if d.startswith("gen=")
+        )
+        files = glob.glob(os.path.join(loc, "**", "*.parquet"), recursive=True)
+        assert len(files) <= LSH_INDEX_BUCKETS, files
 
 
 def test_lsh_index_append_then_compact_roundtrip(spark, sf_dir):
-    """The r11 index lifecycle: appending a wave into the persisted
-    index makes its documents probe-visible (equal to a one-shot over
+    """The index lifecycle: appending a wave into the persisted index
+    makes its documents probe-visible (equal to a one-shot over
     corpus+wave), the append must not rewrite existing index files,
-    and compaction restores one file per bucket while leaving probe
-    results bit-identical."""
+    and in-place compaction restores one file per bucket while leaving
+    probe results bit-identical."""
     import glob
     import os
 
@@ -473,15 +615,10 @@ def test_lsh_index_append_then_compact_roundtrip(spark, sf_dir):
         .filter(F.col("col_name") == "Location")
         .collect()[0]["data_type"]
     ).removeprefix("file:")
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(os.path.join(keys_dir, "*.parquet"))
-    }
+    pattern = os.path.join(keys_dir, "**", "*.parquet")
+    before = {p: os.path.getmtime(p) for p in glob.glob(pattern, recursive=True)}
     append_lsh_index(spark, wave1, "doc_id", "text", keys_t, sets_t)
-    after = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(os.path.join(keys_dir, "*.parquet"))
-    }
+    after = {p: os.path.getmtime(p) for p in glob.glob(pattern, recursive=True)}
     # append-only: every pre-existing file survives untouched
     assert set(before) <= set(after) and len(after) > len(before)
     assert all(after[p] == m for p, m in before.items())
@@ -495,29 +632,24 @@ def test_lsh_index_append_then_compact_roundtrip(spark, sf_dir):
     want = {tuple(r) for r in oneshot.collect()}
     assert got == want and len(want) > 0
     # compaction: one sorted file per bucket, identical probe output
-    ck, cs = compact_lsh_index(spark, keys_t, sets_t, "t_maintain_c")
-    ck_dir = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {ck}")
-        .filter(F.col("col_name") == "Location")
-        .collect()[0]["data_type"]
-    ).removeprefix("file:")
-    files = glob.glob(os.path.join(ck_dir, "*.parquet"))
+    compact_lsh_index(spark, keys_t, sets_t)
+    files = glob.glob(pattern, recursive=True)
     assert len(files) <= LSH_INDEX_BUCKETS, files
+    assert not set(files) & set(after)  # the old generations are gone
     compacted = {
         tuple(r)
         for r in probe_lsh_index(
-            spark, wave2, "doc_id", "text", ck, cs, threshold=0.5
+            spark, wave2, "doc_id", "text", keys_t, sets_t, threshold=0.5
         ).collect()
     }
     assert compacted == got
 
 
 def test_ivf_index_compact_roundtrip(spark, sf_dir):
-    """The r12 vector-index compaction (twin of the LSH roundtrip
-    above): appending a wave leaves multi-file cid buckets; compaction
+    """The vector-index compaction (twin of the LSH roundtrip above):
+    appending a wave leaves multi-file cid buckets; in-place compaction
     restores at most one file per bucket while leaving probe results
-    bit-identical, and the compacted pair is a self-contained snapshot
-    (centroids copied under the new tag, value-identical)."""
+    bit-identical, and the frozen centroid table is left untouched."""
     import glob
     import os
 
@@ -549,25 +681,50 @@ def test_ivf_index_compact_roundtrip(spark, sf_dir):
         ).collect()
     }
     assert len(before) > 0
-    cc, cl = compact_ivf_index(spark, cents_t, lists_t, "t_ivfcmp_c")
+    old_c = {(r["cid"], tuple(r["cv"])) for r in spark.table(cents_t).collect()}
+    compact_ivf_index(spark, lists_t)
     cl_dir = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {cl}")
+        spark.sql(f"DESCRIBE TABLE EXTENDED {lists_t}")
         .filter(F.col("col_name") == "Location")
         .collect()[0]["data_type"]
     ).removeprefix("file:")
-    files = glob.glob(os.path.join(cl_dir, "*.parquet"))
+    files = glob.glob(os.path.join(cl_dir, "**", "*.parquet"), recursive=True)
     assert len(files) <= IVF_INDEX_BUCKETS, files
-    # centroid snapshot is value-identical under the new tag
-    old_c = {(r["cid"], tuple(r["cv"])) for r in spark.table(cents_t).collect()}
-    new_c = {(r["cid"], tuple(r["cv"])) for r in spark.table(cc).collect()}
+    new_c = {(r["cid"], tuple(r["cv"])) for r in spark.table(cents_t).collect()}
     assert new_c == old_c
     after = {
         tuple(r)
         for r in probe_ivf_index(
-            spark, queries_df, cc, cl, k=5, n_probe=3
+            spark, queries_df, cents_t, lists_t, k=5, n_probe=3
         ).collect()
     }
     assert after == before
+
+
+def test_lsh_ann_topk_multi_compiles_without_fallback(spark):
+    """Multi-table LSH must compile under whole-stage codegen: with
+    ``spark.sql.codegen.fallback`` off, a Generate stage that inlines
+    every table's hyperplane sums fails Janino and raises instead of
+    falling back."""
+    from task_on_dataframes_spark.operators.similarity import (
+        lsh_ann_topk_multi,
+    )
+
+    rows = [
+        (i, [float(((i * 7 + d * 13) % 17) - 8) for d in range(64)])
+        for i in range(20)
+    ]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    queries = emb.withColumnRenamed("vec_id", "query_id")
+    old = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        got = lsh_ann_topk_multi(
+            emb, queries, k=3, planes=4, n_tables=2
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", old)
+    assert got
 
 
 def test_exact_dedup_counts_sum_to_corpus(spark, sf_dir):

@@ -417,12 +417,12 @@ def test_watermark_drops_late_event_in_append_mode(spark, tmp_path):
 def test_index_maintain_stream_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: a batch re-run with the same
     batch_id after its side effects landed must not double-append
-    index keys or duplicate match rows (r11 advisor, medium). Replay
-    the WHOLE drain — delete the checkpoint and re-run over the same
-    staged files with the same results/ledger dirs; availableNow with
-    maxFilesPerTrigger=1 reassigns the same batch ids — and assert
-    the results parquet, the ledger, and the index row counts are all
-    byte-for-byte unchanged."""
+    index keys or duplicate match rows. Replay the WHOLE drain —
+    delete the checkpoint and re-run over the same staged files with
+    the same results dir; availableNow with maxFilesPerTrigger=1
+    reassigns the same batch ids — and assert the results parquet,
+    the committed generations, and the committed index row counts are
+    all unchanged."""
     import glob
     import os
     import shutil
@@ -430,6 +430,10 @@ def test_index_maintain_stream_replay_is_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from task_on_dataframes_spark.operators.dedup import build_lsh_index
+    from task_on_dataframes_spark.operators.index import (
+        committed,
+        read_committed,
+    )
     from task_on_dataframes_spark.streaming.index import (
         index_maintain_stream,
         stage_wave_files,
@@ -469,10 +473,9 @@ def test_index_maintain_stream_replay_is_idempotent(spark, tmp_path):
         for p in glob.glob(os.path.join(results, "**", "*.parquet"),
                            recursive=True)
     }
-    ledger = results.rstrip("/") + "_ledger"
-    snap_ledger = sorted(os.listdir(ledger))
-    n_keys = spark.table(keys_t).count()
-    n_sets = spark.table(sets_t).count()
+    gens = committed(spark, keys_t)
+    assert len(gens) == 3  # the build and one generation per batch
+    n_keys, n_sets = (t.count() for t in read_committed(spark, keys_t, sets_t))
     # simulate a post-crash replay: offsets lost, side effects kept
     shutil.rmtree(ck)
     replay = {
@@ -489,23 +492,29 @@ def test_index_maintain_stream_replay_is_idempotent(spark, tmp_path):
                            recursive=True)
     }
     assert after_files == snap_files  # no rewrite, no duplicate files
-    assert sorted(os.listdir(ledger)) == snap_ledger
-    assert spark.table(keys_t).count() == n_keys  # no double-append
-    assert spark.table(sets_t).count() == n_sets
+    assert committed(spark, keys_t) == gens  # no double-append
+    assert [t.count() for t in read_committed(spark, keys_t, sets_t)] == [
+        n_keys, n_sets
+    ]
 
 def test_ann_maintain_stream_replay_is_idempotent(spark, tmp_path):
-    """The IVF twin of the LSH replay test (r12): drain two vector
+    """The IVF twin of the LSH replay test: drain two vector
     waves through probe-then-append, assert wave 2 can see wave 1
     (grown-index semantics), then replay the whole drain with a fresh
-    checkpoint and assert results parquet, ledger, and list-table row
-    counts are unchanged — foreachBatch at-least-once made idempotent
-    by the same per-batch overwrite + ledger gating."""
+    checkpoint and assert results parquet, committed generations, and
+    committed list-table row counts are unchanged — foreachBatch
+    at-least-once made idempotent by the same per-batch overwrite and
+    generation commit."""
     import glob
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
+    from task_on_dataframes_spark.operators.index import (
+        committed,
+        read_committed,
+    )
     from task_on_dataframes_spark.operators.similarity import (
         build_ivf_index,
     )
@@ -549,9 +558,9 @@ def test_ann_maintain_stream_replay_is_idempotent(spark, tmp_path):
         for p in glob.glob(os.path.join(results, "**", "*.parquet"),
                            recursive=True)
     }
-    ledger = results.rstrip("/") + "_ledger"
-    snap_ledger = sorted(os.listdir(ledger))
-    n_lists = spark.table(lists_t).count()
+    gens = committed(spark, lists_t)
+    assert len(gens) == 3  # the build and one generation per batch
+    n_lists = read_committed(spark, lists_t)[0].count()
     shutil.rmtree(str(tmp_path / "ck"))
     replay = {
         tuple(r)
@@ -567,5 +576,75 @@ def test_ann_maintain_stream_replay_is_idempotent(spark, tmp_path):
                            recursive=True)
     }
     assert after_files == snap_files
-    assert sorted(os.listdir(ledger)) == snap_ledger
-    assert spark.table(lists_t).count() == n_lists
+    assert committed(spark, lists_t) == gens
+    assert read_committed(spark, lists_t)[0].count() == n_lists
+
+
+def test_index_maintain_stream_commit_failure_then_rerun(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection on the drain's commit: the ALTER TABLE that
+    commits batch 1's generation raises once, after its data writes.
+    The drain fails; re-running it with a fresh checkpoint skips the
+    committed batch 0, redoes batch 1, and ends with the results and
+    the committed row counts of one clean drain."""
+    import pytest
+
+    from pyspark.sql import functions as F
+
+    from task_on_dataframes_spark.operators import index
+    from task_on_dataframes_spark.operators.dedup import build_lsh_index
+    from task_on_dataframes_spark.streaming.index import (
+        index_maintain_stream,
+        stage_wave_files,
+    )
+
+    base = (
+        "the quick brown fox jumps over the lazy dog near the old "
+        "stone bridge by the river every single morning without fail"
+    )
+    docs = spark.createDataFrame(
+        [
+            (100, base),
+            (200, base.replace("lazy", "sleepy")),
+            (300, base.replace("lazy", "drowsy")),
+        ],
+        ["doc_id", "text"],
+    )
+    src = stage_wave_files(
+        spark, docs, [F.col("doc_id") == 200, F.col("doc_id") == 300]
+    )
+
+    def drain(tag, ck):
+        keys_t, sets_t = build_lsh_index(
+            spark, docs.filter(F.col("doc_id") == 100), "doc_id", "text",
+            name_tag=tag,
+        )
+        rows = index_maintain_stream(
+            spark, src, keys_t, sets_t,
+            results_dir=str(tmp_path / tag / "out"),
+            checkpoint=str(tmp_path / tag / ck),
+        ).collect()
+        counts = [t.count() for t in index.read_committed(spark, keys_t, sets_t)]
+        return {tuple(r) for r in rows}, counts, index.committed(spark, keys_t)
+
+    clean_rows, clean_counts, clean_gens = drain("t_clean_drain", "ck")
+
+    real_commit = index._commit
+    calls = []
+
+    def commit_fails_once(spark_, head, gens):
+        calls.append(gens)
+        if len(calls) == 3:  # build, batch 0, then batch 1's commit
+            raise RuntimeError("injected commit failure")
+        real_commit(spark_, head, gens)
+
+    monkeypatch.setattr(index, "_commit", commit_fails_once)
+    with pytest.raises(Exception, match="injected commit failure"):
+        drain("t_fail_drain", "ck")
+    keys_t = "tada_lshidx_keys_t_fail_drain"
+    assert len(index.committed(spark, keys_t)) == 2  # build + batch 0
+    rows, counts, gens = drain("t_fail_drain", "ck2")
+    assert rows == clean_rows and rows
+    assert counts == clean_counts
+    assert len(gens) == len(clean_gens) == 3
