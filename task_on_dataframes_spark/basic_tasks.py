@@ -35,6 +35,35 @@ pat = re.compile
 any_name = pat(r"(.+)")
 
 
+def register_get_docs(
+    spark: SparkSession,
+    sf_dir: str,
+    registry: Optional[TaskRegistry] = None,
+) -> TaskRegistry:
+    """Register the source task ``get_docs`` — () -> [docs.id,
+    docs.text], a scan of ``<sf_dir>/documents.parquet`` — the one
+    definition every document task library starts from."""
+    registry = TaskRegistry() if registry is None else registry
+
+    @new_task(registry=registry)
+    @makes(["docs.id", "docs.text"], appends=False)
+    @close_task()
+    def get_docs(expects):
+        # the scan parallelism floor of every registry documents
+        # pipeline (``_docs``): a planner-composed pipeline runs the
+        # same CPU-bound text work above this task as its registry
+        # twin, so it must not scan narrower than that twin
+        from task_on_dataframes_spark.registry.common import _docs
+
+        df = _docs(spark, sf_dir)
+        return df.select(
+            F.col("doc_id").alias(expects[0][1]),
+            F.col("text").alias(expects[1][1]),
+        )
+
+    return registry
+
+
 def register_document_tasks(
     spark: SparkSession,
     sf_dir: str,
@@ -53,24 +82,7 @@ def register_document_tasks(
     * ``counts``        — (.+) -> {x}.counts, {x}     (generic group-by count)
     * ``top90``         — (.+\\.clean_tokens)\\Z + {x},{x}.counts -> {x}.top90
     """
-    registry = TaskRegistry() if registry is None else registry
-
-    @new_task(registry=registry)
-    @makes(["docs.id", "docs.text"], appends=False)
-    @close_task()
-    def get_docs(expects):
-        # same scan-parallelism floor as every registry documents
-        # pipeline: planner-composed pipelines do the identical
-        # CPU-heavy text work above this source task and measured
-        # 2.6-4x at 10x data on the raw 2-row-group scan while the
-        # floored registry twins ran ~1.3x (round-5 sweep)
-        from task_on_dataframes_spark.registry.common import _docs
-
-        df = _docs(spark, sf_dir)
-        return df.select(
-            F.col("doc_id").alias(expects[0][1]),
-            F.col("text").alias(expects[1][1]),
-        )
+    registry = register_get_docs(spark, sf_dir, registry)
 
     @new_task(registry=registry)
     @requires([pat(r"(.+)\.text")], arg="x")

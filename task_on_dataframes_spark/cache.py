@@ -7,10 +7,17 @@ the md5 of the canonical plan serialization and the payload is a
 parquet directory (columnar, splittable, reloadable by ANY Spark
 cluster). There is one synchronous path, :meth:`ResultCache.
 get_or_compute`, which holds a per-key lock: a hit is a zero-work
-read through the source catalog (:mod:`.sources.catalog`, whose
-memoized schema spares the inference job); a miss computes and
-stores, so concurrent callers of one key wait for a single
-computation, and every caller gets the stored parquet back.
+read through the source catalog (:mod:`.sources.catalog`); a miss
+computes and stores, so concurrent callers of one key wait for a
+single computation, and every caller gets the stored parquet back.
+
+No stored result costs a Spark job to describe. Its schema comes from
+the frame that wrote it: after the write, the catalog is seeded with
+the writer's schema, so neither the read-back nor any later hit runs
+a schema-inference job. Its row count (:meth:`ResultCache.rows`) is
+the sum of its parquet footers' row counts, read with pyarrow and
+memoized under the directory's stamp, so a pager needs no
+``count()``.
 
 The key names the plan, not the data it read: the catalog records the
 stamp of every parquet source resolved while ``compute()`` and the
@@ -89,6 +96,12 @@ class ResultCache:
             return None
         return catalog.read(spark, self._dir(key))
 
+    def rows(self, key: str) -> int:
+        """Rows of the stored result ``key``, summed from its parquet
+        footers (a root is a local directory, which the catalog can
+        always stamp)."""
+        return catalog.rows(self._dir(key))
+
     def store(self, df: DataFrame, key: str) -> DataFrame:
         df.write.mode("overwrite").parquet(self._dir(key))
         return df
@@ -107,7 +120,8 @@ class ResultCache:
             if hit is None:
                 try:
                     with catalog.recording() as sources:
-                        self.store(compute(), key)
+                        df = self.store(compute(), key)
+                    catalog.seed(spark, self._dir(key), df.schema)
                     side = os.path.join(self._dir(key), _SOURCES)
                     with open(side + ".tmp", "w") as fh:
                         json.dump(sources, fh)

@@ -27,6 +27,7 @@ from typing import Optional
 
 from pyspark.sql import SparkSession, functions as F
 
+from .basic_tasks import register_get_docs
 from .plans.decorator import close_task, makes, new_task, requires
 from .plans.task import TaskRegistry
 from .runtime import quoted
@@ -41,24 +42,7 @@ def register_llm_tasks(
     min_quality: float = 0.2,
     chunk_tokens: int = 64,
 ) -> TaskRegistry:
-    registry = TaskRegistry() if registry is None else registry
-
-    @new_task(registry=registry)
-    @makes(["docs.id", "docs.text"], appends=False)
-    @close_task()
-    def get_docs(expects):
-        # same scan-parallelism floor as every registry documents
-        # pipeline: planner-composed pipelines do the identical
-        # CPU-heavy text work above this source task and measured
-        # 2.6-4x at 10x data on the raw 2-row-group scan while the
-        # floored registry twins ran ~1.3x (round-5 sweep)
-        from task_on_dataframes_spark.registry.common import _docs
-
-        df = _docs(spark, sf_dir)
-        return df.select(
-            F.col("doc_id").alias(expects[0][1]),
-            F.col("text").alias(expects[1][1]),
-        )
+    registry = register_get_docs(spark, sf_dir, registry)
 
     @new_task(registry=registry)
     @requires([pat(r"(.+)\.text\Z")], arg="x")

@@ -19,6 +19,12 @@ visit. The reference needs Celery + pickle polling for this
 cache covers it synchronously. A plan that fails stores nothing and is
 a 500; the next request computes it again.
 
+A page of a stored frame runs one Spark job, its collect. The page
+count comes from :meth:`.cache.ResultCache.rows` (the row counts in
+the stored parquet's footers, not a ``count()``), and the stored
+frame's schema is the one the cache seeded from the frame that wrote
+it (no inference job on the read-back or on any later visit).
+
 Scale: pagination compiles to GlobalLimit operators inside Spark
 (view.py:25), so a 100 TB result ships at most ``page_size`` rows to
 the driver; the CSV route downloads one *page*, with the full-export
@@ -99,14 +105,15 @@ def create_app(
         return [load(f) for f in bs.files]
 
     def _frame(q: str, index: int):
-        """Frame ``index`` of the plan encoded in ``q``, as the cache
-        stored it. 404 unless the plan produces that frame — counted
-        from the encoded plan alone, before anything is computed."""
+        """``(key, frame)``: frame ``index`` of the plan encoded in
+        ``q`` as the cache stored it, and its cache key. 404 unless the
+        plan produces that frame — counted from the encoded plan alone,
+        before anything is computed."""
         bs = _bs(q)
         if index >= len(bs.abstract_state([[] for _ in bs.files]).Vars):
             abort(404)
         key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
-        return cache.get_or_compute(
+        return key, cache.get_or_compute(
             spark, key,
             lambda: perform_actions(
                 _sources(bs), bs.actions, registry=bs.registry,
@@ -155,8 +162,8 @@ def create_app(
 
     @app.route("/view/<int:page_no>/<int:index>/<path:q>")
     def view(page_no: int, index: int, q: str):
-        df = _frame(q, index)
-        total = df.count()
+        key, df = _frame(q, index)
+        total = cache.rows(key)
         n_pages = max((total + page_size - 1) // page_size, 1)
         page_df = page(df, page_no, page_size)
         qq = quote(q, safe="")
@@ -175,7 +182,7 @@ def create_app(
 
     @app.route("/download/csv/<int:index>/<path:q>")
     def download_csv(index: int, q: str):
-        df = _frame(q, index)
+        _, df = _frame(q, index)
         body = to_csv(page(df, 0, page_size))
         return Response(
             body,

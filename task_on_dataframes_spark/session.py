@@ -16,9 +16,9 @@ from pyspark.sql import SparkSession
 
 def _default_driver_memory() -> str:
     """min(32g, ~half of physical RAM), so heavy local-mode queries get
-    a contained JVM limit instead of the OS OOM killer on small hosts
-    (ADVICE r8). Falls back to the 128-GiB dev-host default when
-    /proc/meminfo is unavailable; SPARK_DRIVER_MEMORY overrides."""
+    a contained JVM limit instead of the OS OOM killer on small hosts.
+    Falls back to 32g when /proc/meminfo is unavailable;
+    SPARK_DRIVER_MEMORY overrides."""
     try:
         with open("/proc/meminfo") as f:
             for line in f:
@@ -63,12 +63,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ui.retainedExecutions", "10")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        # local-mode heap = the whole "cluster": 8g OOMed the 77M-edge
-        # sf3 component graph (r8 scale fit) while 94% of the box sat
-        # idle — size the default to the host (min(32g, half of
-        # physical RAM), ADVICE r8: a flat 32g on a small machine
-        # trades a contained JVM limit for the OS OOM killer), as a
-        # real deployment sizes executor memory to the workload
+        # local-mode heap = the whole "cluster", so it is sized to the
+        # host (min(32g, half of physical RAM)): a fixed small heap
+        # OOMs large component graphs on a big host, and a fixed large
+        # one on a small host trades a contained JVM limit for the OS
+        # OOM killer — as a real deployment sizes executor memory to
+        # the workload
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),

@@ -11,9 +11,16 @@ read. The catalog pays it once per version of a path:
 * **Memo.** Under that stamp it keeps the schema Spark inferred — per
   read options and per value of the session confs that change an
   inferred parquet schema (:data:`SCHEMA_CONFS`) — and, on first
-  request, each data file's parquet row-group count. One entry per
-  path (tuple): a re-stamped path replaces its entry, so a rewritten
-  file or an added part file is seen on the next read.
+  request, each data file's parquet row-group and row counts, read
+  from the footers with pyarrow. One entry per path (tuple): a
+  re-stamped path replaces its entry, so a rewritten file or an added
+  part file is seen on the next read.
+* **Seed.** A path Spark has just written needs no inference at all:
+  :func:`seed` files the writer's schema, every field made nullable,
+  under the new stamp. On Spark-written parquet that is exactly what
+  inference returns, because Spark's row metadata in the footer wins
+  over converting the parquet schema and file sources force
+  nullability (``tests/test_catalog.py`` pins the equivalence).
 * **Read.** :func:`read` hands the memoized schema to the reader, so a
   warm read launches no job. Every call still builds a fresh relation:
   two reads of one table get distinct attribute ids, which a
@@ -40,7 +47,7 @@ from dataclasses import dataclass, field
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 #: session confs whose value changes the schema Spark infers from parquet
 SCHEMA_CONFS = (
@@ -61,10 +68,11 @@ Stamp = tuple  # ((data file, size, mtime_ns), ...) of one path
 @dataclass
 class _Entry:
     stamps: tuple[Stamp, ...]
-    #: (read options, SCHEMA_CONFS values) -> inferred schema
+    #: (read options, SCHEMA_CONFS values) -> inferred or seeded schema
     schemas: dict = field(default_factory=dict)
-    #: row groups of each data file, in stamp order; read on first use
-    row_groups: Optional[tuple[int, ...]] = None
+    #: (row groups, rows) of each data file, in stamp order; read on
+    #: first use
+    footers: Optional[tuple[tuple[int, int], ...]] = None
 
 
 _MEMO: "OrderedDict[tuple[str, ...], _Entry]" = OrderedDict()
@@ -120,21 +128,50 @@ def _entry(paths: tuple[str, ...]) -> Optional[_Entry]:
     return e
 
 
+def _schema_key(spark: SparkSession, options: dict) -> tuple:
+    return (
+        tuple(sorted((k, str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(c) for c in SCHEMA_CONFS),
+    )
+
+
 def _schema(
     spark: SparkSession, paths: tuple[str, ...], options: dict
 ) -> Optional[StructType]:
     e = _entry(paths)
     if e is None:
         return None
-    key = (
-        tuple(sorted((k, str(v)) for k, v in options.items())),
-        tuple(spark.conf.get(c) for c in SCHEMA_CONFS),
-    )
+    key = _schema_key(spark, options)
     schema = e.schemas.get(key)
     if schema is None:
         schema = spark.read.options(**options).parquet(*paths).schema
         e.schemas[key] = schema
     return schema
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable
+    (Spark's ``DataType.asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata)
+             for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def seed(spark: SparkSession, path: str, schema: StructType) -> None:
+    """File ``schema`` (the schema of the frame Spark just wrote to
+    ``path``), made nullable, as what :func:`read` without options
+    gives ``path`` at its current stamp, so reading it runs no
+    inference job. A path that cannot be stamped is left alone."""
+    e = _entry((path,))
+    if e is not None:
+        e.schemas[_schema_key(spark, {})] = _nullable(schema)
 
 
 def read(
@@ -163,21 +200,35 @@ def schema_of(spark: SparkSession, path: str, **options) -> StructType:
     return read(spark, path, **options).schema
 
 
+def _footed(path: str) -> Optional[_Entry]:
+    """The memo entry of ``path`` with its footer facts read, or
+    ``None`` when it cannot be stamped. Raises what pyarrow raises on
+    a file it cannot read as parquet."""
+    e = _entry((path,))
+    if e is not None and e.footers is None:
+        import pyarrow.parquet as pq
+
+        metas = [pq.ParquetFile(f).metadata for f, _, _ in e.stamps[0]]
+        e.footers = tuple((m.num_row_groups, m.num_rows) for m in metas)
+    return e
+
+
 def footer(path: str) -> Optional[list[tuple[int, int]]]:
     """``(row groups, bytes)`` of each data file of ``path``, or
     ``None`` when it cannot be stamped. Raises what pyarrow raises on
     a file it cannot read as parquet."""
-    e = _entry((path,))
+    e = _footed(path)
     if e is None:
         return None
-    files = e.stamps[0]
-    if e.row_groups is None:
-        import pyarrow.parquet as pq
+    return [(g, size) for (g, _), (_, size, _) in zip(e.footers, e.stamps[0])]
 
-        e.row_groups = tuple(
-            pq.ParquetFile(f).metadata.num_row_groups for f, _, _ in files
-        )
-    return [(n, size) for n, (_, size, _) in zip(e.row_groups, files)]
+
+def rows(path: str) -> Optional[int]:
+    """The row count of ``path`` summed from its data files' parquet
+    footers — what ``read(spark, path).count()`` returns, with no
+    Spark job — or ``None`` when it cannot be stamped."""
+    e = _footed(path)
+    return None if e is None else sum(n for _, n in e.footers)
 
 
 @contextlib.contextmanager

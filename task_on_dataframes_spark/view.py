@@ -7,7 +7,12 @@ computed *in* Spark (offset/limit compile to GlobalLimit operators, so
 executors return at most one page of rows) and only that page is ever
 collected; rendering is driver-side string work on ≤ ``page_size``
 rows. Negative pages count from the end (reference:
-serve_view_df.py:112).
+serve_view_df.py:112); that form alone runs a ``count()``.
+
+The page total is not this module's business: ``serve.py`` takes it
+from the stored result's parquet footers
+(:meth:`.cache.ResultCache.rows`), so serving a page of a stored
+result is one Spark job — the collect here.
 """
 
 from __future__ import annotations

@@ -165,3 +165,82 @@ def test_concurrent_footer_reads_follow_a_rewrite(tmp_path):
     assert errors == []
     assert catalog.footer(paths[0])[0][0] == 2  # last write: 2 groups of 5
     assert [catalog.footer(p)[0][0] for p in paths[1:]] == [2, 2, 2]
+
+
+def test_rows_is_the_count_from_footers_without_a_job(spark, tmp_path):
+    """``catalog.rows`` sums the data files' footer row counts: it
+    equals ``count()`` on a multi-file directory, follows a rewrite and
+    an added part file, and launches no Spark job."""
+    d = str(tmp_path / "parts")
+    spark.range(0, 1000, 1, 3).write.parquet(d)
+    assert len(catalog.footer(d)) == 3
+    before = _jobs_started(spark)
+    assert catalog.rows(d) == 1000
+    assert _jobs_started(spark) == before
+    assert catalog.read(spark, d).count() == 1000
+
+    spark.range(0, 10, 1, 2).write.mode("overwrite").parquet(d)
+    assert catalog.rows(d) == 10 == catalog.read(spark, d).count()
+    pq.write_table(pa.table({"id": [7, 8, 9]}), os.path.join(d, "part-extra.parquet"))
+    before = _jobs_started(spark)
+    assert catalog.rows(d) == 13
+    assert _jobs_started(spark) == before
+    assert catalog.read(spark, d).count() == 13
+    assert catalog.rows(str(tmp_path / "nope")) is None
+
+
+#: confs flipped from their defaults in the second run of the
+#: seeded-schema test; both change what converting a parquet schema gives
+_FLIPPED = {
+    "spark.sql.parquet.binaryAsString": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+
+@pytest.mark.parametrize("flip", [False, True], ids=["default", "flipped"])
+def test_a_seeded_schema_is_what_inference_gives(spark, tmp_path, flip):
+    """A schema seeded from the frame Spark wrote equals the schema
+    ``spark.read.parquet`` infers from the written files, over nested,
+    nullable and non-null, decimal, time, binary, char, metadata-carrying
+    and dotted columns. Serving a stored result relies on this; a Spark
+    version that breaks it fails here instead of serving a wrong schema."""
+    from pyspark.sql import functions as F
+
+    old = {k: spark.conf.get(k) for k in _FLIPPED}
+    try:
+        if flip:
+            for k, v in _FLIPPED.items():
+                spark.conf.set(k, v)
+        df = spark.sql(
+            """
+            SELECT
+              array(id, id + 1) AS arr,
+              IF(id % 2 = 0, NULL, array(named_struct('a', id, 'b', CAST(NULL AS STRING))))
+                AS arr_nullable,
+              map('k', array(id)) AS m,
+              IF(id % 2 = 0, NULL, map('k', CAST(NULL AS DOUBLE))) AS m_nullable,
+              named_struct('x', id, 'y', CAST(NULL AS DOUBLE),
+                           'z', named_struct('w', array(1, 2))) AS st,
+              CAST(id AS DECIMAL(12, 3)) AS dec,
+              CAST(id AS DECIMAL(38, 10)) AS dec_wide,
+              TIMESTAMP '2024-01-01 10:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,
+              TIMESTAMP_NTZ '2024-01-01 10:00:00' AS ts_ntz,
+              DATE '2024-01-02' AS d,
+              CAST(CAST(id AS STRING) AS BINARY) AS bin,
+              CAST(CAST(id AS STRING) AS CHAR(3)) AS ch,
+              CAST(id AS STRING) AS `docs.text`,
+              id
+            FROM range(6)
+            """
+        ).withColumn("id", F.col("id").alias("id", metadata={"comment": "row id"}))
+        path = str(tmp_path / "written")
+        df.write.parquet(path)
+        catalog.seed(spark, path, df.schema)
+        seeded, jobs = _read_jobs(spark, path)
+        assert jobs == 0
+        assert seeded.schema == spark.read.parquet(path).schema
+        assert seeded.schema["id"].metadata == {"comment": "row id"}
+        assert seeded.count() == 6
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)

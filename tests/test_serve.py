@@ -79,6 +79,59 @@ def test_view_is_served_from_cache_after_first_hit(served, tmp_path):
     assert cache.status(key) == "done"
 
 
+def _jobs_started(spark) -> int:
+    """Jobs the session's scheduler has started so far (the next job id)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _get_docs_q(registry):
+    """``(state, quoted query string)`` of the one-action plan ``get_docs``."""
+    from task_on_dataframes_spark.browse import BrowseState
+
+    bs = BrowseState([], [], registry=registry)
+    act = next(a for a in bs.further_actions([]) if a.Task == "get_docs")
+    bs = bs.with_action(act)
+    return bs, quote(bs.to_url_q(), safe="")
+
+
+def test_a_served_hit_runs_only_its_page_collect(served, spark):
+    """Once a frame is stored, ``/view`` takes the page count from the
+    parquet footers and the schema from the memo, so a hit view and a
+    CSV download each launch exactly one Spark job: the page collect."""
+    app, registry = served
+    client = app.test_client()
+    _, q = _get_docs_q(registry)
+    assert client.get(f"/view/0/0/{q}").status_code == 200
+    for path in (f"/view/0/0/{q}", f"/download/csv/0/{q}"):
+        before = _jobs_started(spark)
+        assert client.get(path).status_code == 200
+        assert _jobs_started(spark) - before == 1, path
+
+
+def test_a_cold_view_runs_no_inference_or_count_job(served, spark, tmp_path):
+    """A cold ``/view`` launches the jobs of storing its frame plus the
+    page collect: the read-back takes the writer's schema, so no
+    inference job runs, and the page count comes from footers, so no
+    count job runs."""
+    from task_on_dataframes_spark.cache import ResultCache
+    from task_on_dataframes_spark.plans.solve import perform_actions
+
+    app, registry = served
+    bs, q = _get_docs_q(registry)
+    frame = perform_actions(
+        [], bs.actions, registry=registry, return_latest_first=False
+    )[0]
+    before = _jobs_started(spark)
+    ResultCache(str(tmp_path / "elsewhere")).store(frame, "s" * 32)
+    store_jobs = _jobs_started(spark) - before
+    assert store_jobs >= 1
+
+    before = _jobs_started(spark)
+    r = app.test_client().get(f"/view/0/0/{q}")
+    assert r.status_code == 200 and "docs.text" in r.get_data(as_text=True)
+    assert _jobs_started(spark) - before == store_jobs + 1
+
+
 def test_get_or_compute_runs_once_for_concurrent_callers(spark, tmp_path):
     """Four threads asking for one uncached key share a single
     computation, and each gets every stored row back."""
