@@ -65,7 +65,7 @@ def kmeans_assignments(
     if c.rdd.getNumPartitions() < nparts:
         c = c.repartition(nparts)
     # per-vector norm computed ONCE — cosine() per (vector, centroid)
-    # re-derives it n x k times per iteration (round-4 sf1 sweep)
+    # would re-derive it n x k times per iteration
     c = c.withColumn("nv", norm("v"))
     h = hash32(F.concat(F.lit("kmeans:"), F.col("vec_id").cast("string")))
     cents = (
@@ -161,8 +161,8 @@ def semantic_dedup(
     assign = kmeans_assignments(emb, k=k, iters=iters, dims=dims,
                                 id_col=id_col, vec_col=vec_col)
     # per-row norm computed ONCE here — the naive per-pair cosine()
-    # re-derives both operands' norms for every partner (the round-4
-    # sf1 sweep measured that at 26x wall for 10x data); per PAIR only
+    # re-derives both operands' norms for every partner, so its cost
+    # grows with the pair count, not the row count; per PAIR only
     # the fold dot remains (see dot()'s docstring for why the fold
     # beats an unrolled term chain here)
     members = (
@@ -177,7 +177,7 @@ def semantic_dedup(
     # the join key: AQE sizes partitions by shuffle INPUT bytes, and a
     # dimension-scale input coalesces to ONE task even though the
     # within-cluster pair fan-out is the whole cost of this operator
-    # (the round-4 sf1 sweep measured the stage serial at 6M pairs).
+    # (coalesced to one task, the pair stage runs serially).
     # Explicit numPartitions is exempt from AQE coalescing, and both
     # sides sharing it means the join adds no further exchange.
     nparts = int(

@@ -2000,7 +2000,7 @@ def repeated_gram_rewrite(
     overlap tokens can lose every copy — the character-level
     suffix-array formulation shares this edge.)
 
-    Scale shape (r6 row-hash form, ~2.0x for 10x data vs ~2.6x in r5):
+    Scale shape (row-hash form):
 
     * one digest-partitioned window computing the scalar argmin in a
       single pass — ``occ >= 2`` falls out for free, because

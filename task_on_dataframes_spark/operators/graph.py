@@ -135,7 +135,7 @@ def pagerank(
         out = _pagerank_local(edge_rows, node_vals, iters, damping)
         spark = edges.sparkSession
         node_t = nodes.schema["node"].dataType.simpleString()
-        # Arrow local frame (r13, guide §6): the node-count-sized rank
+        # Arrow local frame: the node-count-sized rank
         # table ships as driver-built Arrow batches (LocalTableScan) —
         # zero Python-worker tasks, vs ~32 pickled-slice tasks
         from .localdata import local_frame

@@ -1,12 +1,12 @@
-"""Driver-local result rows -> DataFrame via Arrow (guide §6).
+"""Driver-local result rows -> DataFrame via Arrow.
 
 ``spark.createDataFrame(list_of_tuples, schema)`` distributes the
 PICKLED rows across ``defaultParallelism`` Python-worker tasks — for
 the dimension-bounded driver frames these operators produce (the
 pagerank local iteration, union-find component maps, BPE merge
 tables, PCA loadings: all <5k rows by construction) that is ~32
-worker spawns and pickle round-trips for a few KB of data, ~40
-blocked task-seconds in a fresh session (r12 verdict item 3). The
+worker spawns and pickle round-trips for a few KB of data, and
+tens of blocked task-seconds in a fresh session. The
 Arrow path (`spark.sql.execution.arrow.pyspark.enabled`, on in
 session.py) converts the rows to Arrow record batches ON THE DRIVER
 and ships them straight to the JVM: the resulting scan runs zero

@@ -71,8 +71,8 @@ def probe_features(
     # single-task scan stage (measured 1.9 CPU-s serial at sf0.1,
     # the query's wall floor) and then again post-shuffle for the
     # features. The rlike pushes below the exchange too, but costs a
-    # find-first-char regex instead of a tokenize. (r12, guide §2.3
-    # project-before-exchange / §1.2 per-task work.)
+    # find-first-char regex instead of a tokenize: project before the
+    # exchange, and keep per-task work below it cheap.
     base = df.filter(F.col(text_col).rlike(r"\S")).select(
         *carry,
         arr.alias("arr"),

@@ -255,8 +255,8 @@ def kcenter_select(
     Each iteration ``localCheckpoint``s the updated corpus frame: the
     argmax ``c`` embeds ``w``'s plan and the next ``w`` embeds both,
     so a mere persist leaves the logical tree DOUBLING per iteration
-    (2^k subplans — the round-4 sf1 sweep caught the driver OOMing in
-    plan strings at k=8 / 255 scans). Same lineage-cut discipline as
+    (2^k subplans — at k=8 the plan holds 255 scans and its strings
+    exhaust the driver's memory). Same lineage-cut discipline as
     ``dedup.connected_components``; plan size is now constant per
     iteration and the superseded iterate's blocks are dropped eagerly.
 

@@ -389,10 +389,10 @@ def tfidf_top_terms(
     Shuffle profile at scale: one shuffle keyed on (doc, token) for
     tf; df then comes from ``count(*) over (partition by token)`` on
     the SAME tf table — one more keyed shuffle, but the tf lineage is
-    derived exactly once (the r5 groupBy + join-back form rebuilt the
+    derived exactly once (a groupBy + join-back form rebuilds the
     whole tokenize/explode/groupBy subplan for BOTH join sides —
-    Catalyst does not reuse it — and measured 2.1x slower at 10x
-    data); finally one shuffle on doc for the per-document top-k. No
+    Catalyst does not reuse it); finally one shuffle on doc for the
+    per-document top-k. No
     global sort, no driver-side collect (N travels as a broadcast
     1-row frame), and Spark's WindowGroupLimit pushes the rank filter
     below the top-k sort.

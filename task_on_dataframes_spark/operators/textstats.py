@@ -135,24 +135,24 @@ def script_id(
     script for any monolingual document at ~1/6 the work. Pass
     ``prefix=0`` to scan everything.
 
-    Execution shape (measured twice, r7 then r11): the counts build
+    Execution shape: the counts build
     ONE named array<struct(n, ni)> column and the argmax is a
     scan-stage ``array_max`` over it (struct ordering: highest count
     wins, ties fall to the lowest declaration index via ``ni = -i``).
     Three rejected shapes, all measured: (a) a chained when() fold
     over count COLUMNS re-ran each class regex ~2x — Catalyst inlines
     every count expression into each comparison (8.4 s vs 4.2 s at
-    sf1, r7); (b) the r7-r10 explode + groupBy argmax paid a
+    sf1); (b) an explode + groupBy argmax pays a
     map-side Sort + SortAggregate + a corpus Exchange + reduce Sort
     (``first()``'s string buffer keeps it off HashAggregate), AND
-    ``InferFiltersFromGenerate`` inferred an always-true
-    ``size(entries) > 0`` filter that predicate pushdown inlined
+    ``InferFiltersFromGenerate`` infers an always-true
+    ``size(entries) > 0`` filter that predicate pushdown inlines
     BELOW the projection, re-running all 8 regexes per row a second
     time; (c) ``array_max`` is evaluated once because the entries
     producer is a named non-cheap alias referenced 9x, which blocks
     CollapseProject from inlining it (the same named-column
     discipline as the c3 gram array in
-    :func:`multilingual_curation_verdicts`). The r11 form is pure
+    :func:`multilingual_curation_verdicts`). This form is pure
     scan-stage: zero shuffles, zero sorts, each regex exactly once.
 
     Output: (id, n_<script>... , script) — counts are PREFIX counts."""
@@ -232,7 +232,7 @@ def multilingual_curation_verdicts(
     in the registry's ``pipeline_multilingual_curation``, which
     documents the full priority order.
 
-    Plan shape (r11): ONE corpus scan computes every per-row signal
+    Plan shape: ONE corpus scan computes every per-row signal
     and the script argmax — the scan-stage ``array_max`` form shared
     with :func:`script_id` (see its docstring for the two rejected
     shapes and their measured costs) — so the ONLY shuffle in the
@@ -289,16 +289,16 @@ def multilingual_curation_verdicts(
     # every signal is a named column BEFORE anything references it
     # twice: g2/g3/c3 are gram ARRAYS consumed by multiple size/
     # distinct/aggregate expressions, and an inline producer gets
-    # re-evaluated per reference (the r11 plan audit caught dup3c's
-    # c3 transform — 510 substrings/row — inlined FOUR times because
-    # _dup_frac(c3) took the expression instead of a column). The
+    # re-evaluated per reference (dup3c's c3 transform — 510
+    # substrings/row — is inlined FOUR times if _dup_frac(c3) takes
+    # the expression instead of a column). The
     # script argmax is the scan-stage array_max form shared with
     # script_id (see its docstring for the rejected explode+groupBy
     # shape: SortAggregate + corpus Exchange + an inferred
     # size(entries)>0 filter that re-ran all 8 regexes per row).
     #
-    # Gate signals are BRANCH-CONDITIONAL (r12, guide §1.2 — don't
-    # compute what you throw away): a document consumes either the
+    # Gate signals are BRANCH-CONDITIONAL (don't compute what you
+    # throw away): a document consumes either the
     # WORD gates (Latin: stopword filters, g2/g3 gram arrays — ~6
     # interpreted HOF passes over the token array) or the CHAR gates
     # (non-Latin: the 510-substring c3 transform + dedup), never

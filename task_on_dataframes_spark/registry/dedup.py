@@ -1544,7 +1544,7 @@ def _star_recall_banding_rows(stratum, sigs, exact, num_perm, bands):
             for cap in STAR_RECALL_CAPS
         ],
     )
-    # DOC-level marking recall (r8 verdict item: the metric the
+    # DOC-level marking recall (the metric the
     # keep-one pipelines actually consume — a doc is marked
     # near-dup when some verified smaller-id pair (a, b=doc)
     # survives the cap). Per doc b, the smallest admitting cap is

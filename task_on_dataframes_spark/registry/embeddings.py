@@ -1360,7 +1360,7 @@ def _ann_recall_clustered(spark, sf_dir):
 
     Output: (n_probe, query_id, recall_at_10).
 
-    Plan shape (r8 — this was the 42-exchange PLANAUDIT outlier): the
+    Plan shape: the
     IVF index is built and the candidates are scored ONCE at the
     maximum n_probe, carrying the probe rank ``pr``; each smaller
     probe level is then a FILTER of the same lazily-checkpointed

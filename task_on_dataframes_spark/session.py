@@ -62,6 +62,13 @@ def get_spark(
         # Arrow batches for any pandas_udf / applyInPandas path
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ui.retainedExecutions", "10")
+        # the JVM-wide cache of Janino-compiled codegen classes must hold
+        # every class a warm engine re-runs, or a cyclic workload evicts
+        # each class before its next use and recompiles it every run: the
+        # six perfbench `batch` queries alone generate 113 classes, past
+        # the default 100 (a Guava LRU in 4 segments of ~25), so ~85 were
+        # recompiled per warm pass; 1000 gives ~250 per segment
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         # local-mode heap = the whole "cluster", so it is sized to the
         # host (min(32g, half of physical RAM)): a fixed small heap

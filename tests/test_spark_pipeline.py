@@ -126,3 +126,28 @@ def test_plans_are_lazy_until_collected(spark, sf_dir):
     new_jobs = after - before
     assert len(new_jobs) <= 1, f"binding ran {len(new_jobs)} Spark jobs"
     assert any("docs.text.clean_tokens.top90" in f.columns for f in frames)
+
+
+def test_warm_batch_round_recompiles_no_codegen_class(spark, sf_dir):
+    """Spark's JVM-wide codegen cache holds every class a warm engine
+    re-runs: a second cyclic round of the benchmark's batch queries
+    compiles nothing. A cache smaller than the round's working set
+    evicts each class before the cycle comes back to it."""
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    names = ["graph_pagerank", "text_bpe_train256", "q3_shipping_priority",
+             "j3_left_join", "ev_sessionize", "planner_pack"]
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def round_():
+        before = compiles()
+        for name in names:
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return compiles() - before
+
+    round_()
+    assert round_() == 0

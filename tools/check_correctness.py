@@ -4,6 +4,9 @@ Runs every ``queries()`` entry on Spark at sf0.01 and the matching
 ``oracle_sql()`` through DuckDB on the same parquet, then compares
 row count, sorted column names, and order-insensitive values
 (floats rounded to 6 significant decimals before comparison).
+The last line counts the codegen classes the sweep compiled (the
+registry's working set when ``spark.sql.codegen.cache.maxEntries``
+evicts none) and the driver JVM's Metaspace used after a full GC.
 
 Usage: python tools/check_correctness.py [name ...]
 """
@@ -75,6 +78,19 @@ def main(only: list[str]) -> int:
         **{n: qs[n] for n in _cb_tainted if n in qs},
     }
     oracles = entrymod.oracle_sql()
+    jvm = spark._jvm
+
+    def compiles() -> int:
+        return jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME().getCount()
+
+    def metaspace_mb() -> float:
+        jvm.System.gc()  # unload evicted classes: count what stays loaded
+        pools = jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+        return sum(p.getUsage().getUsed() for p in pools
+                   if p.getName() == "Metaspace") / 2**20
+
+    compiled_before = compiles()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -117,6 +133,10 @@ def main(only: list[str]) -> int:
             failures += 1
             continue
         print(f"PASS {name}: rows={len(s)} cols={list(s.columns)}")
+    print(
+        f"codegen: {compiles() - compiled_before} classes compiled; "
+        f"Metaspace used {metaspace_mb():.1f} MB"
+    )
     spark.stop()
     return failures
 
