@@ -11,13 +11,13 @@ read through the source catalog (:mod:`.sources.catalog`); a miss
 computes and stores, so concurrent callers of one key wait for a
 single computation, and every caller gets the stored parquet back.
 
-No stored result costs a Spark job to describe. Its schema comes from
-the frame that wrote it: after the write, the catalog is seeded with
-the writer's schema, so neither the read-back nor any later hit runs
-a schema-inference job. Its row count (:meth:`ResultCache.rows`) is
-the sum of its parquet footers' row counts, read with pyarrow and
-memoized under the directory's stamp, so a pager needs no
-``count()``.
+No stored result costs a Spark job to describe or to page. Its schema
+comes from the frame that wrote it: after the write, the catalog is
+seeded with the writer's schema, so neither the read-back nor any
+later hit runs a schema-inference job. Its row-group row counts are
+read from its parquet footers with pyarrow and memoized under the
+directory's stamp, so :func:`.view.page` reads a page from the row
+groups that hold it, with no ``count()`` and no collect.
 
 The key names the plan, not the data it read: the catalog records the
 stamp of every parquet source resolved while ``compute()`` and the
@@ -95,12 +95,6 @@ class ResultCache:
         if self.status(key) != "done":
             return None
         return catalog.read(spark, self._dir(key))
-
-    def rows(self, key: str) -> int:
-        """Rows of the stored result ``key``, summed from its parquet
-        footers (a root is a local directory, which the catalog can
-        always stamp)."""
-        return catalog.rows(self._dir(key))
 
     def store(self, df: DataFrame, key: str) -> DataFrame:
         df.write.mode("overwrite").parquet(self._dir(key))

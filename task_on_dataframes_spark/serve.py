@@ -19,17 +19,19 @@ visit. The reference needs Celery + pickle polling for this
 cache covers it synchronously. A plan that fails stores nothing and is
 a 500; the next request computes it again.
 
-A page of a stored frame runs one Spark job, its collect. The page
-count comes from :meth:`.cache.ResultCache.rows` (the row counts in
-the stored parquet's footers, not a ``count()``), and the stored
-frame's schema is the one the cache seeded from the frame that wrote
-it (no inference job on the read-back or on any later visit).
+A page of a stored frame runs no Spark job: :func:`.view.page` reads
+it with pyarrow from the row groups of the stored parquet that hold
+it, with the page count from the row counts in the parquet footers,
+and the stored frame's schema is the one the cache seeded from the
+frame that wrote it (no inference job on the read-back or on any later
+visit). So a cold ``/view`` runs only the jobs of storing its frame,
+and a hit ``/view``, a negative page and a CSV download run none.
+Rows are paged in data-file order (files by name, rows in file order).
 
-Scale: pagination compiles to GlobalLimit operators inside Spark
-(view.py:25), so a 100 TB result ships at most ``page_size`` rows to
-the driver; the CSV route downloads one *page*, with the full-export
-path deliberately left to ``sources.writers.csv_sink`` (distributed
-write).
+Scale: a page reads at most the row groups it overlaps, so a 100 TB
+result ships at most ``page_size`` rows to the renderer; the CSV route
+downloads one *page*, with the full-export path deliberately left to
+``sources.writers.csv_sink`` (distributed write).
 """
 
 from __future__ import annotations
@@ -105,15 +107,15 @@ def create_app(
         return [load(f) for f in bs.files]
 
     def _frame(q: str, index: int):
-        """``(key, frame)``: frame ``index`` of the plan encoded in
-        ``q`` as the cache stored it, and its cache key. 404 unless the
-        plan produces that frame — counted from the encoded plan alone,
-        before anything is computed."""
+        """``(path, frame)``: frame ``index`` of the plan encoded in
+        ``q`` as the cache stored it, and the directory it is stored
+        in. 404 unless the plan produces that frame — counted from the
+        encoded plan alone, before anything is computed."""
         bs = _bs(q)
         if index >= len(bs.abstract_state([[] for _ in bs.files]).Vars):
             abort(404)
         key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
-        return key, cache.get_or_compute(
+        return cache._dir(key), cache.get_or_compute(
             spark, key,
             lambda: perform_actions(
                 _sources(bs), bs.actions, registry=bs.registry,
@@ -160,30 +162,28 @@ def create_app(
             frames=frames_html, actions=acts_html, back=back
         )
 
-    @app.route("/view/<int:page_no>/<int:index>/<path:q>")
+    @app.route("/view/<int(signed=True):page_no>/<int:index>/<path:q>")
     def view(page_no: int, index: int, q: str):
-        key, df = _frame(q, index)
-        total = cache.rows(key)
-        n_pages = max((total + page_size - 1) // page_size, 1)
-        page_df = page(df, page_no, page_size)
+        path, df = _frame(q, index)
+        shown = page(path, df.schema, page_no, page_size)
         qq = quote(q, safe="")
         pages = " ".join(
             f'<a href="/view/{p}/{index}/{qq}">{p}</a>'
-            if p != page_no
+            if p != shown.number
             else f"<b>{p}</b>"
-            for p in range(min(n_pages, 20))
+            for p in range(min(shown.pages, 20))
         )
         return _VIEW_TPL.format(
             back=f"/explore/{qq}",
             csv=f"/download/csv/{index}/{qq}",
-            table=to_html(page_df),
+            table=to_html(shown),
             pages=pages,
         )
 
     @app.route("/download/csv/<int:index>/<path:q>")
     def download_csv(index: int, q: str):
-        _, df = _frame(q, index)
-        body = to_csv(page(df, 0, page_size))
+        path, df = _frame(q, index)
+        body = to_csv(page(path, df.schema, 0, page_size))
         return Response(
             body,
             mimetype="text/csv",

@@ -11,7 +11,7 @@ read. The catalog pays it once per version of a path:
 * **Memo.** Under that stamp it keeps the schema Spark inferred — per
   read options and per value of the session confs that change an
   inferred parquet schema (:data:`SCHEMA_CONFS`) — and, on first
-  request, each data file's parquet row-group and row counts, read
+  request, the row count of each row group of each data file, read
   from the footers with pyarrow. One entry per path (tuple): a
   re-stamped path replaces its entry, so a rewritten file or an added
   part file is seen on the next read.
@@ -70,9 +70,9 @@ class _Entry:
     stamps: tuple[Stamp, ...]
     #: (read options, SCHEMA_CONFS values) -> inferred or seeded schema
     schemas: dict = field(default_factory=dict)
-    #: (row groups, rows) of each data file, in stamp order; read on
-    #: first use
-    footers: Optional[tuple[tuple[int, int], ...]] = None
+    #: rows of each row group of each data file, in stamp order; read
+    #: on first use
+    footers: Optional[tuple[tuple[int, ...], ...]] = None
 
 
 _MEMO: "OrderedDict[tuple[str, ...], _Entry]" = OrderedDict()
@@ -209,7 +209,10 @@ def _footed(path: str) -> Optional[_Entry]:
         import pyarrow.parquet as pq
 
         metas = [pq.ParquetFile(f).metadata for f, _, _ in e.stamps[0]]
-        e.footers = tuple((m.num_row_groups, m.num_rows) for m in metas)
+        e.footers = tuple(
+            tuple(m.row_group(i).num_rows for i in range(m.num_row_groups))
+            for m in metas
+        )
     return e
 
 
@@ -220,7 +223,19 @@ def footer(path: str) -> Optional[list[tuple[int, int]]]:
     e = _footed(path)
     if e is None:
         return None
-    return [(g, size) for (g, _), (_, size, _) in zip(e.footers, e.stamps[0])]
+    return [(len(g), size) for g, (_, size, _) in zip(e.footers, e.stamps[0])]
+
+
+def row_groups(path: str) -> Optional[list[tuple[str, tuple[int, ...]]]]:
+    """Each data file of ``path`` with the row count of each of its
+    row groups, in stamp order (data-file name order, which for a
+    directory Spark wrote is its partition order), or ``None`` when it
+    cannot be stamped. Raises what pyarrow raises on a file it cannot
+    read as parquet."""
+    e = _footed(path)
+    if e is None:
+        return None
+    return [(f, g) for g, (f, _, _) in zip(e.footers, e.stamps[0])]
 
 
 def rows(path: str) -> Optional[int]:
@@ -228,7 +243,7 @@ def rows(path: str) -> Optional[int]:
     footers — what ``read(spark, path).count()`` returns, with no
     Spark job — or ``None`` when it cannot be stamped."""
     e = _footed(path)
-    return None if e is None else sum(n for _, n in e.footers)
+    return None if e is None else sum(map(sum, e.footers))
 
 
 @contextlib.contextmanager

@@ -94,25 +94,26 @@ def _get_docs_q(registry):
     return bs, quote(bs.to_url_q(), safe="")
 
 
-def test_a_served_hit_runs_only_its_page_collect(served, spark):
-    """Once a frame is stored, ``/view`` takes the page count from the
-    parquet footers and the schema from the memo, so a hit view and a
-    CSV download each launch exactly one Spark job: the page collect."""
+def test_a_served_hit_runs_no_spark_job(served, spark):
+    """Once a frame is stored, ``/view`` reads its page from the row
+    groups that hold it, with the page count from the parquet footers
+    and the schema from the memo, so a hit view, a negative page and a
+    CSV download launch no Spark job."""
     app, registry = served
     client = app.test_client()
     _, q = _get_docs_q(registry)
     assert client.get(f"/view/0/0/{q}").status_code == 200
-    for path in (f"/view/0/0/{q}", f"/download/csv/0/{q}"):
+    for path in (f"/view/0/0/{q}", f"/view/-1/0/{q}", f"/download/csv/0/{q}"):
         before = _jobs_started(spark)
         assert client.get(path).status_code == 200
-        assert _jobs_started(spark) - before == 1, path
+        assert _jobs_started(spark) - before == 0, path
 
 
 def test_a_cold_view_runs_no_inference_or_count_job(served, spark, tmp_path):
-    """A cold ``/view`` launches the jobs of storing its frame plus the
-    page collect: the read-back takes the writer's schema, so no
-    inference job runs, and the page count comes from footers, so no
-    count job runs."""
+    """A cold ``/view`` launches only the jobs of storing its frame: the
+    read-back takes the writer's schema, so no inference job runs, and
+    the page is read from the stored parquet's row groups, so no count
+    or collect job runs."""
     from task_on_dataframes_spark.cache import ResultCache
     from task_on_dataframes_spark.plans.solve import perform_actions
 
@@ -129,7 +130,7 @@ def test_a_cold_view_runs_no_inference_or_count_job(served, spark, tmp_path):
     before = _jobs_started(spark)
     r = app.test_client().get(f"/view/0/0/{q}")
     assert r.status_code == 200 and "docs.text" in r.get_data(as_text=True)
-    assert _jobs_started(spark) - before == store_jobs + 1
+    assert _jobs_started(spark) - before == store_jobs
 
 
 def test_get_or_compute_runs_once_for_concurrent_callers(spark, tmp_path):
@@ -311,3 +312,124 @@ def test_rewritten_source_is_recomputed_not_served_stale(spark, sf_dir, tmp_path
     second = client.get(f"/view/0/0/{q}").get_data(as_text=True)
     assert second != first
     assert all(f"rewritten-doc-{i}" in second for i in range(3))
+
+
+def test_a_negative_page_shows_and_bolds_the_page_it_resolves_to(served):
+    """``/view/-1/…`` serves exactly what ``/view/<last>/…`` serves,
+    the last page's number bold in the pages bar (500 documents: 10
+    pages of 50)."""
+    app, registry = served
+    client = app.test_client()
+    _, q = _get_docs_q(registry)
+    last = client.get(f"/view/-1/0/{q}").get_data(as_text=True)
+    assert last == client.get(f"/view/9/0/{q}").get_data(as_text=True)
+    pages = last.split("Pages:", 1)[1]
+    assert "<b>9</b>" in pages and pages.count("<b>") == 1
+
+
+def _typed_frame(spark):
+    """600 rows in two part files of 300 (row groups of 100 under
+    ``parquet.block.size`` 1024) after a 0-row first part file: a long,
+    double, decimal, string, date, binary, array, map and struct
+    column, a dotted name, nulls in every fifth row, and a timestamp
+    crossing a daylight-saving change."""
+    from pyspark.sql import functions as F
+
+    i = F.col("id")
+    ts = F.timestamp_micros(F.lit(1603600000000000) + i * 3607000123)
+
+    def some(c):
+        return F.when(i % 5 != 0, c)
+
+    return spark.range(0, 900, 1, 3).filter(i >= 300).select(
+        i.alias("l"),
+        (i / 7).alias("d"),
+        (i / 8).cast("decimal(12,3)").alias("dec"),
+        some(F.concat(F.lit("s"), i.cast("string"))).alias("s"),
+        F.date_add(F.lit("2020-01-01").cast("date"), i.cast("int")).alias("dt"),
+        some(i.cast("string").cast("binary")).alias("b"),
+        some(F.array(i.cast("string"), F.lit(None).cast("string"))).alias("arr"),
+        some(F.create_map(F.lit("k"), i, F.lit("z"), F.lit(None).cast("long"))).alias("m"),
+        some(F.struct(i.alias("x"), ts.alias("ts"))).alias("st"),
+        (i * 10).alias("a.b"),
+        some(ts).alias("ts"),
+    )
+
+
+def _maps_sorted(v):
+    """``v`` with every map's entries in key order, at any depth."""
+    from pyspark.sql import Row
+
+    if isinstance(v, Row):
+        return Row(*v.__fields__)(*map(_maps_sorted, v))
+    if isinstance(v, dict):
+        return {k: _maps_sorted(v[k]) for k in sorted(v)}
+    if isinstance(v, list):
+        return list(map(_maps_sorted, v))
+    return v
+
+
+def test_pages_hold_the_stored_rows_in_file_order_as_collect_values(
+    spark, tmp_path, monkeypatch
+):
+    """Under a non-UTC local time zone, each page of a stored result
+    holds its window of the stored rows in data-file order, as the
+    Python values a classic ``collect()`` of each file returns, so its
+    HTML and CSV cells are the same (a map's entries print in stored
+    order, where ``collect()`` builds its dict in JVM hash order); all
+    pages together hold the rows of ``load(...).collect()``; an empty
+    result is one empty page."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from task_on_dataframes_spark import view
+    from task_on_dataframes_spark.cache import ResultCache
+    from task_on_dataframes_spark.sources import catalog
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    spark.conf.set("parquet.block.size", "1024")
+    try:
+        cache = ResultCache(str(tmp_path / "cache"))
+        key = "t" * 32
+        cache.get_or_compute(spark, key, lambda: _typed_frame(spark))
+        schema = cache.load(spark, key).schema
+        files = catalog.row_groups(cache._dir(key))
+        assert [sum(g) for _, g in files] == [0, 300, 300]
+        assert all(len(g) > 1 for _, g in files[1:])
+        # Spark's default outputTimestampType, INT96: tz-naive ns to pyarrow
+        assert pq.read_schema(files[1][0]).field("ts").type == pa.timestamp("ns")
+
+        stored = [
+            r for f, _ in files
+            for r in catalog.read(spark, f, schema=schema).collect()
+        ]
+        paged = []
+        for p in range(14):
+            shown = view.page(cache._dir(key), schema, p, 45)
+            want = stored[p * 45:(p + 1) * 45]
+            assert (shown.number, shown.pages) == (p, 14)
+            assert shown.rows == want, p
+            got = [_maps_sorted(r) for r in shown.rows]
+            want = [_maps_sorted(r) for r in want]
+            # repr tells bytes from bytearray, a decimal's scale, a tz
+            assert list(map(repr, got)) == list(map(repr, want)), p
+            got = view.Page(got, schema.names, p, 14)
+            want = view.Page(want, schema.names, p, 14)
+            assert view.to_html(got) == view.to_html(want)
+            assert view.to_csv(got) == view.to_csv(want)
+            paged += shown.rows
+        assert [list(r["m"]) for r in paged[1:5]] == [["k", "z"]] * 4
+        loaded = cache.load(spark, key).collect()
+        canon = [repr(_maps_sorted(r)) for r in paged]
+        assert sorted(canon) == sorted(repr(_maps_sorted(r)) for r in loaded)
+
+        cache.get_or_compute(spark, "0" * 32, lambda: _typed_frame(spark).limit(0))
+        empty = view.page(cache._dir("0" * 32), schema, -1, 45)
+        assert (empty.rows, empty.number, empty.pages) == ([], 0, 1)
+    finally:
+        spark.conf.unset("parquet.block.size")
+        monkeypatch.undo()
+        time.tzset()

@@ -2,27 +2,74 @@
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from task_on_dataframes_spark import view
 from task_on_dataframes_spark.sources.writers import bucketed_table_sink
 
 
-def test_page_window_and_negative_pages(spark):
-    df = spark.range(0, 205).select(F.col("id"))
-    p0 = [r["id"] for r in view.page(df.orderBy("id"), 0, 50).collect()]
-    assert p0 == list(range(50))
-    p2 = [r["id"] for r in view.page(df.orderBy("id"), 2, 50).collect()]
-    assert p2 == list(range(100, 150))
-    last = [r["id"] for r in view.page(df.orderBy("id"), -1, 50).collect()]
-    assert last == list(range(200, 205))
+_ID = StructType([StructField("id", LongType())])
 
 
-def test_page_plan_is_a_limit_not_a_full_collect(spark):
-    df = spark.range(0, 1000).orderBy("id")
-    plan = view.page(df, 3, 50)._jdf.queryExecution().executedPlan().toString()
-    # Spark compiles offset+limit to a bounded take, never a full scan
-    assert "GlobalLimit" in plan or "TakeOrderedAndProject" in plan
+def _parts(d, sizes, group=10):
+    """Write consecutive ids into one parquet file per entry of
+    ``sizes`` under the new directory ``d`` (names in id order),
+    ``group`` rows per row group; returns ``d`` as a string."""
+    d.mkdir()
+    at = 0
+    for i, n in enumerate(sizes):
+        ids = pa.table({"id": pa.array(range(at, at + n), pa.int64())})
+        pq.write_table(ids, d / f"part-{i:05d}.parquet", row_group_size=group)
+        at += n
+    return str(d)
+
+
+def test_page_window_and_negative_pages(tmp_path):
+    """Pages follow data-file order across files, a 0-row file
+    included; negative pages count from the end and resolve to the
+    page shown; a page past the end is empty. No Spark session."""
+    d = _parts(tmp_path / "r", [120, 0, 85])
+
+    def ids(page_no):
+        return [r["id"] for r in view.page(d, _ID, page_no, 50).rows]
+
+    assert ids(0) == list(range(50))
+    assert ids(2) == list(range(100, 150))
+    last = view.page(d, _ID, -1, 50)
+    assert [r["id"] for r in last.rows] == list(range(200, 205))
+    assert (last.number, last.pages) == (4, 5)
+    assert view.page(d, _ID, -9, 50).number == 0
+    assert ids(-9) == ids(0)
+    assert ids(5) == []
+
+    empty = view.page(_parts(tmp_path / "e", [0]), _ID, -1, 50)
+    assert (empty.rows, empty.number, empty.pages) == ([], 0, 1)
+
+
+def test_page_reads_only_the_row_groups_covering_it(tmp_path, monkeypatch):
+    """A page reads the row groups that hold its rows and no others,
+    across a file boundary too."""
+    d = _parts(tmp_path / "r", [100, 100])
+    reads = []
+
+    class Recording(pq.ParquetFile):
+        def __init__(self, source, **kwargs):
+            super().__init__(source, **kwargs)
+            self.name = os.path.basename(source)
+
+        def read_row_groups(self, row_groups, *args, **kwargs):
+            reads.append((self.name, list(row_groups)))
+            return super().read_row_groups(row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", Recording)
+    assert [r["id"] for r in view.page(d, _ID, 3, 15).rows] == list(range(45, 60))
+    assert reads == [("part-00000.parquet", [4, 5])]
+    reads.clear()
+    assert [r["id"] for r in view.page(d, _ID, 6, 15).rows] == list(range(90, 105))
+    assert reads == [("part-00000.parquet", [9]), ("part-00001.parquet", [0])]
 
 
 def test_html_escapes_and_truncates(spark):

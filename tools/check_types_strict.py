@@ -16,7 +16,13 @@ import sys
 
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
+# Spark's Python workers import the package too: they inherit the
+# PYTHONPATH of the JVM, which get_spark starts from this environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (HERE, os.environ.get("PYTHONPATH")))
+)
 
 from tools.check_correctness import SF_DIR, duck_conn  # noqa: E402
 

@@ -13,7 +13,13 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
+# Spark's Python workers import the package too: they inherit the
+# PYTHONPATH of the JVM, which get_spark starts from this environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (HERE, os.environ.get("PYTHONPATH")))
+)
 
 
 def main() -> int:
@@ -34,9 +40,7 @@ def main() -> int:
     if args.names:
         names = args.names
     else:
-        # the headline list is module-level in bench.py since r13
-        # (ADVICE r12: the old regex scrape of the in-function literal
-        # broke on any reformat and left ``import bench`` unused)
+        # the headline list is bench.py's module-level HEADLINE
         import bench
 
         names = bench.HEADLINE

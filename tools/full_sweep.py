@@ -1,6 +1,6 @@
 """Run the oracle + strict-dtype sweeps over EVERY registered query and
 write CORRECTNESS_FULL_r{N}.json — the reproducible record behind the
-"all queries pass" claim (ADVICE r3 item 4).
+"all queries pass" claim.
 
 Usage: python tools/full_sweep.py <round-number>
 """

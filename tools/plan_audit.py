@@ -13,8 +13,8 @@ three invariants that must hold repo-wide for the 100 TB story:
    MapInPandas / FlatMapGroupsInPandas / ArrowEvalPython.
 3. **Exchange counts are recorded** per query so a future edit that
    doubles a query's shuffles shows up as a diff in PLANAUDIT.md —
-   BOTH the static plan-text count and, since r10 (r9 verdict item
-   7), the PHYSICAL post-AQE counts: each query is executed at the
+   BOTH the static plan-text count and the PHYSICAL post-AQE
+   counts: each query is executed at the
    audit SF and the final adaptive plan's unique ShuffleQueryStage /
    BroadcastQueryStage ids are counted, so exchange reuse is credited
    (dedup_recall_eval: 31 plan-text vs 12 shuffles + 8 broadcasts
@@ -30,7 +30,13 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
+# Spark's Python workers import the package too: they inherit the
+# PYTHONPATH of the JVM, which get_spark starts from this environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (HERE, os.environ.get("PYTHONPATH")))
+)
 
 FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
@@ -62,8 +68,8 @@ def main() -> int:
         # id, so AQE reuse is credited instead of double-counted.
         # toRdd().count() runs the identical AdaptiveSparkPlanExec
         # JVM-side WITHOUT materializing results on the driver
-        # (advisor, r10: collect() could OOM the audit on wide per-doc
-        # queries at a larger --sf-dir) and without the plan rewrite
+        # (collect() could OOM the audit on wide per-doc queries at a
+        # larger --sf-dir) and without the plan rewrite
         # df.count() would apply (a new Aggregate QueryExecution
         # prunes payload columns and changes the very shuffles being
         # audited).

@@ -3,8 +3,8 @@
 The full-registry sweep measures two points (sf0.1, sf1); its big
 ratios were adjudicated as floor arithmetic (SCALE.md §9c2-style
 fixed/variable reasoning) but never VERIFIED with a third point — the
-difference between "no blowup at 10x" and "credible at 100x" (r7
-verdict item 3). This tool times a query set at sf0.1 / sf1 / sf3
+difference between "no blowup at 10x" and "credible at 100x". This
+tool times a query set at sf0.1 / sf1 / sf3
 (min of 3 noop-write runs each, fresh session per scale, per-scale
 calibration probe) and separates fixed cost from slope:
 
@@ -30,6 +30,11 @@ import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
+# Spark's Python workers import the package too: they inherit the
+# PYTHONPATH of the JVM, which get_spark starts from this environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (HERE, os.environ.get("PYTHONPATH")))
+)
 
 SCALES = [
     (0.1, os.environ.get("SCALE_FIT_SMALL", "/root/testdata/sf0.1")),
@@ -38,8 +43,8 @@ SCALES = [
 ]
 CHILD_TIMEOUT = 3000
 
-#: the r7 sweep's worst-ratio tail plus the queries whose cross-round
-#: sf1 drift the r7 verdict asked to adjudicate
+#: the two-point sweep's worst-ratio tail plus the queries whose sf1
+#: time drifts between sweeps
 DEFAULT_NAMES = [
     "s2_whole_file_read",
     "q6_forecast_revenue",
@@ -51,25 +56,24 @@ DEFAULT_NAMES = [
     "dedup_minhash_lsh",
     "ann_ivfpq_topk",
     "stream_cms",
-    # r9 additions (r8 verdict item 6): the two bench poles that had
-    # 10x ratios but no third point, plus the new BPE-accounting pole
+    # the two bench poles with 10x two-point ratios, plus the
+    # BPE-accounting pole
     "pipeline_multilingual_curation",
     "dedup_minhash_char",
     "pipeline_multilingual_tokens",
-    # r10: the probe-only incremental rewrite — its scale shape changed
-    # (persisted-index probe; warm run absorbs the once-per-session
-    # index build, timed runs measure the probe-only plan)
+    # the probe-only incremental rewrite (persisted-index probe; the
+    # warm run absorbs the once-per-session index build, timed runs
+    # measure the probe-only plan)
     "dedup_incremental_lsh",
-    # r11 (r10 verdict item 7): measure the persisted-index pattern's
-    # probe-linearity instead of only plan-asserting it. index_build's
+    # the persisted-index pattern's probe-linearity, measured rather
+    # than only plan-asserted. index_build's
     # timed runs measure the AMORTIZED path (the warm run builds the
     # layout once; every later run reads the published table — the
     # steady-state cost every ingest wave actually pays).
     "dedup_index_build",
     "dedup_index_probe",
-    # r12 (r11 verdict item 6): the streaming maintain path's
-    # per-micro-batch cost claim (O(batch), index-size-independent)
-    # was plan-asserted only — give it a measured fit row. The query
+    # the streaming maintain path's per-micro-batch cost claim
+    # (O(batch), index-size-independent), as a measured fit row. The query
     # rebuilds its corpus index and drains a fixed 2-wave stream per
     # invocation, so t(sf) covers build + probe+append per wave with
     # batch size ∝ sf: linear fit = the O(batch) claim.
@@ -83,8 +87,8 @@ def _child(sf_dir: str, names: list[str]) -> None:
     from task_on_dataframes_spark.session import get_spark
     from task_on_dataframes_spark.sources.readers import read_events
 
-    # spaced probes (start/mid/end; r8 verdict item 4 — one probe has
-    # +-40% variance): the parent records their MEDIAN as calib_sec
+    # spaced probes (start/mid/end; one probe has +-40% variance):
+    # the parent records their MEDIAN as calib_sec
     print(json.dumps({"calib_probe": _calibrate()}), flush=True)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sizes = [
@@ -103,9 +107,9 @@ def _child(sf_dir: str, names: list[str]) -> None:
     # persist in the package uses the default MEMORY_AND_DISK_DESER
     # level, so cached frames spill rather than recompute — the
     # remaining starvation lever is execution-memory pressure, i.e.
-    # the heap. Rule (r12, spill-aware regime per the r11 verdict):
-    # 32g below 0.5 GiB on-disk (sf0.1/sf1 — regime and cross-round
-    # comparability unchanged), 64g at/above (sf3 AND sf10, so the
+    # the heap. Rule (spill-aware regime): 32g below 0.5 GiB on-disk
+    # (sf0.1/sf1, comparable across sweeps), 64g at/above (sf3 AND
+    # sf10, so the
     # sf3 adjudication point no longer runs a heap regime the grow
     # point doesn't).
     if "SPARK_DRIVER_MEMORY" not in os.environ and sum(sizes) >= (1 << 29):
@@ -213,7 +217,7 @@ def _run_scale(sf_dir: str, names: list[str]) -> dict:
                 done.add(rec["q"])
         todo = [n for n in todo if n not in done]
         if poisoned:
-            # no-progress guard (ADVICE r8): a context that dies before
+            # no-progress guard: a context that dies before
             # the FIRST query would respawn identical children forever;
             # after 2 stalled respawns record the head as poisoned and
             # advance
@@ -245,7 +249,7 @@ def _run_scale(sf_dir: str, names: list[str]) -> dict:
 
 
 def _grow(rnd: int, sf: float, sf_dir: str, names: list) -> int:
-    """Grow-with-scale point (r9 verdict item 3): the quadratic regime
+    """Grow-with-scale point: the quadratic regime
     of the char-LSH family opens when dup-CLUSTER size grows with the
     corpus (10 word-shuffled replicas at sf1 -> 30 at sf3 -> 100 at
     sf10), and the star cap's saturation had only been measured to 30.
@@ -258,11 +262,11 @@ def _grow(rnd: int, sf: float, sf_dir: str, names: list) -> int:
     regime is already growing, so super-linear cap saturation cannot
     hide in a small-cluster baseline.
 
-    ISOLATED since r11: each name runs in its OWN fresh child (one
-    per-name calibration), not one shared chunk — SCALE.md §27: the
-    r10 shared-chunk grow run (5 queries sequentially, pipelines
-    last) manufactured excess 1.89/1.65 on queries that measured
-    SUB-linear wall when re-run isolated on the same commit."""
+    ISOLATED: each name runs in its OWN fresh child (one per-name
+    calibration), not one shared chunk — SCALE.md §27: a shared-chunk
+    grow run (5 queries sequentially, pipelines last) manufactured
+    excess 1.89/1.65 on queries that measured SUB-linear wall when
+    re-run isolated on the same commit."""
     path = os.path.join(HERE, f"SCALE_FIT_r{rnd:02d}.json")
     with open(path) as f:
         art = json.load(f)
@@ -286,11 +290,11 @@ def _grow(rnd: int, sf: float, sf_dir: str, names: list) -> int:
         norm = round(sec * ref / calib, 3) if (calib and ref) else sec
         rec[f"sec_sf{sf}"] = sec
         rec[f"norm_sf{sf}"] = norm
-        # regime consistency (r11): the grow point is measured ISOLATED,
-        # so extrapolate from isolated (sf1, sf3) draws when the row has
+        # regime consistency: the grow point is measured ISOLATED, so
+        # extrapolate from isolated (sf1, sf3) draws when the row has
         # them (written by _adjudicate) — comparing an isolated t10
-        # against chunk-polluted t1/t3 mixes regimes, the exact defect
-        # the r9/r10 adjudication hardening removed one level down
+        # against chunk-polluted t1/t3 mixes regimes, which
+        # _adjudicate also refuses to do
         t1 = rec.get(
             f"norm_sf{sfs[1]}_isolated", rec.get(f"norm_sf{sfs[1]}")
         )
@@ -298,7 +302,7 @@ def _grow(rnd: int, sf: float, sf_dir: str, names: list) -> int:
             f"norm_sf{sfs[2]}_isolated", rec.get(f"norm_sf{sfs[2]}")
         )
         if t1 is not None and t3 is not None:
-            # monotone prediction floor (advisor, r10): a flat or
+            # monotone prediction floor: a flat or
             # noisy-decreasing (sf1, sf3) segment must not skip the
             # check or predict bigger = faster — clamp the slope at 0
             # and the prediction at t3, mirroring main()/_adjudicate
@@ -339,13 +343,12 @@ def _adjudicate(rnd: int, extra: list = ()) -> int:
     real slope — dedup_minhash_char drew 12.4 s inside the 13-query
     chunk and 6.4 s isolated (fresh session, min-of-3), same commit.
 
-    Since r10 the adjudicated excess is computed from a FULLY isolated
-    regime (advisor, r9): each flagged query is re-run in its own
-    fresh child at EVERY scale, and the excess fit uses only those
-    draws — the r9 form re-measured sf3 alone and compared it against
-    chunk-measured sf0.1/sf1 points, mixing a cold-session numerator
-    with warm-chunk denominators (a sub-second fixed-cost query then
-    fails on session overhead, not slope). The two-sided rule stands:
+    The adjudicated excess is computed from a FULLY isolated regime:
+    each flagged query is re-run in its own fresh child at EVERY
+    scale, and the excess fit uses only those draws — re-measuring
+    sf3 alone against chunk-measured sf0.1/sf1 points would mix a
+    cold-session numerator with warm-chunk denominators (a sub-second
+    fixed-cost query then fails on session overhead, not slope). The two-sided rule stands:
     the isolated-regime excess itself must fit (no min-with-chunk
     leniency). Chunk numbers stay recorded beside the isolated ones.
     Queries that flagged with an error are left flagged.
@@ -395,10 +398,10 @@ def _adjudicate(rnd: int, extra: list = ()) -> int:
         adj = round(t3 / pred3, 2) if pred3 > 0 else None
         rec["excess_sf3_adjudicated"] = adj
         # One rule for every adjudicated row, whether it came from
-        # art['flagged'], the extra CLI list, or both (r11 advisor:
-        # the old extra-list branching let a doubly-listed name lose
-        # the adj-None-stays-flagged guarantee, and silently passed
-        # an extra whose adjudication produced no number): a row with
+        # art['flagged'], the extra CLI list, or both (so a
+        # doubly-listed name keeps the adj-None-stays-flagged
+        # guarantee, and an extra whose adjudication produced no
+        # number is not silently passed): a row with
         # no adjudicated excess (pred3 <= 0 or missing draw) is kept
         # flagged conservatively, and any adjudicated excess > 1.5
         # flags regardless of provenance.
@@ -454,7 +457,7 @@ def main() -> int:
     # calib-normalize before fitting: each scale runs in its own child
     # on its own wall-clock window, and host-speed swings of 20-40%
     # between windows otherwise masquerade as slope (a 1.22x-slow sf0.1
-    # chunk manufactured a fake q7 excess flag in the first r8 run)
+    # chunk once manufactured a fake q7 excess flag)
     calibs = {sf: per_scale[sf].get("calib_sec") for sf in sfs}
     ref = min(c for c in calibs.values() if c) if any(calibs.values()) else None
     queries: dict[str, dict] = {}

@@ -31,6 +31,11 @@ import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
+# Spark's Python workers import the package too: they inherit the
+# PYTHONPATH of the JVM, which get_spark starts from this environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (HERE, os.environ.get("PYTHONPATH")))
+)
 
 from bench import _calibrate, _median  # noqa: E402
 
@@ -48,10 +53,10 @@ def _child(sf_dir: str, names: list[str]) -> None:
 
     # machine-speed probes (same fixed single-thread hash workload the
     # BENCH artifacts record) SPACED across the chunk — before the JVM
-    # starts, mid-list, and after the last query (r8 verdict item 4:
-    # one probe swings 0.3-0.55 within a run; the parent records the
-    # median plus the raw probes), so cross-round sf1 drift on
-    # untouched queries can be adjudicated by the SCALE.md §9c2 rule
+    # starts, mid-list, and after the last query (one probe swings
+    # 0.3-0.55 within a run; the parent records the median plus the
+    # raw probes), so sf1 drift between sweeps on untouched queries
+    # can be adjudicated by the SCALE.md §9c2 rule
     print(json.dumps({"calib_probe": _calibrate()}), flush=True)
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -127,8 +132,8 @@ def _sweep(sf_dir: str, names: list[str]) -> dict[str, dict]:
                 f.flush()
                 done = set()
                 # two passes: collect every spaced probe first so each
-                # chunk's recs carry the MEDIAN (r8 verdict item 4 —
-                # a single probe has +-40% variance), then tag recs
+                # chunk's recs carry the MEDIAN (a single probe has
+                # +-40% variance), then tag recs
                 recs = []
                 probes = []
                 for line in open(f.name):
@@ -186,8 +191,8 @@ def main() -> int:
             rec["small_sec"] = s["sec"]
         if "sec" in b:
             rec["big_sec"] = b["sec"]
-        # per-chunk machine-speed probes: divide a cross-round time
-        # ratio by (calib_now / calib_then) before calling it drift
+        # per-chunk machine-speed probes: divide a time ratio between
+        # sweeps by (calib_now / calib_then) before calling it drift
         if "calib" in s:
             rec["calib_small"] = s["calib"]
         if "calib" in b:

@@ -1,10 +1,8 @@
 #!/usr/bin/env python
-"""Per-stage and per-plan-node timing for one registered query — the
-reusable diagnosis harness the r10 verdict asked for (missing infra
-#2): SCALE.md §26's super-linearity hunt was done with hand-written
-cache A/B probes; this tool makes an excess flag self-diagnosing by
-reporting, from ONE execution in a fresh session, where the time
-actually went.
+"""Per-stage and per-plan-node timing for one registered query — a
+reusable diagnosis harness: it makes a scale-fit excess flag
+self-diagnosing by reporting, from ONE execution in a fresh session,
+where the time actually went.
 
     python tools/stage_time.py dedup_minhash_char --sf-dir /tmp/spark_graft_sf3
     python tools/stage_time.py pipeline_multilingual_curation \
@@ -43,6 +41,11 @@ import urllib.request
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
+# Spark's Python workers import the package too: they inherit the
+# PYTHONPATH of the JVM, which get_spark starts from this environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (HERE, os.environ.get("PYTHONPATH")))
+)
 
 
 def _get(url):
