@@ -6,18 +6,19 @@ Celery worker re-executes the whole pipeline on a miss. Here the key is
 the md5 of the canonical plan serialization and the payload is a
 parquet directory (columnar, splittable, reloadable by ANY Spark
 cluster). There is one synchronous path, :meth:`ResultCache.
-get_or_compute`, which holds a per-key lock: a hit is a zero-work
-read through the source catalog (:mod:`.sources.catalog`); a miss
-computes and stores, so concurrent callers of one key wait for a
-single computation, and every caller gets the stored parquet back.
+get_or_compute`, which holds a per-key lock: a miss computes and
+stores, so concurrent callers of one key wait for a single
+computation, and every caller gets the stored result's schema back
+from the catalog memo (:func:`.sources.catalog.schema_of`), building
+no Spark relation. :meth:`ResultCache.load` reads it as a frame.
 
 No stored result costs a Spark job to describe or to page. Its schema
 comes from the frame that wrote it: after the write, the catalog is
-seeded with the writer's schema, so neither the read-back nor any
-later hit runs a schema-inference job. Its row-group row counts are
-read from its parquet footers with pyarrow and memoized under the
-directory's stamp, so :func:`.view.page` reads a page from the row
-groups that hold it, with no ``count()`` and no collect.
+seeded with the writer's schema, so no later hit in that process runs
+a schema-inference job. Its row-group row counts are read from its
+parquet footers with pyarrow and memoized under the directory's
+stamp, so :func:`.view.page` reads a page from the row groups that
+hold it, with no ``count()`` and no collect.
 
 The key names the plan, not the data it read: the catalog records the
 stamp of every parquet source resolved while ``compute()`` and the
@@ -41,6 +42,7 @@ from collections import defaultdict
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .plans.solve import Action
 from .sources import catalog
@@ -102,16 +104,15 @@ class ResultCache:
 
     def get_or_compute(
         self, spark: SparkSession, key: str, compute
-    ) -> DataFrame:
-        """The stored frame for ``key``, computing and storing
-        ``compute()`` first on a miss — at most once at a time per key.
-        If ``compute`` or the write raises, nothing stays stored and
-        the exception propagates."""
+    ) -> StructType:
+        """The schema of the result stored in ``_dir(key)``, computing
+        and storing ``compute()`` first on a miss — at most once at a
+        time per key. If ``compute`` or the write raises, nothing stays
+        stored and the exception propagates."""
         with self._guard:
             lock = self._locks[key]
         with lock:
-            hit = self.load(spark, key)
-            if hit is None:
+            if self.status(key) != "done":
                 try:
                     with catalog.recording() as sources:
                         df = self.store(compute(), key)
@@ -123,5 +124,4 @@ class ResultCache:
                 except BaseException:
                     shutil.rmtree(self._dir(key), ignore_errors=True)
                     raise
-                hit = self.load(spark, key)
-            return hit
+            return catalog.schema_of(spark, self._dir(key))

@@ -19,13 +19,14 @@ visit. The reference needs Celery + pickle polling for this
 cache covers it synchronously. A plan that fails stores nothing and is
 a 500; the next request computes it again.
 
-A page of a stored frame runs no Spark job: :func:`.view.page` reads
-it with pyarrow from the row groups of the stored parquet that hold
-it, with the page count from the row counts in the parquet footers,
-and the stored frame's schema is the one the cache seeded from the
-frame that wrote it (no inference job on the read-back or on any later
-visit). So a cold ``/view`` runs only the jobs of storing its frame,
-and a hit ``/view``, a negative page and a CSV download run none.
+A page of a stored frame runs no Spark job and builds no Spark
+relation: the cache hands back the stored directory's schema from the
+catalog memo, seeded from the frame that wrote it, and
+:func:`.view.page` reads the page with pyarrow from the row groups of
+the stored parquet that hold it, with the page count from the row
+counts in the parquet footers. So a cold ``/view`` runs only the jobs
+of storing its frame, and a hit ``/view``, a negative page and a CSV
+download run none.
 Rows are paged in data-file order (files by name, rows in file order).
 
 Scale: a page reads at most the row groups it overlaps, so a 100 TB
@@ -107,9 +108,9 @@ def create_app(
         return [load(f) for f in bs.files]
 
     def _frame(q: str, index: int):
-        """``(path, frame)``: frame ``index`` of the plan encoded in
-        ``q`` as the cache stored it, and the directory it is stored
-        in. 404 unless the plan produces that frame — counted from the
+        """``(path, schema)``: the directory the cache stored frame
+        ``index`` of the plan encoded in ``q`` in, and its schema. 404
+        unless the plan produces that frame — counted from the
         encoded plan alone, before anything is computed."""
         bs = _bs(q)
         if index >= len(bs.abstract_state([[] for _ in bs.files]).Vars):
@@ -164,8 +165,7 @@ def create_app(
 
     @app.route("/view/<int(signed=True):page_no>/<int:index>/<path:q>")
     def view(page_no: int, index: int, q: str):
-        path, df = _frame(q, index)
-        shown = page(path, df.schema, page_no, page_size)
+        shown = page(*_frame(q, index), page_no, page_size)
         qq = quote(q, safe="")
         pages = " ".join(
             f'<a href="/view/{p}/{index}/{qq}">{p}</a>'
@@ -182,14 +182,14 @@ def create_app(
 
     @app.route("/download/csv/<int:index>/<path:q>")
     def download_csv(index: int, q: str):
-        path, df = _frame(q, index)
-        body = to_csv(page(path, df.schema, 0, page_size))
+        path, schema = _frame(q, index)
+        body = to_csv(page(path, schema, 0, page_size))
         return Response(
             body,
             mimetype="text/csv",
             headers={
                 "Content-Disposition":
-                    f'attachment; filename="{download_name(df)}"'
+                    f'attachment; filename="{download_name(schema.names)}"'
             },
         )
 

@@ -196,8 +196,10 @@ def read(
 
 
 def schema_of(spark: SparkSession, path: str, **options) -> StructType:
-    """The schema :func:`read` gives ``path``."""
-    return read(spark, path, **options).schema
+    """The schema :func:`read` gives ``path``, from the memo when
+    ``path`` can be stamped (no relation built once it is known)."""
+    schema = _schema(spark, (path,), options)
+    return read(spark, path, **options).schema if schema is None else schema
 
 
 def _footed(path: str) -> Optional[_Entry]:

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import html
 from dataclasses import dataclass
-from typing import Optional
 
 from .sources import catalog
 
@@ -149,8 +148,7 @@ def palette(n: int) -> list:
     return out[:n]
 
 
-def download_name(df: DataFrame, suffix: str = ".csv") -> str:
+def download_name(columns: list[str], suffix: str = ".csv") -> str:
     """The reference names downloads after the longest column name
     (serve_view_df.py:165-168)."""
-    longest: Optional[str] = max(df.columns, key=len) if df.columns else "result"
-    return f"{longest}{suffix}"
+    return f"{max(columns, key=len) if columns else 'result'}{suffix}"

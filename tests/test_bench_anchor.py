@@ -61,12 +61,12 @@ def test_salvage_rejects_junk():
 
 
 def test_real_r11_artifact_salvages():
-    """The artifact that motivated the fix: BENCH_r11.json overflowed
+    """BENCH_r11.json records a tail that overflowed the parser
     (parsed: null); salvage must recover most of its 40 headline rows
     plus both probe medians."""
     path = os.path.join(os.path.dirname(bench.__file__), "BENCH_r11.json")
     data = json.load(open(path))
-    assert data["parsed"] is None  # the round-11 overflow, as recorded
+    assert data["parsed"] is None  # the overflowed tail, as recorded
     got = bench._salvage_tail(data["tail"])
     assert got["_salvaged"] is True
     assert len(got["queries"]) >= 35

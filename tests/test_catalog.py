@@ -105,6 +105,41 @@ def test_same_table_self_join_resolves_and_matches_duckdb(spark, sf_dir):
     assert joined.filter(F.col("left_key") != F.col("right_key")).count() > 0
 
 
+def test_a_warm_schema_of_is_the_read_schema_without_a_read(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A warm ``schema_of`` is the schema a catalog read gives, for a
+    file, a partitioned directory and a read option, answered from the
+    memo with no ``spark.read`` call; a path that cannot be stamped
+    still builds a relation."""
+    parted = str(tmp_path / "parted")
+    spark.range(6).selectExpr(
+        "id", "CAST(id % 2 AS STRING) AS k", "CAST(id AS DOUBLE) AS x"
+    ).write.partitionBy("k").parquet(parted)
+    single = str(tmp_path / "nation.parquet")
+    shutil.copy(f"{sf_dir}/nation.parquet", single)
+    cases = [(single, {}), (parted, {}), (parted, {"mergeSchema": "true"})]
+    for path, options in cases:
+        catalog.schema_of(spark, path, **options)
+
+    reads = []
+    session = type(spark)
+    real = session.read
+    monkeypatch.setattr(
+        session, "read", property(lambda s: reads.append(1) or real.fget(s))
+    )
+    warm = [catalog.schema_of(spark, p, **o) for p, o in cases]
+    assert reads == []
+    for (path, options), schema in zip(cases, warm):
+        assert schema == catalog.read(spark, path, **options).schema
+    assert warm[1].names == ["id", "x", "k"]
+    assert len(reads) == len(cases)
+
+    url = f"file://{sf_dir}/nation.parquet"
+    assert catalog.schema_of(spark, url) == warm[0]
+    assert len(reads) == len(cases) + 1
+
+
 def test_a_remote_style_path_is_never_memoized(spark, sf_dir):
     url = f"file://{sf_dir}/nation.parquet"
     for _ in range(2):

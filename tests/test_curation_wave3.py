@@ -1,4 +1,4 @@
-"""Round-4 wave-3: Z-order layout, incremental manifest reads,
+"""Z-order layout, incremental manifest reads,
 deflated top-2 PCA."""
 
 import os

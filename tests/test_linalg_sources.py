@@ -1,5 +1,5 @@
-"""Round-3 additions: embedding linalg, shard assignment, ORC/JSONL
-round-trips, and the drained streaming coverage queries.
+"""Embedding linalg, shard assignment, ORC/JSONL round-trips, and the
+drained streaming coverage queries.
 
 Numeric tests pin the distributed results to driver-side NumPy on the
 same data; plan tests pin the scale shape (the Gram reduction must

@@ -61,7 +61,7 @@ def test_incremental_lsh_matches_batch_against_corpus(spark):
 
 def test_persisted_lsh_index_probe_matches_one_shot(spark, sf_dir):
     """build_lsh_index + probe_lsh_index (the write-once / probe-only
-    r10 path) must return EXACTLY what the one-shot
+    path) must return EXACTLY what the one-shot
     incremental_lsh_matches computes on the same split, and the
     second probe must reuse the persisted layout (idempotent build —
     same table names back, no rewrite)."""
@@ -93,7 +93,7 @@ def test_persisted_lsh_index_probe_matches_one_shot(spark, sf_dir):
 
 
 def test_probe_lsh_shapes_identical_and_planned(spark, sf_dir):
-    """r13: ``probe_lsh_index`` has two value-identical join shapes
+    """``probe_lsh_index`` has two value-identical join shapes
     (``merge`` = SMJ-over-buckets, ``broadcast`` = broadcast the
     BATCH side, guide §3.1). Pin (a) identical results, (b) each
     shape's join strategy actually lands in the physical plan, and
@@ -336,12 +336,11 @@ def test_hold_keeps_its_bound_under_concurrent_callers(spark):
 
 
 def test_index_writes_one_file_per_bucket(spark, sf_dir):
-    """r12 layout optimization: build/append repartition to the bucket
-    column before every bucketed write, so a build emits at most one
-    sorted file per bucket and each append wave adds at most
-    n_buckets more (previously: one file per upstream partition per
-    touched bucket — 256 files for the 8-bucket keys table at
-    sf0.1). Guards the guide-§6 small-files contract the probe SMJ
+    """Build/append repartition to the bucket column before every
+    bucketed write, so a build emits at most one sorted file per
+    bucket and each append wave adds at most n_buckets more (not one
+    file per upstream partition per touched bucket, which is 256
+    files for the 8-bucket keys table at sf0.1). Guards the guide-§6 small-files contract the probe SMJ
     and the compaction pass both depend on."""
     from task_on_dataframes_spark.operators.dedup import (
         LSH_INDEX_BUCKETS,
@@ -1299,13 +1298,12 @@ def test_tfidf_df_strategies_identical(spark, sf_dir):
 
 
 def test_jaccard_verify_matches_brute_force_sets(spark):
-    """The r9 packed-array rewrite of jaccard_verify (array_intersect
-    on collect_set'd xxhash64 keys, replacing the explode/sort-merge
-    intersection join) must be value-identical to a Python brute
-    force on raw token sets: same pairs, same 6-decimal jaccard, pairs
-    whose docs are absent from the set table silently dropped (inner
-    join semantics, unchanged from the r8 form), and the threshold
-    boundary inclusive."""
+    """The packed-array jaccard_verify (array_intersect on
+    collect_set'd xxhash64 keys, no explode/sort-merge intersection
+    join) must be value-identical to a Python brute force on raw
+    token sets: same pairs, same 6-decimal jaccard, pairs whose docs
+    are absent from the set table silently dropped (inner join
+    semantics), and the threshold boundary inclusive."""
     from task_on_dataframes_spark.operators.dedup import jaccard_verify
 
     raw = {
@@ -1328,8 +1326,7 @@ def test_jaccard_verify_matches_brute_force_sets(spark):
     def brute(a, b):
         # HALF_UP to match Spark's F.round; Python round() is
         # banker's and would diverge on an exact .xxxxxx5 tie
-        # (advisor, r9 — today's fixtures 0.6/0.333/1.0 never tie,
-        # but don't let a future fixture trip it).
+        # (the fixtures' 0.6/0.333/1.0 never tie; a new fixture may).
         from decimal import Decimal, ROUND_HALF_UP
 
         inter = len(raw[a] & raw[b])

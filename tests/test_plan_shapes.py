@@ -307,10 +307,9 @@ def test_parallelism_floor_noop_when_row_groups_suffice(spark, tmp_path):
     """The _docs/_embs floor must vanish when the scan already splits
     >= cores/2 ways — the real-scale contract: a 100 TB corpus has
     thousands of full-size row groups and must never pay the
-    repartition. Since r8 the estimate is min(row groups, byte
-    splits): a tiny file with many row groups still scans as ONE task
-    (Spark packs row groups into maxPartitionBytes splits — the sf3
-    text_winnow finding), so this test shrinks maxPartitionBytes to
+    repartition. The estimate is min(row groups, byte splits): a tiny
+    file with many row groups still scans as ONE task (Spark packs row
+    groups into maxPartitionBytes splits), so this test shrinks maxPartitionBytes to
     make the byte-split count honest for its 8-row-group fixture."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -398,7 +397,7 @@ def _scan_ancestry(plan: str, needle: str):
 def test_lsh_index_probe_never_shuffles_the_corpus(
     spark, sf_dir, queries, qname, n_scans
 ):
-    """The round-10 incremental-dedup contract: every corpus-side
+    """The incremental-dedup contract: every corpus-side
     input to the probe is a pre-bucketed index scan joined IN PLACE —
     between each ``tada_lshidx`` FileScan and its nearest Join
     ancestor there is no Exchange (shuffle or broadcast of the corpus)
@@ -425,7 +424,7 @@ def test_lsh_index_probe_never_shuffles_the_corpus(
 def test_ivf_index_probe_never_shuffles_the_corpus(
     spark, sf_dir, queries
 ):
-    """The r11 persisted-IVF contract (vector twin of the LSH index
+    """The persisted-IVF contract (vector twin of the LSH index
     probe above): every inverted-list scan in ann_index_probe is
     joined via the broadcast probe pairs IN PLACE — between each
     ``tada_ivfidx_lists`` FileScan and its nearest Join ancestor
@@ -498,7 +497,7 @@ def test_ivf_index_maintain_probe_stays_in_place(spark, sf_dir, queries):
 
 def test_ivf_compacted_index_probe_stays_in_place(spark, sf_dir, queries):
     """The compacted IVF index must keep the exact probe contract of
-    the fresh-built one (r12, twin of the LSH compaction pin above):
+    the fresh-built one (twin of the LSH compaction pin above):
     the ``tada_ivfidx_lists`` FileScan in ann_index_compact joined in
     place via the broadcast probe pairs — no Exchange, no Aggregate
     above it — with the probed-cid literal filter reaching the parquet
@@ -520,10 +519,10 @@ def test_ivf_compacted_index_probe_stays_in_place(spark, sf_dir, queries):
 
 
 def test_jaccard_verify_intersects_exactly_once(spark):
-    """The r10 sf10 finding: without the pushdown barrier, Catalyst
-    duplicates array_intersect into the join condition (interpreted,
-    per candidate row) and the output projection — 4 plan occurrences
-    and a 10-25x verification slowdown at 18M candidates. Pin the
+    """Without the pushdown barrier, Catalyst duplicates
+    array_intersect into the join condition (interpreted, per
+    candidate row) and the output projection — 4 plan occurrences and
+    a 10-25x verification slowdown at 18M candidates (sf10). Pin the
     single-evaluation shape."""
     from pyspark.sql import functions as F
 
@@ -538,15 +537,15 @@ def test_jaccard_verify_intersects_exactly_once(spark):
     plan = _physical(v)
     assert plan.count("array_intersect") == 1, plan
     # the barrier is plumbing, not output: it must never escape into
-    # the result schema (r10 verdict item 5 — also guards against a
-    # Spark upgrade silently rewriting the projection shape)
+    # the result schema (this also guards against a Spark upgrade
+    # silently rewriting the projection shape)
     assert "__barrier" not in v.columns
     got = {(r["a"], r["b"]): r["jaccard"] for r in v.collect()}
     assert got == {(1, 2): 1.0}
 
 
 def test_jaccard_verify_packed_path_intersects_exactly_once(spark):
-    """Pin the PRE-PACKED entry point too (advisor, r10): the
+    """Pin the PRE-PACKED entry point too: the
     probe_lsh_index path calls jaccard_verify_packed directly with a
     stored packed b-side, a different plan ancestry that the
     jaccard_verify pin does not cover — a Catalyst rule change could

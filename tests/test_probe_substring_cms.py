@@ -1,4 +1,4 @@
-"""Round-4 wave-5 behavior tests: GD linear probe, count-min sketch,
+"""Behavior tests: GD linear probe, count-min sketch,
 repeated-substring spans (exact values are the DuckDB oracles' job —
 these assert the contracts hold standalone at smoke scale)."""
 
@@ -325,7 +325,7 @@ def test_star_recall_eval_measures_the_cap_tradeoff(spark, sf_dir, queries):
     )
 
     rows = queries["dedup_star_recall_eval"](spark, sf_dir).collect()
-    # 2 strata x 3 bandings (the r10 dial) x 3 caps
+    # 2 strata x 3 bandings (the banding dial) x 3 caps
     assert len(rows) == 2 * len(STAR_RECALL_BANDINGS) * len(STAR_RECALL_CAPS)
     by = {
         (r["stratum"], r["num_perm"], r["star_bucket_cap"]): r
@@ -351,7 +351,7 @@ def test_star_recall_eval_measures_the_cap_tradeoff(spark, sf_dir, queries):
     cnp = CHAR_LSH_NUM_PERM
     assert by[("template", cnp, 8)]["n_exact"] > 0
     assert by[("template", cnp, 8)]["n_star"] < by[("template", cnp, 8)]["n_lsh"]
-    # DOC-level marking (r9): the multi-pivot star admits every member
+    # DOC-level marking: the multi-pivot star admits every member
     # of a mega-bucket through the cap smallest ids, so keep-one
     # marking loses NO doc relative to uncapped LSH at any cap, and
     # the contract bar vs the exact ground truth holds at the default
@@ -360,7 +360,7 @@ def test_star_recall_eval_measures_the_cap_tradeoff(spark, sf_dir, queries):
         assert r["n_docs_star"] <= r["n_docs_lsh"] <= r["n_docs_exact"]
         assert r["doc_recall_vs_lsh"] == 1.0
     assert by[("template", cnp, 16)]["doc_recall_vs_exact"] >= 0.95
-    # the dial itself (r10): at fixed rows-per-band, more bands mean
+    # the dial itself: at fixed rows-per-band, more bands mean
     # more detection chances — marked-doc counts monotone
     # non-decreasing in num_perm at every cap on the template stratum
     for cap in STAR_RECALL_CAPS:

@@ -1,4 +1,4 @@
-"""Round-4 quality/sketch query behavior tests (plan shapes are in
+"""Quality/sketch query behavior tests (plan shapes are in
 test_plan_shapes.py; exact values are the DuckDB oracles' job — these
 assert the *contracts* hold standalone at smoke scale)."""
 

@@ -94,26 +94,84 @@ def _get_docs_q(registry):
     return bs, quote(bs.to_url_q(), safe="")
 
 
-def test_a_served_hit_runs_no_spark_job(served, spark):
+@pytest.fixture()
+def relation_calls(monkeypatch):
+    """A function that starts recording, in call order, ``"store"``
+    for each ``ResultCache.store`` and ``"load"``/``"read"`` for each
+    ``ResultCache.load``/``catalog.read`` (the calls that build a Spark
+    relation over a stored result), and returns the record."""
+    from task_on_dataframes_spark.cache import ResultCache
+    from task_on_dataframes_spark.sources import catalog
+
+    def start() -> list:
+        calls = []
+
+        def spy(owner, name, tag):
+            real = getattr(owner, name)
+
+            def wrapped(*args, **kwargs):
+                calls.append(tag)
+                return real(*args, **kwargs)
+
+            monkeypatch.setattr(owner, name, wrapped)
+
+        spy(ResultCache, "store", "store")
+        spy(ResultCache, "load", "load")
+        spy(catalog, "read", "read")
+        return calls
+
+    return start
+
+
+def test_a_served_hit_runs_no_spark_job(served, spark, relation_calls):
     """Once a frame is stored, ``/view`` reads its page from the row
     groups that hold it, with the page count from the parquet footers
     and the schema from the memo, so a hit view, a negative page and a
-    CSV download launch no Spark job."""
+    CSV download launch no Spark job and build no Spark relation."""
     app, registry = served
     client = app.test_client()
     _, q = _get_docs_q(registry)
     assert client.get(f"/view/0/0/{q}").status_code == 200
+    calls = relation_calls()
     for path in (f"/view/0/0/{q}", f"/view/-1/0/{q}", f"/download/csv/0/{q}"):
         before = _jobs_started(spark)
         assert client.get(path).status_code == 200
         assert _jobs_started(spark) - before == 0, path
+        assert calls == [], path
 
 
-def test_a_cold_view_runs_no_inference_or_count_job(served, spark, tmp_path):
+def test_a_hit_in_a_fresh_process_infers_the_schema_once(
+    served, spark, monkeypatch
+):
+    """With the catalog memo empty, as in a process that did not store
+    the result, a hit ``/view`` runs exactly one schema-inference job and
+    renders what the storing process rendered; the next hit runs none."""
+    from collections import OrderedDict
+
+    from task_on_dataframes_spark.sources import catalog
+
+    app, registry = served
+    client = app.test_client()
+    _, q = _get_docs_q(registry)
+    first = client.get(f"/view/0/0/{q}").get_data(as_text=True)
+    monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
+    before = _jobs_started(spark)
+    r = client.get(f"/view/0/0/{q}")
+    assert r.status_code == 200
+    assert _jobs_started(spark) - before == 1
+    assert r.get_data(as_text=True) == first
+    before = _jobs_started(spark)
+    assert client.get(f"/view/0/0/{q}").get_data(as_text=True) == first
+    assert _jobs_started(spark) - before == 0
+
+
+def test_a_cold_view_runs_no_inference_or_count_job(
+    served, spark, tmp_path, relation_calls
+):
     """A cold ``/view`` launches only the jobs of storing its frame: the
-    read-back takes the writer's schema, so no inference job runs, and
-    the page is read from the stored parquet's row groups, so no count
-    or collect job runs."""
+    stored schema is the writer's, so no inference job runs and no
+    relation is built over the stored result, and the page is read from
+    the stored parquet's row groups, so no count or collect job runs."""
     from task_on_dataframes_spark.cache import ResultCache
     from task_on_dataframes_spark.plans.solve import perform_actions
 
@@ -127,15 +185,18 @@ def test_a_cold_view_runs_no_inference_or_count_job(served, spark, tmp_path):
     store_jobs = _jobs_started(spark) - before
     assert store_jobs >= 1
 
+    calls = relation_calls()
     before = _jobs_started(spark)
     r = app.test_client().get(f"/view/0/0/{q}")
     assert r.status_code == 200 and "docs.text" in r.get_data(as_text=True)
     assert _jobs_started(spark) - before == store_jobs
+    assert calls.count("store") == 1
+    assert calls[calls.index("store") + 1:] == []
 
 
 def test_get_or_compute_runs_once_for_concurrent_callers(spark, tmp_path):
     """Four threads asking for one uncached key share a single
-    computation, and each gets every stored row back."""
+    computation, and each then reads every stored row back."""
     import sys
     import threading
     import time
@@ -155,7 +216,8 @@ def test_get_or_compute_runs_once_for_concurrent_callers(spark, tmp_path):
 
     def caller():
         start.wait(timeout=60)
-        df = cache.get_or_compute(spark, "k" * 32, slow_compute)
+        cache.get_or_compute(spark, "k" * 32, slow_compute)
+        df = cache.load(spark, "k" * 32)
         seen.append(sorted(r["v"] for r in df.collect()))
 
     threads = [threading.Thread(target=caller) for _ in range(4)]
@@ -203,8 +265,8 @@ def test_failed_compute_stores_nothing_and_is_retried(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, key, "_SUCCESS"))
     assert os.listdir(root) == []
 
-    df = cache.get_or_compute(spark, key, lambda: spark.range(7).toDF("v"))
-    assert df.count() == 7
+    cache.get_or_compute(spark, key, lambda: spark.range(7).toDF("v"))
+    assert cache.load(spark, key).count() == 7
     assert cache.status(key) == "done"
 
 

@@ -55,9 +55,11 @@ def test_result_cache_roundtrip(spark, sf_dir, tmp_path):
         calls["n"] += 1
         return agg
 
-    first = cache.get_or_compute(spark, key, compute)
+    schema = cache.get_or_compute(spark, key, compute)
     assert cache.status(key) == "done"
-    second = cache.get_or_compute(spark, key, compute)
+    first = cache.load(spark, key)
+    assert cache.get_or_compute(spark, key, compute) == schema == first.schema
+    second = cache.load(spark, key)
     assert calls["n"] == 1, "second call must hit the cache"
     assert sorted(map(tuple, first.collect())) == sorted(
         map(tuple, second.collect())

@@ -26,8 +26,8 @@ Documented behaviors for non-whitespace-delimited scripts:
   an ANSI divide-by-zero) and a False gopher gate.
 
 Every assertion collect()s real rows: `.count()` alone prunes the
-projections where ANSI division-by-zero hides (that is exactly how the
-quality_score crash slipped through earlier rounds).
+projections where ANSI division-by-zero hides (a quality_score
+divide-by-zero passes a count-only check).
 """
 
 import random
@@ -291,7 +291,7 @@ def test_script_id_detects_non_latin_scripts(spark):
 
 
 def test_multilingual_curation_pipeline_routes_every_script(spark):
-    """End-to-end flagship for the r7 multilingual operators: a CJK
+    """End-to-end flagship for the multilingual operators: a CJK
     document must be able to SURVIVE the curation pipeline (the C4
     flagship kills every one at its Latin gates), and each seed doc
     must hit exactly the gate it was built for — including the CJK
@@ -359,9 +359,9 @@ def test_multilingual_tokens_report_honest_cjk_budgets(spark):
 
 
 def test_byte_bpe_piece_cap_bounds_no_whitespace_documents(spark):
-    """A no-whitespace CJK clause used to become ONE word-table piece,
+    """Uncapped, a no-whitespace CJK clause is ONE word-table piece,
     making the driver merge loop linear in piece bytes; the
-    BPE_PIECE_CHAR_CAP pre-tokenization split bounds it (r8). The cap
+    BPE_PIECE_CHAR_CAP pre-tokenization split bounds it. The cap
     must chunk a long no-space doc, keep every piece's symbol count
     bounded, and the byte-level trainer must still produce a full
     merge table over the capped corpus."""

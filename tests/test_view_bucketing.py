@@ -84,7 +84,7 @@ def test_csv_roundtrip_and_download_name(spark):
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "name_long"])
     csv = view.to_csv(df)
     assert csv.splitlines()[0] == "id,name_long"
-    assert view.download_name(df) == "name_long.csv"
+    assert view.download_name(df.columns) == "name_long.csv"
 
 
 def test_bucketed_join_skips_shuffle(spark, tmp_path):
