@@ -340,8 +340,9 @@ def test_index_writes_one_file_per_bucket(spark, sf_dir):
     bucketed write, so a build emits at most one sorted file per
     bucket and each append wave adds at most n_buckets more (not one
     file per upstream partition per touched bucket, which is 256
-    files for the 8-bucket keys table at sf0.1). Guards the guide-§6 small-files contract the probe SMJ
-    and the compaction pass both depend on."""
+    files for the 8-bucket keys table at sf0.1). Guards the guide-§6
+    small-files contract the probe SMJ and the compaction pass both
+    depend on."""
     from task_on_dataframes_spark.operators.dedup import (
         LSH_INDEX_BUCKETS,
         append_lsh_index,

@@ -309,8 +309,9 @@ def test_parallelism_floor_noop_when_row_groups_suffice(spark, tmp_path):
     thousands of full-size row groups and must never pay the
     repartition. The estimate is min(row groups, byte splits): a tiny
     file with many row groups still scans as ONE task (Spark packs row
-    groups into maxPartitionBytes splits), so this test shrinks maxPartitionBytes to
-    make the byte-split count honest for its 8-row-group fixture."""
+    groups into maxPartitionBytes splits), so this test shrinks
+    maxPartitionBytes to make the byte-split count honest for its
+    8-row-group fixture."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
