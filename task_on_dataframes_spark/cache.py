@@ -12,13 +12,13 @@ computation, and every caller gets the stored result's schema back
 from the catalog memo (:func:`.sources.catalog.schema_of`), building
 no Spark relation. :meth:`ResultCache.load` reads it as a frame.
 
-No stored result costs a Spark job to describe or to page. Its schema
-comes from the frame that wrote it: after the write, the catalog is
-seeded with the writer's schema, so no later hit in that process runs
-a schema-inference job. Its row-group row counts are read from its
-parquet footers with pyarrow and memoized under the directory's
-stamp, so :func:`.view.page` reads a page from the row groups that
-hold it, with no ``count()`` and no collect.
+No stored result costs a Spark job to describe or to page, in the
+process that stored it or in any other: the catalog reads its schema
+(Spark's own, which Spark wrote into every footer) and its row-group
+row counts from its parquet footers with pyarrow, memoized under the
+directory's stamp, so :func:`.view.page` reads a page from the row
+groups that hold it, with no inference job, no ``count()`` and no
+collect.
 
 The key names the plan, not the data it read: the catalog records the
 stamp of every parquet source resolved while ``compute()`` and the
@@ -98,9 +98,8 @@ class ResultCache:
             return None
         return catalog.read(spark, self._dir(key))
 
-    def store(self, df: DataFrame, key: str) -> DataFrame:
+    def store(self, df: DataFrame, key: str) -> None:
         df.write.mode("overwrite").parquet(self._dir(key))
-        return df
 
     def get_or_compute(
         self, spark: SparkSession, key: str, compute
@@ -115,8 +114,7 @@ class ResultCache:
             if self.status(key) != "done":
                 try:
                     with catalog.recording() as sources:
-                        df = self.store(compute(), key)
-                    catalog.seed(spark, self._dir(key), df.schema)
+                        self.store(compute(), key)
                     side = os.path.join(self._dir(key), _SOURCES)
                     with open(side + ".tmp", "w") as fh:
                         json.dump(sources, fh)

@@ -60,7 +60,7 @@ def _scan_parts(
     run every fingerprint pipeline on 2 tasks (SCALE.md: text_winnow
     measured 4.3x for 3x data until the estimate used the min of the
     two bounds). Row groups and file sizes come from the source
-    catalog's stamped footer facts (:func:`..sources.catalog.footer`),
+    catalog's stamped footer facts (:func:`..sources.catalog.row_groups`),
     so a rewritten file gets a fresh estimate, rather than from
     ``df.rdd.getNumPartitions()`` — the RDD probe runs full physical
     planning on the driver (~0.13 s measured) and would be paid on
@@ -69,7 +69,7 @@ def _scan_parts(
     corpus has thousands of full-size row groups, so skipping the
     floor there is the correct no-op."""
     try:
-        files = catalog.footer(path)
+        files = catalog.row_groups(path)
     except Exception:
         # Missing pyarrow raises ImportError, corrupt files raise
         # pyarrow.ArrowInvalid — the floor must degrade to a no-op for
@@ -77,7 +77,7 @@ def _scan_parts(
         return None
     if files is None:
         return None
-    n = sum(groups for groups, _ in files)
+    n = sum(len(groups) for _, _, groups in files)
     if max_partition_bytes:
         # mirror Spark's FilePartition.maxSplitBytes (the bare
         # ceil(bytes/maxPartitionBytes) underestimates
@@ -86,13 +86,13 @@ def _scan_parts(
         # maxSplit = min(maxPartitionBytes,
         #                max(openCostInBytes, total/parallelism)),
         # splits counted per file because a split never spans files
-        total = sum(size for _, size in files)
+        total = sum(size for _, size, _ in files)
         open_cost = 4 << 20  # spark.sql.files.openCostInBytes default
         max_split = min(
             max_partition_bytes,
             max(open_cost, total // max(parallelism, 1)),
         )
-        byte_splits = sum(-(-size // max_split) for _, size in files)
+        byte_splits = sum(-(-size // max_split) for _, size, _ in files)
         n = min(n, byte_splits)
     return n
 

@@ -21,12 +21,12 @@ a 500; the next request computes it again.
 
 A page of a stored frame runs no Spark job and builds no Spark
 relation: the cache hands back the stored directory's schema from the
-catalog memo, seeded from the frame that wrote it, and
+catalog memo, read from the stored parquet's footers, and
 :func:`.view.page` reads the page with pyarrow from the row groups of
 the stored parquet that hold it, with the page count from the row
 counts in the parquet footers. So a cold ``/view`` runs only the jobs
 of storing its frame, and a hit ``/view``, a negative page and a CSV
-download run none.
+download run none, in the storing process or any other.
 Rows are paged in data-file order (files by name, rows in file order).
 
 Scale: a page reads at most the row groups it overlaps, so a 100 TB

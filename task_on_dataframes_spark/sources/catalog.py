@@ -2,29 +2,29 @@
 
 Reading parquet without a schema makes Spark infer one, and that
 inference (listing plus footer merge) runs as a Spark job on every
-read. The catalog pays it once per version of a path:
+read. The catalog pays it at most once per version of a path:
 
 * **Stamp.** A file is stamped by its ``(size, mtime_ns)``, a
   directory by the recursive listing of its data files with theirs
   (names starting with ``.``, or with ``_`` outside ``key=value``
   partition directories, are not data, as in Spark's own listing).
-* **Memo.** Under that stamp it keeps the schema Spark inferred — per
-  read options and per value of the session confs that change an
-  inferred parquet schema (:data:`SCHEMA_CONFS`) — and, on first
-  request, the row count of each row group of each data file, read
-  from the footers with pyarrow. One entry per path (tuple): a
+* **Memo.** Under that stamp it keeps the path's schema — per read
+  options and per value of the session confs that change an inferred
+  parquet schema (:data:`SCHEMA_CONFS`) — and, on first request, each
+  data file's footer facts, read with pyarrow: its row groups' row
+  counts and Spark's schema JSON. One entry per path (tuple): a
   re-stamped path replaces its entry, so a rewritten file or an added
   part file is seen on the next read.
-* **Seed.** A path Spark has just written needs no inference at all:
-  :func:`seed` files the writer's schema, every field made nullable,
-  under the new stamp. On Spark-written parquet that is exactly what
-  inference returns, because Spark's row metadata in the footer wins
-  over converting the parquet schema and file sources force
-  nullability (``tests/test_catalog.py`` pins the equivalence).
-* **Read.** :func:`read` hands the memoized schema to the reader, so a
-  warm read launches no job. Every call still builds a fresh relation:
-  two reads of one table get distinct attribute ids, which a
-  same-table self-join needs. Whole DataFrames are never memoized.
+* **Footer or inference.** Spark writes the frame's schema into every
+  footer, and its inference returns that schema made nullable, at any
+  :data:`SCHEMA_CONFS`. So a single path read without options, whose
+  data files sit directly in it and carry one parseable Spark schema,
+  takes it from the footers, with no job. Every other read is
+  inferred by Spark, errors included.
+* **Read.** :func:`read` hands the memoized schema to the reader.
+  Whole DataFrames are never memoized: a fresh relation per call gives
+  two reads of one table distinct attribute ids, which a same-table
+  self-join needs.
 * Paths the local filesystem cannot stat (``s3://``, ``hdfs://``,
   globs, missing paths) skip the memo and read exactly as
   ``spark.read.parquet`` does, errors included.
@@ -40,6 +40,7 @@ from __future__ import annotations
 import contextlib
 import contextvars
 import hashlib
+import json
 import os
 import threading
 from collections import OrderedDict
@@ -58,6 +59,9 @@ SCHEMA_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
+#: footer key under which Spark writes the schema of the frame it wrote
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
 #: least-recently-read entries beyond this many are dropped, so a
 #: long-lived process that reads many short-lived temp dirs stays bounded
 _MAX_ENTRIES = 1024
@@ -68,11 +72,13 @@ Stamp = tuple  # ((data file, size, mtime_ns), ...) of one path
 @dataclass
 class _Entry:
     stamps: tuple[Stamp, ...]
-    #: (read options, SCHEMA_CONFS values) -> inferred or seeded schema
+    #: (read options, SCHEMA_CONFS values) -> schema
     schemas: dict = field(default_factory=dict)
     #: rows of each row group of each data file, in stamp order; read
     #: on first use
     footers: Optional[tuple[tuple[int, ...], ...]] = None
+    #: the Spark schema JSON all footers carry, if one; read with footers
+    spark_schema: Optional[bytes] = None
 
 
 _MEMO: "OrderedDict[tuple[str, ...], _Entry]" = OrderedDict()
@@ -144,9 +150,28 @@ def _schema(
     key = _schema_key(spark, options)
     schema = e.schemas.get(key)
     if schema is None:
-        schema = spark.read.options(**options).parquet(*paths).schema
+        if not options and len(paths) == 1:
+            schema = _footer_schema(paths[0], e)
+        if schema is None:
+            schema = spark.read.options(**options).parquet(*paths).schema
         e.schemas[key] = schema
     return schema
+
+
+def _footer_schema(path: str, e: _Entry) -> Optional[StructType]:
+    """The Spark schema all footers of ``path`` carry, made nullable as
+    inference makes it, if its data files sit directly in it; else
+    ``None``."""
+    if any(
+        os.sep in os.path.relpath(f, path) or _hidden(os.path.basename(f))
+        for f, _, _ in e.stamps[0]
+    ):
+        return None
+    try:
+        meta = _footed(e).spark_schema
+        return _nullable(StructType.fromJson(json.loads(meta))) if meta else None
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
+        return None  # an unreadable footer, or a schema PySpark cannot parse
 
 
 def _nullable(t: DataType) -> DataType:
@@ -162,16 +187,6 @@ def _nullable(t: DataType) -> DataType:
     if isinstance(t, MapType):
         return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
     return t
-
-
-def seed(spark: SparkSession, path: str, schema: StructType) -> None:
-    """File ``schema`` (the schema of the frame Spark just wrote to
-    ``path``), made nullable, as what :func:`read` without options
-    gives ``path`` at its current stamp, so reading it runs no
-    inference job. A path that cannot be stamped is left alone."""
-    e = _entry((path,))
-    if e is not None:
-        e.schemas[_schema_key(spark, {})] = _nullable(schema)
 
 
 def read(
@@ -202,15 +217,16 @@ def schema_of(spark: SparkSession, path: str, **options) -> StructType:
     return read(spark, path, **options).schema if schema is None else schema
 
 
-def _footed(path: str) -> Optional[_Entry]:
-    """The memo entry of ``path`` with its footer facts read, or
-    ``None`` when it cannot be stamped. Raises what pyarrow raises on
-    a file it cannot read as parquet."""
-    e = _entry((path,))
+def _footed(e: Optional[_Entry]) -> Optional[_Entry]:
+    """``e`` with its footer facts read once (``None`` for a path that
+    cannot be stamped). Raises what pyarrow raises on a file it cannot
+    read as parquet."""
     if e is not None and e.footers is None:
         import pyarrow.parquet as pq
 
         metas = [pq.ParquetFile(f).metadata for f, _, _ in e.stamps[0]]
+        schemas = {(m.metadata or {}).get(_SPARK_SCHEMA) for m in metas}
+        e.spark_schema = schemas.pop() if len(schemas) == 1 else None
         e.footers = tuple(
             tuple(m.row_group(i).num_rows for i in range(m.num_row_groups))
             for m in metas
@@ -218,34 +234,16 @@ def _footed(path: str) -> Optional[_Entry]:
     return e
 
 
-def footer(path: str) -> Optional[list[tuple[int, int]]]:
-    """``(row groups, bytes)`` of each data file of ``path``, or
-    ``None`` when it cannot be stamped. Raises what pyarrow raises on
-    a file it cannot read as parquet."""
-    e = _footed(path)
+def row_groups(path: str) -> Optional[list[tuple[str, int, tuple[int, ...]]]]:
+    """Each data file of ``path`` with its size and the row count of
+    each of its row groups, in stamp order (data-file name order, which
+    for a directory Spark wrote is its partition order), or ``None``
+    when it cannot be stamped. Raises what pyarrow raises on a file it
+    cannot read as parquet."""
+    e = _footed(_entry((path,)))
     if e is None:
         return None
-    return [(len(g), size) for g, (_, size, _) in zip(e.footers, e.stamps[0])]
-
-
-def row_groups(path: str) -> Optional[list[tuple[str, tuple[int, ...]]]]:
-    """Each data file of ``path`` with the row count of each of its
-    row groups, in stamp order (data-file name order, which for a
-    directory Spark wrote is its partition order), or ``None`` when it
-    cannot be stamped. Raises what pyarrow raises on a file it cannot
-    read as parquet."""
-    e = _footed(path)
-    if e is None:
-        return None
-    return [(f, g) for g, (f, _, _) in zip(e.footers, e.stamps[0])]
-
-
-def rows(path: str) -> Optional[int]:
-    """The row count of ``path`` summed from its data files' parquet
-    footers — what ``read(spark, path).count()`` returns, with no
-    Spark job — or ``None`` when it cannot be stamped."""
-    e = _footed(path)
-    return None if e is None else sum(map(sum, e.footers))
+    return [(f, size, g) for g, (f, size, _) in zip(e.footers, e.stamps[0])]
 
 
 @contextlib.contextmanager

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from typing import Any, List, Optional, Sequence, Union
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,16 +94,18 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
     """Schema-faithful read of the events table. Only mutates the
-    session conf (``nanosAsLong``) when the legacy TIMESTAMP(NANOS)
-    layout is actually present — Spark's reader rejects that type, so
-    the retry is the detection. The conf is part of the catalog's
-    schema key, so the retry infers afresh and a warm read of either
-    layout launches no job."""
+    session conf (``nanosAsLong``) when Spark rejects the legacy
+    TIMESTAMP(NANOS) layout (``PARQUET_TYPE_ILLEGAL``); any other error
+    propagates with the conf untouched. The conf is part of the
+    catalog's schema key, so the retry infers afresh and a warm read of
+    either layout launches no job."""
     try:
         return catalog.read(spark, path)
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return catalog.read(spark, path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return catalog.read(spark, path)
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:

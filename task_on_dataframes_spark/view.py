@@ -66,7 +66,7 @@ def page(
     files = catalog.row_groups(path)
     if files is None:
         raise FileNotFoundError(path)
-    total = sum(sum(g) for _, g in files)
+    total = sum(sum(g) for _, _, g in files)
     pages = max((total + page_size - 1) // page_size, 1)
     if page_no < 0:
         page_no = max(pages + page_no, 0)
@@ -77,7 +77,7 @@ def page(
     # tz-naive nanos), a day-time interval as a duration
     target = to_arrow_schema(schema)
     pieces, first, at = [], None, 0
-    for f, groups in files:
+    for f, _, groups in files:
         wanted = []
         for i, n in enumerate(groups):
             if at < hi and at + n > lo:

@@ -235,3 +235,16 @@ def test_parquet_reads_go_through_the_source_catalog():
         and "read" in chain(n.func)
     ]
     assert reads == [], reads
+
+
+def test_spark_schema_footers_are_decoded_only_by_the_catalog():
+    """Only ``sources/catalog.py`` names the footer key under which
+    Spark writes a parquet file's schema, so deciding a stored parquet's
+    schema from its footers stays behind one module."""
+    home = os.path.join(HERE, "task_on_dataframes_spark", "sources", "catalog.py")
+    named = [
+        os.path.relpath(p, HERE)
+        for p, t in _package_sources().items()
+        if p != home and "org.apache.spark.sql.parquet.row.metadata" in t
+    ]
+    assert named == [], named

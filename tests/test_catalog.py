@@ -54,16 +54,26 @@ def test_rewritten_file_and_added_part_are_seen(spark, tmp_path):
     d.mkdir()
     pq.write_table(pa.table({"a": [1, 2]}), str(d / "part-0.parquet"))
     assert catalog.read(spark, str(d)).count() == 2
-    assert catalog.footer(str(d)) == [(1, os.path.getsize(d / "part-0.parquet"))]
+    part0 = str(d / "part-0.parquet")
+    assert catalog.row_groups(str(d)) == [(part0, os.path.getsize(part0), (2,))]
     pq.write_table(pa.table({"a": [3, 4, 5]}), str(d / "part-1.parquet"))
     df, jobs = _read_jobs(spark, str(d))
     assert jobs >= 1
     assert sorted(r.a for r in df.collect()) == [1, 2, 3, 4, 5]
-    assert len(catalog.footer(str(d))) == 2
+    assert [g for _, _, g in catalog.row_groups(str(d))] == [(2,), (3,)]
     # what Spark does not read as data does not re-stamp the directory
     (d / "_SUCCESS").write_text("")
     (d / ".part-1.parquet.crc").write_text("")
     assert _read_jobs(spark, str(d))[1] == 0
+    # a Spark overwrite replaces every part file; the footers follow,
+    # read with no Spark job
+    spark.range(0, 10, 1, 2).write.mode("overwrite").parquet(str(d))
+    before = _jobs_started(spark)
+    files = catalog.row_groups(str(d))
+    assert _jobs_started(spark) == before
+    assert len(files) == 2 and sum(sum(g) for _, _, g in files) == 10
+    assert catalog.read(spark, str(d)).count() == 10
+    assert catalog.row_groups(str(tmp_path / "nope")) is None
 
 
 def test_a_schema_conf_flip_misses_the_memo(spark, sf_dir, tmp_path):
@@ -173,8 +183,8 @@ def test_concurrent_footer_reads_follow_a_rewrite(tmp_path):
         try:
             while not stop.is_set():
                 for p in paths:
-                    (groups, size), = catalog.footer(p)
-                    assert groups in (2, 5) and size > 0
+                    (_, size, groups), = catalog.row_groups(p)
+                    assert groups in ((5, 5), (2,) * 5) and size > 0
         except Exception as e:  # reported below
             errors.append(e)
 
@@ -198,34 +208,12 @@ def test_concurrent_footer_reads_follow_a_rewrite(tmp_path):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    assert catalog.footer(paths[0])[0][0] == 2  # last write: 2 groups of 5
-    assert [catalog.footer(p)[0][0] for p in paths[1:]] == [2, 2, 2]
-
-
-def test_rows_is_the_count_from_footers_without_a_job(spark, tmp_path):
-    """``catalog.rows`` sums the data files' footer row counts: it
-    equals ``count()`` on a multi-file directory, follows a rewrite and
-    an added part file, and launches no Spark job."""
-    d = str(tmp_path / "parts")
-    spark.range(0, 1000, 1, 3).write.parquet(d)
-    assert len(catalog.footer(d)) == 3
-    before = _jobs_started(spark)
-    assert catalog.rows(d) == 1000
-    assert _jobs_started(spark) == before
-    assert catalog.read(spark, d).count() == 1000
-
-    spark.range(0, 10, 1, 2).write.mode("overwrite").parquet(d)
-    assert catalog.rows(d) == 10 == catalog.read(spark, d).count()
-    pq.write_table(pa.table({"id": [7, 8, 9]}), os.path.join(d, "part-extra.parquet"))
-    before = _jobs_started(spark)
-    assert catalog.rows(d) == 13
-    assert _jobs_started(spark) == before
-    assert catalog.read(spark, d).count() == 13
-    assert catalog.rows(str(tmp_path / "nope")) is None
+    assert catalog.row_groups(paths[0])[0][2] == (5, 5)  # the last write
+    assert [catalog.row_groups(p)[0][2] for p in paths[1:]] == [(5, 5)] * 3
 
 
 #: confs flipped from their defaults in the second run of the
-#: seeded-schema test; both change what converting a parquet schema gives
+#: footer-schema test; both change what converting a parquet schema gives
 _FLIPPED = {
     "spark.sql.parquet.binaryAsString": "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
@@ -233,12 +221,17 @@ _FLIPPED = {
 
 
 @pytest.mark.parametrize("flip", [False, True], ids=["default", "flipped"])
-def test_a_seeded_schema_is_what_inference_gives(spark, tmp_path, flip):
-    """A schema seeded from the frame Spark wrote equals the schema
-    ``spark.read.parquet`` infers from the written files, over nested,
-    nullable and non-null, decimal, time, binary, char, metadata-carrying
-    and dotted columns. Serving a stored result relies on this; a Spark
-    version that breaks it fails here instead of serving a wrong schema."""
+def test_a_spark_written_schema_is_read_from_its_footers(
+    spark, tmp_path, monkeypatch, flip
+):
+    """With the memo empty, the schema of a directory Spark wrote (three
+    part files) is read from its footers with no Spark job, and equals
+    the schema ``spark.read.parquet`` infers, over nested, nullable and
+    non-null, decimal, time, binary, char, metadata-carrying and dotted
+    columns. Serving a stored result relies on this; a Spark version
+    that breaks it fails here instead of serving a wrong schema."""
+    from collections import OrderedDict
+
     from pyspark.sql import functions as F
 
     old = {k: spark.conf.get(k) for k in _FLIPPED}
@@ -269,13 +262,105 @@ def test_a_seeded_schema_is_what_inference_gives(spark, tmp_path, flip):
             """
         ).withColumn("id", F.col("id").alias("id", metadata={"comment": "row id"}))
         path = str(tmp_path / "written")
-        df.write.parquet(path)
-        catalog.seed(spark, path, df.schema)
-        seeded, jobs = _read_jobs(spark, path)
+        df.repartition(3).write.parquet(path)
+        assert len(catalog.row_groups(path)) == 3
+        monkeypatch.setattr(catalog, "_MEMO", OrderedDict())
+        footed, jobs = _read_jobs(spark, path)
         assert jobs == 0
-        assert seeded.schema == spark.read.parquet(path).schema
-        assert seeded.schema["id"].metadata == {"comment": "row id"}
-        assert seeded.count() == 6
+        assert footed.schema == spark.read.parquet(path).schema
+        assert footed.schema["id"].metadata == {"comment": "row id"}
+        assert footed.count() == 6
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def _partitioned(spark, tmp):
+    path = str(tmp / "parted")
+    df = spark.range(6).selectExpr("id", "CAST(id % 2 AS STRING) AS k")
+    df.write.partitionBy("k").parquet(path)
+    return (path,), {}, {}, ["id", "k"]
+
+
+def _pyarrow_written(spark, tmp):
+    path = str(tmp / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", None]}), path)
+    return (path,), {}, {}, ["a", "b"]
+
+
+def _two_paths(spark, tmp):
+    paths = (str(tmp / "a"), str(tmp / "b"))
+    for p in paths:
+        spark.range(3).write.parquet(p)
+    return paths, {}, {}, ["id"]
+
+
+def _disagreeing_footers(merge):
+    """Two part files of one directory, written by Spark from frames of
+    different schemas."""
+
+    def build(spark, tmp):
+        d = tmp / "mixed"
+        d.mkdir()
+        frames = {"a": spark.range(3), "b": spark.range(3).selectExpr("id", "id * 2 AS x")}
+        for name, df in frames.items():
+            df.coalesce(1).write.parquet(str(tmp / name))
+            (part,) = (tmp / name).glob("part-*")
+            shutil.copy(part, d / f"part-{name}.parquet")
+        merged = {"spark.sql.parquet.mergeSchema": merge}
+        return (str(d),), {}, merged, ["id", "x"] if merge == "true" else None
+
+    return build
+
+
+def _recursive_lookup(spark, tmp):
+    path = str(tmp / "nested")
+    spark.range(3).write.parquet(os.path.join(path, "sub"))
+    return (path,), {"recursiveFileLookup": "true"}, {}, ["id"]
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_partitioned, _pyarrow_written, _two_paths, _disagreeing_footers("false"),
+     _disagreeing_footers("true"), _recursive_lookup],
+    ids=["partitioned", "pyarrow_written", "two_paths", "disagreeing_merge_off",
+         "disagreeing_merge_on", "recursive_lookup"],
+)
+def test_other_reads_are_inferred_by_spark(spark, tmp_path, build):
+    """A read the footers cannot answer alone runs Spark's inference
+    job, and its schema is the one ``spark.read.parquet`` infers. Each
+    case builds its files and returns the read's paths, read options,
+    session confs and expected columns (``None``: Spark's pick)."""
+    paths, options, confs, names = build(spark, tmp_path)
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df, jobs = _read_jobs(spark, *paths, **options)
+        assert jobs >= 1
+        assert df.schema == spark.read.options(**options).parquet(*paths).schema
+        if names is not None:
+            assert df.columns == names
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("case", ["non_parquet", "hidden_name"])
+def test_an_unreadable_file_raises_what_spark_raises(spark, tmp_path, case):
+    """A file pyarrow cannot read as parquet, and a Spark-written file
+    whose name Spark does not list as data, raise Spark's exception."""
+    path = str(tmp_path / "_hidden.parquet")
+    if case == "non_parquet":
+        path = str(tmp_path / "fake.parquet")
+        with open(path, "w") as fh:
+            fh.write("not parquet")
+    else:
+        spark.range(3).coalesce(1).write.parquet(str(tmp_path / "w"))
+        (part,) = (tmp_path / "w").glob("part-*")
+        shutil.copy(part, path)
+    with pytest.raises(Exception) as spark_raised:
+        spark.read.parquet(path)
+    with pytest.raises(Exception) as catalog_raised:
+        catalog.read(spark, path)
+    assert type(catalog_raised.value) is type(spark_raised.value)

@@ -140,12 +140,11 @@ def test_a_served_hit_runs_no_spark_job(served, spark, relation_calls):
         assert calls == [], path
 
 
-def test_a_hit_in_a_fresh_process_infers_the_schema_once(
-    served, spark, monkeypatch
-):
+def test_a_hit_in_a_fresh_process_runs_no_job(served, spark, monkeypatch):
     """With the catalog memo empty, as in a process that did not store
-    the result, a hit ``/view`` runs exactly one schema-inference job and
-    renders what the storing process rendered; the next hit runs none."""
+    the result, a hit ``/view`` runs no Spark job (the schema is read
+    from the stored parquet's footers) and renders what the storing
+    process rendered; so does the next hit."""
     from collections import OrderedDict
 
     from task_on_dataframes_spark.sources import catalog
@@ -158,7 +157,7 @@ def test_a_hit_in_a_fresh_process_infers_the_schema_once(
     before = _jobs_started(spark)
     r = client.get(f"/view/0/0/{q}")
     assert r.status_code == 200
-    assert _jobs_started(spark) - before == 1
+    assert _jobs_started(spark) - before == 0
     assert r.get_data(as_text=True) == first
     before = _jobs_started(spark)
     assert client.get(f"/view/0/0/{q}").get_data(as_text=True) == first
@@ -459,13 +458,13 @@ def test_pages_hold_the_stored_rows_in_file_order_as_collect_values(
         cache.get_or_compute(spark, key, lambda: _typed_frame(spark))
         schema = cache.load(spark, key).schema
         files = catalog.row_groups(cache._dir(key))
-        assert [sum(g) for _, g in files] == [0, 300, 300]
-        assert all(len(g) > 1 for _, g in files[1:])
+        assert [sum(g) for _, _, g in files] == [0, 300, 300]
+        assert all(len(g) > 1 for _, _, g in files[1:])
         # Spark's default outputTimestampType, INT96: tz-naive ns to pyarrow
         assert pq.read_schema(files[1][0]).field("ts").type == pa.timestamp("ns")
 
         stored = [
-            r for f, _ in files
+            r for f, _, _ in files
             for r in catalog.read(spark, f, schema=schema).collect()
         ]
         paged = []

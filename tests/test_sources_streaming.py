@@ -41,6 +41,33 @@ def test_csv_roundtrip_and_literal(spark, tmp_path):
     assert schema_peek(spark, out, fmt="csv") == ["id", "name"]
 
 
+def test_events_reader_retries_only_the_nanos_layout(spark, tmp_path):
+    """``read_events`` sets ``nanosAsLong`` only when Spark rejects a
+    TIMESTAMP(NANOS) column; any other error (here a missing path)
+    propagates with the conf at its prior value."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from task_on_dataframes_spark.sources.readers import read_events
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(conf)
+    try:
+        with pytest.raises(AnalysisException):
+            read_events(spark, str(tmp_path / "missing.parquet"))
+        assert spark.conf.get(conf) == old
+
+        path = str(tmp_path / "nanos.parquet")
+        nanos = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+        pq.write_table(pa.table({"ts": nanos}), path)
+        ev = read_events(spark, path)
+        assert spark.conf.get(conf) == "true"
+        assert ev.selectExpr("unix_micros(ts)").first()[0] == 1_700_000_000_123_456
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_result_cache_roundtrip(spark, sf_dir, tmp_path):
     from task_on_dataframes_spark.cache import ResultCache, plan_key
 
